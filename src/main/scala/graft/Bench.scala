@@ -207,12 +207,14 @@ object Bench {
       // memo-hit cost and the build escaped the headline entirely).
       ("cc", Set("q45", "q62"),
         () => operators.Graph.simhashComponents(spark, sfDir).count(): Unit))
+    // a failed tier build is listed in "failed" as cache:<tier> — never
+    // swallowed, or a broken tier would read as a cheap one
     val cacheTimes = sharedCaches
       .filter { case (_, consumers, _) => consumers.exists(selected) }
       .map { case (name, _, build) =>
         val t0 = System.nanoTime()
-        try build() catch { case _: Throwable => () }
-        (name, (System.nanoTime() - t0) / 1e9)
+        val ok = try { build(); true } catch { case _: Throwable => false }
+        (name, (System.nanoTime() - t0) / 1e9, ok)
       }
     val calibs = scala.collection.mutable.ArrayBuffer(calibrate())
     // interleaved sweeps: all queries once, then all again (see contract)
@@ -240,9 +242,10 @@ object Bench {
     def cs(v: Double): String = math.round(v * 100).toString
     val qs = results.map { case (k, v, _) => "\"" + shortKey(k) + "\":" + cs(v) }
       .mkString("{", ",", "}")
-    val failed = results.collect { case (k, _, false) => "\"" + shortKey(k) + "\"" }
-      .mkString("[", ",", "]")
-    val cb = cacheTimes.map { case (k, v) => "\"" + k + "\":" + cs(v) }
+    val failed = (results.collect { case (k, _, false) => shortKey(k) } ++
+        cacheTimes.collect { case (k, _, false) => s"cache:$k" })
+      .map("\"" + _ + "\"").mkString("[", ",", "]")
+    val cb = cacheTimes.map { case (k, v, _) => "\"" + k + "\":" + cs(v) }
       .mkString("{", ",", "}")
     val cacheTotal = cacheTimes.map(_._2).sum
     val total = results.map(_._2).sum + cacheTotal

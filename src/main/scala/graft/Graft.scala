@@ -4,18 +4,19 @@ import graft.operators._
 import graft.pipelines.{InventoryPipeline, SalesPipeline, Warehouse}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The library's front door — one object mapping everything a user of the
-  * reference (Oscar-Duque/osmart-etl) runs today onto this engine, plus
-  * the training-data extensions. Each entry is a thin delegate; see the
-  * operator objects for semantics and SURVEY.md §2.11/§2.12 for the
+/** The library's front door for what a user of the reference
+  * (Oscar-Duque/osmart-etl) runs today: the warehouse, the nightly cron
+  * cycle, the generic as-of join and connected components, and the
+  * retraction lane. The query surface is [[SparkEntry.queries]]; the
+  * operator objects carry the semantics, SURVEY.md §2.11/§2.12 the
   * complete coverage map.
   *
   * {{{
   * val spark = SparkSession.builder()...getOrCreate()
   * val wh = Graft.warehouse(spark, "/data/warehouse")
-  * Graft.nightly(wh, srcDir)                  // the run_etl.sh cycle
-  * Graft.stockPoints(spark, srcDir)           // flagship derivation
-  * Graft.minhashNearDups(spark, corpusDir)    // corpus dedup
+  * Graft.nightly(wh, srcDir)                    // the run_etl.sh cycle
+  * operators.Stock.stockPoints(spark, srcDir)   // flagship derivation
+  * operators.Dedup.minhashLsh(spark, corpusDir) // corpus dedup
   * }}}
   */
 object Graft {
@@ -36,46 +37,7 @@ object Graft {
     (sales, ledger, points)
   }
 
-  // --- sales layer --------------------------------------------------------
-
-  def sicarSales(spark: SparkSession, dir: String): DataFrame = Sales.sicarRollup(spark, dir)
-  def cleanSales(spark: SparkSession, dir: String): DataFrame = Sales.waterfallClean(spark, dir)
-  def paymentQa(spark: SparkSession, dir: String): DataFrame = Sales.paymentQa(spark, dir)
-
-  // --- inventory layer ----------------------------------------------------
-
-  def movementLedger(spark: SparkSession, dir: String): DataFrame = Ledger.unionLedgerQuery(spark, dir)
-  def runningBalance(spark: SparkSession, dir: String): DataFrame = Stock.runningBalance(spark, dir)
-  def stockPoints(spark: SparkSession, dir: String): DataFrame = Stock.stockPoints(spark, dir)
-  def stockAsOf(spark: SparkSession, dir: String): DataFrame = Stock.asOfLookup(spark, dir)
-  def reconcile(spark: SparkSession, dir: String): DataFrame = Stock.reconcile(spark, dir)
-  def dqExclusions(spark: SparkSession, dir: String): DataFrame = Dq.dqExclusions(spark, dir)
-
-  // --- training-data extensions ------------------------------------------
-
-  def tokenStats(spark: SparkSession, dir: String): DataFrame = TextOps.tokenStats(spark, dir)
-  def languageId(spark: SparkSession, dir: String): DataFrame = TextOps.langProfile(spark, dir)
-  def qualityScores(spark: SparkSession, dir: String): DataFrame = TextOps.qualityScore(spark, dir)
-  def fingerprints(spark: SparkSession, dir: String): DataFrame = TextOps.fingerprint(spark, dir)
-  def exactDups(spark: SparkSession, dir: String): DataFrame = Dedup.exactDedup(spark, dir)
-  def jaccardNearDups(spark: SparkSession, dir: String): DataFrame = Dedup.ngramJaccard(spark, dir)
-  def minhashNearDups(spark: SparkSession, dir: String): DataFrame = Dedup.minhashLsh(spark, dir)
-  def simhashes(spark: SparkSession, dir: String): DataFrame = Dedup.simhash(spark, dir)
-  def cosineTopK(spark: SparkSession, dir: String): DataFrame = Similarity.cosineTopK(spark, dir)
-  def annSearch(spark: SparkSession, dir: String): DataFrame = Similarity.annLsh(spark, dir)
-  def ivfSearch(spark: SparkSession, dir: String): DataFrame = Similarity.ivfAnn(spark, dir)
-  def embeddingNearDups(spark: SparkSession, dir: String): DataFrame = Similarity.embedNearDup(spark, dir)
-  def mediaFeatures(spark: SparkSession, dir: String): DataFrame = Multimodal.mediaFeatures(spark, dir)
-  def contaminationCheck(spark: SparkSession, dir: String): DataFrame = Contamination.contamination(spark, dir)
-  def datasetSplits(spark: SparkSession, dir: String): DataFrame = Contamination.splitAssign(spark, dir)
-  def repetitionStats(spark: SparkSession, dir: String): DataFrame = TextOps.repetition(spark, dir)
-  def stratifiedSample(spark: SparkSession, dir: String): DataFrame = TextOps.stratifiedSample(spark, dir)
-  def distinctSketch(spark: SparkSession, dir: String): DataFrame = Sketch.kmvDistinct(spark, dir)
-
-  // --- event shaping --------------------------------------------------------
-
-  def sessionize(spark: SparkSession, dir: String): DataFrame = Sessions.sessionize(spark, dir)
-  def jsonProps(spark: SparkSession, dir: String): DataFrame = Sessions.jsonProps(spark, dir)
+  // --- generic operators ----------------------------------------------------
 
   /** Generic backward as-of join (latest right row at or before each left
     * row's timestamp, per key) — see [[operators.AsOf.joinBackward]].
@@ -147,31 +109,4 @@ object Graft {
   def retractCardinalityRebuild(spark: SparkSession, root: String,
                                 survivingHashes: DataFrame): Unit =
     Sketch.retractHllRebuild(spark, root, survivingHashes)
-
-  def dedupClusters(spark: SparkSession, dir: String): DataFrame = Graph.dedupClusters(spark, dir)
-  def piiScrub(spark: SparkSession, dir: String): DataFrame = TextOps.piiScrub(spark, dir)
-  def docRanks(spark: SparkSession, dir: String): DataFrame = Analytics.docRanks(spark, dir)
-  def tumblingCounts(spark: SparkSession, dir: String): DataFrame = Sessions.tumblingCounts(spark, dir)
-  def langSourceCube(spark: SparkSession, dir: String): DataFrame = Analytics.langSourceCube(spark, dir)
-  def interpolateDailyNet(spark: SparkSession, dir: String): DataFrame = Analytics.interpolateDailyNet(spark, dir)
-  def fuzzyTitles(spark: SparkSession, dir: String): DataFrame = Dedup.fuzzyTitles(spark, dir)
-  def setOpCohorts(spark: SparkSession, dir: String): DataFrame = Sessions.setOpCohorts(spark, dir)
-  def stockIntervals(spark: SparkSession, dir: String): DataFrame = Stock.stockIntervals(spark, dir)
-  def charHistogram(spark: SparkSession, dir: String): DataFrame = Analytics.charHistogram(spark, dir)
-  def intervalJoin(spark: SparkSession, dir: String): DataFrame = Sessions.intervalJoin(spark, dir)
-  def quantilesCont(spark: SparkSession, dir: String): DataFrame = Analytics.tokenQuantilesCont(spark, dir)
-  def userFlags(spark: SparkSession, dir: String): DataFrame = Sessions.userFlags(spark, dir)
-  def sqlExists(spark: SparkSession, dir: String): DataFrame = Sessions.sqlExistsErrors(spark, dir)
-  def kmeansAssign(spark: SparkSession, dir: String): DataFrame = Similarity.kmeansAssign(spark, dir)
-  def fuzzyContamination(spark: SparkSession, dir: String): DataFrame = Contamination.fuzzyContamination(spark, dir)
-  def semDedup(spark: SparkSession, dir: String): DataFrame = Similarity.semDedup(spark, dir)
-  def deltaMinhash(spark: SparkSession, dir: String): DataFrame = Dedup.deltaMinhash(spark, dir)
-  def domainCaps(spark: SparkSession, dir: String): DataFrame = TextOps.domainCaps(spark, dir)
-  def spanDedup(spark: SparkSession, dir: String): DataFrame = TextOps.spanDedup(spark, dir)
-  def unigramLikelihood(spark: SparkSession, dir: String): DataFrame = TextOps.unigramLikelihood(spark, dir)
-  def mixtureWeights(spark: SparkSession, dir: String): DataFrame = TextOps.mixtureWeights(spark, dir)
-  def prototypePrune(spark: SparkSession, dir: String): DataFrame = Similarity.prototypePrune(spark, dir)
-  def minhashEstimate(spark: SparkSession, dir: String): DataFrame = Dedup.minhashEstimate(spark, dir)
-  def ivfKmeans(spark: SparkSession, dir: String): DataFrame = Similarity.ivfKmeans(spark, dir)
-  def cmsHeavyHitters(spark: SparkSession, dir: String): DataFrame = Sketch.cmsHeavyHitters(spark, dir)
 }

@@ -129,8 +129,8 @@ object TextFns {
   val shingles3Sql: String = s"list_distinct($shingles3AllSql)"
 
   /** Native whitespace token count — `size(toks(text))` fused into one
-    * byte walk (identical values, including size()'s legacy -1 for NULL
-    * input; parity contract in [[org.apache.spark.sql.graft.TextNative]]).
+    * byte walk (identical values, including the ANSI size()'s NULL for
+    * NULL input; parity contract in [[org.apache.spark.sql.graft.TextNative]]).
     */
   def tokCount(text: Column): Column =
     org.apache.spark.sql.graft.TextExprs.wsTokenCount(text)

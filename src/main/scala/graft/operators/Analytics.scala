@@ -594,8 +594,11 @@ object Analytics {
     // way share one exchange"; r18: 3 -> 2 exchanges in the op build).
     // Map-side partial dedup is the only thing given up, and TPC-H
     // (o, p) duplicates are ~1% — the deleted exchange carried more.
+    // The projection keeps dropDuplicates' kept row a pure (o, p) pair
+    // whatever extra columns a caller's frame carries.
     val op = graft.TransientCache.register(
       lines
+        .select(col("o"), col("p"))
         .repartition(col("o"))
         .dropDuplicates("o", "p")
         .withColumn("nb", greatest(lit(1L),
@@ -1234,17 +1237,15 @@ object Analytics {
     * calling a dispatcher repeatedly (the bench's sweeps, a nightly
     * loop's per-night reads) would otherwise rescan the corpus once
     * per CALL for a scalar that only moves when the corpus does.
-    * Context-keyed, not session-keyed (foreachBatch clones sessions —
-    * the kmMemo lesson). STALENESS is bounded by design: the scalar
-    * reflects the corpus at first consult, so a later ingest can make
-    * the dispatch pick the formulation the fresh corpus would not —
+    * STALENESS is bounded by design: the scalar reflects the corpus at
+    * first consult, so a later ingest can make the dispatch pick the
+    * formulation the fresh corpus would not —
     * but both branches are hash-proved bit-identical, so a stale
     * scalar can only cost plan optimality, never an answer; evict at
     * the ingest boundary via [[clearDispatchMemo]] (where the fits'
     * consumers evict on refit) to re-derive.
     */
-  private val dispatchMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.SparkContext, String, String), Long]
+  private val dispatchMemo = new graft.ContextMemo[(String, String), Long]
 
   /** Test observability: how many dispatch stats passes actually ran
     * (memo misses) — the [[Similarity.kmFitCount]] pattern.
@@ -1255,16 +1256,14 @@ object Analytics {
   /** Evict this context's memoized dispatch scalars; the next
     * dispatcher call re-derives them from the current corpus.
     */
-  def clearDispatchMemo(spark: SparkSession): Unit =
-    dispatchMemo.keys.filter(_._1 eq spark.sparkContext)
-      .foreach(dispatchMemo.remove)
+  def clearDispatchMemo(spark: SparkSession): Unit = dispatchMemo.clear(spark)
 
   private def dispatchScalar(spark: SparkSession, dir: String, tag: String)
                             (derive: => Long): Long =
-    dispatchMemo.getOrElseUpdate((spark.sparkContext, dir, tag), {
+    dispatchMemo.get(spark, (dir, tag)) {
       dispatchStatsCount.incrementAndGet()
       derive
-    })
+    }
 
   /** q122 — q41 ≡ q116 with the formulation CHOSEN, not hand-picked:
     * one cheap stats pass (a lang-only count hash-agg — the scan prunes

@@ -289,8 +289,13 @@ object Dedup {
   val BloomMBits = 1 << 21
   val BloomK = 4
 
-  private val bloomMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.SparkContext, String, String), Array[Long]]
+  /** The memo key of every signature-bearing corpus state: signatures
+    * differ between hash modes, so the mode is part of the key.
+    */
+  private def modeKey(dir: String): (String, String) =
+    (dir, graft.functions.TextFns.hashMode)
+
+  private val bloomMemo = new graft.ContextMemo[(String, String), Array[Long]]
 
   /** The corpus shingle seen-set as a Bloom bitset, built THROUGH the
     * typed [[graft.functions.BloomSketch]] Aggregator (partial
@@ -299,19 +304,17 @@ object Dedup {
     * hash mode) like [[corpusIndex]]. ⌈m/64⌉ longs of driver state.
     */
   private[graft] def corpusBloom(spark: SparkSession, dir: String): Array[Long] = {
-    val key = (spark.sparkContext, dir, graft.functions.TextFns.hashMode)
-    bloomMemo.getOrElseUpdate(key, {
+    bloomMemo.get(spark, modeKey(dir)) {
       import spark.implicits._
       shingleIndex(spark, dir).filter(col("doc_id") % 10 < 8)
         .select(col("sh_h")).as[Long]
         .select(graft.functions.BloomSketch.filter(BloomMBits, BloomK))
         .head()
-    })
+    }
   }
 
   /** Evict this context's memoized corpus Blooms. */
-  def clearCorpusBloom(spark: SparkSession): Unit =
-    bloomMemo.keys.filter(_._1 eq spark.sparkContext).foreach(bloomMemo.remove)
+  def clearCorpusBloom(spark: SparkSession): Unit = bloomMemo.clear(spark)
 
   /** Scan-stage membership probe against the trained bitset — the
     * native [[org.apache.spark.sql.graft.BloomContains]] expression
@@ -506,35 +509,11 @@ object Dedup {
   private[graft] case class CorpusIndex(bands: DataFrame, shingles: DataFrame,
                                         docs: DataFrame, root: String)
 
-  /** Keyed by SparkContext, NOT SparkSession: Structured Streaming's
-    * `foreachBatch` hands the batch a CLONED session, and a session-keyed
-    * memo would rebuild (and re-own) the index once per micro-batch —
-    * the streaming twin found this. The index is per-(warehouse, data
-    * dir) state; the context is the sharing scope that matches (it is
-    * also the CacheManager's).
-    */
   private val corpusIndexMemo =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String, String), CorpusIndex]
+    new graft.ContextMemo[(String, String), CorpusIndex](_.root)
 
-  /** Temp roots THIS module created (vs. roots of test-injected indexes,
-    * which we must never delete). Guarded by its own monitor.
-    */
-  private[operators] val createdRoots = scala.collection.mutable.Set.empty[String]
-
-  private[operators] def deleteRootDir(root: String): Unit = {
-    val p = java.nio.file.Paths.get(root)
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-  }
-
-  private[graft] def corpusIndex(spark: SparkSession, dir: String): CorpusIndex = {
-    val key = (spark.sparkContext, dir, graft.functions.TextFns.hashMode)
-    corpusIndexMemo.get(key).getOrElse {
-      val root = java.nio.file.Files.createTempDirectory("graft_bandidx_").toString
+  private[graft] def corpusIndex(spark: SparkSession, dir: String): CorpusIndex =
+    corpusIndexMemo.getAt(spark, modeKey(dir), "graft_bandidx_") { root =>
       val wh = new graft.pipelines.Warehouse(spark, root)
       val corpusDocs = Tables.documents(spark, dir).filter(col("doc_id") % 10 < 8)
       wh.write("corpus_shingles", shingleRowsOf(corpusDocs))
@@ -547,16 +526,9 @@ object Dedup {
       // can answer "which docs exist" from O(|docs|) manifest rows
       // instead of distinct-scanning the O(|shingle rows|) tables
       wh.write("corpus_docs", shAtRest.select(col("doc_id")).distinct())
-      val built = CorpusIndex(wh.read("corpus_band_index"), shAtRest,
+      CorpusIndex(wh.read("corpus_band_index"), shAtRest,
         wh.read("corpus_docs"), root)
-      // putIfAbsent, not getOrElseUpdate: a concurrent builder must not
-      // orphan its loser's tmpdir
-      corpusIndexMemo.putIfAbsent(key, built) match {
-        case Some(winner) => deleteRootDir(root); winner
-        case None => createdRoots.synchronized { createdRoots += root }; built
-      }
     }
-  }
 
   /** Drop this context's memoized corpus indexes (the next
     * [[deltaMinhash]] rebuilds). Roots we created are deleted from
@@ -564,13 +536,7 @@ object Dedup {
     * `graft_bandidx_*` dirs; test-injected roots
     * ([[installCorpusIndex]]) are left alone.
     */
-  def clearCorpusIndex(spark: SparkSession): Unit =
-    corpusIndexMemo.keys.filter(_._1 eq spark.sparkContext).foreach { k =>
-      corpusIndexMemo.remove(k).foreach { ci =>
-        val owned = createdRoots.synchronized { createdRoots.remove(ci.root) }
-        if (owned) deleteRootDir(ci.root)
-      }
-    }
+  def clearCorpusIndex(spark: SparkSession): Unit = corpusIndexMemo.clear(spark)
 
   /** Test seam: install a replacement index for (spark, dir) under the
     * CURRENT hash mode — the q74 contract spec injects a poisoned index
@@ -578,15 +544,8 @@ object Dedup {
     * re-deriving the corpus side.
     */
   private[graft] def installCorpusIndex(spark: SparkSession, dir: String,
-                                        idx: CorpusIndex): Unit = {
-    val prev = corpusIndexMemo.put(
-      (spark.sparkContext, dir, graft.functions.TextFns.hashMode), idx)
-    // reclaim a built root the injection just shadowed (unless shared)
-    prev.filter(_.root != idx.root).foreach { ci =>
-      val owned = createdRoots.synchronized { createdRoots.remove(ci.root) }
-      if (owned) deleteRootDir(ci.root)
-    }
-  }
+                                        idx: CorpusIndex): Unit =
+    corpusIndexMemo.install(spark, modeKey(dir), idx)
 
   /** Open (or build) the corpus index at a DURABLE, caller-supplied
     * Warehouse root, and install it as this context's index for `dir`.
@@ -605,8 +564,7 @@ object Dedup {
     * `root` (the per-micro-batch call pattern).
     */
   def openCorpusIndex(spark: SparkSession, dir: String, root: String): Unit = {
-    val key = (spark.sparkContext, dir, graft.functions.TextFns.hashMode)
-    if (corpusIndexMemo.get(key).exists(_.root == root)) return
+    if (corpusIndexMemo.holds(spark, modeKey(dir), root)) return
     installCorpusIndex(spark, dir, corpusIndexAt(spark, root,
       Tables.documents(spark, dir).filter(col("doc_id") % 10 < 8)))
   }
@@ -1405,12 +1363,8 @@ object Dedup {
   private[graft] case class WinnowIndex(fingerprints: DataFrame,
                                         docs: DataFrame, root: String)
 
-  /** Keyed by SparkContext like [[corpusIndexMemo]] (foreachBatch hands
-    * micro-batches a cloned session).
-    */
   private val winnowIndexMemo =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String, String), WinnowIndex]
+    new graft.ContextMemo[(String, String), WinnowIndex](_.root)
 
   /** Build-or-reopen the winnow index tables at an explicit root — the
     * memo-free core shared by [[winnowIndexAtRest]] and
@@ -1433,43 +1387,24 @@ object Dedup {
     WinnowIndex(wh.read("corpus_winnow"), wh.read("corpus_winnow_docs"), root)
   }
 
-  private[graft] def winnowIndexAtRest(spark: SparkSession, dir: String): WinnowIndex = {
-    val key = (spark.sparkContext, dir, graft.functions.TextFns.hashMode)
-    winnowIndexMemo.get(key).getOrElse {
-      val root = java.nio.file.Files.createTempDirectory("graft_winidx_").toString
-      val built = winnowIndexAt(spark, root,
+  private[graft] def winnowIndexAtRest(spark: SparkSession, dir: String): WinnowIndex =
+    winnowIndexMemo.getAt(spark, modeKey(dir), "graft_winidx_") { root =>
+      winnowIndexAt(spark, root,
         Tables.documents(spark, dir).filter(col("doc_id") % 10 < 8))
-      winnowIndexMemo.putIfAbsent(key, built) match {
-        case Some(winner) => deleteRootDir(root); winner
-        case None => createdRoots.synchronized { createdRoots += root }; built
-      }
     }
-  }
 
   /** Drop this context's memoized winnow indexes; roots we created are
     * deleted, injected/opened roots are left alone ([[clearCorpusIndex]]
     * semantics).
     */
-  def clearWinnowIndexAtRest(spark: SparkSession): Unit =
-    winnowIndexMemo.keys.filter(_._1 eq spark.sparkContext).foreach { k =>
-      winnowIndexMemo.remove(k).foreach { wi =>
-        val owned = createdRoots.synchronized { createdRoots.remove(wi.root) }
-        if (owned) deleteRootDir(wi.root)
-      }
-    }
+  def clearWinnowIndexAtRest(spark: SparkSession): Unit = winnowIndexMemo.clear(spark)
 
   /** Test seam — the q74/q88 contract spec injects a poisoned index to
     * prove the screen reads the at-rest table.
     */
   private[graft] def installWinnowIndex(spark: SparkSession, dir: String,
-                                        idx: WinnowIndex): Unit = {
-    val prev = winnowIndexMemo.put(
-      (spark.sparkContext, dir, graft.functions.TextFns.hashMode), idx)
-    prev.filter(_.root != idx.root).foreach { wi =>
-      val owned = createdRoots.synchronized { createdRoots.remove(wi.root) }
-      if (owned) deleteRootDir(wi.root)
-    }
-  }
+                                        idx: WinnowIndex): Unit =
+    winnowIndexMemo.install(spark, modeKey(dir), idx)
 
   /** Open (or build) the winnow index at a DURABLE caller-owned root —
     * [[openCorpusIndex]]'s twin. Existing tables are re-opened as-is
@@ -1479,8 +1414,7 @@ object Dedup {
     * ALL its rows at rest). Caller owns the root — never deleted here.
     */
   def openWinnowIndex(spark: SparkSession, dir: String, root: String): Unit = {
-    val key = (spark.sparkContext, dir, graft.functions.TextFns.hashMode)
-    if (winnowIndexMemo.get(key).exists(_.root == root)) return
+    if (winnowIndexMemo.holds(spark, modeKey(dir), root)) return
     installWinnowIndex(spark, dir, winnowIndexAt(spark, root,
       Tables.documents(spark, dir).filter(col("doc_id") % 10 < 8)))
   }
@@ -1569,8 +1503,7 @@ object Dedup {
   // ---------- q127: the retraction lane on the gate, per-row-store flavor
 
   private val retractedBandMemo =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String, String), CorpusIndex]
+    new graft.ContextMemo[(String, String), CorpusIndex](_.root)
 
   /** The q127 fixture: the q74 at-rest band index built through the
     * normal path, then [[retractFromCorpusIndexOf]]-ed of the shared
@@ -1580,32 +1513,20 @@ object Dedup {
     * shared q74 index must never see the retraction.
     */
   private[graft] def retractedCorpusIndex(spark: SparkSession,
-                                          dir: String): CorpusIndex = {
-    val key = (spark.sparkContext, dir, graft.functions.TextFns.hashMode)
-    retractedBandMemo.get(key).getOrElse {
-      val root = java.nio.file.Files.createTempDirectory("graft_rbandidx_").toString
+                                          dir: String): CorpusIndex =
+    retractedBandMemo.getAt(spark, modeKey(dir), "graft_rbandidx_") { root =>
       val docs = Tables.documents(spark, dir)
       val built = corpusIndexAt(spark, root,
         docs.filter(col("doc_id") % 10 < 8).select(col("doc_id"), col("text")))
-      val retr = retractFromCorpusIndexOf(built,
+      retractFromCorpusIndexOf(built,
         docs.filter(expr(QuantileIndex.RetractPredSql)).select(col("doc_id")))
-      retractedBandMemo.putIfAbsent(key, retr) match {
-        case Some(winner) => deleteRootDir(root); winner
-        case None => createdRoots.synchronized { createdRoots += root }; retr
-      }
     }
-  }
 
   /** Drop this context's memoized retracted band fixtures; owned roots
     * deleted ([[clearCorpusIndex]] semantics).
     */
   def clearRetractedCorpusIndex(spark: SparkSession): Unit =
-    retractedBandMemo.keys.filter(_._1 eq spark.sparkContext).foreach { k =>
-      retractedBandMemo.remove(k).foreach { ci =>
-        val owned = createdRoots.synchronized { createdRoots.remove(ci.root) }
-        if (owned) deleteRootDir(ci.root)
-      }
-    }
+    retractedBandMemo.clear(spark)
 
   /** q127 — the retraction lane on the driver gate for the PER-ROW-STORE
     * flavor (q126 proves the additive flavor): q74's screen, plan

@@ -339,44 +339,28 @@ object QuantileIndex {
   // ---------- fixture index (memoized per context+dir, the q113/q115
   // time-split discipline transposed to the doc tier's % 10 split)
 
-  private val memo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.SparkContext, String), String]
-  private val createdRoots = scala.collection.mutable.Set.empty[String]
+  private val memo = new graft.ContextMemo[String, String](identity)
 
   /** The fixture's at-rest index: corpus = `doc_id % 10 < 8` (q61/q74's
     * seen-corpus convention), seeded through the SAME advance path — a
     * cold warehouse's first night IS the seed.
     */
-  private[graft] def indexAtRest(spark: SparkSession, dir: String): String = {
-    val key = (spark.sparkContext, dir)
-    memo.get(key).getOrElse {
-      val fresh =
-        java.nio.file.Files.createTempDirectory("graft_tqidx_").toString
+  private[graft] def indexAtRest(spark: SparkSession, dir: String): String =
+    memo.getAt(spark, dir, "graft_tqidx_") { fresh =>
       advance(spark, fresh,
         Tables.documents(spark, dir).filter(col("doc_id") % 10 < 8))
-      memo.putIfAbsent(key, fresh) match {
-        case Some(winner) =>
-          graft.pipelines.Fs.delete(spark, fresh); winner
-        case None =>
-          createdRoots.synchronized { createdRoots += fresh }
-          fresh
-      }
+      fresh
     }
-  }
 
-  /** Test seam — inject an index root. */
+  /** Test seam — inject an index root; a built root it shadows is
+    * deleted.
+    */
   private[graft] def installIndex(spark: SparkSession, dir: String,
                                   root: String): Unit =
-    memo.put((spark.sparkContext, dir), root)
+    memo.install(spark, dir, root)
 
   /** Drop this context's memoized indexes; owned roots deleted. */
-  def clearIndex(spark: SparkSession): Unit =
-    memo.keys.filter(_._1 eq spark.sparkContext).foreach { k =>
-      memo.remove(k).foreach { root =>
-        val owned = createdRoots.synchronized { createdRoots.remove(root) }
-        if (owned) graft.pipelines.Fs.delete(spark, root)
-      }
-    }
+  def clearIndex(spark: SparkSession): Unit = memo.clear(spark)
 
   /** q119 — q116's exact grouped quantiles over corpus + tonight's
     * batch WITHOUT rescanning the corpus: the corpus side is the
@@ -501,42 +485,25 @@ object QuantileIndex {
     */
   private[graft] val RetractPredSql = "doc_id % 10 < 8 AND doc_id % 9 = 4"
 
-  private val retractMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.SparkContext, String), String]
+  private val retractMemo = new graft.ContextMemo[String, String](identity)
 
   /** The q126 fixture: the q119 at-rest index seeded through the SAME
     * advance path, then [[retract]]ed of the [[RetractPredSql]] docs —
     * memoized per context+dir like every index fixture (its own root:
     * the shared q119/q120/q125 index must never see the retraction).
     */
-  private[graft] def retractedIndexAtRest(spark: SparkSession, dir: String): String = {
-    val key = (spark.sparkContext, dir)
-    retractMemo.get(key).getOrElse {
-      val fresh =
-        java.nio.file.Files.createTempDirectory("graft_rqidx_").toString
+  private[graft] def retractedIndexAtRest(spark: SparkSession, dir: String): String =
+    retractMemo.getAt(spark, dir, "graft_rqidx_") { fresh =>
       val docs = Tables.documents(spark, dir)
       advance(spark, fresh, docs.filter(col("doc_id") % 10 < 8))
       retract(spark, fresh, docs.filter(expr(RetractPredSql)))
-      retractMemo.putIfAbsent(key, fresh) match {
-        case Some(winner) =>
-          graft.pipelines.Fs.delete(spark, fresh); winner
-        case None =>
-          createdRoots.synchronized { createdRoots += fresh }
-          fresh
-      }
+      fresh
     }
-  }
 
   /** Drop this context's memoized retraction fixtures; owned roots
     * deleted ([[clearIndex]] semantics).
     */
-  def clearRetractedIndex(spark: SparkSession): Unit =
-    retractMemo.keys.filter(_._1 eq spark.sparkContext).foreach { k =>
-      retractMemo.remove(k).foreach { root =>
-        val owned = createdRoots.synchronized { createdRoots.remove(root) }
-        if (owned) graft.pipelines.Fs.delete(spark, root)
-      }
-    }
+  def clearRetractedIndex(spark: SparkSession): Unit = retractMemo.clear(spark)
 
   /** q126 — the q109-discipline INVERTED: q119's read over an at-rest
     * ledger that has RETRACTED documents (negative-delta cancellation,

@@ -818,9 +818,7 @@ object Sessions {
 
   // ------------- q113: incremental retention (the event tier's delta slot)
 
-  private val retIndexMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.SparkContext, String), (String, Long)]
-  private val retCreatedRoots = scala.collection.mutable.Set.empty[String]
+  private val retIndexMemo = new graft.ContextMemo[String, (String, Long)](_._1)
 
   private def eventDays(events: DataFrame): DataFrame =
     events.select(col("user_id"), expr("unix_timestamp(ts) DIV 86400").as("day"))
@@ -928,41 +926,26 @@ object Sessions {
     * is temporal (in-order per user). Returns (root, splitDay).
     */
   private[graft] def retentionIndexAtRest(spark: SparkSession,
-                                          dir: String): (String, Long) = {
-    val key = (spark.sparkContext, dir)
-    val v = retIndexMemo.get(key).getOrElse {
+                                          dir: String): (String, Long) =
+    retIndexMemo.getAt(spark, dir, "graft_retidx_") { fresh =>
       val r = eventDays(Tables.events(spark, dir))
         .agg(min(col("day")).as("lo"), max(col("day")).as("hi")).head()
       val split = r.getLong(0) + (r.getLong(1) - r.getLong(0)) * 4 / 5
-      val fresh = java.nio.file.Files.createTempDirectory("graft_retidx_").toString
       retentionIndexAt(spark, fresh, Tables.events(spark, dir)
         .filter(expr("unix_timestamp(ts) DIV 86400") < split))
-      retIndexMemo.putIfAbsent(key, (fresh, split)) match {
-        case Some(winner) =>
-          graft.pipelines.Fs.delete(spark, fresh); winner
-        case None =>
-          retCreatedRoots.synchronized { retCreatedRoots += fresh }
-          (fresh, split)
-      }
+      (fresh, split)
     }
-    v
-  }
 
   /** Test seam — inject an index root + split (the poisoned-index
-    * discipline: the spec proves the query reads the tables).
+    * discipline: the spec proves the query reads the tables); a built
+    * root it shadows is deleted.
     */
   private[graft] def installRetentionIndex(spark: SparkSession, dir: String,
                                            root: String, split: Long): Unit =
-    retIndexMemo.put((spark.sparkContext, dir), (root, split))
+    retIndexMemo.install(spark, dir, (root, split))
 
   /** Drop this context's memoized retention indexes; owned roots deleted. */
-  def clearRetentionIndex(spark: SparkSession): Unit =
-    retIndexMemo.keys.filter(_._1 eq spark.sparkContext).foreach { k =>
-      retIndexMemo.remove(k).foreach { case (root, _) =>
-        val owned = retCreatedRoots.synchronized { retCreatedRoots.remove(root) }
-        if (owned) graft.pipelines.Fs.delete(spark, root)
-      }
-    }
+  def clearRetentionIndex(spark: SparkSession): Unit = retIndexMemo.clear(spark)
 
   /** q113 — the q104 cohort triangle over corpus + tonight's batch
     * WITHOUT rescanning the corpus event log: the corpus side is the
@@ -1027,8 +1010,7 @@ object Sessions {
     */
   private[graft] val RetractUsersPredSql = "user_id % 9 = 4"
 
-  private val retRetractMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.SparkContext, String), (String, Long)]
+  private val retRetractMemo = new graft.ContextMemo[String, (String, Long)](_._1)
 
   /** The q128 fixture: the q113 at-rest retention index seeded through
     * the SAME path, then [[retractRetentionUsers]]'d of the opt-out
@@ -1036,38 +1018,22 @@ object Sessions {
     * index must never see the retraction; the q126 rqidx discipline).
     */
   private[graft] def retractedRetentionIndexAtRest(spark: SparkSession,
-                                                   dir: String): (String, Long) = {
-    val key = (spark.sparkContext, dir)
-    val v = retRetractMemo.get(key).getOrElse {
+                                                   dir: String): (String, Long) =
+    retRetractMemo.getAt(spark, dir, "graft_rretidx_") { fresh =>
       val ev = Tables.events(spark, dir)
       val r = eventDays(ev)
         .agg(min(col("day")).as("lo"), max(col("day")).as("hi")).head()
       val split = r.getLong(0) + (r.getLong(1) - r.getLong(0)) * 4 / 5
-      val fresh =
-        java.nio.file.Files.createTempDirectory("graft_rretidx_").toString
       retentionIndexAt(spark, fresh,
         ev.filter(expr("unix_timestamp(ts) DIV 86400") < split))
       retractRetentionUsers(spark, fresh,
         ev.select(col("user_id")).filter(expr(RetractUsersPredSql)))
-      retRetractMemo.putIfAbsent(key, (fresh, split)) match {
-        case Some(winner) =>
-          graft.pipelines.Fs.delete(spark, fresh); winner
-        case None =>
-          retCreatedRoots.synchronized { retCreatedRoots += fresh }
-          (fresh, split)
-      }
+      (fresh, split)
     }
-    v
-  }
 
   /** Drop this context's memoized q128 fixtures; owned roots deleted. */
   def clearRetractedRetentionIndex(spark: SparkSession): Unit =
-    retRetractMemo.keys.filter(_._1 eq spark.sparkContext).foreach { k =>
-      retRetractMemo.remove(k).foreach { case (root, _) =>
-        val owned = retCreatedRoots.synchronized { retCreatedRoots.remove(root) }
-        if (owned) graft.pipelines.Fs.delete(spark, root)
-      }
-    }
+    retRetractMemo.clear(spark)
 
   /** q128 — the q126 discipline on the EVENT tier: q113's cohort read
     * over an at-rest index from which the opt-out users were RETRACTED
@@ -1112,9 +1078,7 @@ object Sessions {
 
   // ---------- q115: incremental transitions (the ADDITIVE delta slot)
 
-  private val trIndexMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.SparkContext, String), (String, Long)]
-  private val trCreatedRoots = scala.collection.mutable.Set.empty[String]
+  private val trIndexMemo = new graft.ContextMemo[String, (String, Long)](_._1)
 
   /** Deterministic key of a night's event batch — a pure function of
     * the event-id set (the Corpus `docSetKey` discipline), so every
@@ -1321,39 +1285,25 @@ object Sessions {
     * (a cold warehouse's first night is the seed). Returns (root, split).
     */
   private[graft] def transitionsIndexAtRest(spark: SparkSession,
-                                            dir: String): (String, Long) = {
-    val key = (spark.sparkContext, dir)
-    val v = trIndexMemo.get(key).getOrElse {
+                                            dir: String): (String, Long) =
+    trIndexMemo.getAt(spark, dir, "graft_tridx_") { fresh =>
       val r = eventDays(Tables.events(spark, dir))
         .agg(min(col("day")).as("lo"), max(col("day")).as("hi")).head()
       val split = r.getLong(0) + (r.getLong(1) - r.getLong(0)) * 4 / 5
-      val fresh = java.nio.file.Files.createTempDirectory("graft_tridx_").toString
       advanceTransitionsIndex(spark, fresh, Tables.events(spark, dir)
         .filter(expr("unix_timestamp(ts) DIV 86400") < split))
-      trIndexMemo.putIfAbsent(key, (fresh, split)) match {
-        case Some(winner) =>
-          graft.pipelines.Fs.delete(spark, fresh); winner
-        case None =>
-          trCreatedRoots.synchronized { trCreatedRoots += fresh }
-          (fresh, split)
-      }
+      (fresh, split)
     }
-    v
-  }
 
-  /** Test seam — inject an index root + split. */
+  /** Test seam — inject an index root + split; a built root it shadows
+    * is deleted.
+    */
   private[graft] def installTransitionsIndex(spark: SparkSession, dir: String,
                                              root: String, split: Long): Unit =
-    trIndexMemo.put((spark.sparkContext, dir), (root, split))
+    trIndexMemo.install(spark, dir, (root, split))
 
   /** Drop this context's memoized transitions indexes; owned roots deleted. */
-  def clearTransitionsIndex(spark: SparkSession): Unit =
-    trIndexMemo.keys.filter(_._1 eq spark.sparkContext).foreach { k =>
-      trIndexMemo.remove(k).foreach { case (root, _) =>
-        val owned = trCreatedRoots.synchronized { trCreatedRoots.remove(root) }
-        if (owned) graft.pipelines.Fs.delete(spark, root)
-      }
-    }
+  def clearTransitionsIndex(spark: SparkSession): Unit = trIndexMemo.clear(spark)
 
   /** q115 — the q105 transition matrix over corpus + tonight's batch
     * WITHOUT rescanning the corpus event log: the corpus side is the

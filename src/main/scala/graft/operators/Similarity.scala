@@ -339,23 +339,18 @@ object Similarity {
     * most expensive derivation in the similarity tier, and a session
     * running q71 and q73 would otherwise pay it twice (the
     * [[Graph.simhashComponents]] discipline; hash mode is irrelevant
-    * here — the fit reads only numeric embeddings). Keys use the
-    * SparkContext, not the session: Structured Streaming's foreachBatch
-    * hands each micro-batch a CLONED session (the corpusIndexMemo /
-    * bloomMemo lesson), and a session-keyed memo would silently refit
-    * once per micro-batch for any streaming consumer. Entries are plain
+    * here — the fit reads only numeric embeddings). Entries are plain
     * driver arrays (no cached RDDs), so [[clearKmeansMemo]] only drops
     * references; eviction + rebuild equality is spec'd in
     * TrainingOpsSpec via [[kmFitCount]].
     */
-  private val kmMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.SparkContext, String, Boolean), IndexedSeq[Array[Double]]]
+  private val kmMemo = new graft.ContextMemo[(String, Boolean), IndexedSeq[Array[Double]]]
 
   /** Test observability: how many Lloyd fits actually ran (memo misses). */
   private[graft] val kmFitCount = new java.util.concurrent.atomic.AtomicInteger(0)
 
   private[graft] def kmeansCentroids(spark: SparkSession, dir: String): IndexedSeq[Array[Double]] =
-    kmMemo.getOrElseUpdate((spark.sparkContext, dir, false), fitKmeans(spark, dir))
+    kmMemo.get(spark, (dir, false))(fitKmeans(spark, dir))
 
   /** The q89 tier's FROZEN coarse fit: Lloyd over the CORPUS side only
     * (`vec_id % 10 < 8` — the delta tier's seen/incoming convention),
@@ -366,7 +361,7 @@ object Similarity {
     * the FAISS `add()` contract; refit = index rebuild).
     */
   private[graft] def corpusKmeansCentroids(spark: SparkSession, dir: String): IndexedSeq[Array[Double]] =
-    kmMemo.getOrElseUpdate((spark.sparkContext, dir, true),
+    kmMemo.get(spark, (dir, true))(
       fitKmeansWith(spark, dir, orderedFold = true, corpusOnly = true))
 
   /** Evict this context's memoized fits — the Lloyd centroids AND the
@@ -375,8 +370,8 @@ object Similarity {
     * next q71/q73/q83 call refits.
     */
   def clearKmeansMemo(spark: SparkSession): Unit = {
-    kmMemo.keys.filter(_._1 eq spark.sparkContext).foreach(kmMemo.remove)
-    pqMemo.keys.filter(_._1 eq spark.sparkContext).foreach(pqMemo.remove)
+    kmMemo.clear(spark)
+    pqMemo.clear(spark)
     // the at-rest codes quantize the cleared fits' space — a fresh fit
     // with a stale codes table would ADC against the wrong codebooks
     clearAnnIndex(spark)
@@ -798,8 +793,8 @@ object Similarity {
         element_at(centArr, col("cell") + 1), (x, c) => x - c))
   }
 
-  private val pqMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.SparkContext, String, Boolean), IndexedSeq[IndexedSeq[Array[Double]]]]
+  private val pqMemo =
+    new graft.ContextMemo[(String, Boolean), IndexedSeq[IndexedSeq[Array[Double]]]]
 
   /** Test observability: how many PQ trainings actually ran. */
   private[graft] val pqFitCount = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -810,7 +805,7 @@ object Similarity {
     * coarse fit by [[clearKmeansMemo]].
     */
   private[graft] def pqCodebooks(spark: SparkSession, dir: String): IndexedSeq[IndexedSeq[Array[Double]]] =
-    pqMemo.getOrElseUpdate((spark.sparkContext, dir, false), fitPq(spark, dir))
+    pqMemo.get(spark, (dir, false))(fitPq(spark, dir))
 
   /** The q89 tier's FROZEN PQ codebooks: trained on the CORPUS residuals
     * against [[corpusKmeansCentroids]] — see that fit for why the batch
@@ -818,7 +813,7 @@ object Similarity {
     * with the coarse fits ([[clearKmeansMemo]]).
     */
   private[graft] def corpusPqCodebooks(spark: SparkSession, dir: String): IndexedSeq[IndexedSeq[Array[Double]]] =
-    pqMemo.getOrElseUpdate((spark.sparkContext, dir, true),
+    pqMemo.get(spark, (dir, true))(
       fitPqWith(spark, dir, orderedFold = true, corpusOnly = true))
 
   /** Deterministic PQ training (the per-subspace k-means of Jégou et al.
@@ -1096,12 +1091,10 @@ object Similarity {
     */
   private[graft] case class AnnIndex(codes: DataFrame, root: String)
 
-  /** Keyed by SparkContext like every index memo (foreachBatch hands
-    * micro-batches a cloned session); no hash-mode component — the ANN
-    * tier is pure numerics.
+  /** Per data dir; no hash-mode component — the ANN tier is pure
+    * numerics.
     */
-  private val annIndexMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.SparkContext, String), AnnIndex]
+  private val annIndexMemo = new graft.ContextMemo[String, AnnIndex](_.root)
 
   /** Encode a vector frame against FROZEN fits: coarse cell by literal-
     * centroid argmin, then per-subspace PQ codes against the literal
@@ -1139,46 +1132,25 @@ object Similarity {
     AnnIndex(wh.read("corpus_codes"), root)
   }
 
-  private[graft] def annIndexAtRest(spark: SparkSession, dir: String): AnnIndex = {
-    val key = (spark.sparkContext, dir)
-    annIndexMemo.get(key).getOrElse {
-      val root = java.nio.file.Files.createTempDirectory("graft_annidx_").toString
-      val built = annIndexAt(spark, root,
+  private[graft] def annIndexAtRest(spark: SparkSession, dir: String): AnnIndex =
+    annIndexMemo.getAt(spark, dir, "graft_annidx_") { root =>
+      annIndexAt(spark, root,
         pqCodesOf(vecs(spark, dir).filter(col("vec_id") % 10 < 8),
           corpusKmeansCentroids(spark, dir), corpusPqCodebooks(spark, dir)))
-      annIndexMemo.putIfAbsent(key, built) match {
-        case Some(winner) => Dedup.deleteRootDir(root); winner
-        case None =>
-          Dedup.createdRoots.synchronized { Dedup.createdRoots += root }; built
-      }
     }
-  }
 
   /** Drop this context's memoized ANN indexes; roots we created are
     * deleted, injected/opened roots are left alone
     * ([[Dedup.clearCorpusIndex]] semantics).
     */
-  def clearAnnIndex(spark: SparkSession): Unit =
-    annIndexMemo.keys.filter(_._1 eq spark.sparkContext).foreach { k =>
-      annIndexMemo.remove(k).foreach { ai =>
-        val owned =
-          Dedup.createdRoots.synchronized { Dedup.createdRoots.remove(ai.root) }
-        if (owned) Dedup.deleteRootDir(ai.root)
-      }
-    }
+  def clearAnnIndex(spark: SparkSession): Unit = annIndexMemo.clear(spark)
 
   /** Test seam — the q74/q88 contract spec pattern: inject a poisoned
     * index to prove the screen reads the at-rest table.
     */
   private[graft] def installAnnIndex(spark: SparkSession, dir: String,
-                                     idx: AnnIndex): Unit = {
-    val prev = annIndexMemo.put((spark.sparkContext, dir), idx)
-    prev.filter(_.root != idx.root).foreach { ai =>
-      val owned =
-        Dedup.createdRoots.synchronized { Dedup.createdRoots.remove(ai.root) }
-      if (owned) Dedup.deleteRootDir(ai.root)
-    }
-  }
+                                     idx: AnnIndex): Unit =
+    annIndexMemo.install(spark, dir, idx)
 
   /** Open (or build) the ANN index at a DURABLE caller-owned root —
     * [[Dedup.openCorpusIndex]]'s twin for the embedding tier. Existing
@@ -1186,8 +1158,7 @@ object Similarity {
     * process stopped). Caller owns the root — never deleted here.
     */
   def openAnnIndex(spark: SparkSession, dir: String, root: String): Unit = {
-    val key = (spark.sparkContext, dir)
-    if (annIndexMemo.get(key).exists(_.root == root)) return
+    if (annIndexMemo.holds(spark, dir, root)) return
     installAnnIndex(spark, dir, annIndexAt(spark, root,
       pqCodesOf(vecs(spark, dir).filter(col("vec_id") % 10 < 8),
         corpusKmeansCentroids(spark, dir), corpusPqCodebooks(spark, dir))))

@@ -206,9 +206,7 @@ object Sketch {
 
   // ------------------------------------ q109: incremental HLL at rest
 
-  private val hllIndexMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.SparkContext, String, String), String]
-  private val hllCreatedRoots = scala.collection.mutable.Set.empty[String]
+  private val hllIndexMemo = new graft.ContextMemo[(String, String), String](identity)
 
   /** Build-or-open the at-rest register table at `root` (the
     * winnowIndexAt discipline: existing tables re-open as-is, so the
@@ -318,21 +316,15 @@ object Sketch {
     * agg IS the collapse).
     */
   private[graft] def hllIndexAtRest(spark: SparkSession, dir: String): DataFrame = {
-    val key = (spark.sparkContext, dir, graft.functions.TextFns.hashMode)
-    val root = hllIndexMemo.get(key).getOrElse {
-      val fresh = java.nio.file.Files.createTempDirectory("graft_hllidx_").toString
+    val root = hllIndexMemo.getAt(spark, (dir, graft.functions.TextFns.hashMode),
+        "graft_hllidx_") { fresh =>
       val corpusH = Dedup.shingleIndex(spark, dir)
         .filter(col("doc_id") % 10 < 8)
       hllIndexAt(spark, fresh,
         corpusH.filter(col("doc_id") % 2 === 0).select(col("sh_h")))
       advanceHllEpoch(spark, fresh, 1L,
         corpusH.filter(col("doc_id") % 2 === 1).select(col("sh_h")))
-      hllIndexMemo.putIfAbsent(key, fresh) match {
-        case Some(winner) =>
-          graft.pipelines.Fs.delete(spark, fresh); winner
-        case None =>
-          hllCreatedRoots.synchronized { hllCreatedRoots += fresh }; fresh
-      }
+      fresh
     }
     // project the stripe label away: the reader's contract is "rows that
     // max-merge per reg", which striped rows satisfy — the q109 merge
@@ -343,21 +335,15 @@ object Sketch {
   }
 
   /** Test seam — inject a register table root (the poisoned-index
-    * discipline: the q109 spec proves the screen reads the table).
+    * discipline: the q109 spec proves the screen reads the table); a
+    * built root it shadows is deleted.
     */
   private[graft] def installHllIndex(spark: SparkSession, dir: String,
                                      root: String): Unit =
-    hllIndexMemo.put(
-      (spark.sparkContext, dir, graft.functions.TextFns.hashMode), root)
+    hllIndexMemo.install(spark, (dir, graft.functions.TextFns.hashMode), root)
 
   /** Drop this context's memoized HLL indexes; owned roots deleted. */
-  def clearHllIndex(spark: SparkSession): Unit =
-    hllIndexMemo.keys.filter(_._1 eq spark.sparkContext).foreach { k =>
-      hllIndexMemo.remove(k).foreach { root =>
-        val owned = hllCreatedRoots.synchronized { hllCreatedRoots.remove(root) }
-        if (owned) graft.pipelines.Fs.delete(spark, root)
-      }
-    }
+  def clearHllIndex(spark: SparkSession): Unit = hllIndexMemo.clear(spark)
 
   /** Advance the at-rest registers with a batch — union + element-wise
     * max through the tmp-swap write. Max-merge makes the advance

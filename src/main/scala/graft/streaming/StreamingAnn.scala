@@ -29,9 +29,9 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
   *     append — this tier has no data/manifest crash window).
   *
   * The encode side NEVER refits: batch vectors are quantized with the
-  * corpus-frozen coarse centroids and PQ codebooks (memoized per
-  * SparkContext, so foreachBatch's cloned sessions share one fit — the
-  * corpusIndexMemo lesson, spec'd for the fits in TrainingOpsSpec).
+  * corpus-frozen coarse centroids and PQ codebooks (a
+  * [[graft.ContextMemo]], so foreachBatch's cloned sessions share one
+  * fit — spec'd for the fits in TrainingOpsSpec).
   * Durable across process restarts iff `indexRoot` names a caller-owned
   * path ([[Similarity.openAnnIndex]]); without it the guarantee is
   * scoped to one JVM lifetime, as documented on [[StreamingDedup]].

@@ -1,10 +1,8 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, IntegerType, LongType, StringType}
@@ -213,35 +211,23 @@ object TextNative {
 }
 
 /** Whitespace token count of a string — the `size(toks(text))` drop-in.
-  * Preserves size()'s legacy null contract exactly: NULL input yields -1
-  * (never null), so the expression is non-nullable like `size` and swaps
-  * into existing plans without a schema or semantics change.
+  * NULL in, NULL out: the ANSI `size()` contract this engine's sessions
+  * run under (the legacy non-ANSI `size(NULL) = -1` does not apply), so
+  * a null text drops out of sums and averages as it would under `size`.
   */
 case class WsTokenCount(child: Expression)
   extends UnaryExpression with ExpectsInputTypes {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = IntegerType
-  override def nullable: Boolean = false
   override def prettyName: String = "ws_token_count"
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) -1
-    else TextNative.tokenCount(v.asInstanceOf[UTF8String])
-  }
+  override def nullSafeEval(input: Any): Any =
+    TextNative.tokenCount(input.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    ev.copy(
-      code = code"""
-        ${c.code}
-        int ${ev.value} = ${c.isNull}
-          ? -1
-          : org.apache.spark.sql.graft.TextNative.tokenCount(${c.value});
-      """,
-      isNull = FalseLiteral)
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c =>
+      s"org.apache.spark.sql.graft.TextNative.tokenCount($c)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

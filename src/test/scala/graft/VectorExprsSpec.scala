@@ -216,14 +216,14 @@ class VectorExprsSpec extends SparkSpec {
     val rnd = new scala.util.Random(11)
     val fuzz = Seq.fill(300)(Seq.fill(rnd.nextInt(30))(
       rnd.alphanumeric.take(rnd.nextInt(8)).mkString).mkString(" "))
-    val df = (textCases ++ fuzz).toDF("text")
+    // a NULL row too: null-safe comparison, so NULL vs -1 is a mismatch
+    val df = ((textCases ++ fuzz).map(Option(_)) :+ None).toDF("text")
       .withColumn("native", graft.functions.TextFns.tokCount(col("text")))
       .withColumn("hof", size(graft.functions.TextFns.toksHof(col("text"))))
-    assert(df.filter(col("native") =!= col("hof")).isEmpty)
-    // the legacy null contract: -1, never null (size() parity)
-    val nulls = Seq((1, Option.empty[String])).toDF("i", "text")
-      .select(graft.functions.TextFns.tokCount(col("text"))).first()
-    assert(!nulls.isNullAt(0) && nulls.getInt(0) == -1)
+    assert(df.filter(!(col("native") <=> col("hof"))).isEmpty)
+    // the session's ANSI size() contract: NULL in, NULL out
+    val nulls = df.filter(col("text").isNull).select(col("native")).first()
+    assert(nulls.isNullAt(0))
   }
 
   test("ws_tokens is bit-identical to filter(split(lower))") {
