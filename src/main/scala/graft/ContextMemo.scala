@@ -8,8 +8,8 @@ import org.apache.spark.sql.SparkSession
   * SparkContext, shared by every query and micro-batch, and reclaimed
   * by [[clear]].
   *
-  * Keyed by SparkContext, NOT SparkSession: Structured Streaming's
-  * `foreachBatch` hands each micro-batch a CLONED session, and a
+  * Keyed by SparkContext, NOT SparkSession: a streaming twin's sink
+  * ([[streaming.Twin.sink]]) hands each micro-batch a CLONED session, and a
   * session-keyed memo would rebuild (and re-own) its state once per
   * micro-batch. The context is the sharing scope that matches (it is
   * also the CacheManager's).

@@ -776,7 +776,7 @@ object Dedup {
     // path a pre-filtered batch (the streaming loop\'s seen-ledger
     // anti-join) READS in its lineage, and that write would trigger a
     // lazy recache of a cached frame — re-executed outside the
-    // micro-batch, a foreachBatch source replays EMPTY and the second
+    // micro-batch, a streaming source replays EMPTY and the second
     // append would silently write nothing (the streaming twin\'s spec
     // caught exactly this). Checkpointing materializes the batch
     // shingles ONCE and cuts the plan below them, so no write can

@@ -320,11 +320,7 @@ object QuantileIndex {
       .select(lit(keyVal).as("batch_key"),
         col("g"), col("source"), col("v"), col("nv"))
     if (!nothingPresent) {
-      wh.append("tq_hist",
-        delta.join(
-          wh.read("tq_hist")
-            .select(col("batch_key"), col("g"), col("source"), col("v")),
-          Seq("batch_key", "g", "source", "v"), "left_anti"))
+      wh.appendNew("tq_hist", delta, Seq("batch_key", "g", "source", "v"))
       wh.compactIfFragmented("tq_hist")
       wh.write("tq_docs",
         wh.read("tq_docs").join(broadcast(ids), Seq("doc_id"), "left_anti"))

@@ -884,15 +884,13 @@ object Sessions {
     // rows — the InBatchRedeliverySpec discipline)
     val bdays = eventDays(batch).dropDuplicates("user_id", "day")
     val bfd = bdays.groupBy(col("user_id")).agg(min(col("day")).as("fd"))
-    wh.append("ret_user",
-      bfd.join(wh.read("ret_user"), Seq("user_id"), "left_anti"))
+    wh.appendNew("ret_user", bfd, Seq("user_id"))
     wh.compactIfFragmented("ret_user")
     val fds = wh.read("ret_user")
     val offs = bdays.join(fds, Seq("user_id"))
       .select(col("user_id"), expr("(day - fd) DIV 7").as("week_offset"))
       .distinct()
-    wh.append("ret_weeks",
-      offs.join(wh.read("ret_weeks"), Seq("user_id", "week_offset"), "left_anti"))
+    wh.appendNew("ret_weeks", offs, Seq("user_id", "week_offset"))
     wh.compactIfFragmented("ret_weeks")
   }
 
@@ -1267,10 +1265,7 @@ object Sessions {
           .withColumn("n", -col("n"))
           .crossJoin(broadcast(key))
           .select(col("batch_key"), col("from_type"), col("to_type"), col("n"))
-        wh.append("tr_deltas",
-          delta.join(wh.read("tr_deltas")
-              .select(col("batch_key"), col("from_type"), col("to_type")),
-            Seq("batch_key", "from_type", "to_type"), "left_anti"))
+        wh.appendNew("tr_deltas", delta, Seq("batch_key", "from_type", "to_type"))
         wh.compactIfFragmented("tr_deltas")
         wh.write("tr_last",
           wh.read("tr_last").join(broadcast(ev.select(col("user_id")).distinct()),

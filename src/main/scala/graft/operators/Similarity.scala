@@ -1208,9 +1208,8 @@ object Similarity {
     // rows already committed, so a source that redelivers a vec_id
     // WITHIN one batch would otherwise append it twice and break the
     // one-row-per-vector = own-manifest invariant.
-    val fresh = pqCodesOf(vecsOf(batchVecs).dropDuplicates("vec_id"), cents, cbs)
-      .join(wh.read("corpus_codes").select(col("vec_id")), Seq("vec_id"), "left_anti")
-    wh.append("corpus_codes", fresh)
+    wh.appendNew("corpus_codes",
+      pqCodesOf(vecsOf(batchVecs).dropDuplicates("vec_id"), cents, cbs), Seq("vec_id"))
     wh.compactIfFragmented("corpus_codes")
     AnnIndex(wh.read("corpus_codes"), idx.root)
   }

@@ -302,11 +302,9 @@ object CorpusPipeline {
       // committed): corpus_raw stays exactly "the union of every raw
       // input ever offered", UNSCREENED, so the periodic [[refreshFull]]
       // lane is a clean refine() over it
-      wh.append("corpus_raw",
+      wh.appendNew("corpus_raw",
         batch.select(col("doc_id"), col("source"), col("text"))
-          .dropDuplicates("doc_id")
-          .join(wh.read("corpus_raw").select(col("doc_id")),
-            Seq("doc_id"), "left_anti"))
+          .dropDuplicates("doc_id"), Seq("doc_id"))
       wh.compactIfFragmented("corpus_raw")
       // the docs this night actually ADDS to the live corpus — pinned
       // (localCheckpoint) so the token-count delta and the corpus_live
@@ -339,17 +337,13 @@ object CorpusPipeline {
       // before the next batch is offered.
       val nightKey = docSetKey(
         batch.select(col("doc_id")).dropDuplicates("doc_id"))
-      wh.append("live_token_counts",
+      wh.appendNew("live_token_counts",
         TextOps.tokenCountsOf(toAdd)
           .crossJoin(broadcast(nightKey))
-          .select(col("batch_key"), col("tok"), col("cnt"))
-          .join(wh.read("live_token_counts")
-              .select(col("batch_key"), col("tok")),
-            Seq("batch_key", "tok"), "left_anti"))
+          .select(col("batch_key"), col("tok"), col("cnt")),
+        Seq("batch_key", "tok"))
       wh.append("corpus_live", toAdd)
-      wh.append("live_keys",
-        novel.select(col("k"))
-          .join(wh.read("live_keys"), Seq("k"), "left_anti"))
+      wh.appendNew("live_keys", novel.select(col("k")), Seq("k"))
       // nightly compaction cadence for the pipeline-owned append tables
       // (the live index tiers compact inside their own append helpers);
       // BEFORE batchInLive below, so its lineage reads the new layout
@@ -453,14 +447,12 @@ object CorpusPipeline {
             count(lit(1)).as("nd"))
           .select(xxhash64(col("h"), col("nd"), lit("retract"), lit(epoch))
             .as("batch_key"))
-        wh.append("live_token_counts",
+        wh.appendNew("live_token_counts",
           graft.operators.TextOps.tokenCountsOf(docs)
             .withColumn("cnt", -col("cnt"))
             .crossJoin(broadcast(key))
-            .select(col("batch_key"), col("tok"), col("cnt"))
-            .join(wh.read("live_token_counts")
-                .select(col("batch_key"), col("tok")),
-              Seq("batch_key", "tok"), "left_anti"))
+            .select(col("batch_key"), col("tok"), col("cnt")),
+          Seq("batch_key", "tok"))
         wh.compactIfFragmented("live_token_counts")
         // 2 — key removal (re-offered identical content re-screens)
         wh.write("live_keys",

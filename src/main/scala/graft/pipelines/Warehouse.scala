@@ -4,20 +4,6 @@ import graft.operators.Upsert
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** A parquet-backed warehouse with keyed upserts and per-pipeline
-  * checkpoints — the Spark-native stand-in for the reference's central
-  * `analytics_db` MySQL (tables + `etl_progress`,
-  * etl_sales/db/db_helpers.py, SURVEY.md §1.1/§2.9). Swapping parquet for
-  * Delta/Iceberg (MERGE INTO, atomic commits) changes this class only.
-  *
-  * Crash-safety contract (SURVEY.md §7.3): checkpoints are advanced AFTER
-  * the sink write commits. A crash between the two replays the window on
-  * the next run; last-wins upserts (and the ledger ingest's id anti-join)
-  * make the replay idempotent — the same at-least-once-extract /
-  * exactly-once-effect scheme the reference gets from transactions.
-  * Table rewrites go through [[Fs.replaceWith]] (write tmp → swap), so a
-  * failed merge never destroys the previous table contents.
-  */
 /** Sink seam for the S8/S9 keyed merges. The harness default is the
   * parquet keyed-overwrite ([[Warehouse.upsert]]: read current + merge +
   * tmp-swap); a lakehouse deployment drops in Delta/Iceberg
@@ -32,6 +18,24 @@ trait UpsertSink {
              versionCol: String, tiebreakCol: String): Unit
 }
 
+/** A parquet-backed warehouse with keyed upserts and per-pipeline
+  * checkpoints — the Spark-native stand-in for the reference's central
+  * `analytics_db` MySQL (tables + `etl_progress`,
+  * etl_sales/db/db_helpers.py, SURVEY.md §1.1/§2.9). Swapping parquet for
+  * Delta/Iceberg (MERGE INTO, atomic commits) changes this class only.
+  *
+  * Crash-safety contract (SURVEY.md §7.3): checkpoints are advanced AFTER
+  * the sink write commits. A crash between the two replays the window on
+  * the next run; last-wins upserts (and the ledger ingest's id anti-join)
+  * make the replay idempotent — the same at-least-once-extract /
+  * exactly-once-effect scheme the reference gets from transactions.
+  * Table rewrites go through [[Fs.replaceWith]] (write tmp → swap), so a
+  * failed merge never destroys the previous table contents.
+  *
+  * Keyed appends go through [[appendNew]]: a replayed batch re-derives
+  * the same keys, and the anti-join against the committed rows lands
+  * only what is missing.
+  */
 final class Warehouse(val spark: SparkSession, val root: String) extends UpsertSink {
 
   private def path(table: String): String = s"$root/$table"
@@ -57,6 +61,16 @@ final class Warehouse(val spark: SparkSession, val root: String) extends UpsertS
     Fs.heal(spark, path(table))
     df.write.mode(SaveMode.Append).parquet(path(table))
   }
+
+  /** Keyed-guard append: append the rows of `rows` whose `keys` are not
+    * yet in `table` (all of them when the table is missing). Rows
+    * duplicated WITHIN `rows` are not collapsed — dedup the batch first
+    * where a source can redeliver in one batch.
+    */
+  def appendNew(table: String, rows: DataFrame, keys: Seq[String]): Unit =
+    append(table,
+      if (!exists(table)) rows
+      else rows.join(read(table).select(keys.map(col): _*), keys, "left_anti"))
 
   /** Keyed last-wins upsert (S8/S9): read current, merge via
     * [[Upsert.upsertByKey]], write to a tmp dir (the read of the old

@@ -2,9 +2,8 @@ package graft.streaming
 
 import graft.operators.Similarity
 import graft.pipelines.Warehouse
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 
 /** Structured-Streaming twin of the EMBEDDING tier's nightly loop (q89 +
   * [[Similarity.appendToAnnIndex]]) — the third of the three: fuzzy
@@ -30,7 +29,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
   *
   * The encode side NEVER refits: batch vectors are quantized with the
   * corpus-frozen coarse centroids and PQ codebooks (a
-  * [[graft.ContextMemo]], so foreachBatch's cloned sessions share one
+  * [[graft.ContextMemo]], so the micro-batches' cloned sessions share one
   * fit — spec'd for the fits in TrainingOpsSpec).
   * Durable across process restarts iff `indexRoot` names a caller-owned
   * path ([[Similarity.openAnnIndex]]); without it the guarantee is
@@ -45,12 +44,8 @@ object StreamingAnn {
                    indexRoot: Option[String] = None): Unit = {
     val spark = batch.sparkSession
     indexRoot.foreach(Similarity.openAnnIndex(spark, dir, _))
-    val matches = Similarity.screenAnnAgainstIndex(spark, dir, batch)
-    val novel =
-      if (!wh.exists("ann_matches")) matches
-      else matches.join(wh.read("ann_matches").select(col("q_id"), col("rank")),
-        Seq("q_id", "rank"), "left_anti")
-    wh.append("ann_matches", novel)
+    wh.appendNew("ann_matches", Similarity.screenAnnAgainstIndex(spark, dir, batch),
+      Seq("q_id", "rank"))
     // the index advance gets the UNFILTERED batch: appendToAnnIndex's
     // vec_id anti-join makes it idempotent on replay
     Similarity.appendToAnnIndex(spark, dir, batch)
@@ -91,29 +86,11 @@ object StreamingAnn {
     graft.TransientCache.drain()
   }
 
-  /** One CONTROL micro-batch — op-routed advance/retract (the
-    * [[StreamingQuantileIndex.processControlBatch]] convention).
+  /** One CONTROL micro-batch — op-routed advance/retract
+    * ([[Twin.control]]).
     */
   def processControlBatch(dir: String, wh: Warehouse, batch: DataFrame,
-                          indexRoot: Option[String] = None): Unit = {
-    val (adds, rets) = ControlLane.route(batch)
-    if (!adds.isEmpty) processBatch(dir, wh, adds, indexRoot)
-    if (!rets.isEmpty) retractBatch(dir, wh, rets, indexRoot)
-  }
-
-  /** Wire an embeddings stream into the loop. Each micro-batch runs
-    * [[processBatch]]; the streaming checkpoint gives at-least-once
-    * delivery and the batch body upgrades it to exactly-once effect
-    * (durable across restarts iff `indexRoot` is supplied).
-    */
-  def screenSink(vecStream: DataFrame, dir: String, wh: Warehouse,
-                 checkpointDir: String,
-                 indexRoot: Option[String] = None): DataStreamWriter[Row] =
-    vecStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processBatch(dir, wh, batch, indexRoot)
-      }
+                          indexRoot: Option[String] = None): Unit =
+    Twin.control(batch)(processBatch(dir, wh, _, indexRoot),
+      retractBatch(dir, wh, _, indexRoot))
 }

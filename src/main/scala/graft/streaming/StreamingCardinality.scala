@@ -2,9 +2,8 @@ package graft.streaming
 
 import graft.operators.Sketch
 import graft.pipelines.Warehouse
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 
 /** Structured-Streaming twin of the q109 incremental-cardinality loop:
   * a documents stream advances the at-rest HLL register table micro-
@@ -65,11 +64,7 @@ object StreamingCardinality {
       wh.read("hll_regs").select(col("reg"), col("mj")))
       .select(lit(batchId).as("batch_id"), col("n_nonzero_regs"),
         col("sum_scaled"), col("hll_estimate"))
-    val novel =
-      if (!wh.exists("hll_log")) est
-      else est.join(wh.read("hll_log").select(col("batch_id")),
-        Seq("batch_id"), "left_anti")
-    wh.append("hll_log", novel)
+    wh.appendNew("hll_log", est, Seq("batch_id"))
   }
 
   /** The batch-side shingle hash stream — the same projection the
@@ -81,17 +76,4 @@ object StreamingCardinality {
     docs.select(explode(shingles3All(toks(col("text")))).as("s"))
       .select(hash60(col("s")).as("sh_h"))
   }
-
-  /** foreachBatch sink wiring: checkpointed, available-now triggered —
-    * the [[StreamingDedup.sink]] convention.
-    */
-  def sink(docsStream: DataFrame, wh: Warehouse,
-           checkpoint: String): DataStreamWriter[Row] =
-    docsStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        processBatch(wh, batch, id)
-      }
 }

@@ -2,9 +2,8 @@ package graft.streaming
 
 import graft.operators.Dedup
 import graft.pipelines.Warehouse
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 
 /** Structured-Streaming twin of the fuzzy nightly loop (q74 +
   * [[Dedup.appendToCorpusIndex]]): a documents stream is screened
@@ -54,12 +53,8 @@ object StreamingDedup {
     // append never screens against its own at-rest rows — self/sibling
     // pairs are novel and the (di, dc) anti-join below could not absorb
     // them (a review-pass finding; the crash window is spec'd)
-    val pairs = Dedup.screenAgainstIndex(spark, dir, batch)
-    val novel =
-      if (!wh.exists("dedup_pairs")) pairs
-      else pairs.join(wh.read("dedup_pairs").select(col("di"), col("dc")),
-        Seq("di", "dc"), "left_anti")
-    wh.append("dedup_pairs", novel)
+    wh.appendNew("dedup_pairs", Dedup.screenAgainstIndex(spark, dir, batch),
+      Seq("di", "dc"))
     // the index advance gets the UNFILTERED batch: appendToCorpusIndex's
     // per-table doc_id guards already make it idempotent, and a replay
     // after a crash BETWEEN its two appends must still reach the band
@@ -86,42 +81,17 @@ object StreamingDedup {
     indexRoot.foreach(Dedup.openCorpusIndex(spark, dir, _))
     val ids = docIds.select(col("doc_id")).dropDuplicates("doc_id")
     Dedup.retractFromCorpusIndex(spark, dir, ids)
-    if (wh.exists("dedup_pairs"))
-      wh.write("dedup_pairs", wh.read("dedup_pairs")
-        .join(broadcast(ids.select(col("doc_id").as("di"))), Seq("di"), "left_anti")
-        .join(broadcast(ids.select(col("doc_id").as("dc"))), Seq("dc"), "left_anti"))
+    Twin.sweepPairs(wh, "dedup_pairs", ids)
     graft.TransientCache.drain()
   }
 
-  /** One CONTROL micro-batch — the retraction lane's streamed form (the
-    * [[StreamingQuantileIndex.processControlBatch]] convention): rows
-    * carry `op = "advance" | "retract"`; advances fold first, then
-    * retractions cancel, so a doc arriving and being recalled in one
-    * micro-batch nets to absent. Both halves are the batch units
-    * verbatim, so redelivery and crash replay inherit their whole
-    * contracts.
+  /** One CONTROL micro-batch — the retraction lane's streamed form
+    * ([[Twin.control]]): rows carry `op = "advance" | "retract"`. Both
+    * halves are the batch units verbatim, so redelivery and crash
+    * replay inherit their whole contracts.
     */
   def processControlBatch(dir: String, wh: Warehouse, batch: DataFrame,
-                          indexRoot: Option[String] = None): Unit = {
-    val (adds, rets) = ControlLane.route(batch)
-    if (!adds.isEmpty) processBatch(dir, wh, adds, indexRoot)
-    if (!rets.isEmpty) retractBatch(dir, wh, rets, indexRoot)
-  }
-
-  /** Wire a documents stream into the loop. Each micro-batch runs
-    * [[processBatch]]; the streaming checkpoint gives at-least-once
-    * delivery and the batch body upgrades it to exactly-once effect
-    * (durable across restarts iff `indexRoot` is supplied — see the
-    * object doc).
-    */
-  def screenSink(docsStream: DataFrame, dir: String, wh: Warehouse,
-                 checkpointDir: String,
-                 indexRoot: Option[String] = None): DataStreamWriter[Row] =
-    docsStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processBatch(dir, wh, batch, indexRoot)
-      }
+                          indexRoot: Option[String] = None): Unit =
+    Twin.control(batch)(processBatch(dir, wh, _, indexRoot),
+      retractBatch(dir, wh, _, indexRoot))
 }

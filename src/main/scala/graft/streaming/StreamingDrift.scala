@@ -1,9 +1,8 @@
 package graft.streaming
 
 import graft.pipelines.{CorpusPipeline, Warehouse}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 
 /** Streaming twin of the q96 drift monitor
   * ([[CorpusPipeline.batchDrift]]): every micro-batch of a documents
@@ -28,7 +27,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
   * (or the nightly batch cycle) without entering their crash
   * contracts. Exactly-once for the
   * log itself comes from keying on `(batch_id, source)` — the
-  * foreachBatch epoch id is stable across checkpoint replays, so a
+  * [[Twin.sink]] epoch id is stable across checkpoint replays, so a
   * redelivered micro-batch recomputes the same rows and the keyed
   * anti-join drops them.
   *
@@ -47,7 +46,7 @@ object StreamingDrift {
   /** One micro-batch of the monitor — also the replay unit the spec
     * drives directly. `batch` is documents-shaped (needs `text`).
     * `retain` > 0 runs the [[retainEpochs]] cut after the append — from
-    * INSIDE the foreachBatch thread, which is what makes the cut safe
+    * INSIDE the micro-batch thread, which is what makes the cut safe
     * against its own read-then-swap window (single-writer-per-table:
     * the monitor is drift_log's only writer, and the cut runs serialized
     * between its appends).
@@ -64,12 +63,7 @@ object StreamingDrift {
     val drift = CorpusPipeline.batchDrift(wh, batch)
       .select(lit(batchId).as("batch_id"), col("source"),
         col("l1_drift"), col("n_tokens"))
-    val novel =
-      if (!wh.exists("drift_log")) drift
-      else drift.join(
-        wh.read("drift_log").select(col("batch_id"), col("source")),
-        Seq("batch_id", "source"), "left_anti")
-    wh.append("drift_log", novel)
+    wh.appendNew("drift_log", drift, Seq("batch_id", "source"))
     // one tiny parquet lands per epoch — the small-files bill every
     // append-only table in the repo pays via the same cadence
     wh.compactIfFragmented("drift_log")
@@ -94,7 +88,7 @@ object StreamingDrift {
     * the keyed exactly-once append would not restore them (the epoch is
     * already checkpointed as processed). Call this either (a) with the
     * monitor stopped, or (b) via [[processBatch]]'s `retain` cadence,
-    * which runs it on the foreachBatch thread between ticks — the
+    * which runs it on the micro-batch thread between ticks — the
     * race-free wiring, the way `compactIfFragmented` rides every append
     * helper.
     */
@@ -107,19 +101,4 @@ object StreamingDrift {
       .orderBy(col("batch_id").desc).limit(keepEpochs)
     wh.write("drift_log", log.join(cut, Seq("batch_id"), "left_semi"))
   }
-
-  /** Wire a documents stream into the monitor. The streaming checkpoint
-    * gives at-least-once delivery; the keyed append upgrades the log to
-    * exactly-once effect.
-    */
-  def driftSink(docsStream: DataFrame, wh: Warehouse,
-                checkpointDir: String,
-                retain: Int = RetainEpochsDefault): DataStreamWriter[Row] =
-    docsStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        processBatch(wh, batch, id, retain)
-      }
 }

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import graft.operators.Upsert
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.pipelines.Warehouse
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 
 /** Structured Streaming twin of the incremental batch layer (SURVEY.md
   * §2.9). The reference has no streaming runtime — it does "micro-batch by
@@ -19,7 +19,7 @@ import org.apache.spark.sql.Row
   *    beyond it;
   *  - the tumbling daily window aggregation is the streaming form of the
   *    A5 daily-net groupBy (etl_inventory/seed_stock_points.py:88-91);
-  *  - foreachBatch + [[Upsert.upsertByKey]] gives idempotent last-wins
+  *  - [[Twin.sink]] + [[Warehouse.upsert]] gives idempotent last-wins
   *    sink semantics (S8/S9), making the pipeline exactly-once-effective
   *    under replay, just like the reference's ON DUPLICATE KEY UPDATE.
   *
@@ -64,29 +64,20 @@ object StreamingIngest {
     * (tienda_id, art_id, dia). Update-mode rows re-emitted for late events
     * overwrite their key — replays converge to the same table (the
     * streaming analog of the reference's transactional upsert+checkpoint,
-    * etl_sales/update_clean_data.py:90-107).
+    * etl_sales/update_clean_data.py:90-107). Update mode, not the
+    * twins' append, because the stream is aggregated.
     */
   def upsertSink(dailyNet: DataFrame, sinkDir: String,
                  checkpointDir: String): DataStreamWriter[Row] = {
-    val spark = dailyNet.sparkSession
-    dailyNet.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val incoming = batch
+    val sink = new Path(sinkDir)
+    val wh = new Warehouse(dailyNet.sparkSession, sink.getParent.toString)
+    Twin.sink(dailyNet, checkpointDir) { (batch, batchId) =>
+      // the tmp-swap merge keeps the previous table intact across a
+      // failed micro-batch (Delta MERGE in production)
+      wh.upsert(sink.getName, batch
           .withColumn("__version", lit(batchId))
-          .withColumn("__tiebreak", lit(batchId))
-        val merged =
-          if (!graft.pipelines.Fs.exists(spark, sinkDir)) incoming
-          else Upsert.upsertByKey(
-            spark.read.parquet(sinkDir), incoming,
-            Seq("tienda_id", "art_id", "dia"), "__version", "__tiebreak")
-        // tmp write streams the old sink in, then swap — the previous
-        // table survives a failed micro-batch (Delta MERGE in production)
-        graft.pipelines.Fs.replaceWith(spark, sinkDir)(tmp =>
-          merged.write.parquet(tmp))
-        ()
-      }
+          .withColumn("__tiebreak", lit(batchId)),
+        Seq("tienda_id", "art_id", "dia"), "__version", "__tiebreak")
+    }.outputMode(OutputMode.Update)
   }
 }

@@ -2,8 +2,7 @@ package graft.streaming
 
 import graft.operators.QuantileIndex
 import graft.pipelines.Warehouse
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.DataFrame
 
 /** Structured-Streaming twin of the q119 incremental-quantile loop: a
   * documents stream folds into the at-rest `tq_hist` / `tq_docs`
@@ -48,46 +47,16 @@ object StreamingQuantileIndex {
   def processBatch(wh: Warehouse, batch: DataFrame, batchId: Long): Unit =
     QuantileIndex.advance(wh.spark, wh.root, batch)
 
-  /** One CONTROL micro-batch: advances fold first, then retractions
-    * cancel — so a doc arriving and being recalled in the same
-    * micro-batch nets to absent, matching the nightly serial order
-    * (ingest, then takedown). Both halves inherit their batch twins'
-    * whole replay contract verbatim (marker-gated no-op on redelivery,
-    * guarded row-level convergence through every crash window), so the
-    * streamed retraction path ≡ the nightly retraction path is an
-    * identity of code — the same twin discipline as the seven advance
-    * lanes, spec'd end-state-equal in RetractionSpec.
+  /** One CONTROL micro-batch ([[Twin.control]]): retraction messages
+    * ride the SAME checkpointed stream as document arrivals. Both halves
+    * inherit their batch twins' whole replay contract verbatim
+    * (marker-gated no-op on redelivery, guarded row-level convergence
+    * through every crash window), so the streamed retraction path ≡ the
+    * nightly retraction path is an identity of code — the same twin
+    * discipline as the seven advance lanes, spec'd end-state-equal in
+    * RetractionSpec.
     */
-  def processControlBatch(wh: Warehouse, batch: DataFrame, batchId: Long): Unit = {
-    val (adds, rets) = ControlLane.route(batch)
-    if (!adds.isEmpty) QuantileIndex.advance(wh.spark, wh.root, adds)
-    if (!rets.isEmpty) QuantileIndex.retract(wh.spark, wh.root, rets)
-  }
-
-  /** foreachBatch sink wiring: checkpointed, available-now triggered —
-    * the [[StreamingRetentionIndex.sink]] convention.
-    */
-  def sink(docsStream: DataFrame, wh: Warehouse,
-           checkpoint: String): DataStreamWriter[Row] =
-    docsStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        processBatch(wh, batch, id)
-      }
-
-  /** The control-lane sink: [[sink]] with the `op` verb honored —
-    * retraction messages flow through the SAME checkpointed stream as
-    * document arrivals.
-    */
-  def sinkWithControl(docsStream: DataFrame, wh: Warehouse,
-                      checkpoint: String): DataStreamWriter[Row] =
-    docsStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        processControlBatch(wh, batch, id)
-      }
+  def processControlBatch(wh: Warehouse, batch: DataFrame, batchId: Long): Unit =
+    Twin.control(batch)(QuantileIndex.advance(wh.spark, wh.root, _),
+      QuantileIndex.retract(wh.spark, wh.root, _))
 }

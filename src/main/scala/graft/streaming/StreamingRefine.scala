@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.pipelines.{CorpusPipeline, Warehouse}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Structured-Streaming twin of the WHOLE incremental refinement cycle
   * ([[CorpusPipeline.refineIncremental]]) — where [[StreamingDedup]] /
@@ -36,20 +36,6 @@ object StreamingRefine {
     ()
   }
 
-  /** Wire a documents stream into the refinement cycle. The streaming
-    * checkpoint gives at-least-once delivery; the night body upgrades
-    * it to exactly-once effect on every table it advances.
-    */
-  def refineSink(docsStream: DataFrame, wh: Warehouse,
-                 checkpointDir: String): DataStreamWriter[Row] =
-    docsStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processBatch(wh, batch)
-      }
-
   /** The drift-GATED form ([[CorpusPipeline.refineIncrementalGated]]):
     * each micro-batch takes the q96 drift reading first, and an
     * off-distribution batch quarantines whole instead of entering the
@@ -62,12 +48,8 @@ object StreamingRefine {
                 checkpointDir: String,
                 maxDrift: Double = CorpusPipeline.DriftGate)
       : DataStreamWriter[Row] =
-    docsStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        CorpusPipeline.refineIncrementalGated(wh, batch, maxDrift)
-        ()
-      }
+    Twin.sink(docsStream, checkpointDir) { (batch, _) =>
+      CorpusPipeline.refineIncrementalGated(wh, batch, maxDrift)
+      ()
+    }
 }

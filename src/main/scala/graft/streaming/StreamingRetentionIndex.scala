@@ -2,8 +2,8 @@ package graft.streaming
 
 import graft.operators.Sessions
 import graft.pipelines.Warehouse
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** Structured-Streaming twin of the q113 incremental-retention loop: an
   * events stream advances the at-rest `ret_user` / `ret_weeks` tables
@@ -55,33 +55,16 @@ object StreamingRetentionIndex {
     else
       Sessions.advanceRetentionIndex(wh.spark, wh.root, batch)
 
-  /** One CONTROL micro-batch — op-routed advance/opt-out (the
-    * [[StreamingQuantileIndex.processControlBatch]] convention): rows
-    * with `op = "retract"` are USER OPT-OUT messages (only `user_id`
-    * matters; the event payload rides for schema uniformity) and drop
-    * every at-rest row of those users
+  /** One CONTROL micro-batch — op-routed advance/opt-out
+    * ([[Twin.control]]): rows with `op = "retract"` are USER OPT-OUT
+    * messages (only `user_id` matters; the event payload rides for
+    * schema uniformity) and drop every at-rest row of those users
     * ([[Sessions.retractRetentionUsers]] — ret_user-first swaps);
     * everything else advances as usual. Both halves are the batch units
     * verbatim.
     */
-  def processControlBatch(wh: Warehouse, batch: DataFrame, batchId: Long): Unit = {
-    import org.apache.spark.sql.functions.col
-    val (adds, rets) = ControlLane.route(batch)
-    if (!adds.isEmpty) processBatch(wh, adds, batchId)
-    if (!rets.isEmpty)
-      Sessions.retractRetentionUsers(wh.spark, wh.root, rets.select(col("user_id")))
-  }
-
-  /** foreachBatch sink wiring: checkpointed, available-now triggered —
-    * the [[StreamingDedup.sink]] convention.
-    */
-  def sink(eventsStream: DataFrame, wh: Warehouse,
-           checkpoint: String): DataStreamWriter[Row] =
-    eventsStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        processBatch(wh, batch, id)
-      }
+  def processControlBatch(wh: Warehouse, batch: DataFrame, batchId: Long): Unit =
+    Twin.control(batch)(processBatch(wh, _, batchId),
+      rets => Sessions.retractRetentionUsers(wh.spark, wh.root,
+        rets.select(col("user_id"))))
 }

@@ -2,8 +2,7 @@ package graft.streaming
 
 import graft.operators.Sessions
 import graft.pipelines.Warehouse
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.DataFrame
 
 /** Structured-Streaming twin of the q115 incremental-transitions loop:
   * an events stream advances the at-rest `tr_deltas` ledger and
@@ -38,33 +37,16 @@ object StreamingTransitionsIndex {
   def processBatch(wh: Warehouse, batch: DataFrame, batchId: Long): Unit =
     Sessions.advanceTransitionsIndex(wh.spark, wh.root, batch)
 
-  /** One CONTROL micro-batch — op-routed advance/opt-out (the
-    * [[StreamingQuantileIndex.processControlBatch]] convention). A
-    * `retract` message carries the opted-out users' COMPLETE ingested
-    * event history — the natural CDC delete payload (the rows the
-    * takedown deletes), and exactly what
+  /** One CONTROL micro-batch — op-routed advance/opt-out
+    * ([[Twin.control]]). A `retract` message carries the opted-out
+    * users' COMPLETE ingested event history — the natural CDC delete
+    * payload (the rows the takedown deletes), and exactly what
     * [[Sessions.retractTransitionsUsers]] needs to cancel their
     * additive cells (a user's transitions never cross users, so their
     * full-history delta negated is their exact total contribution).
     * Both halves are the batch units verbatim.
     */
-  def processControlBatch(wh: Warehouse, batch: DataFrame, batchId: Long): Unit = {
-    val (adds, rets) = ControlLane.route(batch)
-    if (!adds.isEmpty) processBatch(wh, adds, batchId)
-    if (!rets.isEmpty)
-      Sessions.retractTransitionsUsers(wh.spark, wh.root, rets)
-  }
-
-  /** foreachBatch sink wiring: checkpointed, available-now triggered —
-    * the [[StreamingDedup.sink]] convention.
-    */
-  def sink(eventsStream: DataFrame, wh: Warehouse,
-           checkpoint: String): DataStreamWriter[Row] =
-    eventsStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        processBatch(wh, batch, id)
-      }
+  def processControlBatch(wh: Warehouse, batch: DataFrame, batchId: Long): Unit =
+    Twin.control(batch)(processBatch(wh, _, batchId),
+      Sessions.retractTransitionsUsers(wh.spark, wh.root, _))
 }

@@ -2,9 +2,8 @@ package graft.streaming
 
 import graft.operators.Dedup
 import graft.pipelines.Warehouse
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 
 /** Structured-Streaming twin of the DETERMINISTIC nightly loop (q88 +
   * [[Dedup.appendToWinnowIndex]]) — [[StreamingDedup]]'s counterpart for
@@ -49,12 +48,8 @@ object StreamingWinnow {
                    indexRoot: Option[String] = None): Unit = {
     val spark = batch.sparkSession
     indexRoot.foreach(Dedup.openWinnowIndex(spark, dir, _))
-    val pairs = Dedup.screenWinnowAgainstIndex(spark, dir, batch)
-    val novel =
-      if (!wh.exists("winnow_pairs")) pairs
-      else pairs.join(wh.read("winnow_pairs").select(col("di"), col("dc")),
-        Seq("di", "dc"), "left_anti")
-    wh.append("winnow_pairs", novel)
+    wh.appendNew("winnow_pairs", Dedup.screenWinnowAgainstIndex(spark, dir, batch),
+      Seq("di", "dc"))
     // the index advance gets the UNFILTERED batch: appendToWinnowIndex's
     // manifest + residual guards make it idempotent, and a replay after
     // a crash between the data append and the manifest append must still
@@ -75,37 +70,15 @@ object StreamingWinnow {
     indexRoot.foreach(Dedup.openWinnowIndex(spark, dir, _))
     val ids = docIds.select(col("doc_id")).dropDuplicates("doc_id")
     Dedup.retractFromWinnowIndex(spark, dir, ids)
-    if (wh.exists("winnow_pairs"))
-      wh.write("winnow_pairs", wh.read("winnow_pairs")
-        .join(broadcast(ids.select(col("doc_id").as("di"))), Seq("di"), "left_anti")
-        .join(broadcast(ids.select(col("doc_id").as("dc"))), Seq("dc"), "left_anti"))
+    Twin.sweepPairs(wh, "winnow_pairs", ids)
     graft.TransientCache.drain()
   }
 
-  /** One CONTROL micro-batch — op-routed advance/retract (the
-    * [[StreamingQuantileIndex.processControlBatch]] convention; both
-    * halves are the batch units verbatim).
+  /** One CONTROL micro-batch — op-routed advance/retract
+    * ([[Twin.control]]; both halves are the batch units verbatim).
     */
   def processControlBatch(dir: String, wh: Warehouse, batch: DataFrame,
-                          indexRoot: Option[String] = None): Unit = {
-    val (adds, rets) = ControlLane.route(batch)
-    if (!adds.isEmpty) processBatch(dir, wh, adds, indexRoot)
-    if (!rets.isEmpty) retractBatch(dir, wh, rets, indexRoot)
-  }
-
-  /** Wire a documents stream into the loop. Each micro-batch runs
-    * [[processBatch]]; the streaming checkpoint gives at-least-once
-    * delivery and the batch body upgrades it to exactly-once effect
-    * (durable across restarts iff `indexRoot` is supplied).
-    */
-  def screenSink(docsStream: DataFrame, dir: String, wh: Warehouse,
-                 checkpointDir: String,
-                 indexRoot: Option[String] = None): DataStreamWriter[Row] =
-    docsStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processBatch(dir, wh, batch, indexRoot)
-      }
+                          indexRoot: Option[String] = None): Unit =
+    Twin.control(batch)(processBatch(dir, wh, _, indexRoot),
+      retractBatch(dir, wh, _, indexRoot))
 }

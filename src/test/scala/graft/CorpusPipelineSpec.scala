@@ -290,9 +290,16 @@ class CorpusPipelineSpec extends SparkSpec {
     TransientCache.drain()
     val ids = leak.select(explode(array(col("eval_id"), col("train_id"))).as("doc_id"))
       .distinct()
+    // both frames are pinned with localCheckpoint, not cache(): each
+    // audit nests three cached stages, and plan-string generation prints
+    // an InMemoryRelation's cached plan transitively without sharing, so
+    // audit-over-audit-over-audit lineage made every job's plan
+    // description several GB (heap OOM even at -Xmx5g)
     val uni = Tables.documents(spark, dir).join(ids, Seq("doc_id"), "left_semi")
       .select(col("doc_id"), col("source"), col("text"))
-    val found = Contamination.splitLeakageOf(uni, Dedup.shingleRowsOf(uni)).cache()
+      .localCheckpoint()
+    val found = Contamination.splitLeakageOf(uni, Dedup.shingleRowsOf(uni))
+      .localCheckpoint()
     assert(found.count() > 0, "the leaking mini-universe must be detected")
     TransientCache.drain()
     // the pipeline's drop: remove the EVAL side of every reported pair
@@ -301,7 +308,6 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(Contamination.splitLeakageOf(kept, Dedup.shingleRowsOf(kept)).isEmpty,
       "dropping the flagged eval docs must remove every straddling pair")
     TransientCache.drain()
-    found.unpersist(false)
   }
 
   test("N nights + refreshFull == one clean refine over the union, at every table boundary") {

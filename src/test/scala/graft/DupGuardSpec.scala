@@ -56,6 +56,20 @@ class DupGuardSpec extends AnyFunSuite {
     }
   }
 
+  test("streaming sink wiring (.writeStream / .foreachBatch) lives only in streaming/Twin.scala") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val wiring = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter { p =>
+        val code = stripNoise(new String(java.nio.file.Files.readAllBytes(p)))
+        code.contains(".writeStream") || code.contains(".foreachBatch")
+      }
+      .map(root.relativize(_).toString).toSet
+    assert(wiring == Set("streaming/Twin.scala"),
+      s"sink wiring outside Twin.sink: ${(wiring - "streaming/Twin.scala").toSeq.sorted}")
+  }
+
   test("no two operator bodies exceed the copy-paste ceiling (token-shingle Jaccard 0.6)") {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala/graft")

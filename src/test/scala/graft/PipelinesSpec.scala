@@ -74,6 +74,19 @@ class PipelinesSpec extends SparkSpec {
     assert(n1 > 0 && n2 > 0 && n3 == 0)
     assert(wh.read("raw_stock_movements").count() == fullLedger.count())
     assert(rowsOf(wh.read("raw_stock_movements")) == rowsOf(fullLedger))
+
+    // the same batches through the keyed-guard append: a missing table
+    // takes every row, a replay appends none, an overlap only new keys
+    val early = fullLedger.filter(col("fecha") <= midTs)
+    val nEarly = early.count()
+    assert(nEarly > 0 && nEarly < fullLedger.count(), "split precondition")
+    wh.appendNew("ledger_keyed", early, Seq("id_origen"))
+    assert(rowsOf(wh.read("ledger_keyed")) == rowsOf(early))
+    wh.appendNew("ledger_keyed", early, Seq("id_origen"))
+    assert(wh.read("ledger_keyed").count() == nEarly)
+    wh.appendNew("ledger_keyed", fullLedger, Seq("id_origen"))
+    assert(wh.read("ledger_keyed").count() == fullLedger.count())
+    assert(rowsOf(wh.read("ledger_keyed")) == rowsOf(fullLedger))
   }
 
   test("stock points: as-of-seeded incremental replay == full rebuild (any split)") {

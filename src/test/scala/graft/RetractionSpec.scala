@@ -251,7 +251,8 @@ class RetractionSpec extends SparkSpec {
       ops(docs.filter(col("doc_id") % 10 === 8), "advance")
     batches.zipWithIndex.foreach { case (b, i) =>
       stream.addData(b: _*)
-      StreamingQuantileIndex.sinkWithControl(stream.toDF(), wh, s"$tmp/ckpt")
+      graft.streaming.Twin.sink(stream.toDF(), s"$tmp/ckpt")(
+        StreamingQuantileIndex.processControlBatch(wh, _, _))
         .start().awaitTermination()
       TransientCache.drain()
       if (i == 4) { // redeliver the retraction control message
@@ -274,6 +275,64 @@ class RetractionSpec extends SparkSpec {
     TransientCache.drain()
     assert(histOf(s"$tmp/wh") == histOf(rebuild))
     assert(manifestOf(s"$tmp/wh") == manifestOf(rebuild))
+  }
+
+  test("control lane: a NULL op verb folds in exactly like op = advance") {
+    val sql = spark.sqlContext
+    import sql.implicits._
+    import graft.streaming.StreamingQuantileIndex
+    import graft.streaming.StreamingQuantileIndex.QDocOp
+    val night = docs.filter(col("doc_id") % 10 === 8)
+      .select(col("doc_id"), col("lang"), col("source"), col("text"))
+      .collect().toSeq
+    def laneWith(op: String): String = {
+      val root = tmpRoot("tqverb")
+      StreamingQuantileIndex.processControlBatch(new Warehouse(spark, root),
+        night.map(r => QDocOp(r.getLong(0), r.getString(1), r.getString(2),
+          r.getString(3), op)).toDF(), 0L)
+      TransientCache.drain()
+      root
+    }
+    val (nullOp, advance) = (laneWith(null), laneWith("advance"))
+    assert(manifestOf(nullOp).size == night.size, "a NULL verb must not drop rows")
+    Seq("tq_hist", "tq_docs", "tq_marker").foreach { t =>
+      assert(rowsOf(new Warehouse(spark, nullOp).read(t)) ==
+        rowsOf(new Warehouse(spark, advance).read(t)), s"$t differs")
+    }
+  }
+
+  test("control lane: an unknown op verb fails fast, naming it, and leaves the index byte-unchanged") {
+    val sql = spark.sqlContext
+    import sql.implicits._
+    import graft.streaming.StreamingQuantileIndex
+    import graft.streaming.StreamingQuantileIndex.QDocOp
+    val root = tmpRoot("tqbadverb")
+    val wh = new Warehouse(spark, root)
+    QuantileIndex.advance(spark, root, docs.filter(col("doc_id") % 10 === 8))
+    TransientCache.drain()
+    def bytesOf(t: String): Map[String, Seq[Byte]] = {
+      import scala.jdk.CollectionConverters._
+      val base = java.nio.file.Paths.get(root, t)
+      java.nio.file.Files.walk(base).iterator().asScala
+        .filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => base.relativize(p).toString ->
+          java.nio.file.Files.readAllBytes(p).toSeq)
+        .toMap
+    }
+    val tables = Seq("tq_hist", "tq_docs", "tq_marker")
+    val before = tables.map(bytesOf)
+    // a valid advance rides the same batch: routing must refuse the
+    // whole micro-batch before either half runs
+    val batch = docs.filter(col("doc_id") % 10 === 9)
+      .select(col("doc_id"), col("lang"), col("source"), col("text"))
+      .collect().toSeq.zipWithIndex.map { case (r, i) =>
+        QDocOp(r.getLong(0), r.getString(1), r.getString(2), r.getString(3),
+          if (i == 0) "purge" else "advance")
+      }
+    val err = intercept[IllegalArgumentException](
+      StreamingQuantileIndex.processControlBatch(wh, batch.toDF(), 0L))
+    assert(err.getMessage.contains("purge"), err.getMessage)
+    assert(tables.map(bytesOf) == before, "a refused batch must not touch the index")
   }
 
   test("q127 read == the screen against an independently rebuilt survivor index (the driver row, locally)") {

@@ -93,7 +93,8 @@ class StreamingSoakSpec extends SparkSpec {
         (if (RetractR(i)) qops(R, "retract") else Nil) ++
         (if (RetractR2(i)) qops(R2, "retract") else Nil)
       stream.addData(batch: _*)
-      StreamingQuantileIndex.sinkWithControl(stream.toDF(), wh, s"$tmp/ckpt")
+      graft.streaming.Twin.sink(stream.toDF(), s"$tmp/ckpt")(
+        StreamingQuantileIndex.processControlBatch(wh, _, _))
         .start().awaitTermination()
       TransientCache.drain()
       if (i % 5 == 4) { // redelivery of the latest batch, outside the stream

@@ -5,7 +5,7 @@ import java.sql.Timestamp
 
 import graft.operators.Dedup
 import graft.pipelines.{CorpusPipeline, Warehouse}
-import graft.streaming.{StreamingAnn, StreamingDedup, StreamingDrift, StreamingIngest, StreamingRefine, StreamingWinnow}
+import graft.streaming.{StreamingAnn, StreamingDedup, StreamingDrift, StreamingIngest, StreamingRefine, StreamingWinnow, Twin}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -230,10 +230,12 @@ class StreamingSpec extends SparkSpec {
     // night 1 and night 2 arrive as separate micro-batches of one stream
     val stream = MemoryStream[DocRow](spark)
     stream.addData(night(8): _*)
-    StreamingDedup.screenSink(stream.toDF(), dir, wh, s"$tmp/ckpt")
+    Twin.sink(stream.toDF(), s"$tmp/ckpt")(
+      (b, _) => StreamingDedup.processBatch(dir, wh, b))
       .start().awaitTermination()
     stream.addData(night(9): _*)
-    StreamingDedup.screenSink(stream.toDF(), dir, wh, s"$tmp/ckpt")
+    Twin.sink(stream.toDF(), s"$tmp/ckpt")(
+      (b, _) => StreamingDedup.processBatch(dir, wh, b))
       .start().awaitTermination()
 
     val got = wh.read("dedup_pairs")
@@ -426,10 +428,12 @@ class StreamingSpec extends SparkSpec {
     // night 1 and night 2 arrive as separate micro-batches of one stream
     val stream = MemoryStream[DocRow](spark)
     stream.addData(night(8): _*)
-    StreamingWinnow.screenSink(stream.toDF(), dir, wh, s"$tmp/ckpt")
+    Twin.sink(stream.toDF(), s"$tmp/ckpt")(
+      (b, _) => StreamingWinnow.processBatch(dir, wh, b))
       .start().awaitTermination()
     stream.addData(night(9): _*)
-    StreamingWinnow.screenSink(stream.toDF(), dir, wh, s"$tmp/ckpt")
+    Twin.sink(stream.toDF(), s"$tmp/ckpt")(
+      (b, _) => StreamingWinnow.processBatch(dir, wh, b))
       .start().awaitTermination()
 
     val got = wh.read("winnow_pairs").collect().map(_.mkString("|")).toSet
@@ -533,10 +537,12 @@ class StreamingSpec extends SparkSpec {
     val wh = new Warehouse(spark, s"$tmp/wh")
     val stream = MemoryStream[EmbRow](spark)
     stream.addData(night(8): _*)
-    StreamingAnn.screenSink(stream.toDF(), dir, wh, s"$tmp/ckpt")
+    Twin.sink(stream.toDF(), s"$tmp/ckpt")(
+      (b, _) => StreamingAnn.processBatch(dir, wh, b))
       .start().awaitTermination()
     stream.addData(night(9): _*)
-    StreamingAnn.screenSink(stream.toDF(), dir, wh, s"$tmp/ckpt")
+    Twin.sink(stream.toDF(), s"$tmp/ckpt")(
+      (b, _) => StreamingAnn.processBatch(dir, wh, b))
       .start().awaitTermination()
     assert(asSet(wh.read("ann_matches")) == want)
 
@@ -631,10 +637,12 @@ class StreamingSpec extends SparkSpec {
     seed(wh)
     val stream = MemoryStream[SrcDocRow](spark)
     stream.addData(night(8): _*)
-    StreamingRefine.refineSink(stream.toDF(), wh, s"$tmp/ckpt")
+    Twin.sink(stream.toDF(), s"$tmp/ckpt")(
+      (b, _) => StreamingRefine.processBatch(wh, b))
       .start().awaitTermination()
     stream.addData(night(9): _*)
-    StreamingRefine.refineSink(stream.toDF(), wh, s"$tmp/ckpt")
+    Twin.sink(stream.toDF(), s"$tmp/ckpt")(
+      (b, _) => StreamingRefine.processBatch(wh, b))
       .start().awaitTermination()
     assert(state(wh) == want, "streamed nights != batch nights")
 
@@ -987,11 +995,13 @@ class StreamingSpec extends SparkSpec {
     val stream = MemoryStream[IdxEv](spark)
     // batch 0 seeds (cold warehouse — the first batch IS the seed)
     stream.addData(night(col("day") < cut): _*)
-    StreamingRetentionIndex.sink(stream.toDF(), wh, s"$tmp/ckpt")
+    Twin.sink(stream.toDF(), s"$tmp/ckpt")(
+      StreamingRetentionIndex.processBatch(wh, _, _))
       .start().awaitTermination()
     // RESTART (new query, same checkpoint): batch 1 advances the tables
     stream.addData(night(col("day") >= cut): _*)
-    StreamingRetentionIndex.sink(stream.toDF(), wh, s"$tmp/ckpt")
+    Twin.sink(stream.toDF(), s"$tmp/ckpt")(
+      StreamingRetentionIndex.processBatch(wh, _, _))
       .start().awaitTermination()
 
     def tables(): (Seq[(Long, Long)], Seq[(Long, Long)]) = (
@@ -1039,11 +1049,13 @@ class StreamingSpec extends SparkSpec {
 
     val stream = MemoryStream[TrEv](spark)
     stream.addData(night(col("day") < cut): _*)
-    StreamingTransitionsIndex.sink(stream.toDF(), wh, s"$tmp/ckpt")
+    Twin.sink(stream.toDF(), s"$tmp/ckpt")(
+      StreamingTransitionsIndex.processBatch(wh, _, _))
       .start().awaitTermination()
     // RESTART (new query, same checkpoint): batch 1 advances
     stream.addData(night(col("day") >= cut): _*)
-    StreamingTransitionsIndex.sink(stream.toDF(), wh, s"$tmp/ckpt")
+    Twin.sink(stream.toDF(), s"$tmp/ckpt")(
+      StreamingTransitionsIndex.processBatch(wh, _, _))
       .start().awaitTermination()
 
     def cells(): Map[(String, String), Long] =
@@ -1086,11 +1098,13 @@ class StreamingSpec extends SparkSpec {
     val stream = MemoryStream[QDoc](spark)
     // batch 0 seeds (cold warehouse — the first micro-batch IS the seed)
     stream.addData(night(col("doc_id") % 10 < 8): _*)
-    StreamingQuantileIndex.sink(stream.toDF(), wh, s"$tmp/ckpt")
+    Twin.sink(stream.toDF(), s"$tmp/ckpt")(
+      StreamingQuantileIndex.processBatch(wh, _, _))
       .start().awaitTermination()
     // RESTART (new query, same checkpoint): batch 1 advances the ledger
     stream.addData(night(col("doc_id") % 10 >= 8): _*)
-    StreamingQuantileIndex.sink(stream.toDF(), wh, s"$tmp/ckpt")
+    Twin.sink(stream.toDF(), s"$tmp/ckpt")(
+      StreamingQuantileIndex.processBatch(wh, _, _))
       .start().awaitTermination()
     TransientCache.drain()
 
@@ -1155,12 +1169,12 @@ class StreamingSpec extends SparkSpec {
     val stream = MemoryStream[DocRow](spark)
     // batch 0 seeds (cold warehouse — the first batch IS the seed)
     stream.addData(night(0): _*)
-    StreamingCardinality.sink(stream.toDF(), wh, s"$tmp/ckpt")
+    Twin.sink(stream.toDF(), s"$tmp/ckpt")(StreamingCardinality.processBatch(wh, _, _))
       .start().awaitTermination()
     // RESTART (new query, same checkpoint): batch 1 advances the table
     // the first query left behind
     stream.addData(night(1): _*)
-    StreamingCardinality.sink(stream.toDF(), wh, s"$tmp/ckpt")
+    Twin.sink(stream.toDF(), s"$tmp/ckpt")(StreamingCardinality.processBatch(wh, _, _))
       .start().awaitTermination()
 
     def regs(): Seq[(Long, Int)] = wh.read("hll_regs")
@@ -1199,7 +1213,7 @@ class StreamingSpec extends SparkSpec {
     // path (the monitor must never seed shared state itself: the
     // refreshFull-race review finding)
     stream.addData(night(8): _*)
-    StreamingDrift.driftSink(stream.toDF(), wh, s"$tmp/ckpt")
+    Twin.sink(stream.toDF(), s"$tmp/ckpt")(StreamingDrift.processBatch(wh, _, _))
       .start().awaitTermination()
     assert(!wh.exists("live_token_counts"),
       "the monitor must not write the maintained distribution")
@@ -1207,7 +1221,7 @@ class StreamingSpec extends SparkSpec {
     // — bit-identical readings either way (the exact-integer identity)
     CorpusPipeline.seedTokenCounts(wh)
     stream.addData(night(9): _*)
-    StreamingDrift.driftSink(stream.toDF(), wh, s"$tmp/ckpt")
+    Twin.sink(stream.toDF(), s"$tmp/ckpt")(StreamingDrift.processBatch(wh, _, _))
       .start().awaitTermination()
 
     val log = wh.read("drift_log").collect()
