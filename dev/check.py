@@ -66,7 +66,7 @@ def main():
     # Oracle-engine version, ALWAYS printed: the one hash mismatch this
     # harness could not reproduce locally (r13 q111) was most plausibly a
     # driver-vs-local DuckDB version difference — make the skew visible
-    # on every run. docs/PLANS.md lists the dialect constructs the
+    # on every run. docs/history/PLANS.md lists the dialect constructs the
     # oracles avoid because they are version-sensitive.
     print(f"[oracle] duckdb {duckdb.__version__} sf={sf} out={out}")
     con = duckdb.connect()

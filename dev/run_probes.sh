@@ -1,11 +1,11 @@
 #!/bin/bash
-# Canonical solo-probe ledger (PLANS r13 policy): isolated FRESH-JVM
+# Canonical solo-probe ledger (docs/history/PLANS.md r13 policy): isolated FRESH-JVM
 # bench probes for the top marginal queries, repeat=3, one query per
 # JVM, written to PROBES.json. Round-over-round perf comparison is
 # SOLO-TO-SOLO against this ledger; the driver full sweep is a sanity
 # total only — sweep-to-sweep deltas proved unadjudicatable three
 # rounds running (residency/host drift inflates whole sweeps 15-25%
-# with zero plan changes; PLANS r10-r12 adjudications).
+# with zero plan changes; docs/history/PLANS.md r10-r12 adjudications).
 #
 # Usage: dev/run_probes.sh <round> [sfDir] [outFile] [queries...]
 #   dev/run_probes.sh 13                      # top-15 list, sf0.1

@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line with per-query seconds.
@@ -97,18 +98,22 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Unmeasured warmup: first query otherwise pays JVM/JIT/codegen/parquet
-    // reader init (~5 s) and the ranking becomes run-order noise.
+    // reader init (~5 s) and the ranking becomes run-order noise. A failed
+    // warm-up read is not fatal (the timed sweep reports it), but it is
+    // named on stderr; stdout stays the one JSON line.
+    def warm(what: String)(body: => Unit): Unit =
+      try body
+      catch { case NonFatal(e) =>
+        System.err.println(s"bench warm-up: $what failed: ${e.toString.linesIterator.next()}")
+      }
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
+      warm(s"table $t")(spark.read.parquet(s"$sfDir/$t.parquet").count(): Unit)
     }
     // events.parquet carries TIMESTAMP(NANOS) — a plain read fails, so warm
     // it through the loader that sets nanosAsLong (it feeds the ledger too)
-    try Tables.events(spark, sfDir).count()
-    catch { case _: Throwable => () }
-    try materialize(graft.operators.Stock.dailyNet(spark, sfDir))
-    catch { case _: Throwable => () }
+    warm("table events")(Tables.events(spark, sfDir).count(): Unit)
+    warm("frame Stock.dailyNet")(materialize(graft.operators.Stock.dailyNet(spark, sfDir)))
 
     // default 3 sweeps: with 2, one throttled window spanning both sweeps
     // can poison a query's min (r7's q37/q38/q40 artifacts); a third

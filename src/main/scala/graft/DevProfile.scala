@@ -1,20 +1,22 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.mutable
 
 /** Dev-only profiler: runs one named SparkEntry query (after a warmup pass
-  * of the whole set so shared caches are in the state the bench sees) and
-  * prints per-stage wall/task times — `count()` probes lie because column
-  * pruning drops expensive projections, so stage timing is the tool.
+  * of the whole set so shared caches are in the state the bench sees),
+  * printing its formatted physical plan first and then per-stage
+  * wall/task times — `count()` probes lie because column pruning drops
+  * expensive projections, so stage timing is the tool.
   *
   * Usage: DevProfile <queryName> [sfDir] [cpus]
   *
   * `cache:<tier>` profiles a shared-cache BUILD instead (cold caches,
   * documents read warmed) — e.g. `cache:winnow` times
-  * `Dedup.winnowIndex(...).count()` with the same stage listener.
-  * (Plan printing lives in [[DevExplain]], not here.)
+  * `Dedup.winnowIndex(...).count()` with the same stage listener. The
+  * driver-state fits (`kmfit`, `rqidx`, `bandidx`) have no single frame,
+  * so they print no plan.
   */
 object DevProfile {
   def main(args: Array[String]): Unit = {
@@ -29,16 +31,18 @@ object DevProfile {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val cacheBuilds: Map[String, () => Long] = Map(
-      "winnow" -> (() => operators.Dedup.winnowIndex(spark, sfDir).count()),
-      "shingle" -> (() => operators.Dedup.shingleIndex(spark, sfDir).count()),
-      "cc" -> (() => operators.Graph.simhashComponents(spark, sfDir).count()),
-      "legacy" -> (() => operators.Sales.legacyAggDecimal(spark, sfDir).count()),
-      "kmfit" -> (() => { operators.Similarity.kmeansCentroids(spark, sfDir); 0L }),
-      "rqidx" -> (() => { operators.QuantileIndex.retractedIndexAtRest(spark, sfDir); 0L }),
-      "stock" -> (() => operators.Stock.stockPoints(spark, sfDir).count()),
-      "bandidx" -> (() => { operators.Dedup.corpusIndex(spark, sfDir); 0L }),
-      "ledger" -> (() => operators.Ledger.unionLedger(spark, sfDir).count()))
+    val cacheFrames: Map[String, () => DataFrame] = Map(
+      "winnow" -> (() => operators.Dedup.winnowIndex(spark, sfDir)),
+      "shingle" -> (() => operators.Dedup.shingleIndex(spark, sfDir)),
+      "cc" -> (() => operators.Graph.simhashComponents(spark, sfDir)),
+      "legacy" -> (() => operators.Sales.legacyAggDecimal(spark, sfDir)),
+      "stock" -> (() => operators.Stock.stockPoints(spark, sfDir)),
+      "ledger" -> (() => operators.Ledger.unionLedger(spark, sfDir)))
+    val cacheFits: Map[String, () => Unit] = Map(
+      "kmfit" -> (() => operators.Similarity.kmeansCentroids(spark, sfDir)),
+      "rqidx" -> (() => operators.QuantileIndex.retractedIndexAtRest(spark, sfDir)),
+      "bandidx" -> (() => operators.Dedup.corpusIndex(spark, sfDir)))
+    val tier = name.stripPrefix("cache:")
 
     // same warmup + preceding-query state as Bench (caches built by earlier
     // queries change what the profiled query actually executes)
@@ -66,8 +70,14 @@ object DevProfile {
     })
     val t0 = System.nanoTime()
     val nRows =
-      if (name.startsWith("cache:")) cacheBuilds(name.stripPrefix("cache:"))()
-      else SparkEntry.queries(name)(spark, sfDir).count()
+      if (name.startsWith("cache:") && cacheFits.contains(tier)) { cacheFits(tier)(); 0L }
+      else {
+        val df =
+          if (name.startsWith("cache:")) cacheFrames(tier)()
+          else SparkEntry.queries(name)(spark, sfDir)
+        df.explain("formatted")
+        df.count()
+      }
     val sec = (System.nanoTime() - t0) / 1e9
     Thread.sleep(500) // let listener drain
     println(f"== $name: $nRows rows in $sec%.2f s ==")

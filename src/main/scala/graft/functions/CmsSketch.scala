@@ -9,7 +9,7 @@ import org.apache.spark.sql.expressions.Aggregator
   * for x is the MINIMUM of its d counters — an overestimate by at most
   * εN with probability 1−δ for w = ⌈e/ε⌉, d = ⌈ln(1/δ)⌉ (Cormode &
   * Muthukrishnan 2005). The 100 TB use-case: heavy-hitter detection
-  * (hot SKUs, boilerplate shingles, hot join keys for [[graft.operators.Skew]])
+  * (hot SKUs, boilerplate shingles, hot join keys to salt)
   * without a groupBy over the full key universe.
   *
   * The buffer is a flat Array[Long] of length d·w; `reduce` touches d

@@ -80,20 +80,6 @@ object TextFns {
   def hash60Xx(s: Column): Column =
     shiftrightunsigned(xxhash64(s), 4)
 
-  /** Word 3-gram shingles over a token array (distinct). Docs with <3
-    * tokens degrade to one whole-doc shingle. DuckDB twin uses
-    * `range(1, len-1)` (exclusive end) + 1-based list indexing — same
-    * 1-based convention as `element_at`.
-    *
-    * PERF: do NOT explode() this column — GenerateExec re-evaluates the
-    * generator child once per OUTPUT row, and `array_distinct` makes each
-    * interpreted re-eval ~50µs (measured 15× slowdown at sf0.1). For
-    * exploded pipelines use [[shingles3All]] + a relational distinct after
-    * hashing instead.
-    */
-  def shingles3(t: Column): Column =
-    array_distinct(shingles3All(t))
-
   /** Non-distinct word bigrams; empty for single-token docs. Same
     * generator-safety note as [[shingles3All]].
     */
@@ -109,7 +95,17 @@ object TextFns {
       |       i -> t[CAST(i AS INT)] || ' ' || t[CAST(i AS INT)+1])
       |  ELSE [] END""".stripMargin
 
-  /** Non-distinct 3-gram shingles — the cheap generator-safe variant. */
+  /** Non-distinct word 3-gram shingles over a token array. Docs with <3
+    * tokens degrade to one whole-doc shingle. DuckDB twin uses
+    * `range(1, len-1)` (exclusive end) + 1-based list indexing — same
+    * 1-based convention as `element_at`.
+    *
+    * PERF: never explode an `array_distinct` of this column — GenerateExec
+    * re-evaluates the generator child once per OUTPUT row, and
+    * `array_distinct` makes each interpreted re-eval ~50µs (measured 15×
+    * slowdown at sf0.1). Explode this non-distinct form and take a
+    * relational distinct after hashing instead.
+    */
   def shingles3All(t: Column): Column = {
     val tri = transform(sequence(lit(1), size(t) - 2), i =>
       concat_ws(" ", element_at(t, i), element_at(t, i + 1), element_at(t, i + 2)))

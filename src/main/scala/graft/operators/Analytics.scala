@@ -98,28 +98,6 @@ object Analytics {
       |FROM documents GROUP BY lang
       |ORDER BY lang ASC NULLS FIRST""".stripMargin
 
-  /** Production quantile tier: `approx_percentile` (Greenwald–Khanna
-    * sketch) with the same grouping/percentiles as [[tokenQuantilesCont]].
-    * The exact `percentile` above buffers every group value in one
-    * aggregation buffer — the oracle-parity shape, O(group) memory; the
-    * GK sketch is O(1/accuracy) memory per group, mergeable through
-    * partial aggregation, and rank error ≤ 1/accuracy — the only shape
-    * that survives groups outgrowing executor memory at 100 TB. Not
-    * oracle-checkable (sketch internals are engine-specific), so it is
-    * differential-spec'd against the exact tier at tolerance
-    * (AnalyticsSpec) — the [[Similarity.labelCentroidsProd]] pattern.
-    */
-  def tokenQuantilesApprox(spark: SparkSession, dir: String,
-                           accuracy: Int = 10000): DataFrame =
-    Tables.documents(spark, dir)
-      .groupBy(col("lang"))
-      .agg(
-        percentile_approx(col("n_chars"), lit(0.5), lit(accuracy)).as("p50"),
-        percentile_approx(col("n_chars"), lit(0.9), lit(accuracy)).as("p90"),
-        percentile_approx(col("n_chars"), lit(0.99), lit(accuracy)).as("p99"),
-        count(lit(1)).as("n_docs"))
-      .orderBy(col("lang").asc_nulls_first)
-
   /** q56 — equal-width histogram of document length: explicit
     * floor((x−lo)/width) binning written identically in both engines
     * (width_bucket is not portable; the explicit formula is, and it is
@@ -914,7 +892,7 @@ object Analytics {
     * uses `CASE WHEN` (never `(expr)::BIGINT` boolean casts), a CROSS
     * JOIN'd 1-row model CTE (never correlated scalar subqueries), and
     * ranks/emits money as integer CENTS (no DECIMAL reaches the hashed
-    * surface; the dialect blacklist lives in docs/PLANS.md).
+    * surface; the dialect blacklist lives in docs/history/PLANS.md).
     */
   val rfmSegmentsSql: String =
     """WITH o AS (

@@ -46,7 +46,7 @@ object Dedup {
       // walk (TextFns.shingleFps — parity contract and differential
       // specs in TextExprs/VectorExprsSpec); the r17 HOF form
       // interpreted every per-gram lambda. Per-doc array_distinct stays
-      // in a projection BELOW the generator (the shingles3 perf note's
+      // in a projection BELOW the generator (the shingles3All perf note's
       // 15× hazard was array_distinct re-evaluated per OUTPUT row
       // inside the generator child; this is the safe placement), over
       // fixed-width longs, not gram strings
@@ -66,7 +66,7 @@ object Dedup {
     * Exchange + two hash-aggregates over every shingle OCCURRENCE
     * (corpus-token-scale rows at 100 TB) for the same row set. The tier
     * build is now map-only: scan → spread rebalance → project →
-    * generate, zero shuffles (plans/r17/q21_*.txt: the tier subtree
+    * generate, zero shuffles (plans/r17/q21_*.txt in git at c3f7ee6: the tier subtree
     * lost its Exchange). No consumer relied on the deleted exchange's
     * (doc_id, sh_h) partitioning: hash(doc_id, sh_h) satisfies neither
     * the doc_id clustering minhashesOf needs nor the sh_h clustering
@@ -1206,7 +1206,7 @@ object Dedup {
     * + a sort over every gram OCCURRENCE + non-codegen WindowExec frame
     * re-evaluation. Plan at sf0.1: 2 Exchanges → 1 (the spread
     * rebalance + ONE distinct exchange; the window exchange+sort are
-    * gone — plans/r17/q85_*.txt). Wall at sf0.1 is NEUTRAL (min-of-3
+    * gone — plans/r17/q85_*.txt, in git at c3f7ee6). Wall at sf0.1 is NEUTRAL (min-of-3
     * back-to-back 0.47–0.67 s both ways: tokenize+gram+hash dominates
     * and the deleted shuffle is ~260 k fixed-width rows here); the win
     * is the SCALE shape — at 100 TB the deleted Exchange is a full

@@ -491,24 +491,12 @@ object Graph {
     * (the node count rides as a broadcast 1-row frame). Per-node
     * contribution sums are an ordered fold over in-neighbors (sorted by
     * contributor id) so the doubles are bit-identical across engines and
-    * partitionings; group size = in-degree, so a true web-scale hub
-    * would make the per-group array the bottleneck — [[pageRankProd]]
-    * is the commutative-`sum` twin for that regime (the q70/q77 trade),
-    * spec'd against this path at 1e-9 relative.
+    * partitionings.
     */
   def pageRank(edges: DataFrame, src: String, dst: String,
                iters: Int = PrIters,
                assumeDeduped: Boolean = false): DataFrame =
-    pageRankImpl(edges, src, dst, iters, orderedFold = true, assumeDeduped)
-
-  /** Production fold: plain `sum` of contributions (partial aggregation
-    * does the work, O(1) agg memory per node, last-ulp reproducibility
-    * traded away) — the hub-safe path at web scale.
-    */
-  def pageRankProd(edges: DataFrame, src: String, dst: String,
-                   iters: Int = PrIters,
-                   assumeDeduped: Boolean = false): DataFrame =
-    pageRankImpl(edges, src, dst, iters, orderedFold = false, assumeDeduped)
+    pageRankImpl(edges, src, dst, iters, assumeDeduped)
 
   /** Lineage-truncation cadence for caller-supplied iteration budgets:
     * every this-many rounds the rank frame is EAGERLY
@@ -526,7 +514,7 @@ object Graph {
   val PrCheckpointEvery = 5
 
   private[graft] def pageRankImpl(edges: DataFrame, src: String, dst: String,
-                                  iters: Int, orderedFold: Boolean,
+                                  iters: Int,
                                   assumeDeduped: Boolean,
                                   checkpointEvery: Int = PrCheckpointEvery): DataFrame = {
     // `assumeDeduped` drops the defensive distinct — a full edge-list
@@ -550,9 +538,9 @@ object Graph {
       e.groupBy(col("a")).agg(count(lit(1)).as("outdeg")).cache())
     // (a, b, outdeg): degree riding on every edge so each iteration's
     // contribution is ONE division `pr/outdeg` (not a second join) —
-    // cached once, consumed every round. The ORDERED path additionally
-    // pre-partitions by destination and pre-sorts (b, a) INSIDE the
-    // cache: every iteration's window (partitionBy node=b, orderBy a)
+    // cached once, consumed every round. It is also pre-partitioned by
+    // destination and pre-sorted (b, a) INSIDE the cache: every
+    // iteration's window (partitionBy node=b, orderBy a)
     // and max_by reduction then find their required distribution and
     // ordering already satisfied by the cached layout, so the
     // per-iteration Exchange AND Sort vanish from the loop — the one
@@ -563,11 +551,10 @@ object Graph {
     // the window's required ordering enforces the fold order either
     // way — if the cached ordering were ever not recognised, planning
     // would re-insert the sort, never change a value.
-    val e2base = e.join(deg, Seq("a"))
     val e2 = graft.TransientCache.register(
-      (if (orderedFold)
-         e2base.repartition(col("b")).sortWithinPartitions(col("b"), col("a"))
-       else e2base).cache())
+      e.join(deg, Seq("a"))
+        .repartition(col("b")).sortWithinPartitions(col("b"), col("a"))
+        .cache())
     // node count as data (the q77 total discipline — no driver collect)
     val n = deg.agg(count(lit(1)).as("n"))
     var r = deg.select(col("a").as("node")).crossJoin(broadcast(n))
@@ -579,47 +566,40 @@ object Graph {
     // The FINAL frame's blocks stay pinned: the caller reads them.
     var liveCkpt: DataFrame = null
     for (i <- 1 to iters) {
-      // the ordered path broadcasts the rank frame EXPLICITLY: the
-      // ordered fold is the documented rank-vector-fits regime (see
-      // the [[pageRank]] scaladoc — [[pageRankProd]] is the web-scale
-      // twin), and a broadcast probe into the cached (b, a)-laid-out
-      // edge list preserves that layout into the window, keeping the
-      // iteration exchange-free; the prod path stays planner-chosen
-      // (broadcast at small |nodes|, shuffle at web scale)
-      val rS = if (orderedFold) broadcast(r) else r
+      // the rank frame is broadcast EXPLICITLY: the ordered fold is the
+      // rank-vector-fits regime, and a broadcast probe into the cached
+      // (b, a)-laid-out edge list preserves that layout into the window,
+      // keeping the iteration exchange-free
+      val rS = broadcast(r)
       val contribs = e2.join(rS, e2("a") === rS("node"))
         .select(e2("b").as("node"), (col("pr") / col("outdeg")).as("c"),
           e2("a").as("a"))
-      val summed =
-        if (orderedFold) {
-          // Ordered left fold as a RUNNING window sum over in-neighbors
-          // sorted by contributor id: a bounded-start frame updates ONE
-          // aggregation buffer sequentially in frame order (the window
-          // contract, not an implementation accident), so the running
-          // sum at the LAST in-neighbor row is ((c_a1)+c_a2)+... — and
-          // `0.0 + x == x` bitwise for the strictly positive
-          // contributions, so it equals the oracle's
-          // `list_reduce(list_prepend(0.0, list(c ORDER BY a)))`
-          // bit-exactly. Replaces the r16 collect_list(struct) +
-          // array_sort + higher-order aggregate chain: all three were
-          // interpreted (higher-order functions and ObjectHashAggregate
-          // take no codegen) and built a per-node struct array only to
-          // fold it away — the window sum and the max_by reduction are
-          // codegen-friendly declarative aggregates over primitive
-          // columns (guide §4 "prefer built-ins", §1.2 per-task work).
-          // Distribution and ordering are pre-satisfied by the cached
-          // (b, a) layout of e2 (see its build note), so the loop body
-          // plans with ZERO exchanges; max_by reuses the same
-          // partitioning (in-edge ids are unique per node, so the
-          // max-a row is unambiguous).
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("node")).orderBy(col("a"))
-            .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-              org.apache.spark.sql.expressions.Window.currentRow)
-          contribs.withColumn("rs", sum(col("c")).over(w))
-            .groupBy(col("node")).agg(max_by(col("rs"), col("a")).as("s"))
-        } else
-          contribs.groupBy(col("node")).agg(sum(col("c")).as("s"))
+      // Ordered left fold as a RUNNING window sum over in-neighbors
+      // sorted by contributor id: a bounded-start frame updates ONE
+      // aggregation buffer sequentially in frame order (the window
+      // contract, not an implementation accident), so the running
+      // sum at the LAST in-neighbor row is ((c_a1)+c_a2)+... — and
+      // `0.0 + x == x` bitwise for the strictly positive
+      // contributions, so it equals the oracle's
+      // `list_reduce(list_prepend(0.0, list(c ORDER BY a)))`
+      // bit-exactly. A collect_list(struct) + array_sort +
+      // higher-order aggregate chain would be interpreted
+      // (higher-order functions and ObjectHashAggregate take no
+      // codegen) and build a per-node struct array only to fold it
+      // away — the window sum and the max_by reduction are
+      // codegen-friendly declarative aggregates over primitive
+      // columns (guide §4 "prefer built-ins", §1.2 per-task work).
+      // Distribution and ordering are pre-satisfied by the cached
+      // (b, a) layout of e2 (see its build note), so the loop body
+      // plans with ZERO exchanges; max_by reuses the same
+      // partitioning (in-edge ids are unique per node, so the
+      // max-a row is unambiguous).
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("node")).orderBy(col("a"))
+        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
+          org.apache.spark.sql.expressions.Window.currentRow)
+      val summed = contribs.withColumn("rs", sum(col("c")).over(w))
+        .groupBy(col("node")).agg(max_by(col("rs"), col("a")).as("s"))
       r = summed.crossJoin(broadcast(n))
         .select(col("node"),
           (lit(0.15) / col("n") + lit(0.85) * col("s")).as("pr"))

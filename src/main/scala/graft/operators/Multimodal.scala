@@ -9,26 +9,15 @@ import org.apache.spark.sql.functions._
   * `mapPartitions`. Training-data pipeline extension (no reference
   * counterpart).
   *
-  * Decode tiers, from real to stubbed:
-  *   - IMAGE PIXEL DECODE IS REAL ([[RasterDecoder.ImageIo]]): the JDK
-  *     itself ships `javax.imageio` readers for PNG/JPEG/BMP/GIF —
-  *     no external codec lib needed — so payload → grayscale raster →
-  *     2-D resample is genuine end-to-end, spec'd on real PNG/JPEG
-  *     bytes the spec encodes with the same JDK.
-  *   - Container-header parsing is real, pure byte walking
-  *     ([[MediaHeaders]]).
-  *   - Byte-level features keep the deterministic [[MediaDecoder.Stub]]
-  *     because the fixture payloads are text bytes and the q28 driver
-  *     oracle must be SQL-derivable; swapping the stub for a real
-  *     decoder changes no plan shape.
-  *   - VIDEO/AUDIO codecs (FFmpeg-class) remain the one stubbed seam —
-  *     genuinely absent from both the container and the JDK; the frame
-  *     sampler exercises the batch shape behind the same interface.
+  * Byte-level features use the deterministic [[MediaDecoder.Stub]]
+  * because the fixture payloads are text bytes and the q28 driver oracle
+  * must be SQL-derivable; swapping the stub for a real decoder changes
+  * no plan shape.
   *
   * Scale notes: payload rows are wide (binary blobs) — the pipeline never
   * shuffles them. Decode runs in the scan stage (narrow mapPartitions),
-  * only the small feature/raster rows flow downstream; at 100 TB that is
-  * the difference between shuffling blobs and shuffling longs.
+  * only the small feature rows flow downstream; at 100 TB that is the
+  * difference between shuffling blobs and shuffling longs.
   */
 object Multimodal {
 
@@ -67,88 +56,6 @@ object Multimodal {
     }
   }
 
-  /** Parsed container header: real metadata from real byte formats. A
-    * payload whose container isn't recognized gets `format = "unknown"`
-    * and null dims — the pipeline never drops rows at decode.
-    */
-  final case class MediaHeader(doc_id: Long, format: String,
-                               width: Option[Int], height: Option[Int],
-                               bit_depth: Option[Int])
-
-  /** Real container-header decode — pure JVM byte parsing, no codec
-    * libs. PNG: 8-byte signature, then the IHDR chunk (must be first per
-    * the PNG spec) carries width/height as big-endian u32 at data
-    * offsets 0/4 and bit depth at 8. JPEG: SOI marker then a marker
-    * walk; the first SOFn segment (C0–CF minus C4/C8/CC, which are
-    * DHT/JPG/DAC) carries sample precision (1 byte), then height and
-    * width as big-endian u16. This is the header-metadata tier of X12 —
-    * full pixel decode still needs a codec and stays behind
-    * [[MediaDecoder]] ([[MediaDecoder.Stub]] in this container).
-    */
-  object MediaHeaders {
-    private val PngMagic = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
-      .map(_.toByte)
-
-    private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-    private def be16(b: Array[Byte], i: Int): Int = (u8(b, i) << 8) | u8(b, i + 1)
-    private def be32(b: Array[Byte], i: Int): Long =
-      (be16(b, i).toLong << 16) | be16(b, i + 2)
-
-    /** PNG dims: signature + IHDR. Needs the first 26 bytes. */
-    private def parsePng(b: Array[Byte]): Option[(Int, Int, Int)] =
-      if (b.length >= 26 && b.startsWith(PngMagic) &&
-          new String(b, 12, 4, "US-ASCII") == "IHDR") {
-        val w = be32(b, 16); val h = be32(b, 20)
-        // u32 dims above Int.MaxValue are out of PNG's own 2^31-1 bound
-        if (w > 0 && h > 0 && w <= Int.MaxValue && h <= Int.MaxValue)
-          Some((w.toInt, h.toInt, u8(b, 24)))
-        else None
-      } else None
-
-    /** JPEG dims: walk the marker stream to the first SOFn frame header. */
-    private def parseJpeg(b: Array[Byte]): Option[(Int, Int, Int)] = {
-      if (b.length < 4 || u8(b, 0) != 0xff || u8(b, 1) != 0xd8) return None
-      var i = 2
-      while (i + 3 < b.length) {
-        if (u8(b, i) != 0xff) return None // marker stream out of sync
-        var j = i + 1
-        while (j < b.length && u8(b, j) == 0xff) j += 1 // fill bytes
-        if (j >= b.length) return None
-        val marker = u8(b, j)
-        marker match {
-          case m if m >= 0xc0 && m <= 0xcf && m != 0xc4 && m != 0xc8 && m != 0xcc =>
-            // SOFn: length(2) precision(1) height(2) width(2) ...
-            if (j + 8 > b.length) return None
-            val h = be16(b, j + 4); val w = be16(b, j + 6)
-            return if (w > 0 && h > 0) Some((w, h, u8(b, j + 3))) else None
-          case m if m == 0xd8 || m == 0x01 || (m >= 0xd0 && m <= 0xd7) =>
-            i = j + 1 // standalone marker, no length field
-          case 0xd9 => return None // EOI before any SOF
-          case _ =>
-            if (j + 3 > b.length) return None
-            i = j + 1 + be16(b, j + 1) // skip the segment (length incl. itself)
-        }
-      }
-      None
-    }
-
-    def parse(doc_id: Long, payload: Array[Byte]): MediaHeader =
-      parsePng(payload).map { case (w, h, d) =>
-        MediaHeader(doc_id, "png", Some(w), Some(h), Some(d))
-      }.orElse(parseJpeg(payload).map { case (w, h, d) =>
-        MediaHeader(doc_id, "jpeg", Some(w), Some(h), Some(d))
-      }).getOrElse(MediaHeader(doc_id, "unknown", None, None, None))
-  }
-
-  /** Batched header decode: same narrow per-partition shape as
-    * [[decodeFeatures]] — blobs never shuffle, only the small header
-    * rows flow downstream.
-    */
-  def decodeHeaders(media: Dataset[MediaRow]): Dataset[MediaHeader] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(rows => rows.map(r => MediaHeaders.parse(r.doc_id, r.payload)))
-  }
-
   /** `documents` as a media table: UTF-8 payload bytes + metadata. */
   def mediaTable(spark: SparkSession, dir: String): Dataset[MediaRow] = {
     import spark.implicits._
@@ -178,256 +85,6 @@ object Multimodal {
     decodeFeatures(mediaTable(spark, dir), MediaDecoder.Stub)
       .toDF()
       .orderBy(col("doc_id"))
-
-  // ------------------------------------------------- real pixel decode
-
-  /** A decoded image: 8-bit grayscale raster, row-major, `w*h` bytes.
-    * `format` names the container that decoded ("png", "jpeg", …);
-    * undecodable payloads ride as `format = "unknown"` with an empty
-    * 0×0 raster — the pipeline never drops rows at decode.
-    */
-  final case class RasterRow(doc_id: Long, format: String, w: Int, h: Int,
-                             pixels: Array[Byte])
-
-  /** Pluggable FULL decoder: payload bytes → grayscale raster. This is
-    * the seam a JNI/FFmpeg decoder would fill for video; for still
-    * images [[RasterDecoder.ImageIo]] fills it TODAY with the JDK's own
-    * codecs.
-    */
-  trait RasterDecoder extends Serializable {
-    def decode(payload: Array[Byte]): Option[(String, Int, Int, Array[Byte])]
-  }
-
-  object RasterDecoder {
-    /** Decompression-bomb ceiling: the largest `w*h` a single payload may
-      * decode to (2^26 px = a 64 MB grayscale raster — comfortably one
-      * task's working set; ~8192² images pass). A tiny crafted PNG can
-      * DECLARE 100k×100k and would otherwise force an O(w·h) allocation
-      * inside the task before any downstream resize bounds it; the
-      * header walk reads the declared dims from the first bytes, so the
-      * refusal costs nothing and the allocation never happens. Config
-      * constant, not a data function.
-      */
-    val MaxDecodePixels: Long = 1L << 26
-
-    /** REAL pixel decode via `javax.imageio` (PNG/JPEG/BMP/GIF readers
-      * ship in every JDK): read the payload, draw into a TYPE_BYTE_GRAY
-      * buffer (the JDK's ITU-R 601 luma conversion), return the backing
-      * raster. Headless-safe: offscreen BufferedImage drawing needs no
-      * display. Adversarial bytes ride as None — never an exception —
-      * so a corrupt blob in a 100 TB scan costs one unknown row, not a
-      * task retry storm. Two guards make that contract real:
-      *
-      *  - the [[MediaHeaders]] walk runs FIRST and refuses any payload
-      *    whose DECLARED `w*h` exceeds [[MaxDecodePixels]], so a
-      *    decompression bomb is rejected before `ImageIO.read` can
-      *    allocate its raster (and undeclared-container decodes are
-      *    re-checked after the read, before the gray buffer doubles
-      *    the footprint);
-      *  - the read is wrapped in `NonFatal`, not just `IOException`:
-      *    the JDK's own plugin readers throw RuntimeException
-      *    subclasses (IllegalArgumentException, IndexOutOfBounds,
-      *    CMMException) on malformed streams — truncated JPEGs do so
-      *    today, spec'd on real bytes in TrainingOpsSpec.
-      *
-      * Format is named by the header walk so the two metadata tiers can
-      * never disagree about what decoded.
-      */
-    object ImageIo extends RasterDecoder {
-      // never touch a display; decoders run inside executor tasks
-      java.awt.GraphicsEnvironment.isHeadless // force-load AWT headless-safe
-      def decode(payload: Array[Byte]): Option[(String, Int, Int, Array[Byte])] = {
-        if (payload.length < 4) return None
-        val hdr = MediaHeaders.parse(0L, payload)
-        for (w <- hdr.width; h <- hdr.height) // bomb guard, pre-allocation
-          if (w.toLong * h > MaxDecodePixels) return None
-        val img =
-          try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
-          catch { case scala.util.control.NonFatal(_) => null }
-        Option(img).filter(src => // containers the header walk can't size
-          src.getWidth.toLong * src.getHeight <= MaxDecodePixels
-        ).flatMap { src =>
-          try {
-            val (w, h) = (src.getWidth, src.getHeight)
-            val gray = new java.awt.image.BufferedImage(
-              w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-            val g = gray.createGraphics()
-            try g.drawImage(src, 0, 0, null) finally g.dispose()
-            val px = gray.getRaster.getDataBuffer
-              .asInstanceOf[java.awt.image.DataBufferByte].getData
-            Some((if (hdr.format == "unknown") "imageio" else hdr.format, w, h, px))
-          } catch { case scala.util.control.NonFatal(_) => None }
-        }
-      }
-    }
-  }
-
-  /** Batched REAL decode: the [[decodeFeatures]] shape with pixels out —
-    * one decoder per partition, blobs never shuffle, only `w*h`-byte
-    * rasters flow downstream (and a resize directly after this bounds
-    * even those).
-    */
-  def decodeRasters(media: Dataset[MediaRow],
-                    decoder: RasterDecoder = RasterDecoder.ImageIo): Dataset[RasterRow] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        decoder.decode(r.payload) match {
-          case Some((fmt, w, h, px)) => RasterRow(r.doc_id, fmt, w, h, px)
-          case None => RasterRow(r.doc_id, "unknown", 0, 0, Array.emptyByteArray)
-        }
-      }
-    }
-  }
-
-  /** True 2-D nearest-neighbor resample over a row-major grayscale
-    * raster: output pixel (x, y) samples source
-    * (⌊x·sw/w⌋, ⌊y·sh/h⌋) — the raster-aware upgrade of
-    * [[PixelResizer.NearestRaw]]'s 1-D byte resample. Empty source →
-    * zero raster (rows never vanish).
-    */
-  private[graft] def resampleNearest2d(src: Array[Byte], sw: Int, sh: Int,
-                                       w: Int, h: Int): Array[Byte] = {
-    val out = new Array[Byte](w * h)
-    // Long product: RasterDecoder is a pluggable seam, and a decoder
-    // reporting dims with sw*sh past Int.MaxValue would overflow an Int
-    // product to a negative, pass the guard, and index out of bounds
-    if (sw > 0 && sh > 0 && src.length >= sw.toLong * sh) {
-      var y = 0
-      while (y < h) {
-        val sy = (y.toLong * sh / h).toInt
-        var x = 0
-        while (x < w) {
-          out(y * w + x) = src(sy * sw + (x.toLong * sw / w).toInt)
-          x += 1
-        }
-        y += 1
-      }
-    }
-    out
-  }
-
-  /** Decode → 2-D resample in ONE narrow stage: real pixels in, bounded
-    * `w*h`-byte thumbnails out — the full X12 resize path with nothing
-    * stubbed. The intermediate full-size raster lives only inside the
-    * task; neither blobs nor full rasters ever shuffle.
-    */
-  def resizeDecoded(media: Dataset[MediaRow], w: Int, h: Int,
-                    decoder: RasterDecoder = RasterDecoder.ImageIo): Dataset[ThumbRow] = {
-    require(w > 0 && h > 0 && w.toLong * h <= Int.MaxValue,
-      "thumbnail dims must be positive with w*h within Int range")
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val px = decoder.decode(r.payload) match {
-          case Some((_, sw, sh, src)) => resampleNearest2d(src, sw, sh, w, h)
-          case None => new Array[Byte](w * h)
-        }
-        ThumbRow(r.doc_id, w, h, px)
-      }
-    }
-  }
-
-  // ------------------------------------------------- resize / frame-sample
-
-  /** A fixed-size thumbnail: `pixels` is `w*h` bytes (1 byte/pixel
-    * grayscale raster, row-major) — the bounded-width schema downstream
-    * embedding/featurization stages key on.
-    */
-  final case class ThumbRow(doc_id: Long, w: Int, h: Int, pixels: Array[Byte])
-
-  /** Pluggable pixel resampler — the codec-adjacent half of X12's resize
-    * stage. [[PixelResizer.NearestRaw]] is REAL nearest-neighbor
-    * resampling for raw grayscale buffers (interpreting the payload as a
-    * 1×n raster); an encoded-format resizer (decode → resample → raster)
-    * wraps a codec behind this same interface, init once per partition.
-    */
-  trait PixelResizer extends Serializable {
-    def resize(payload: Array[Byte], w: Int, h: Int): Array[Byte]
-  }
-
-  object PixelResizer {
-    /** Nearest-neighbor over the raw byte raster: output pixel (x, y)
-      * samples the source at the proportional offset. Deterministic,
-      * codec-free, and genuinely correct for raw grayscale input; an
-      * empty payload yields a zero raster (rows are never dropped).
-      */
-    object NearestRaw extends PixelResizer {
-      def resize(payload: Array[Byte], w: Int, h: Int): Array[Byte] = {
-        val out = new Array[Byte](w * h)
-        if (payload.nonEmpty) {
-          var i = 0
-          while (i < out.length) {
-            out(i) = payload((i.toLong * payload.length / out.length).toInt)
-            i += 1
-          }
-        }
-        out
-      }
-    }
-  }
-
-  /** Batched resize: same narrow per-partition shape as
-    * [[decodeFeatures]] — wide payload rows never shuffle; only the
-    * bounded `w*h`-byte thumbnails flow downstream (at 100 TB the
-    * payload column is pruned away right after this stage).
-    */
-  def resizeThumbs(media: Dataset[MediaRow], w: Int, h: Int,
-                   resizer: PixelResizer = PixelResizer.NearestRaw): Dataset[ThumbRow] = {
-    // fail on the driver, not as a NegativeArraySizeException inside a task
-    // (w*h can overflow Int for absurd dims, so bound the product too)
-    require(w > 0 && h > 0 && w.toLong * h <= Int.MaxValue,
-      "thumbnail dims must be positive with w*h within Int range")
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      // per-partition resizer/codec init would go here
-      rows.map(r => ThumbRow(r.doc_id, w, h, resizer.resize(r.payload, w, h)))
-    }
-  }
-
-  /** One sampled frame: byte window `[offset, offset + n_bytes)` of the
-    * payload plus the stub checksum — the schema a video frame-sampler
-    * emits (frame raster standing behind the same decoder seam).
-    */
-  final case class FrameRow(doc_id: Long, frame_id: Int, offset: Long,
-                            n_bytes: Int, checksum: Long)
-
-  /** Frame sampling over a byte-stream payload: emit every `stride`-th
-    * window of `frameBytes` bytes — the "sample 1 frame per N" stage of
-    * a video pipeline, expressed purely on the byte plumbing (a real
-    * container would walk packet boundaries behind [[MediaDecoder]];
-    * the batch shape, fan-out and schema are exactly this). Generator
-    * semantics mirror q64's chunking: short payloads still emit one
-    * (short) frame, so no row vanishes at ingest. Narrow mapPartitions +
-    * iterator flatMap — frames fan out INSIDE the scan stage and only
-    * fixed-width frame rows ever shuffle.
-    */
-  def sampleFrames(media: Dataset[MediaRow], frameBytes: Int,
-                   stride: Int): Dataset[FrameRow] = {
-    require(frameBytes > 0 && stride > 0, "frameBytes and stride must be positive")
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val n = r.payload.length
-        // q64's closed form, clamped so every offset lies INSIDE the
-        // payload: with stride > frameBytes (the "1 frame per N" sampling
-        // case) the unclamped form would emit offsets past the end —
-        // off >= n is both a phantom empty frame and an
-        // ArrayIndexOutOfBounds in copyOfRange. An empty payload still
-        // emits one empty frame (rows never vanish at ingest).
-        val covering = (math.max(n - frameBytes, 0) + stride - 1) / stride + 1
-        val inside = (n + stride - 1) / stride // offsets with off < n
-        val nFrames = math.max(1, math.min(covering, inside))
-        (0 until nFrames).iterator.map { f =>
-          val off = f.toLong * stride
-          val len = math.max(0, math.min(frameBytes.toLong, n - off)).toInt
-          val slice = java.util.Arrays.copyOfRange(r.payload, off.toInt, off.toInt + len)
-          val feat = MediaDecoder.Stub.decode(r.doc_id, slice)
-          FrameRow(r.doc_id, f, off, len, feat.checksum)
-        }
-      }
-    }
-  }
 
   val mediaFeaturesSql: String =
     """SELECT doc_id,

@@ -289,7 +289,7 @@ object Sampling {
     * (generated, one CTE block per round — apportionment is idempotent
     * past the fixpoint, so the unrolled form equals the Spark loop
     * whenever the loop's `require` bound holds; see the dialect
-    * blacklist in PLANS.md for why not a recursive CTE), and the
+    * blacklist in docs/history/PLANS.md for why not a recursive CTE), and the
     * single-node per-stratum sort for the draw.
     */
   val mixQuotaSampleSql: String = {

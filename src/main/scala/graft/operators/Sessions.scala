@@ -778,7 +778,7 @@ object Sessions {
     * v1.0.0's list_reduce MIXES accumulator state ACROSS ROWS when a
     * branching lambda folds several rows in one vector (verified: four
     * users wrong in the full query, each correct when queried alone;
-    * recorded in PLANS r11). Every quantity is a 64-bit integer in
+    * recorded in docs/history/PLANS.md r11). Every quantity is a 64-bit integer in
     * both engines, so the chain state is bit-identical at every step.
     */
   val windowFunnelSql: String =

@@ -245,10 +245,7 @@ object Similarity {
     *
     * Scale note: the ordered fold materializes each (label, pos) group's
     * value list — bounded by docs-per-label, the harness's oracle-parity
-    * shape. The production path is [[labelCentroidsProd]]: plain
-    * commutative `avg(val)` (order-free, partial-aggregated, no group
-    * arrays), last-ulp nondeterminism accepted; the plan is otherwise
-    * identical — posexplode → hash-agg keyed (label, pos), dim×N rows
+    * shape. Plan: posexplode → hash-agg keyed (label, pos), dim×N rows
     * shuffled once, no joins.
     */
   def labelCentroids(spark: SparkSession, dir: String): DataFrame =
@@ -263,25 +260,6 @@ object Similarity {
       .select(col("label"), col("pos").cast("int").as("pos"), col("n_vecs"),
         (aggregate(transform(array_sort(col("vs")), s => s.getField("val")),
           lit(0.0), (acc, x) => acc + x) / col("n_vecs")).as("mean"))
-      .orderBy(col("label"), col("pos"))
-
-  /** Production centroids: same posexplode → (label, pos) hash-agg plan
-    * as [[labelCentroids]] but with the commutative `avg(val)` — partial
-    * aggregation (map-side combine) does the heavy lifting, no per-group
-    * value arrays ever materialize, memory per group is O(1). The cost:
-    * the mean's last ulp depends on partial-merge order, so results are
-    * reproducible only to ~1e-15 relative — the right trade at 100 TB,
-    * where collecting a group's values (the oracle-parity shape) would
-    * O(docs-per-label) a single aggregation buffer. Spec'd against the
-    * ordered fold at 1e-9 relative tolerance.
-    */
-  def labelCentroidsProd(spark: SparkSession, dir: String): DataFrame =
-    Tables.spread(Tables.embeddings(spark, dir))
-      .select(col("label"), posexplode(col("embedding")).as(Seq("p0", "valf")))
-      .select(col("label"), (col("p0") + 1).cast("int").as("pos"),
-        col("valf").cast("double").as("val"))
-      .groupBy(col("label"), col("pos"))
-      .agg(count(lit(1)).cast("int").as("n_vecs"), avg(col("val")).as("mean"))
       .orderBy(col("label"), col("pos"))
 
   val labelCentroidsSql: String =
@@ -362,7 +340,7 @@ object Similarity {
     */
   private[graft] def corpusKmeansCentroids(spark: SparkSession, dir: String): IndexedSeq[Array[Double]] =
     kmMemo.get(spark, (dir, true))(
-      fitKmeansWith(spark, dir, orderedFold = true, corpusOnly = true))
+      fitKmeans(spark, dir, corpusOnly = true))
 
   /** Evict this context's memoized fits — the Lloyd centroids AND the
     * PQ codebooks trained on their residuals (stale codebooks against a
@@ -377,27 +355,10 @@ object Similarity {
     clearAnnIndex(spark)
   }
 
-  private def fitKmeans(spark: SparkSession, dir: String): IndexedSeq[Array[Double]] =
-    fitKmeansWith(spark, dir, orderedFold = true)
-
-  /** PRODUCTION fold for the coarse fit: plain commutative `avg` in the
-    * Lloyd update — O(1) aggregation state per (cluster, dim) — where
-    * [[fitKmeans]] buffers `collect_list(struct(vec_id, val))` per group
-    * for oracle bit-exactness (cluster-sized state, the one deliberate
-    * scale concession in the training tier). The
-    * [[labelCentroidsProd]] / [[TextOps.unigramLikelihoodProd]]
-    * discipline applied to the fit itself: same seeds, same argmin,
-    * same iterations — differing only by float re-association, spec'd
-    * ≤ 1e-9 against the ordered-fold fit in TrainingOpsSpec.
+  /** The Lloyd loop: each update is the vec_id-ordered mean, so the fit
+    * is bit-identical to the oracle's.
     */
-  private[graft] def fitKmeansProd(spark: SparkSession, dir: String): IndexedSeq[Array[Double]] =
-    fitKmeansWith(spark, dir, orderedFold = false)
-
-  /** The Lloyd loop behind both fit folds; `orderedFold` picks the
-    * oracle-matched vec_id-ordered mean or the production `avg`.
-    */
-  private def fitKmeansWith(spark: SparkSession, dir: String,
-                            orderedFold: Boolean,
+  private def fitKmeans(spark: SparkSession, dir: String,
                             corpusOnly: Boolean = false): IndexedSeq[Array[Double]] = {
     kmFitCount.incrementAndGet()
     val all = Tables.spread(Tables.embeddings(spark, dir))
@@ -415,20 +376,15 @@ object Similarity {
     val k = cents.size
 
     for (_ <- 1 to KmIters) {
-      val assigned = v.withColumn("cluster", kmArgmin(col("v"), cents))
+      val means = v.withColumn("cluster", kmArgmin(col("v"), cents))
         .select(col("cluster"), col("vec_id"),
           posexplode(col("v")).as(Seq("pos", "val")))
         .groupBy(col("cluster"), col("pos"))
-      val meansDf =
-        if (orderedFold)
-          assigned.agg(count(lit(1)).as("n"),
-            collect_list(struct(col("vec_id"), col("val"))).as("vs"))
-            .select(col("cluster"), col("pos"),
-              (aggregate(transform(array_sort(col("vs")), s => s.getField("val")),
-                lit(0.0), (acc, x) => acc + x) / col("n")).as("m"))
-        else assigned.agg(avg(col("val")).as("m"))
-      val means = meansDf
-        .select(col("cluster"), col("pos"), col("m"))
+        .agg(count(lit(1)).as("n"),
+          collect_list(struct(col("vec_id"), col("val"))).as("vs"))
+        .select(col("cluster"), col("pos"),
+          (aggregate(transform(array_sort(col("vs")), s => s.getField("val")),
+            lit(0.0), (acc, x) => acc + x) / col("n")).as("m"))
         .collect()
         .groupBy(_.getInt(0))
         .map { case (cid, rows) =>
@@ -464,10 +420,7 @@ object Similarity {
     *
     * Integer-only output (vec_id, cluster): doubles only decide
     * comparisons, and the folds make those bit-identical (doubles
-    * round-trip the driver exactly). At 100 TB, the fit swaps its
-    * ordered-fold mean for plain `avg` — that twin EXISTS as
-    * [[fitKmeansProd]] ([[fitPqProd]] for the codebooks), each spec'd
-    * ≤ 1e-9 against this oracle-matched path.
+    * round-trip the driver exactly).
     */
   def kmeansAssign(spark: SparkSession, dir: String): DataFrame = {
     val cents = kmeansCentroids(spark, dir)
@@ -814,7 +767,19 @@ object Similarity {
     */
   private[graft] def corpusPqCodebooks(spark: SparkSession, dir: String): IndexedSeq[IndexedSeq[Array[Double]]] =
     pqMemo.get(spark, (dir, true))(
-      fitPqWith(spark, dir, orderedFold = true, corpusOnly = true))
+      fitPq(spark, dir, corpusOnly = true))
+
+  /** Ordered-fold PQ training at an EXPLICIT geometry — the codebook
+    * machinery is parametric in (M, dsub); the default [[PqM]]×[[PqSub]]
+    * is one instantiation, and the M=8×8 geometry spec trains through
+    * this entry to prove nothing is shape-bound (same recall floor
+    * through [[ivfPqWith]], spec'd in TrainingOpsSpec). Requires
+    * `pqM * pqSub == dim`.
+    */
+  private[graft] def fitPqGeometry(spark: SparkSession, dir: String,
+                                   pqM: Int, pqSub: Int,
+                                   corpusOnly: Boolean = false): IndexedSeq[IndexedSeq[Array[Double]]] =
+    fitPq(spark, dir, pqM, pqSub, corpusOnly)
 
   /** Deterministic PQ training (the per-subspace k-means of Jégou et al.
     * 2011, "Product Quantization for Nearest Neighbor Search"): seeds are
@@ -828,33 +793,9 @@ object Similarity {
     * state is M·Ks·dsub doubles on the driver — bounded like the
     * centroids. Empty codes keep their previous entry.
     */
-  private def fitPq(spark: SparkSession, dir: String): IndexedSeq[IndexedSeq[Array[Double]]] =
-    fitPqWith(spark, dir, orderedFold = true)
-
-  /** PRODUCTION fold for the PQ training — [[fitKmeansProd]]'s twin over
-    * the residual subspaces: plain `avg` per (m, code, pos) instead of
-    * the buffered vec_id-ordered fold. Trains on the same memoized
-    * coarse fit as [[fitPq]] (consulted, never refit), so the spec'd
-    * ≤ 1e-9 differential isolates exactly the fold change.
-    */
-  private[graft] def fitPqProd(spark: SparkSession, dir: String): IndexedSeq[IndexedSeq[Array[Double]]] =
-    fitPqWith(spark, dir, orderedFold = false)
-
-  /** Ordered-fold PQ training at an EXPLICIT geometry — the codebook
-    * machinery is parametric in (M, dsub); the default [[PqM]]×[[PqSub]]
-    * is one instantiation, and the M=8×8 geometry spec trains through
-    * this entry to prove nothing is shape-bound (same recall floor
-    * through [[ivfPqWith]], spec'd in TrainingOpsSpec). Requires
-    * `pqM * pqSub == dim`.
-    */
-  private[graft] def fitPqGeometry(spark: SparkSession, dir: String,
-                                   pqM: Int, pqSub: Int,
-                                   corpusOnly: Boolean = false): IndexedSeq[IndexedSeq[Array[Double]]] =
-    fitPqWith(spark, dir, orderedFold = true, pqM, pqSub, corpusOnly)
-
-  private def fitPqWith(spark: SparkSession, dir: String, orderedFold: Boolean,
-                        pqM: Int = PqM, pqSub: Int = PqSub,
-                        corpusOnly: Boolean = false): IndexedSeq[IndexedSeq[Array[Double]]] = {
+  private def fitPq(spark: SparkSession, dir: String,
+                    pqM: Int = PqM, pqSub: Int = PqSub,
+                    corpusOnly: Boolean = false): IndexedSeq[IndexedSeq[Array[Double]]] = {
     pqFitCount.incrementAndGet()
     val cents = if (corpusOnly) corpusKmeansCentroids(spark, dir)
                 else kmeansCentroids(spark, dir)
@@ -873,21 +814,16 @@ object Similarity {
           pqBest(slice(col("r"), m * pqSub + 1, pqSub), cbs(m))
             .getField("code").as("code"),
           slice(col("r"), m * pqSub + 1, pqSub).as("sub"))): _*)
-      val grouped = res
+      val means = res
         .select(col("vec_id"), explode(subStructs).as("s"))
         .select(col("vec_id"), col("s.m").as("m"), col("s.code").as("code"),
           posexplode(col("s.sub")).as(Seq("pos", "val")))
         .groupBy(col("m"), col("code"), col("pos"))
-      val meansDf =
-        if (orderedFold)
-          grouped.agg(count(lit(1)).as("n"),
-            collect_list(struct(col("vec_id"), col("val"))).as("vs"))
-            .select(col("m"), col("code"), col("pos"),
-              (aggregate(transform(array_sort(col("vs")), s => s.getField("val")),
-                lit(0.0), (acc, x) => acc + x) / col("n")).as("mv"))
-        else grouped.agg(avg(col("val")).as("mv"))
-      val means = meansDf
-        .select(col("m"), col("code"), col("pos"), col("mv"))
+        .agg(count(lit(1)).as("n"),
+          collect_list(struct(col("vec_id"), col("val"))).as("vs"))
+        .select(col("m"), col("code"), col("pos"),
+          (aggregate(transform(array_sort(col("vs")), s => s.getField("val")),
+            lit(0.0), (acc, x) => acc + x) / col("n")).as("mv"))
         .collect()
         .groupBy(r => (r.getInt(0), r.getInt(1)))
         .map { case (k, rows) =>

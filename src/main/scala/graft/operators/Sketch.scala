@@ -479,9 +479,8 @@ object Sketch {
     * hash family), so the query is a cross-paradigm differential:
     * typed-Aggregator matrix == relational matrix, integer-exact.
     *
-    * At 100 TB this is the [[Skew]] feeder: one sketch pass finds the
-    * hot join keys that need salting, at d·w memory instead of a
-    * distinct-key aggregation.
+    * At 100 TB one sketch pass finds the hot join keys that need
+    * salting, at d·w memory instead of a distinct-key aggregation.
     */
   def cmsHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.TextFns._

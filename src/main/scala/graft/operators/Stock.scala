@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -52,7 +52,7 @@ object Stock {
           - coalesce(col("cum_at_reset"), lit(0L)))
   }
 
-  /** Typed event row for the [[withBalanceTyped]] fallback. */
+  /** Typed event row for the streaming fold ([[graft.streaming.StatefulBalance]]). */
   final case class LedgerEv(id_origen: Long, art_id: Long, tienda_id: Int,
                             fecha: java.sql.Timestamp, is_absolute: Boolean,
                             delta_cantidad: Option[Long],
@@ -60,40 +60,6 @@ object Stock {
 
   final case class BalanceRow(tienda_id: Int, art_id: Long, id_origen: Long,
                               balance: Long)
-
-  /** R4 fallback formulation (SURVEY.md §2.5 R4b): typed
-    * `groupByKey.flatMapGroups` running the reference's fold verbatim per
-    * key. Same single shuffle as the window plan, but each group is
-    * materialized and sorted in executor heap (no spill) and rows leave
-    * whole-stage codegen — kept as the documented alternative and as a
-    * differential test target for [[withBalance]], which is the default.
-    */
-  def withBalanceTyped(ledger: DataFrame): Dataset[BalanceRow] = {
-    val spark = ledger.sparkSession
-    import spark.implicits._
-    ledger
-      .select(col("id_origen").cast("long"), col("art_id").cast("long"),
-        col("tienda_id").cast("int"), col("fecha"), col("is_absolute"),
-        col("delta_cantidad").cast("long"), col("abs_stock_after").cast("long"))
-      .as[LedgerEv]
-      .groupByKey(e => (e.tienda_id, e.art_id))
-      .flatMapGroups { (key: (Int, Long), it: Iterator[LedgerEv]) =>
-        val evs = it.toArray.sortBy(e => (e.fecha.getTime, e.id_origen))
-        // lastAbs mirrors the window plan's run_abs: an absolute event with
-        // a NULL value still RESETS the balance (to the previous non-null
-        // absolute, or 0) because cum_at_reset advances regardless — the
-        // formulations must agree even on out-of-contract rows
-        var running = 0L
-        var lastAbs = 0L
-        evs.iterator.map { e =>
-          if (e.is_absolute) {
-            lastAbs = e.abs_stock_after.getOrElse(lastAbs)
-            running = lastAbs
-          } else running += e.delta_cantidad.getOrElse(0L)
-          BalanceRow(key._1, key._2, e.id_origen, running)
-        }
-      }
-  }
 
   /** The same replay as DuckDB CTEs over `ledger` (layered: cum first,
     * then last-at-reset over the cum column).
@@ -159,12 +125,8 @@ object Stock {
     * end-of-day value per active day → calendar densification (D1/D2' —
     * long-format cross join, never the pandas pivot) → forward fill → SOD =
     * yesterday's EOD (R5/R6; reference seed_stock_points.py:92-116).
-    */
-  def denseSod(spark: SparkSession, dir: String): DataFrame =
-    denseSodFrom(Tables.ledger(spark, dir))
-
-  /** Parametric form over any ledger frame (used by the incremental
-    * pipeline layer with a seeded/re-filtered ledger).
+    * Parametric over any ledger frame (the incremental pipeline layer
+    * passes a seeded/re-filtered ledger).
     */
   def denseSodFrom(ledger: DataFrame): DataFrame = {
     val bal = withBalance(ledger)

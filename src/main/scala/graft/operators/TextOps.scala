@@ -575,7 +575,7 @@ object TextOps {
     * unlike R4's segment-decomposable resets this is NOT
     * window-expressible; it runs as a typed `groupByKey.flatMapGroups`
     * fold per source — the same justified-sequential shape as
-    * [[graft.operators.Stock.withBalanceTyped]]. One shuffle on
+    * [[graft.streaming.StatefulBalance]]. One shuffle on
     * `source`; each group sorts in executor heap. At 100 TB packing is
     * keyed by (source, shard) so groups stay memory-bounded — the fold
     * itself is O(group) with O(1) state.
@@ -987,10 +987,7 @@ object TextOps {
     * vocab is corpus-bounded so the join shuffles on the token key (no
     * broadcast), partial aggs map-side — → per-doc ordered fold (q70's
     * collect/sort/fold discipline; group size = doc length, the
-    * oracle-parity shape — production swaps in plain `sum`:
-    * [[unigramLikelihoodProd]], last-ulp trade as
-    * [[Similarity.labelCentroidsProd]], spec'd against this path at
-    * 1e-9 relative).
+    * oracle-parity shape).
     */
   def unigramLikelihood(spark: SparkSession, dir: String): DataFrame =
     withAllDocs(spark, dir,
@@ -1002,11 +999,10 @@ object TextOps {
           (aggregate(transform(array_sort(col("ps")), s => s.getField("p")),
             lit(0.0), (acc, x) => acc + x) / col("n_tokens")).as("mean_p")))
 
-  /** The q77 model fit, shared verbatim by both tiers (so the 1e-9
-    * differential spec always compares the SAME model): one tokenize
-    * (transient-cached — model fit + scoring join), vocab hash-agg
-    * (transient-cached — probe join + total), 1-row broadcast total,
-    * position-tagged per-token probabilities.
+  /** The q77 model fit: one tokenize (transient-cached — model fit +
+    * scoring join), vocab hash-agg (transient-cached — probe join +
+    * total), 1-row broadcast total, position-tagged per-token
+    * probabilities.
     */
   private def tokenProbs(spark: SparkSession, dir: String): DataFrame = {
     val tok = graft.TransientCache.register(docToks(spark, dir)
@@ -1049,23 +1045,6 @@ object TextOps {
       |FROM documents t LEFT JOIN d ON d.doc_id = t.doc_id
       |ORDER BY t.doc_id""".stripMargin
 
-  /** Production unigram scoring: same plan as [[unigramLikelihood]] up to
-    * the per-doc reduction, but the mean is the commutative
-    * `sum(p) / count` — partial aggregation does the work, no per-doc
-    * `(pos, p)` arrays materialize, aggregation memory per doc is O(1).
-    * The cost is the last ulp: the sum's value depends on partial-merge
-    * order, so scores reproduce only to ~1e-15 relative — the
-    * [[Similarity.labelCentroidsProd]] trade, right at 100 TB where the
-    * ordered fold's buffer is doc-length-bounded but still a per-group
-    * array. Spec'd against the ordered-fold path at 1e-9 relative.
-    */
-  def unigramLikelihoodProd(spark: SparkSession, dir: String): DataFrame =
-    withAllDocs(spark, dir,
-      tokenProbs(spark, dir)
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).cast("int").as("n_tokens"),
-          (sum(col("p")) / count(lit(1))).as("mean_p")))
-
   /** Interpolation weight for [[bigramLikelihood]]. 0.75 = 3/4 is exact
     * in binary (so is its complement 0.25), so the λ·p₂ + (1−λ)·p₁ blend
     * is two correctly-rounded multiplies and one add — deterministic
@@ -1097,8 +1076,7 @@ object TextOps {
     * unigram counts); scoring equi-joins the stream to the three model
     * tables on their keys — all corpus-bounded vocab tables, shuffle
     * joins on the token keys at scale (broadcast only the 1-row grand
-    * total). Per-doc reduction is the q77 ordered fold;
-    * [[bigramLikelihoodProd]] is the commutative twin.
+    * total). Per-doc reduction is the q77 ordered fold.
     */
   def bigramLikelihood(spark: SparkSession, dir: String): DataFrame =
     withAllDocs(spark, dir,
@@ -1110,25 +1088,6 @@ object TextOps {
           (aggregate(transform(array_sort(col("ps")), s => s.getField("p")),
             lit(0.0), (acc, x) => acc + x) / col("n_tokens")).as("mean_p")))
 
-  /** Production twin: commutative `sum(p) / count` per doc (the q77/q70
-    * trade — O(1) agg memory, last-ulp reproducibility traded away).
-    */
-  def bigramLikelihoodProd(spark: SparkSession, dir: String): DataFrame =
-    withAllDocs(spark, dir,
-      bigramProbs(spark, dir)
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).cast("int").as("n_tokens"),
-          (sum(col("p")) / count(lit(1))).as("mean_p")))
-
-  /** The q92 model fit + per-token scoring, shared by both tiers (the
-    * differential spec always compares the SAME model). The bigram
-    * stream tags each token with its predecessor (sentinel `<s>` at
-    * position 1; a pathological literal `<s>` token in the text would
-    * merge contexts with the sentinel — identically in both engines, and
-    * impossible in the fixture's alnum/punct text); context totals are
-    * summed FROM the bigram counts, so ctx(prev) ≡ Σ_cur c2(prev, cur)
-    * by construction.
-    */
   /** The shared (doc_id, pos, prev, cur) bigram stream — q92's model fit
     * and q94's collocation mining both read it; within one session the
     * CacheManager unifies the identical cached plans.
@@ -1164,6 +1123,13 @@ object TextOps {
       .groupBy(col("prev"), col("cur")).agg(count(lit(1)).as("c2"))
       .cache()
 
+  /** The q92 model fit + per-token scoring. The bigram stream tags each
+    * token with its predecessor (sentinel `<s>` at position 1; a
+    * pathological literal `<s>` token in the text would merge contexts
+    * with the sentinel — identically in both engines, and impossible in
+    * the fixture's alnum/punct text); context totals are summed FROM the
+    * bigram counts, so ctx(prev) ≡ Σ_cur c2(prev, cur) by construction.
+    */
   private def bigramProbs(spark: SparkSession, dir: String): DataFrame = {
     val big = bigramStream(spark, dir)
     val c2 = bigramCounts(spark, dir)
@@ -1580,11 +1546,9 @@ object TextOps {
     * base each round, keeping analysis, cache-manager canonicalization
     * and plan strings O(1) per round. The q95/q97 default of
     * [[BpeRounds]] = 4 never reaches the cadence — their plans and pins
-    * are untouched. Values unchanged by construction; the deep
-    * differential against [[bpeMergesProd]] runs 60 checkpointed
-    * rounds. ([[bpeMergesProd]] itself remains the production answer:
-    * rounds × scheduler-latency is the relational chain's cost at ANY
-    * data size.)
+    * are untouched. Values unchanged by construction; TrainingOpsSpec
+    * walks 64 rounds (60 checkpointed) against an in-memory reference
+    * trainer.
     */
   private def bpeDeepRound(i: Int): Boolean = i > BpeRounds
 
@@ -1707,167 +1671,6 @@ object TextOps {
       |  UNION ALL SELECT 3, l, r, l || r, cnt FROM b3
       |  UNION ALL SELECT 4, l, r, l || r, cnt FROM b4) u
       |ORDER BY step""".stripMargin
-  }
-
-  /** PRODUCTION BPE trainer — the driver-loop tier for real merge
-    * budgets. The relational [[bpeMerges]] chain is the oracle-checked
-    * demonstration, but a 30k-merge training run cannot be 30k
-    * barrier'd Spark jobs (each round is a full scheduler round-trip;
-    * at any scale the wall-clock is rounds × latency, not data). The
-    * honest production shape: ONE corpus-scale hash-agg to the weighted
-    * `(word, w)` vocab — the only distributed work, map-side partial,
-    * identical to the relational chain's v0 — then COLLECT the
-    * vocab-bounded table (bounded driver state, the CMS/KMV/k-means
-    * seed precedent: vocab is O(distinct words), not O(corpus)) and run
-    * the standard in-memory trainer over symbol arrays. The returned
-    * merge list is itself vocab-bounded and re-broadcasts for the
-    * distributed apply (q97's word-key join shape unchanged).
-    *
-    * Bit-compatibility with the relational chain is engineered, not
-    * hoped for: symbols are CODE POINTS of the separator-stripped word
-    * (what the encode regex `(.)` produces), the merge is the same
-    * greedy left-to-right non-overlapping scan the wrapped-string
-    * `replace` performs, and the (count desc, l, r) tie-break compares
-    * strings in UTF-8 BINARY order — Spark's `UTF8String` ordering,
-    * which differs from Java's UTF-16 `compareTo` beyond the BMP.
-    * Differential-spec'd equal to [[bpeMergesOf]] at 4 and 64 rounds,
-    * including early pair exhaustion.
-    */
-  def bpeMergesProd(spark: SparkSession, dir: String,
-                    rounds: Int = BpeRounds): DataFrame =
-    bpeMergesProdOf(docToks(spark, dir), rounds)
-
-  /** The production trainer over an explicit `(t: array<string>)` token
-    * frame — the differential spec's seam.
-    */
-  private[graft] def bpeMergesProdOf(toksDf: DataFrame, rounds: Int): DataFrame = {
-    val spark = toksDf.sparkSession
-    import spark.implicits._
-    val vocab = toksDf.select(explode(col("t")).as("word"))
-      .groupBy(col("word")).agg(count(lit(1)).as("w"))
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    val merges = bpeTrain(vocab, rounds)._1
-      .map { case (step, l, r, cnt) => (step, l, r, l + r, cnt) }
-    spark.createDataFrame(merges)
-      .toDF("step", "lhs", "rhs", "merged", "pair_count")
-      .orderBy(col("step"))
-  }
-
-  /** PRODUCTION apply half: q97's per-doc segmentation stats with the
-    * training moved to the driver loop. The corpus side is identical to
-    * [[bpeSegmentOf]] — one distributed tokenize to the `(doc, word)`
-    * count frame, a word-key shuffle join, one per-doc hash-agg — only
-    * the per-distinct-WORD segmentation now comes from the in-memory
-    * trainer's final state, shipped back as a vocab-bounded
-    * `(word, n_ch, n_sym)` frame (what "re-broadcast the merge list"
-    * means operationally: the segmented vocab IS the applied merge
-    * list). Differential-spec'd bit-identical to [[bpeSegmentOf]].
-    */
-  def bpeSegmentProd(spark: SparkSession, dir: String,
-                     rounds: Int = BpeRounds): DataFrame =
-    bpeSegmentProdOf(docToks(spark, dir), rounds)
-
-  private[graft] def bpeSegmentProdOf(toksDf: DataFrame, rounds: Int): DataFrame = {
-    val spark = toksDf.sparkSession
-    import spark.implicits._
-    val dw = graft.TransientCache.register(
-      toksDf.select(col("doc_id"), explode(col("t")).as("word"))
-        .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("c"))
-        .cache())
-    val vocab = dw.groupBy(col("word")).agg(sum(col("c")).as("w"))
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    val segmented = bpeTrain(vocab, rounds)._2
-      .map { case (word, syms) =>
-        (word,
-          word.replace(BpeSep, "").codePointCount(0, word.replace(BpeSep, "").length),
-          syms.length)
-      }
-    val sym = spark.createDataFrame(segmented.toSeq).toDF("word", "n_ch", "n_sym")
-    dw.join(sym, Seq("word"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("c")).as("n_tokens"),
-        sum(col("c") * col("n_ch")).as("n_chars"),
-        sum(col("c") * col("n_sym")).as("n_symbols"))
-      .select(col("doc_id"), col("n_tokens"), col("n_chars"),
-        col("n_symbols"),
-        (col("n_chars").cast("double") / col("n_symbols").cast("double"))
-          .as("chars_per_symbol"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** UTF-8 binary comparison — `UTF8String.compareTo`'s unsigned
-    * byte-wise order, so the driver tie-break is bit-compatible with
-    * the relational `orderBy(cnt desc, l, r)` cut.
-    */
-  private def utf8Cmp(a: String, b: String): Int = {
-    val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val n = math.min(x.length, y.length)
-    var i = 0
-    while (i < n) {
-      val c = (x(i) & 0xff) - (y(i) & 0xff)
-      if (c != 0) return c
-      i += 1
-    }
-    x.length - y.length
-  }
-
-  /** The in-memory merge loop over the collected weighted vocab: pair
-    * counts (all adjacent indices, occurrence-weighted), best by
-    * (count desc, l, r) in UTF-8 order, greedy non-overlapping merge —
-    * each round O(vocab symbols) driver work, zero cluster round-trips.
-    * Early pair exhaustion ends the walk with the merges learned so far
-    * (the relational chain's exhausted-pair guard, same row semantics).
-    * Returns the merge list AND the fully-merged per-word segmentation
-    * (the apply half's input).
-    */
-  private def bpeTrain(vocab: Array[(String, Long)], rounds: Int)
-      : (Seq[(Int, String, String, Long)], Array[(String, Array[String])]) = {
-    var words: Array[(String, Array[String], Long)] = vocab.map { case (w0, c) =>
-      val clean = w0.replace(BpeSep, "")
-      val syms = clean.codePoints().toArray
-        .map(cp => new String(Character.toChars(cp)))
-      (w0, syms, c)
-    }
-    val out = Seq.newBuilder[(Int, String, String, Long)]
-    var step = 1
-    var done = false
-    while (step <= rounds && !done) {
-      val counts = scala.collection.mutable.HashMap.empty[(String, String), Long]
-      words.foreach { case (_, s, c) =>
-        var i = 0
-        while (i < s.length - 1) {
-          val k = (s(i), s(i + 1))
-          counts(k) = counts.getOrElse(k, 0L) + c
-          i += 1
-        }
-      }
-      if (counts.isEmpty) done = true
-      else {
-        var bl: String = null; var br: String = null; var bc = -1L
-        counts.foreach { case ((l, r), c) =>
-          val better = c > bc || (c == bc && {
-            val cl = utf8Cmp(l, bl)
-            cl < 0 || (cl == 0 && utf8Cmp(r, br) < 0)
-          })
-          if (better) { bl = l; br = r; bc = c }
-        }
-        out += ((step, bl, br, bc))
-        val merged = bl + br
-        words = words.map { case (w, s, c) =>
-          val b = Array.newBuilder[String]
-          var i = 0
-          while (i < s.length) {
-            if (i + 1 < s.length && s(i) == bl && s(i + 1) == br) {
-              b += merged; i += 2
-            } else { b += s(i); i += 1 }
-          }
-          (w, b.result(), c)
-        }
-        step += 1
-      }
-    }
-    (out.result(), words.map { case (w, s, _) => (w, s) })
   }
 
   /** q97 — BPE segmentation stats: the APPLY half of [[bpeMerges]]'

@@ -82,33 +82,13 @@ final class Warehouse(val spark: SparkSession, val root: String) extends UpsertS
     else write(table,
       Upsert.upsertByKey(read(table), incoming, keys, versionCol, tiebreakCol))
 
-  /** Bucketed write: co-locates the table by `bucketCol` so repeated
-    * joins/aggregations on that key skip their shuffle entirely (the scan
-    * reports the bucketing as its output partitioning). This is the
-    * at-rest form of the pre-partitioning the big fact tables want at
-    * 100 TB — bucket `raw_stock_movements` by art_id once, and every
-    * nightly replay's window exchange disappears. Registers the table in
-    * the session catalog (bucketing metadata lives there), data under the
-    * warehouse root.
-    */
-  def writeBucketed(table: String, df: DataFrame, bucketCol: String,
-                    numBuckets: Int): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    df.write
-      .bucketBy(numBuckets, bucketCol)
-      .sortBy(bucketCol)
-      .option("path", path(table))
-      .saveAsTable(table)
-  }
-
   /** Date/column-partitioned write — the at-rest layout every 100 TB fact
     * table needs: one directory per partition value, so date-range and
     * store predicates prune at PLANNING time (the scan's
     * `PartitionFilters` — zero IO for untouched partitions, where a flat
     * table would scan-and-filter everything). This is the file-source
     * form of the reference's date-window batching + `tienda_id` filters
-    * (SURVEY.md §4 "partition-style pruning"). Combine with bucketing
-    * (partition by day, bucket by SKU) for pruned AND shuffle-free reads.
+    * (SURVEY.md §4 "partition-style pruning").
     */
   def writePartitioned(table: String, df: DataFrame,
                        partitionCols: Seq[String]): Unit =
@@ -159,10 +139,7 @@ final class Warehouse(val spark: SparkSession, val root: String) extends UpsertS
     * first), the same contract every S10 staging swap rides.
     *
     * `coalesce`, not `repartition`: compaction is pure IO — each output
-    * task drains a run of small files with no shuffle. NOT for
-    * bucketed tables ([[writeBucketed]] layouts carry catalog metadata
-    * a plain rewrite would orphan); none of the append-only index
-    * tables is bucketed.
+    * task drains a run of small files with no shuffle.
     */
   def compact(table: String,
               targetFileBytes: Long = Warehouse.CompactTargetFileBytes): Unit = {

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Stock.{BalanceRow, LedgerEv}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming form of the R4 running balance: per-(store, SKU) state kept
@@ -51,16 +51,5 @@ object StatefulBalance {
           state.update(KeyState(running, lastAbs))
           out.iterator
         })
-  }
-
-  /** Typed view of a raw ledger frame for the streaming fold. */
-  def typedLedger(ledger: DataFrame): Dataset[LedgerEv] = {
-    val spark = ledger.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    ledger.select(col("id_origen").cast("long"), col("art_id").cast("long"),
-      col("tienda_id").cast("int"), col("fecha"), col("is_absolute"),
-      col("delta_cantidad").cast("long"), col("abs_stock_after").cast("long"))
-      .as[LedgerEv]
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Sessions
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of the q101/q103 window funnel: per-user conversion
@@ -56,22 +56,5 @@ object StreamingFunnel {
           state.update(acc)
           Iterator(FunnelRow(user, acc / Sessions.B40))
         })
-  }
-
-  /** Typed packed view of an events frame — the batch scan's exact
-    * projection and packing (3/5 event types, 2 columns, epoch·8+step).
-    */
-  def typedEvents(events: DataFrame): Dataset[FunnelEv] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    events
-      .filter(col("event_type").isin("view", "click", "purchase"))
-      .select(col("user_id").cast("long").as("user_id"),
-        (unix_timestamp(col("ts")) * 8 +
-          when(col("event_type") === "view", 1)
-            .when(col("event_type") === "click", 2)
-            .otherwise(3)).as("x"))
-      .as[FunnelEv]
   }
 }

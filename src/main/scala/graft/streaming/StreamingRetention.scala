@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of the q104 weekly retention cohorts: per-user
@@ -61,17 +61,5 @@ object StreamingRetention {
           state.update(RetState(fd, seen.toSeq))
           out.result().iterator
         })
-  }
-
-  /** Typed view of an events frame — q104's exact day arithmetic
-    * (`unix_timestamp DIV 86400`; exact integer space, no engine
-    * week-truncation).
-    */
-  def typedEvents(events: DataFrame): Dataset[RetEv] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    events.select(col("user_id").cast("long").as("user_id"),
-      expr("unix_timestamp(ts) DIV 86400").as("day")).as[RetEv]
   }
 }

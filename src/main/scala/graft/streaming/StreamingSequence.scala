@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of the q106 unbounded sequence conversion — per-user
@@ -68,22 +68,5 @@ object StreamingSequence {
           Iterator(SeqRow(user, depthOf(s),
             if (s.t3 >= 0) Some(s.t3 - s.t1) else None))
         })
-  }
-
-  /** Typed view of an events frame — the batch q106 scan's exact
-    * projection (3/5 event types, epoch seconds, step code).
-    */
-  def typedEvents(events: DataFrame): Dataset[SeqEv] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    events
-      .filter(col("event_type").isin("view", "click", "purchase"))
-      .select(col("user_id").cast("long").as("user_id"),
-        unix_timestamp(col("ts")).as("es"),
-        when(col("event_type") === "view", 1)
-          .when(col("event_type") === "click", 2)
-          .otherwise(3).as("step"))
-      .as[SeqEv]
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of the q105 session transition matrix: the (from, to)
@@ -60,21 +60,5 @@ object StreamingTransitions {
           state.update(last)
           out.result().iterator
         })
-  }
-
-  /** Typed view of an events frame — the batch lag's exact projection
-    * and ordering key (full-precision micros + event_id tiebreak).
-    */
-  def typedEvents(events: DataFrame): Dataset[TransEv] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val code = Types.zipWithIndex.foldLeft(lit(0)) { case (acc, (t, i)) =>
-      when(col("event_type") === t, lit(i + 1)).otherwise(acc)
-    }
-    events.select(col("user_id").cast("long").as("user_id"),
-      unix_micros(col("ts")).as("us"),
-      col("event_id").cast("long").as("event_id"),
-      code.as("code")).as[TransEv]
   }
 }

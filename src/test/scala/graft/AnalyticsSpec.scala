@@ -94,25 +94,70 @@ class AnalyticsSpec extends SparkSpec {
     }
   }
 
-  test("approx quantile tier tracks the exact tier at tolerance") {
-    // labelCentroidsProd pattern: the production sketch path is not
-    // oracle-checkable, so it is differentially bounded by the exact
-    // tier. GK rank error at accuracy=10000 over ~170-doc groups is
-    // sub-rank: the approx value must land within the group's exact
-    // neighboring order statistics — enforced here as a 5% relative
-    // envelope around the interpolated exact quantile, far wider than
-    // the sketch's guarantee and far narrower than any group's spread.
-    val exact = Analytics.tokenQuantilesCont(spark, dir).collect()
-      .map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
-    val approx = Analytics.tokenQuantilesApprox(spark, dir).collect()
-    assert(approx.nonEmpty)
-    approx.foreach { r =>
-      val (e50, e90, e99) = exact(r.getString(0))
-      def ok(a: Double, e: Double) = math.abs(a - e) <= 0.05 * math.abs(e)
-      assert(ok(r.getLong(1).toDouble, e50), s"p50 ${r.getString(0)}")
-      assert(ok(r.getLong(2).toDouble, e90), s"p90 ${r.getString(0)}")
-      assert(ok(r.getLong(3).toDouble, e99), s"p99 ${r.getString(0)}")
+  /** Linear interpolation between the order statistics around
+    * (n - 1) * p of an ascending sample.
+    */
+  private def refCont(sorted: IndexedSeq[Long], p: Double): Double = {
+    val pos = (sorted.size - 1) * p
+    val (lo, hi) = (math.floor(pos).toInt, math.ceil(pos).toInt)
+    sorted(lo) + (sorted(hi) - sorted(lo)) * (pos - lo)
+  }
+
+  private def close(a: Double, b: Double) = math.abs(a - b) <= 1e-9 * math.max(math.abs(b), 1.0)
+
+  /** A documents table holding only the columns the length tiers read. */
+  private def lengthDocsDir(rows: Seq[(Long, String, java.lang.Long)]): String = {
+    val sql = spark.sqlContext
+    import sql.implicits._
+    val d = java.nio.file.Files.createTempDirectory("graft-len-docs").toString
+    rows.toDF("doc_id", "lang", "n_chars")
+      .select(col("doc_id"), lit("x").as("text"), col("lang"), lit("src00").as("source"),
+        col("n_chars"))
+      .write.parquet(s"$d/documents.parquet")
+    d
+  }
+
+  test("continuous quantiles equal a driver-side linear interpolation per group") {
+    val got = Analytics.tokenQuantilesCont(spark, dir).collect()
+      .map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getLong(4)))
+      .toMap
+    val byLang = Tables.documents(spark, dir).select(col("lang"), col("n_chars")).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).groupBy(_._1)
+      .map { case (l, rs) => l -> rs.map(_._2).sorted.toIndexedSeq }
+    assert(got.keySet == byLang.keySet && got.size > 1)
+    for ((lang, vals) <- byLang) {
+      val (p50, p90, p99, n) = got(lang)
+      assert(n == vals.size)
+      assert(close(p50, refCont(vals, 0.5)) && close(p90, refCont(vals, 0.9)) &&
+        close(p99, refCont(vals, 0.99)), s"lang=$lang: ${got(lang)}")
     }
+  }
+
+  test("continuous quantiles skip null lengths, count every doc and keep a null-lang group") {
+    val d = lengthDocsDir(Seq[(Long, String, java.lang.Long)](
+      (1L, "en", 10L), (2L, "en", null), (3L, "en", 30L), (4L, "en", 20L),
+      (5L, null, 7L), (6L, null, 9L), (7L, "es", null)))
+    val got = Analytics.tokenQuantilesCont(spark, d).collect()
+      .map(r => (Option(r.getString(0)), Option(r.get(1)), r.getLong(4))).toSeq
+    assert(got.map(_._1) == Seq(None, Some("en"), Some("es")), "null lang sorts first")
+    assert(got.map(_._3) == Seq(2L, 4L, 1L), "n_docs counts null-length docs")
+    assert(got(0)._2.contains(8.0) && got(1)._2.contains(20.0))
+    assert(got(2)._2.isEmpty, "an all-null group has no quantile")
+  }
+
+  test("char histogram leaves null lengths out of every bin, bounds from the rest") {
+    val lens = Seq(5L, 6L, 9L, 14L, 20L, 25L, 33L, 40L, 41L, 50L)
+    val d = lengthDocsDir(lens.zipWithIndex.map { case (n, i) =>
+      (i.toLong, "en", java.lang.Long.valueOf(n)) } ++
+      Seq[(Long, String, java.lang.Long)]((100L, "en", null), (101L, "es", null)))
+    val got = Analytics.charHistogram(spark, d).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    // width = (hi - lo + 1) / 10 over the non-null lengths only
+    val width = (50 - 5 + 1) / 10.0
+    val want = lens.groupBy(n => math.min(math.floor((n - 5) / width).toLong, 9L))
+      .toSeq.sortBy(_._1).map { case (b, ns) => (b, ns.size.toLong, ns.min, ns.max) }
+    assert(got == want)
+    assert(got.map(_._2).sum == lens.size)
   }
 
   test("rolling mean window is correct at series edges") {

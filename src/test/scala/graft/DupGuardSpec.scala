@@ -70,6 +70,43 @@ class DupGuardSpec extends AnyFunSuite {
       s"sink wiring outside Twin.sink: ${(wiring - "streaming/Twin.scala").toSeq.sorted}")
   }
 
+  test("the only entry points in src/main are Bench, Verify and DevProfile") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val objectRe = raw"\bobject\s+(\w+)".r
+    val mainRe = raw"\bdef\s+main\s*\(".r
+    // each `def main` belongs to the nearest object declared above it
+    val mains = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { p =>
+        val code = stripNoise(new String(java.nio.file.Files.readAllBytes(p)))
+        val objs = objectRe.findAllMatchIn(code).map(m => m.start -> m.group(1)).toSeq
+        mainRe.findAllMatchIn(code).map { m =>
+          objs.filter(_._1 < m.start).lastOption.map(_._2)
+            .getOrElse(s"<no object in ${root.relativize(p)}>")
+        }
+      }
+    assert(mains.sorted == Seq("Bench", "DevProfile", "Verify"),
+      s"entry points in src/main: ${mains.sorted.mkString(", ")}")
+  }
+
+  test("no second code path rides beside an oracle-matched one: no *Prod twin, no orderedFold fork") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    // q103's windowFunnelProd is a query of its own, not a twin
+    val twinRe = raw"\bdef\s+(\w+Prod)\b".r
+    val found = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { p =>
+        val code = stripNoise(new String(java.nio.file.Files.readAllBytes(p)))
+        twinRe.findAllMatchIn(code).map(_.group(1))
+          .filter(_ != "windowFunnelProd").toSeq ++
+          (if (code.contains("orderedFold")) Seq(s"orderedFold in ${root.relativize(p)}")
+           else Nil)
+      }
+    assert(found.isEmpty, s"twin code paths in src/main: ${found.sorted.mkString(", ")}")
+  }
+
   test("no two operator bodies exceed the copy-paste ceiling (token-shingle Jaccard 0.6)") {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala/graft")

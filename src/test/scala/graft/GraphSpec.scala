@@ -143,11 +143,11 @@ class GraphSpec extends SparkSpec {
       (4L, 5L), (5L, 6L), (6L, 4L)))
     // default cadence (5): checkpoints after rounds 5 and 10
     val trunc = Graph.pageRankImpl(edges, "src", "dst", 12,
-      orderedFold = true, assumeDeduped = false)
+      assumeDeduped = false)
     val tRows = trunc.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     // cadence disabled: the single 12-deep unrolled DAG
     val flat = Graph.pageRankImpl(edges, "src", "dst", 12,
-      orderedFold = true, assumeDeduped = false, checkpointEvery = Int.MaxValue)
+      assumeDeduped = false, checkpointEvery = Int.MaxValue)
     val fRows = flat.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     // checkpointing materializes the same rows: BIT-exact, not approx
     assert(tRows == fRows,
@@ -163,30 +163,76 @@ class GraphSpec extends SparkSpec {
     graft.TransientCache.drain()
   }
 
-  test("pagerank: production sum matches the ordered fold to 1e-9") {
+  /** Driver-side power iteration in the engine's op order: seed 1.0 / n,
+    * contribution pr(a) / outdeg(a), per-node left fold over in-neighbors
+    * sorted by contributor id, then 0.15 / n + 0.85 * s. Every op is an
+    * IEEE correctly-rounded double op, so the engine must match it
+    * bit-for-bit, not approximately.
+    */
+  private def refRanks(edges: Seq[(Long, Long)], iters: Int): Map[Long, Double] = {
+    val e = edges.distinct
+    val outdeg = e.groupBy(_._1).map { case (a, es) => a -> es.size.toLong }
+    val n = outdeg.size.toLong
+    val inN = e.groupBy(_._2).map { case (b, es) => b -> es.map(_._1).sorted }
+    var r = outdeg.keys.map(_ -> 1.0 / n).toMap
+    for (_ <- 1 to iters)
+      r = inN.map { case (b, as) =>
+        b -> (0.15 / n + 0.85 * as.map(a => r(a) / outdeg(a)).reduceLeft(_ + _))
+      }
+    r
+  }
+
+  private def randomSymEdges(seed: Long, nodes: Int, m: Int): Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    val one = Seq.fill(m)(((rnd.nextInt(nodes) + 1).toLong, (rnd.nextInt(nodes) + 1).toLong))
+    one ++ one.map(_.swap)
+  }
+
+  test("pagerank: q91 supplier-part ranks equal a driver-side power iteration bit-for-bit") {
     val dir = "/root/testdata/sf0.001"
-    val oracle = Graph.supplierPartRank(spark, dir)
-      .select(col("kind"), col("key"), col("pr"))
-    val li = graft.Tables.lineitem(spark, dir)
-      .select((col("l_suppkey") * 2).as("s"), (col("l_partkey") * 2 + 1).as("p"))
-      .distinct()
-    val s2 = li.select(explode(array(
-        struct(col("s").as("a"), col("p").as("b")),
-        struct(col("p").as("a"), col("s").as("b")))).as("ed"))
-      .select(col("ed.a").as("a"), col("ed.b").as("b"))
-    val prod = Graph.pageRankProd(s2, "a", "b")
-      .select(
-        when(col("node") % 2 === 0, lit("supplier")).otherwise(lit("part"))
-          .as("kind"),
-        shiftright(col("node"), 1).as("key"), col("pr").as("pr_prod"))
-    val j = oracle.join(prod, Seq("kind", "key"), "full").cache()
-    assert(j.filter(col("pr").isNull || col("pr_prod").isNull).isEmpty,
-      "both folds must rank every node")
-    assert(j.filter(abs(col("pr") - col("pr_prod")) >
-      lit(1e-9) * abs(col("pr"))).isEmpty)
-    assert(j.count() > 0)
-    j.unpersist()
+    val got = Graph.supplierPartRank(spark, dir).collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
     graft.TransientCache.drain()
+    val base = graft.Tables.lineitem(spark, dir)
+      .select(col("l_suppkey").cast("long"), col("l_partkey").cast("long"))
+      .collect().map(r => (r.getLong(0) * 2, r.getLong(1) * 2 + 1)).toSeq
+    val want = refRanks(base ++ base.map(_.swap), Graph.PrIters).map { case (node, pr) =>
+      (if (node % 2 == 0) "supplier" else "part", node >> 1) -> pr
+    }
+    assert(got.size == want.size && got.size > 100)
+    val diff = want.filter { case (k, pr) => !got.get(k).contains(pr) }
+    assert(diff.isEmpty, s"${diff.size} ranks differ, e.g. ${diff.take(3)}")
+  }
+
+  test("pagerank: random symmetric graphs equal the driver-side power iteration bit-for-bit") {
+    for (seed <- 1L to 4L) {
+      val edges = randomSymEdges(seed, nodes = 25, m = 60)
+      val got = Graph.pageRank(edges.toDF("src", "dst"), "src", "dst")
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      graft.TransientCache.drain()
+      assert(got == refRanks(edges, Graph.PrIters), s"seed $seed")
+    }
+  }
+
+  test("pagerank: a 12-round walk through the checkpoint cadence equals the driver-side iteration") {
+    val edges = randomSymEdges(7L, nodes = 20, m = 45)
+    val got = Graph.pageRank(edges.toDF("src", "dst"), "src", "dst", iters = 12)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    graft.TransientCache.drain()
+    assert(12 > Graph.PrCheckpointEvery, "the walk must cross a checkpoint")
+    assert(got == refRanks(edges, 12))
+  }
+
+  test("pagerank: duplicate edges are dropped before degrees are counted") {
+    // a duplicated edge would double both the source's degree and its
+    // contribution; the default path must rank the edge SET
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 3L), (2L, 1L))
+    val once = ranks(edges)
+    val thrice = Graph.pageRank(sym(edges ++ edges ++ edges), "src", "dst")
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    graft.TransientCache.drain()
+    assert(thrice == once)
+    assert(once == refRanks(edges ++ edges.map(_.swap), Graph.PrIters))
   }
 
   // ------------------------------------------------------ q110: k-core

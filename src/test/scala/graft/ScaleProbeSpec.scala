@@ -443,7 +443,7 @@ class ScaleProbeSpec extends SparkSpec {
     try {
       val idx10 = winIdx(10); val idx30 = winIdx(30)
       val probes: Seq[(String, Int => DataFrame)] = Seq(
-        ("q91 pagerank", f => Graph.pageRankProd(blowEdges(f), "a", "b")),
+        ("q91 pagerank", f => Graph.pageRank(blowEdges(f), "a", "b")),
         ("q88 delta winnow", f => Dedup.screenWinnowAgainstIndexOf(
           if (f == 30) idx30 else idx10,
           blowDocs(f).filter(col("orig") % 10 >= 8).select(col("doc_id"), col("text")))),

@@ -113,46 +113,6 @@ class SourcesSpec extends SparkSpec {
     assert(Csv.dedupAppend(spark, path, excl) == n1)
   }
 
-  test("ledger round-trips through ORC with pushdown intact") {
-    import graft.sources.Formats
-    val dir = java.nio.file.Files.createTempDirectory("graft-orc").toString
-    val ledger = Tables.ledger(spark, "/root/testdata/sf0.001")
-    Formats.writeOrc(ledger, s"$dir/ledger")
-    val back = Formats.readOrc(spark, s"$dir/ledger", ledger.schema)
-    assert(back.count() == ledger.count())
-    // same rows (compare a stable projection as sets)
-    val key = (df: org.apache.spark.sql.DataFrame) => df
-      .select("id_origen", "art_id", "tienda_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(key(back) == key(ledger))
-    // predicate reaches the ORC scan (pushdown works like parquet)
-    val plan = back.filter(col("art_id") === 7L)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("art_id"))
-  }
-
-  test("JSON-lines read quarantines corrupt rows instead of failing") {
-    import graft.sources.Formats
-    val dir = java.nio.file.Files.createTempDirectory("graft-jsonl").toString
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("doc_id", "lang", "n_chars").limit(10)
-    Formats.writeJsonl(docs, s"$dir/docs")
-    // poison one line (own file — appending in place would break the
-    // Hadoop local-FS .crc sidecar)
-    val w = new java.io.FileWriter(s"$dir/docs/part-zzz-poison.json")
-    w.write("{not json at all\n"); w.close()
-
-    // Spark disallows queries touching ONLY _corrupt_record on a raw
-    // JSON read; cache materializes the parse first (documented pattern)
-    val back = Formats.readJsonl(spark, s"$dir/docs",
-      org.apache.spark.sql.types.StructType(docs.schema.fields)).cache()
-    assert(back.filter(col("_corrupt_record").isNotNull).count() == 1)
-    val clean = back.filter(col("_corrupt_record").isNull)
-    assert(clean.count() == 10)
-    assert(clean.select("doc_id").collect().map(_.getLong(0)).toSet ==
-      docs.select("doc_id").collect().map(_.getLong(0)).toSet)
-  }
-
   // --- JDBC write sink (S7/S8: statement + pre-dedup, no live DB) ---------
 
   test("upsertSql builds MySQL INSERT ... ON DUPLICATE KEY UPDATE with keys insert-only") {

@@ -85,6 +85,17 @@ class TrainingOpsSpec extends SparkSpec {
     assert(df.filter(col("n_docs") < 1).isEmpty)
   }
 
+  test("exact dedup: case and whitespace variants collapse, unicode lowercases, empty texts group") {
+    import spark.implicits._
+    val docs = Seq(
+      1L -> "Hello  World", 2L -> "hello world\n", 3L -> "HELLO WORLD again",
+      4L -> "Straße ÜBER", 5L -> "straße über", 6L -> "", 7L -> " \t ",
+      8L -> "日本語 テキスト", 9L -> "日本語  テキスト").toDF("doc_id", "text")
+    val got = Dedup.exactDedupOf(docs).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == Map(1L -> 2L, 3L -> 1L, 4L -> 2L, 6L -> 2L, 8L -> 2L))
+  }
+
   test("ngram jaccard: pairs are ordered, jaccard in [threshold, 1]") {
     val df = Dedup.ngramJaccard(spark, dir).cache()
     assert(df.filter(col("da") >= col("db")).isEmpty)
@@ -276,23 +287,6 @@ class TrainingOpsSpec extends SparkSpec {
     assert(df.filter(col("va") >= col("vb")).isEmpty)
   }
 
-  test("production centroids match the ordered-fold oracle shape to 1e-9") {
-    val oracle = Similarity.labelCentroids(spark, dir)
-      .select(col("label"), col("pos"), col("n_vecs"), col("mean"))
-    val prod = Similarity.labelCentroidsProd(spark, dir)
-      .select(col("label"), col("pos"),
-        col("n_vecs").as("n_prod"), col("mean").as("mean_prod"))
-    val j = oracle.join(prod, Seq("label", "pos"), "full").cache()
-    assert(j.filter(col("n_vecs").isNull || col("n_prod").isNull).isEmpty,
-      "both paths must emit the same (label, pos) cells")
-    assert(j.filter(col("n_vecs") =!= col("n_prod")).isEmpty)
-    // avg's merge order differs from the ordered fold → compare at 1e-9
-    // relative, far above double noise, far below any real divergence
-    assert(j.filter(abs(col("mean") - col("mean_prod")) >
-      lit(1e-9) * greatest(abs(col("mean")), lit(1e-300))).isEmpty)
-    assert(j.count() > 0)
-  }
-
   test("ivf-pq at the M=8x8 geometry: same recall floor, nothing shape-bound") {
     // the codebook machinery is parametric in (M, dsub); train and
     // search the 64-dim fixture as 8 subspaces of 8 dims (vs the
@@ -329,40 +323,6 @@ class TrainingOpsSpec extends SparkSpec {
     Seq(pq8, bf, shared).foreach(_.unpersist(false))
   }
 
-  test("production k-means fit matches the ordered-fold fit to 1e-9") {
-    // same seeds, same argmin, same iterations — only the Lloyd mean
-    // changes (commutative avg, O(1) agg state, vs the cluster-sized
-    // collect_list buffer kept for oracle bit-exactness). Assignments
-    // are argmin over these centroids, so a ≤ 1e-9 fit bound carries
-    // the whole q71/q73/q83 consumer tier.
-    val oracle = Similarity.kmeansCentroids(spark, dir)
-    val prod = Similarity.fitKmeansProd(spark, dir)
-    assert(prod.size == oracle.size && oracle.nonEmpty)
-    oracle.zip(prod).zipWithIndex.foreach { case ((o, p), c) =>
-      assert(o.length == p.length)
-      o.zip(p).foreach { case (ov, pv) =>
-        assert(math.abs(ov - pv) <= 1e-9 * math.max(math.abs(ov), 1e-300),
-          s"cluster $c centroid diverged: $ov vs $pv")
-      }
-    }
-  }
-
-  test("production PQ fit matches the ordered-fold codebooks to 1e-9") {
-    // both paths train on the SAME memoized coarse fit, so the bound
-    // isolates exactly the per-(m, code, pos) fold change
-    val oracle = Similarity.pqCodebooks(spark, dir)
-    val prod = Similarity.fitPqProd(spark, dir)
-    assert(prod.size == oracle.size && oracle.nonEmpty)
-    for (m <- oracle.indices) {
-      assert(prod(m).size == oracle(m).size)
-      for (c <- oracle(m).indices; pos <- oracle(m)(c).indices) {
-        val (ov, pv) = (oracle(m)(c)(pos), prod(m)(c)(pos))
-        assert(math.abs(ov - pv) <= 1e-9 * math.max(math.abs(ov), 1e-300),
-          s"codebook ($m, $c, $pos) diverged: $ov vs $pv")
-      }
-    }
-  }
-
   test("kmeans: full assignment, clusters in range, seeds anchor their own clusters, deterministic") {
     val a = Similarity.kmeansAssign(spark, dir).cache()
     assert(a.count() == 500)
@@ -391,6 +351,130 @@ class TrainingOpsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
     assert(Similarity.kmFitCount.get() == base + 2, "clear must force a refit")
     assert(a1 == a2, "independent fits agree bit-for-bit (ordered folds)")
+  }
+
+  // driver-side references for the fits: the engine folds every double
+  // in a fixed order, so each fit must equal its reference bit-for-bit
+
+  /** (vec_id, label, embedding widened to double), sorted by vec_id. */
+  private lazy val fixtureVecs: Seq[(Long, Int, Array[Double])] =
+    Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("label"), col("embedding").cast("array<double>"))
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2).toArray))
+      .toSeq.sortBy(_._1)
+
+  /** Squared L2 as a left fold from 0.0 (the engine's `sqDist`). */
+  private def refSqDist(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0; var i = 0
+    while (i < a.length) { s += (a(i) - b(i)) * (a(i) - b(i)); i += 1 }
+    s
+  }
+
+  /** Nearest entry, distance ties toward the smaller index. */
+  private def refArgmin(v: Array[Double], cents: IndexedSeq[Array[Double]]): Int =
+    cents.indices.minBy(i => (refSqDist(v, cents(i)), i))
+
+  /** Per-dimension mean of vec_id-ordered members: left fold / count. */
+  private def refMean(members: Seq[(Long, Array[Double])]): Array[Double] = {
+    val ms = members.sortBy(_._1)
+    Array.tabulate(ms.head._2.length)(p =>
+      ms.foldLeft(0.0)((acc, m) => acc + m._2(p)) / ms.size)
+  }
+
+  /** Lloyd from the `k` smallest vec_ids; empty clusters keep their
+    * previous centroid.
+    */
+  private def refLloyd(vecs: Seq[(Long, Array[Double])], k: Int, iters: Int)
+      : IndexedSeq[Array[Double]] = {
+    val sorted = vecs.sortBy(_._1)
+    var cents = sorted.take(k).map(_._2).toIndexedSeq
+    for (_ <- 1 to iters) {
+      val byC = sorted.groupBy { case (_, v) => refArgmin(v, cents) }
+      cents = cents.indices.map(c => byC.get(c).map(refMean).getOrElse(cents(c)))
+    }
+    cents
+  }
+
+  /** Per-subspace Lloyd over the residuals against `cents`, seeded by the
+    * residuals of the `PqKs` smallest vec_ids.
+    */
+  private def refPq(vecs: Seq[(Long, Array[Double])], cents: IndexedSeq[Array[Double]],
+                    pqM: Int, pqSub: Int): IndexedSeq[IndexedSeq[Array[Double]]] = {
+    val res = vecs.sortBy(_._1).map { case (id, v) =>
+      val c = cents(refArgmin(v, cents))
+      id -> Array.tabulate(v.length)(i => v(i) - c(i))
+    }
+    def sub(r: Array[Double], m: Int) = r.slice(m * pqSub, (m + 1) * pqSub)
+    var cbs = (0 until pqM).map(m =>
+      res.take(Similarity.PqKs).map(x => sub(x._2, m)).toIndexedSeq)
+    for (_ <- 1 to Similarity.PqIters) {
+      cbs = (0 until pqM).map { m =>
+        val byC = res.map { case (id, r) => id -> sub(r, m) }
+          .groupBy { case (_, s) => refArgmin(s, cbs(m)) }
+        cbs(m).indices.map(c => byC.get(c).map(refMean).getOrElse(cbs(m)(c)))
+      }
+    }
+    cbs
+  }
+
+  private def sameFit(got: IndexedSeq[Array[Double]], want: IndexedSeq[Array[Double]]): Boolean =
+    got.map(_.toSeq) == want.map(_.toSeq)
+
+  test("label centroids equal a driver-side vec_id-ordered mean bit-for-bit") {
+    val got = Similarity.labelCentroids(spark, dir).collect()
+      .map(r => (r.getInt(0), r.getInt(1)) -> (r.getInt(2), r.getDouble(3))).toMap
+    val want = fixtureVecs.groupBy(_._2).toSeq.flatMap { case (label, rows) =>
+      val mean = refMean(rows.map(x => x._1 -> x._3))
+      mean.indices.map(p => (label, p + 1) -> (rows.size, mean(p)))
+    }.toMap
+    assert(got.size == want.size && got.nonEmpty)
+    assert(got == want)
+  }
+
+  test("k-means fit equals a driver-side Lloyd iteration bit-for-bit") {
+    val got = Similarity.kmeansCentroids(spark, dir)
+    val want = refLloyd(fixtureVecs.map(x => x._1 -> x._3), Similarity.KmK, Similarity.KmIters)
+    assert(got.size == Similarity.KmK)
+    assert(sameFit(got, want))
+  }
+
+  test("k-means assignment is the driver-side argmin over the fitted centroids") {
+    val cents = Similarity.kmeansCentroids(spark, dir)
+    val got = Similarity.kmeansAssign(spark, dir).collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(got == fixtureVecs.map(x => x._1 -> refArgmin(x._3, cents)).toMap)
+  }
+
+  test("the frozen corpus-side k-means fit sees only vec_id % 10 < 8 and equals its driver-side Lloyd") {
+    val corpus = fixtureVecs.filter(_._1 % 10 < 8).map(x => x._1 -> x._3)
+    val got = Similarity.corpusKmeansCentroids(spark, dir)
+    assert(sameFit(got, refLloyd(corpus, Similarity.KmK, Similarity.KmIters)))
+    // non-vacuous: the batch side moves the fit
+    assert(!sameFit(got, Similarity.kmeansCentroids(spark, dir)))
+  }
+
+  test("PQ codebooks equal a driver-side residual Lloyd bit-for-bit") {
+    val vecs = fixtureVecs.map(x => x._1 -> x._3)
+    val got = Similarity.pqCodebooks(spark, dir)
+    val want = refPq(vecs, Similarity.kmeansCentroids(spark, dir), Similarity.PqM, Similarity.PqSub)
+    assert(got.size == Similarity.PqM)
+    got.indices.foreach(m => assert(sameFit(got(m), want(m)), s"subspace $m"))
+  }
+
+  test("the frozen corpus-side PQ codebooks equal their driver-side residual Lloyd") {
+    val corpus = fixtureVecs.filter(_._1 % 10 < 8).map(x => x._1 -> x._3)
+    val got = Similarity.corpusPqCodebooks(spark, dir)
+    val want = refPq(corpus, Similarity.corpusKmeansCentroids(spark, dir),
+      Similarity.PqM, Similarity.PqSub)
+    got.indices.foreach(m => assert(sameFit(got(m), want(m)), s"subspace $m"))
+  }
+
+  test("PQ training at the M=8x8 geometry equals the driver-side residual Lloyd") {
+    val vecs = fixtureVecs.map(x => x._1 -> x._3)
+    val got = Similarity.fitPqGeometry(spark, dir, 8, 8)
+    val want = refPq(vecs, Similarity.kmeansCentroids(spark, dir), 8, 8)
+    assert(got.size == 8 && got.forall(_.forall(_.length == 8)))
+    got.indices.foreach(m => assert(sameFit(got(m), want(m)), s"subspace $m"))
   }
 
   test("q73 SemDeDup pruning is cluster-local: witness in SAME cluster, no cross-cluster scoring") {
@@ -529,238 +613,6 @@ class TrainingOpsSpec extends SparkSpec {
     val media = Multimodal.mediaTable(spark, dir).repartition(4)
     val out = Multimodal.decodeFeatures(media, Multimodal.MediaDecoder.Stub)
     assert(out.count() == Tables.documents(spark, dir).count())
-  }
-
-  test("thumbnails: fixed raster, nearest-neighbor endpoints, repartition-invariant") {
-    val media = Multimodal.mediaTable(spark, dir).repartition(3)
-    val thumbs = Multimodal.resizeThumbs(media, 8, 4).cache()
-    assert(thumbs.count() == Tables.documents(spark, dir).count())
-    assert(thumbs.filter(t => t.pixels.length != 8 * 4).count() == 0)
-    // nearest-neighbor anchors: output pixel 0 samples source byte 0
-    val firsts = thumbs.map(t => (t.doc_id, t.pixels(0) & 0xff))(
-      org.apache.spark.sql.Encoders.product[(Long, Int)])
-      .toDF("doc_id", "p0")
-    val heads = Multimodal.mediaFeatures(spark, dir).select(col("doc_id"), col("head_byte"))
-    assert(firsts.join(heads, Seq("doc_id"))
-      .filter(col("p0") =!= col("head_byte")).isEmpty)
-    // deterministic under a different partitioning
-    val again = Multimodal.resizeThumbs(Multimodal.mediaTable(spark, dir).repartition(7), 8, 4)
-      .map(t => (t.doc_id, t.pixels.toSeq))(
-        org.apache.spark.sql.Encoders.product[(Long, Seq[Byte])])
-      .collect().toMap
-    thumbs.collect().foreach(t => assert(again(t.doc_id) == t.pixels.toSeq))
-  }
-
-  test("frame sampling: q64 window geometry on bytes, checksums match substring md5") {
-    val media = Multimodal.mediaTable(spark, dir).repartition(3)
-    val frames = Multimodal.sampleFrames(media, 64, 48).toDF().cache()
-    // geometry: offsets stride-aligned, frame count = chunking's closed form
-    assert(frames.filter(col("offset") =!= col("frame_id") * 48).isEmpty)
-    assert(frames.filter(col("n_bytes") < 0 || col("n_bytes") > 64).isEmpty)
-    val sizes = Tables.documents(spark, dir)
-      .select(col("doc_id"), length(col("text")).as("n"))
-    val expected = sizes.select(col("doc_id"), greatest(lit(1), least(
-      floor((greatest(col("n") - 64, lit(0)) + 47) / 48) + 1,
-      floor((col("n") + 47) / 48))).as("nf"))
-    val got = frames.groupBy("doc_id").agg(count(lit(1)).as("got"))
-    assert(got.join(expected, Seq("doc_id"))
-      .filter(col("got") =!= col("nf")).isEmpty)
-    // sampling mode (stride > frameBytes): offsets stay inside the
-    // payload — no phantom empty tail frame, no out-of-range slice
-    val sampled = Multimodal.sampleFrames(media, 16, 100).toDF().cache()
-    assert(sampled.join(sizes, Seq("doc_id"))
-      .filter(col("offset") >= col("n") && col("n") > 0).isEmpty)
-    assert(sampled.join(sizes, Seq("doc_id"))
-      .filter(col("n") > 0 && col("n_bytes") === 0).isEmpty)
-    assert(sampled.groupBy("doc_id").count().join(sizes, Seq("doc_id"))
-      .filter(col("count") =!= greatest(lit(1), floor((col("n") + 99) / 100))).isEmpty)
-    // the stub checksum of every frame equals the md5-60 of the matching
-    // byte window — ASCII corpus, so byte offsets == char offsets
-    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val recomputed = frames.join(docs, Seq("doc_id"))
-      .withColumn("expect", graft.functions.TextFns.hash60Md5(
-        col("text").substr((col("offset") + 1).cast("int"), col("n_bytes"))))
-    assert(recomputed.filter(col("checksum") =!= col("expect")).isEmpty)
-  }
-
-  // crafted byte fixtures for the real header parsers ----------------------
-
-  private def pngBytes(w: Int, h: Int, depth: Int): Array[Byte] = {
-    val sig = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
-    def be32(v: Int) = Array(v >>> 24, (v >>> 16) & 0xff, (v >>> 8) & 0xff, v & 0xff)
-    // chunk: length=13, "IHDR", w, h, depth, colorType=6, 3 method bytes, fake crc
-    (sig ++ be32(13) ++ "IHDR".getBytes("US-ASCII").map(_ & 0xff) ++
-      be32(w) ++ be32(h) ++ Array(depth, 6, 0, 0, 0) ++ be32(0)).map(_.toByte)
-  }
-
-  private def jpegBytes(w: Int, h: Int, precision: Int): Array[Byte] = {
-    def be16(v: Int) = Array(v >>> 8, v & 0xff)
-    val app0 = Array(0xff, 0xe0) ++ be16(16) ++ "JFIF".getBytes("US-ASCII")
-      .map(_ & 0xff) ++ Array.fill(10)(0) // 16-byte segment incl. length
-    val sof0 = Array(0xff, 0xc0) ++ be16(11) ++ Array(precision) ++
-      be16(h) ++ be16(w) ++ Array(1, 0x11, 0, 0) // 1-component frame
-    (Array(0xff, 0xd8) ++ app0 ++ sof0 ++ Array(0xff, 0xd9)).map(_.toByte)
-  }
-
-  test("media headers: PNG IHDR and JPEG SOF0 parse real byte layouts") {
-    val png = Multimodal.MediaHeaders.parse(1L, pngBytes(640, 480, 8))
-    assert(png == Multimodal.MediaHeader(1L, "png", Some(640), Some(480), Some(8)))
-    val jpg = Multimodal.MediaHeaders.parse(2L, jpegBytes(1920, 1080, 8))
-    assert(jpg == Multimodal.MediaHeader(2L, "jpeg", Some(1920), Some(1080), Some(8)))
-    // dims straddling the u16/u32 ranges
-    val big = Multimodal.MediaHeaders.parse(3L, pngBytes(70000, 2, 16))
-    assert(big.width.contains(70000) && big.bit_depth.contains(16))
-    val jbig = Multimodal.MediaHeaders.parse(4L, jpegBytes(65535, 1, 12))
-    assert(jbig.width.contains(65535) && jbig.bit_depth.contains(12))
-  }
-
-  test("media headers: progressive JPEG (SOF2 after DQT) found by marker walk") {
-    def be16(v: Int) = Array(v >>> 8, v & 0xff)
-    val dqt = Array(0xff, 0xdb) ++ be16(67) ++ Array.fill(65)(1)
-    val sof2 = Array(0xff, 0xc2) ++ be16(11) ++ Array(8) ++ be16(600) ++
-      be16(800) ++ Array(1, 0x11, 0)
-    val b = (Array(0xff, 0xd8) ++ dqt ++ sof2).map(_.toByte)
-    val out = Multimodal.MediaHeaders.parse(5L, b)
-    assert(out == Multimodal.MediaHeader(5L, "jpeg", Some(800), Some(600), Some(8)))
-  }
-
-  /** Real encoded image bytes, produced by the SAME JDK codecs the
-    * decoder reads with — a deterministic gradient so pixel equality is
-    * checkable.
-    */
-  private def encodedImage(fmt: String, w: Int, h: Int,
-                           px: (Int, Int) => Int): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-    for (y <- 0 until h; x <- 0 until w)
-      img.getRaster.setSample(x, y, 0, px(x, y) & 0xff)
-    val out = new java.io.ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(img, fmt, out), s"no $fmt writer")
-    out.toByteArray
-  }
-
-  test("real pixel decode: PNG round-trips bit-exact through the Spark path; garbage rows survive") {
-    val sql = spark.sqlContext
-    import sql.implicits._
-    def grad(x: Int, y: Int) = (x * 40 + y * 7) % 256
-    val png = encodedImage("png", 8, 6, grad)
-    // sanity: these are REAL container bytes — the header walk agrees
-    val hdr = Multimodal.MediaHeaders.parse(1L, png)
-    assert(hdr.format == "png" && hdr.width.contains(8) && hdr.height.contains(6))
-    val media = Seq(
-      Multimodal.MediaRow(1L, png, "image/png"),
-      Multimodal.MediaRow(2L, "not an image".getBytes("UTF-8"), "text/plain"))
-      .toDS().repartition(2)
-    val rows = Multimodal.decodeRasters(media).collect()
-      .map(r => r.doc_id -> r).toMap
-    val ok = rows(1L)
-    assert(ok.format == "png" && ok.w == 8 && ok.h == 6)
-    // PNG is lossless and the gray->gray draw is identity: bit-exact
-    val want = for (y <- 0 until 6; x <- 0 until 8) yield grad(x, y).toByte
-    assert(ok.pixels.toSeq == want)
-    val bad = rows(2L)
-    assert(bad.format == "unknown" && bad.w == 0 && bad.pixels.isEmpty,
-      "undecodable payloads must ride as unknown rows, never drop")
-  }
-
-  test("real pixel decode: JPEG decodes to the right dims and close pixels") {
-    def grad(x: Int, y: Int) = (x * 8 + y * 4) % 256
-    val jpg = encodedImage("jpg", 16, 12, grad)
-    assert(Multimodal.MediaHeaders.parse(1L, jpg).format == "jpeg")
-    val got = Multimodal.RasterDecoder.ImageIo.decode(jpg)
-    assert(got.isDefined, "the JDK's own JPEG must decode")
-    val (fmt, w, h, px) = got.get
-    assert(fmt == "jpeg" && w == 16 && h == 12)
-    // lossy codec on a smooth gradient: close, not exact
-    val diffs = for (y <- 0 until 12; x <- 0 until 16)
-      yield math.abs((px(y * 16 + x) & 0xff) - grad(x, y))
-    assert(diffs.sum.toDouble / diffs.size < 16.0,
-      s"JPEG decode drifted: mean abs diff ${diffs.sum.toDouble / diffs.size}")
-  }
-
-  test("real pixel decode: adversarial bytes ride as unknown rows — truncated JPEG, decompression bomb, overflow dims") {
-    val sql = spark.sqlContext
-    import sql.implicits._
-    def grad(x: Int, y: Int) = (x * 8 + y * 4) % 256
-    // (a) truncated REAL JPEG: the JDK's own reader throws a
-    // RuntimeException subclass on this stream — the IOException-only
-    // catch turned one crafted blob into a task retry storm
-    val truncated = encodedImage("jpg", 16, 12, grad).take(40)
-    // (b) decompression bomb: REAL PNG bytes with the IHDR dims patched
-    // to 100k x 100k — a ~10 GB raster if ImageIO.read ever ran; the
-    // header pre-walk must refuse on the declared product
-    val bomb = encodedImage("png", 8, 6, grad).clone()
-    def putBe32(b: Array[Byte], i: Int, v: Long): Unit = {
-      b(i) = (v >>> 24).toByte; b(i + 1) = (v >>> 16).toByte
-      b(i + 2) = (v >>> 8).toByte; b(i + 3) = v.toByte
-    }
-    putBe32(bomb, 16, 100000L) // IHDR width
-    putBe32(bomb, 20, 100000L) // IHDR height
-    assert(Multimodal.MediaHeaders.parse(0L, bomb).width.contains(100000))
-    // (c) the synthetic-header bomb too (no pixel data at all)
-    val hdrBomb = pngBytes(50000, 50000, 8)
-    // none may throw, none may exceed MaxDecodePixels
-    for (b <- Seq(truncated, bomb, hdrBomb))
-      assert(Multimodal.RasterDecoder.ImageIo.decode(b).isEmpty,
-        "adversarial payloads must decode to None, never throw or allocate")
-    // and the Spark path keeps one row per input, all unknown
-    val media = Seq(
-      Multimodal.MediaRow(1L, truncated, "image/jpeg"),
-      Multimodal.MediaRow(2L, bomb, "image/png"),
-      Multimodal.MediaRow(3L, hdrBomb, "image/png")).toDS().repartition(2)
-    val rows = Multimodal.decodeRasters(media).collect()
-    assert(rows.length == 3 && rows.forall(r =>
-      r.format == "unknown" && r.w == 0 && r.pixels.isEmpty),
-      "adversarial rows must survive as unknown, never drop or retry")
-    // a legitimate image within the cap still decodes through the guard
-    assert(Multimodal.RasterDecoder.ImageIo
-      .decode(encodedImage("png", 8, 6, grad)).isDefined)
-    // resample guard overflow: sw*sh past Int.MaxValue must zero-raster,
-    // not index out of bounds (the Int product used to wrap negative)
-    val out = Multimodal.resampleNearest2d(new Array[Byte](100), 65536, 65536, 2, 2)
-    assert(out.toSeq == Seq[Byte](0, 0, 0, 0))
-  }
-
-  test("real resize: decode -> 2-D nearest resample lands the exact source pixels") {
-    val sql = spark.sqlContext
-    import sql.implicits._
-    // 4x4 quadrant image: nearest 2x2 must pick one pixel per quadrant
-    def quad(x: Int, y: Int) = (if (y < 2) 0 else 2) * 100 + (if (x < 2) 0 else 1) * 50
-    val png = encodedImage("png", 4, 4, quad)
-    val media = Seq(Multimodal.MediaRow(7L, png, "image/png")).toDS()
-    val thumb = Multimodal.resizeDecoded(media, 2, 2).collect().head
-    assert(thumb.w == 2 && thumb.h == 2)
-    // floor sampling: out (x,y) reads src (2x, 2y) -> quadrant corners
-    assert(thumb.pixels.map(_ & 0xff).toSeq ==
-      Seq(quad(0, 0), quad(2, 0), quad(0, 2), quad(2, 2)))
-    // undecodable input resizes to a kept zero raster
-    val none = Multimodal.resizeDecoded(
-      Seq(Multimodal.MediaRow(8L, Array[Byte](1, 2, 3), "bin")).toDS(), 2, 2)
-      .collect().head
-    assert(none.pixels.toSeq == Seq[Byte](0, 0, 0, 0))
-  }
-
-  test("media headers: garbage, truncation and text fall back to unknown") {
-    val cases = Seq(
-      Array.emptyByteArray,
-      "just some text bytes".getBytes("UTF-8"),
-      pngBytes(640, 480, 8).take(20),          // truncated before dims
-      jpegBytes(10, 10, 8).take(3),            // truncated after SOI
-      Array(0xff, 0xd8, 0xff, 0xd9).map(_.toByte), // SOI then EOI, no SOF
-      Array(0xff, 0xd8, 0x00, 0x01).map(_.toByte)) // marker stream out of sync
-    cases.zipWithIndex.foreach { case (b, i) =>
-      val out = Multimodal.MediaHeaders.parse(i.toLong, b)
-      assert(out.format == "unknown" && out.width.isEmpty,
-        s"case $i should be unknown, got $out")
-    }
-  }
-
-  test("media headers run distributed over the media table") {
-    val media = Multimodal.mediaTable(spark, dir).repartition(3)
-    val out = Multimodal.decodeHeaders(media).cache()
-    // text payloads are not PNG/JPEG containers: all unknown, none dropped
-    assert(out.count() == Tables.documents(spark, dir).count())
-    assert(out.filter(col("format") =!= "unknown").isEmpty)
   }
 
   test("delta dedup == exact jaccard pairs restricted to the delta split") {
@@ -1059,25 +911,6 @@ class TrainingOpsSpec extends SparkSpec {
     assert(df.select(col("mean_p")).distinct().count() > 1)
   }
 
-  test("production unigram scoring matches the ordered-fold path to 1e-9") {
-    val oracle = TextOps.unigramLikelihood(spark, dir)
-      .select(col("doc_id"), col("n_tokens"), col("mean_p"))
-    val prod = TextOps.unigramLikelihoodProd(spark, dir)
-      .select(col("doc_id"),
-        col("n_tokens").as("n_prod"), col("mean_p").as("p_prod"))
-    val j = oracle.join(prod, Seq("doc_id"), "full").cache()
-    assert(j.filter(col("n_tokens").isNull || col("n_prod").isNull).isEmpty,
-      "both paths must emit every doc")
-    assert(j.filter(col("n_tokens") =!= col("n_prod")).isEmpty)
-    // zero-token docs are null in BOTH paths, scored docs agree to 1e-9
-    // relative — far above double noise, far below real divergence
-    assert(j.filter(col("mean_p").isNull =!= col("p_prod").isNull).isEmpty)
-    assert(j.filter(abs(col("mean_p") - col("p_prod")) >
-      lit(1e-9) * greatest(abs(col("mean_p")), lit(1e-300))).isEmpty)
-    assert(j.count() > 0)
-    graft.TransientCache.drain()
-  }
-
   test("bigram likelihood: bounds, zero-token nulls, model-mass identity") {
     val df = TextOps.bigramLikelihood(spark, dir).cache()
     val nDocs = Tables.documents(spark, dir).count()
@@ -1116,6 +949,96 @@ class TrainingOpsSpec extends SparkSpec {
     assert(math.abs(lhs - rhs) < 1e-6 * rhs, s"$lhs vs $rhs")
     tok.unpersist(); c1.unpersist(); df.unpersist()
     graft.TransientCache.drain()
+  }
+
+  // driver-side references for the q77/q92 language-model scores: model
+  // counts, divisions and the position-ordered fold all run on the
+  // driver; only tokenization is the engine's (its split/filter
+  // equivalence is spec'd in VectorExprsSpec)
+
+  private def docTokens(d: String): Seq[(Long, Seq[String])] =
+    Tables.documents(spark, d)
+      .select(col("doc_id"), graft.functions.TextFns.toks(col("text")))
+      .collect().map(r => r.getLong(0) ->
+        (if (r.isNullAt(1)) Seq.empty[String] else r.getSeq[String](1)))
+      .toSeq
+
+  private def meanOf(ps: Seq[Double]): Option[Double] =
+    if (ps.isEmpty) None else Some(ps.foldLeft(0.0)(_ + _) / ps.size)
+
+  private def refUnigram(docs: Seq[(Long, Seq[String])]): Map[Long, (Int, Option[Double])] = {
+    val c = docs.flatMap(_._2).groupBy(identity).map { case (t, ts) => t -> ts.size.toLong }
+    val total = c.values.sum
+    docs.map { case (id, t) => id -> (t.size, meanOf(t.map(x => c(x).toDouble / total))) }.toMap
+  }
+
+  private def refBigram(docs: Seq[(Long, Seq[String])]): Map[Long, (Int, Option[Double])] = {
+    def pairs(t: Seq[String]) = t.indices.map(i => (if (i == 0) "<s>" else t(i - 1), t(i)))
+    val all = docs.flatMap(d => pairs(d._2))
+    val c2 = all.groupBy(identity).map { case (k, v) => k -> v.size.toLong }
+    val ctx = c2.groupBy(_._1._1).map { case (p, m) => p -> m.values.sum }
+    val c1 = all.groupBy(_._2).map { case (w, v) => w -> v.size.toLong }
+    val total = c1.values.sum
+    docs.map { case (id, t) =>
+      id -> (t.size, meanOf(pairs(t).map { case k @ (prev, cur) =>
+        0.75 * (c2(k).toDouble / ctx(prev)) + 0.25 * (c1(cur).toDouble / total)
+      }))
+    }.toMap
+  }
+
+  private def scoreRows(df: org.apache.spark.sql.DataFrame): Map[Long, (Int, Option[Double])] = {
+    val out = df.select(col("doc_id"), col("n_tokens"), col("mean_p")).collect()
+      .map(r => r.getLong(0) ->
+        (r.getInt(1), if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toMap
+    graft.TransientCache.drain()
+    out
+  }
+
+  /** A documents table of null, empty, whitespace-only, unicode and
+    * duplicated texts — the shapes the fixture never holds.
+    */
+  private def edgeDocsDir(): String = {
+    import spark.implicits._
+    val d = java.nio.file.Files.createTempDirectory("graft-edge-docs").toString
+    Seq[(Long, String)](
+      1L -> null, 2L -> "", 3L -> "   \t \n ", 4L -> "Straße ÜBER straße",
+      5L -> "日本語 テキスト 日本語", 6L -> "emoji 🙂 text 🙂", 7L -> "the the the",
+      8L -> "Straße ÜBER straße", 9L -> "x", 10L -> "the ünïcode text")
+      .toDF("doc_id", "text")
+      .select(col("doc_id"), col("text"), lit("en").as("lang"),
+        lit("src00").as("source"), length(col("text")).cast("long").as("n_chars"))
+      .write.parquet(s"$d/documents.parquet")
+    d
+  }
+
+  test("unigram likelihood equals a driver-side model fit and ordered fold bit-for-bit") {
+    val got = scoreRows(TextOps.unigramLikelihood(spark, dir))
+    val want = refUnigram(docTokens(dir))
+    assert(got.size == 500)
+    assert(got == want)
+  }
+
+  test("bigram likelihood equals a driver-side interpolated model bit-for-bit") {
+    val got = scoreRows(TextOps.bigramLikelihood(spark, dir))
+    assert(got == refBigram(docTokens(dir)))
+  }
+
+  test("unigram likelihood on null, empty, whitespace-only and unicode texts keeps every doc") {
+    val d = edgeDocsDir()
+    val got = scoreRows(TextOps.unigramLikelihood(spark, d))
+    assert(got.keySet == (1L to 10L).toSet, "no document may drop out")
+    assert(Seq(1L, 2L, 3L).forall(id => got(id) == ((0, None))),
+      "a zero-token doc scores n_tokens 0 with a null score")
+    assert(got(4L)._1 == 3 && got(5L)._1 == 3 && got(6L)._1 == 4)
+    assert(got == refUnigram(docTokens(d)))
+  }
+
+  test("bigram likelihood on null, empty, whitespace-only and unicode texts keeps every doc") {
+    val d = edgeDocsDir()
+    val got = scoreRows(TextOps.bigramLikelihood(spark, d))
+    assert(got.keySet == (1L to 10L).toSet, "no document may drop out")
+    assert(Seq(1L, 2L, 3L).forall(id => got(id) == ((0, None))))
+    assert(got == refBigram(docTokens(d)))
   }
 
   test("collocations: lift identity vs driver-side counts, guards hold") {
@@ -1184,21 +1107,27 @@ class TrainingOpsSpec extends SparkSpec {
     assert(got == expect, s"engine top-k != driver reference:\n$got\nvs\n$expect")
   }
 
-  test("production bigram scoring matches the ordered-fold path to 1e-9") {
-    val oracle = TextOps.bigramLikelihood(spark, dir)
-      .select(col("doc_id"), col("n_tokens"), col("mean_p"))
-    val prod = TextOps.bigramLikelihoodProd(spark, dir)
-      .select(col("doc_id"),
-        col("n_tokens").as("n_prod"), col("mean_p").as("p_prod"))
-    val j = oracle.join(prod, Seq("doc_id"), "full").cache()
-    assert(j.filter(col("n_tokens").isNull || col("n_prod").isNull).isEmpty)
-    assert(j.filter(col("n_tokens") =!= col("n_prod")).isEmpty)
-    assert(j.filter(col("mean_p").isNull =!= col("p_prod").isNull).isEmpty)
-    assert(j.filter(abs(col("mean_p") - col("p_prod")) >
-      lit(1e-9) * greatest(abs(col("mean_p")), lit(1e-300))).isEmpty)
-    assert(j.count() > 0)
-    j.unpersist()
-    graft.TransientCache.drain()
+  test("mixture weights equal a driver-side sqrt-share renormalization bit-for-bit") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(3L)
+    for (nSources <- Seq(1, 2, 7)) {
+      // skewed source sizes: source k holds about 2^k docs
+      val docs = (0 until nSources).flatMap(k =>
+        Seq.fill(1 + rnd.nextInt(1 << (k + 1)))(f"src$k%02d"))
+      val got = TextOps.mixtureWeightsOf(docs.toDF("source")).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)))
+        .toSeq
+      graft.TransientCache.drain()
+      val counts = docs.groupBy(identity).map { case (s, xs) => s -> xs.size.toLong }
+        .toSeq.sortBy(_._1)
+      val total = counts.map(_._2).sum
+      val w = counts.map { case (s, n) => (s, n, n.toDouble / total) }
+      val norm = w.foldLeft(0.0)((acc, x) => acc + math.sqrt(x._3))
+      val want = w.map { case (s, n, share) =>
+        (s, n, share, math.sqrt(share) / norm, math.sqrt(share) / norm * total)
+      }
+      assert(got == want, s"$nSources sources")
+    }
   }
 
   test("mixture weights: normalized, temperature up-weights small sources") {
@@ -1716,19 +1645,16 @@ class TrainingOpsSpec extends SparkSpec {
       s"degenerate corpus must keep segmenting: ${seg.toSeq}")
   }
 
-  test("bpe production trainer: differential vs the relational chain at 4 and 64 rounds") {
+  test("bpe deep relational walk: 64 checkpointed rounds match the reference trainer") {
     def rowsOfDf(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getString(3),
         r.getLong(4))).toSeq
-    // 4 rounds over the fixture corpus — the oracle-checked q95 shape
-    val rel4 = rowsOfDf(operators.TextOps.bpeMerges(spark, dir))
-    graft.TransientCache.drain()
-    val prod4 = rowsOfDf(operators.TextOps.bpeMergesProd(spark, dir))
-    assert(prod4 == rel4, s"prod $prod4 vs relational $rel4")
     // 64 rounds over a randomized small-alphabet corpus (maximal tie
-    // pressure) — the driver loop must walk the identical merge path
-    // far past the unrolled demonstration depth, including whichever
-    // round the pair table exhausts at
+    // pressure) — the relational chain must walk the reference's merge
+    // path far past the unrolled demonstration depth (through the
+    // bpeDeepRound checkpoint cadence), including whichever round the
+    // pair table exhausts at. The alphabet is ASCII, so the reference's
+    // UTF-16 tie order equals Spark's UTF-8 binary order.
     val rnd = new scala.util.Random(11L)
     val lexicon = Vector.fill(30)(
       (1 to (1 + rnd.nextInt(6))).map(_ => "abc"(rnd.nextInt(3))).mkString)
@@ -1737,31 +1663,19 @@ class TrainingOpsSpec extends SparkSpec {
         .mkString(" "))
     // the deep relational walk's per-job plan-description strings are
     // QUADRATIC in the chained depth (AQE regenerates the tree string
-    // per stage) — cap them for the differential; this is exactly the
-    // rounds-times-overhead cost bpeMergesProd exists to avoid
+    // per stage) — cap them for the walk
     val prevLen = spark.conf.get("spark.sql.maxPlanStringLength", "2147483632")
     val rel64 = try {
       spark.conf.set("spark.sql.maxPlanStringLength", "1024")
       rowsOfDf(operators.TextOps.bpeMergesOf(tokFrame(docs), rounds = 64))
     } finally spark.conf.set("spark.sql.maxPlanStringLength", prevLen)
     graft.TransientCache.drain()
-    val prod64 = rowsOfDf(operators.TextOps.bpeMergesProdOf(tokFrame(docs), rounds = 64))
-    assert(prod64 == rel64,
-      s"64-round divergence: prod ${prod64.take(8)}... vs relational ${rel64.take(8)}...")
+    val ref64 = refBpeMerges(docs, 64)
+    assert(rel64 == ref64,
+      s"64-round divergence: relational ${rel64.take(8)}... vs reference ${ref64.take(8)}...")
     // the deep walk must genuinely pass the demonstration depth
     assert(rel64.length > operators.TextOps.BpeRounds,
       "the 64-round corpus exhausted before round 5 — raise the lexicon size")
-
-    // the production APPLY half: per-doc stats bit-identical to the
-    // relational train→apply loop (same integer sums, same single
-    // final division)
-    val relSeg = operators.TextOps.bpeSegment(spark, dir)
-      .collect().map(_.mkString("|")).toSeq
-    graft.TransientCache.drain()
-    val prodSeg = operators.TextOps.bpeSegmentProd(spark, dir)
-      .collect().map(_.mkString("|")).toSeq
-    graft.TransientCache.drain()
-    assert(prodSeg == relSeg, "production apply diverged from the relational apply")
   }
 
   test("bpe merges matches the fixture oracle counts, all integers") {
@@ -1774,6 +1688,21 @@ class TrainingOpsSpec extends SparkSpec {
       assert(r.getLong(4) > 0)
       assert(r.getString(3) == r.getString(1) + r.getString(2))
     }
+  }
+
+  test("bpe merges: the fixture corpus walks the reference trainer's merge path") {
+    // the q95 shape end to end: the fixture's texts through the
+    // engine's reader and tokenizer, against the plain-Scala reference.
+    // The fixture is ASCII, so the reference's UTF-16 tie order equals
+    // Spark's UTF-8 binary order.
+    val texts = Tables.documents(spark, dir).select(col("text")).collect()
+      .map(_.getString(0)).toSeq
+    assert(texts.forall(_.forall(_ < 128)), "fixture text must stay ASCII")
+    val got = operators.TextOps.bpeMerges(spark, dir).collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getString(3),
+        r.getLong(4))).toSeq
+    graft.TransientCache.drain()
+    assert(got == refBpeMerges(texts, operators.TextOps.BpeRounds))
   }
 
   private def driftRows(rows: Seq[(String, String)]) = {

@@ -118,8 +118,20 @@ class TransientCacheSpec extends SparkSpec {
     checkDrains(graft.operators.Similarity.semDedup(spark, dir), 1)
   }
 
-  test("unigramLikelihoodProd transients (token stream, vocab) drain") {
-    checkDrains(TextOps.unigramLikelihoodProd(spark, dir), 2)
+  test("q110 kCore's final lineage checkpoint drains") {
+    checkDrains(Graph.kCore(spark, dir), 1)
+  }
+
+  test("q118 winsorizedStats transient (collapsed value histogram) drains") {
+    checkDrains(graft.operators.Analytics.winsorizedStats(spark, dir), 1)
+  }
+
+  test("q121 topSkusUnbounded transients (volume frame + value histogram) drain") {
+    checkDrains(graft.operators.Analytics.topSkusUnbounded(spark, dir), 2)
+  }
+
+  test("q117 ppsSample transient (salted rank base) drains") {
+    checkDrains(graft.operators.Sampling.ppsSample(spark, dir), 1)
   }
 
   test("q78 mixtureWeights transient (source counts) drains") {
@@ -149,7 +161,7 @@ class TransientCacheSpec extends SparkSpec {
         col("l_partkey").cast("long").as("p"))
     checkDrains(
       graft.operators.Graph.pageRankImpl(edges, "s", "p",
-        iters = 12, orderedFold = false, assumeDeduped = false),
+        iters = 12, assumeDeduped = false),
       4)
   }
 
