@@ -218,7 +218,7 @@ object Bench {
       .filter { case (_, consumers, _) => consumers.exists(selected) }
       .map { case (name, _, build) =>
         val t0 = System.nanoTime()
-        val ok = try { build(); true } catch { case _: Throwable => false }
+        val ok = try { build(); true } catch { case NonFatal(_) => false }
         (name, (System.nanoTime() - t0) / 1e9, ok)
       }
     val calibs = scala.collection.mutable.ArrayBuffer(calibrate())
@@ -227,7 +227,7 @@ object Bench {
       val sweep = named.map { case (name, fn) =>
         val t0 = System.nanoTime()
         val ok = try { materialize(fn(spark, sfDir)); true }
-                 catch { case _: Throwable => false }
+                 catch { case NonFatal(_) => false }
         val dt = (System.nanoTime() - t0) / 1e9
         TransientCache.drain() // eviction outside the timed window
         (name, dt, ok)

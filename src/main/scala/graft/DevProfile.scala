@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 /** Dev-only profiler: runs one named SparkEntry query (after a warmup pass
   * of the whole set so shared caches are in the state the bench sees),
@@ -45,15 +46,20 @@ object DevProfile {
     val tier = name.stripPrefix("cache:")
 
     // same warmup + preceding-query state as Bench (caches built by earlier
-    // queries change what the profiled query actually executes)
-    try Tables.events(spark, sfDir).count() catch { case _: Throwable => () }
+    // queries change what the profiled query actually executes); a failed
+    // warm-up step is named on stderr, since it leaves a colder state
+    def warm(what: String)(body: => Unit): Unit =
+      try body
+      catch { case NonFatal(e) =>
+        System.err.println(s"profile warm-up: $what failed: ${e.toString.linesIterator.next()}")
+      }
+    warm("table events")(Tables.events(spark, sfDir).count(): Unit)
     if (!name.startsWith("cache:"))
       SparkEntry.queries.toSeq.sortBy(_._1).takeWhile(_._1 != name).foreach {
-        case (_, fn) => try fn(spark, sfDir).count() catch { case _: Throwable => () }
+        case (q, fn) => warm(s"query $q")(fn(spark, sfDir).count(): Unit)
       }
     else // cache profile: warm the documents scan only
-      try spark.read.parquet(s"$sfDir/documents.parquet").count()
-      catch { case _: Throwable => () }
+      warm("table documents")(spark.read.parquet(s"$sfDir/documents.parquet").count(): Unit)
 
     val stages = mutable.ArrayBuffer.empty[(Int, String, Long, Long, Int)]
     spark.sparkContext.addSparkListener(new SparkListener {

@@ -514,21 +514,22 @@ object Dedup {
 
   private[graft] def corpusIndex(spark: SparkSession, dir: String): CorpusIndex =
     corpusIndexMemo.getAt(spark, modeKey(dir), "graft_bandidx_") { root =>
-      val wh = new graft.pipelines.Warehouse(spark, root)
-      val corpusDocs = Tables.documents(spark, dir).filter(col("doc_id") % 10 < 8)
-      wh.write("corpus_shingles", shingleRowsOf(corpusDocs))
-      val shAtRest = wh.read("corpus_shingles")
-      // bands are derived FROM the at-rest shingles, so the build itself
-      // tokenizes the corpus exactly once
-      wh.write("corpus_band_index", bandsOf(shAtRest))
-      // the seen-doc manifest, written LAST: membership means "fully
-      // present in every data table", so the nightly/streaming guards
-      // can answer "which docs exist" from O(|docs|) manifest rows
-      // instead of distinct-scanning the O(|shingle rows|) tables
-      wh.write("corpus_docs", shAtRest.select(col("doc_id")).distinct())
-      CorpusIndex(wh.read("corpus_band_index"), shAtRest,
-        wh.read("corpus_docs"), root)
+      corpusIndexAt(spark, root,
+        Tables.documents(spark, dir).filter(col("doc_id") % 10 < 8))
     }
+
+  /** The corpus index layout ([[graft.pipelines.Warehouse]]'s index
+    * protocol): shingle rows, bands derived FROM the at-rest shingles
+    * (so a build tokenizes the corpus once), the seen-doc manifest.
+    */
+  private[graft] val CorpusLayout = graft.pipelines.Warehouse.IndexLayout("doc_id",
+    Seq("corpus_shingles" -> shingleRowsOf _, "corpus_band_index" -> bandsOf _),
+    "corpus_docs")
+
+  private def corpusIndexOf(root: String, reads: Seq[DataFrame]): CorpusIndex = {
+    val Seq(shingles, bands, docs) = reads
+    CorpusIndex(bands, shingles, docs, root)
+  }
 
   /** Drop this context's memoized corpus indexes (the next
     * [[deltaMinhash]] rebuilds). Roots we created are deleted from
@@ -569,32 +570,15 @@ object Dedup {
       Tables.documents(spark, dir).filter(col("doc_id") % 10 < 8)))
   }
 
-  /** Build-or-reopen the three index tables at an explicit root from an
-    * explicit corpus frame — the memo-free core behind
-    * [[openCorpusIndex]], also the form
-    * [[graft.pipelines.CorpusPipeline]] uses to keep a fuzzy-screen
-    * index over its OWN refined corpus (under the pipeline warehouse,
-    * never touching the per-dir memo). Missing tables are repaired from
-    * the at-rest ones: bands from shingles, the manifest from the BAND
-    * side (bands are appended after shingles, so a doc with band rows
-    * is fully present in both data tables; a doc caught mid-append —
-    * shingles only — stays out of the manifest and the next append's
-    * residual guard completes it). `corpusDocs` is only evaluated for a
-    * from-scratch build.
+  /** Build-or-reopen the corpus index at an explicit root from an
+    * explicit corpus frame — the one build body behind [[corpusIndex]],
+    * [[openCorpusIndex]], [[retractedCorpusIndex]] and the
+    * [[graft.pipelines.CorpusPipeline]] live index.
     */
   private[graft] def corpusIndexAt(spark: SparkSession, root: String,
-                                   corpusDocs: => DataFrame): CorpusIndex = {
-    val wh = new graft.pipelines.Warehouse(spark, root)
-    if (!wh.exists("corpus_shingles"))
-      wh.write("corpus_shingles", shingleRowsOf(corpusDocs))
-    if (!wh.exists("corpus_band_index"))
-      wh.write("corpus_band_index", bandsOf(wh.read("corpus_shingles")))
-    if (!wh.exists("corpus_docs"))
-      wh.write("corpus_docs",
-        wh.read("corpus_band_index").select(col("doc_id")).distinct())
-    CorpusIndex(wh.read("corpus_band_index"), wh.read("corpus_shingles"),
-      wh.read("corpus_docs"), root)
-  }
+                                   corpusDocs: => DataFrame): CorpusIndex =
+    corpusIndexOf(root,
+      new graft.pipelines.Warehouse(spark, root).openIndex(CorpusLayout, corpusDocs))
 
   /** q74 — fuzzy delta-dedup: the INCREMENTAL twin of q22, and the
     * near-dup analog of q61's exact delta check. A new batch (role-
@@ -708,42 +692,11 @@ object Dedup {
   }
 
   /** Advance the at-rest corpus index with a verified batch — the
-    * checkpoint-advance half of the reference's §2.9 nightly cycle
-    * (update_raw_stock_movements.py:100-110: screen, then append + move
-    * the watermark), for the fuzzy tier. The batch's shingle and band
-    * rows are APPENDED to `corpus_shingles` / `corpus_band_index`
-    * through the same Warehouse path the build uses (S7), then the
-    * `corpus_docs` manifest advances LAST — the S13 dedup-append
-    * discipline with a two-tier guard:
-    *
-    *  - MANIFEST guard (the fast path): docs already in `corpus_docs`
-    *    are fully committed (the manifest is appended last), so a
-    *    replayed batch is recognized by one anti-join against the
-    *    O(|docs|) manifest — never a distinct over the O(|shingle
-    *    rows|) data tables (the r8 seen-set finding). A fully-seen
-    *    batch appends nothing and returns without a data-table scan.
-    *  - RESIDUAL guard (the crash path): docs past the manifest can
-    *    still have rows in a data table if a prior run crashed between
-    *    appends; each data append anti-joins against ITS OWN table's
-    *    presence, restricted by a broadcast of the batch-bounded
-    *    residual doc set — a collision-restricted probe, not a
-    *    corpus-wide distinct.
-    *
-    * Consequences: idempotent (at-least-once delivery of a night's
-    * batch has exactly-once effect on the index) and crash-repairable
-    * (a crash between any two of the three appends leaves the manifest
-    * BEHIND the data, and the replay's residual guards append exactly
-    * the missing side — never a duplicate). All signature work is
-    * batch-only: shingles are computed once from `batchDocs` and bands
-    * derive from them.
-    *
-    * The manifest guard carries no broadcast hint (its right side is
-    * the corpus-bounded doc set — at 100 TB it must shuffle; AQE may
-    * still broadcast small instances from stats); the residual guards
-    * broadcast their batch-bounded side explicitly. Returns the
-    * refreshed index (fresh file listings — the memoized frames'
-    * listings predate the append) and re-memoizes it, so the next
-    * [[screenAgainstIndex]] sees the widened corpus.
+    * append half of the reference's §2.9 screen-then-advance cycle
+    * (update_raw_stock_movements.py:100-110), through the
+    * [[graft.pipelines.Warehouse]] index protocol; the refreshed index
+    * is re-memoized, so the next [[screenAgainstIndex]] sees the
+    * widened corpus.
     */
   def appendToCorpusIndex(spark: SparkSession, dir: String,
                           batchDocs: DataFrame): CorpusIndex = {
@@ -752,10 +705,8 @@ object Dedup {
     fresh
   }
 
-  /** [[retractFromCorpusIndexOf]] against this context's memoized
-    * per-dir index — [[appendToCorpusIndex]]'s retraction twin (the
-    * refreshed index is re-memoized so the next screen sees the
-    * narrowed corpus).
+  /** Take committed docs OUT of this context's memoized per-dir index
+    * (takedowns/opt-outs); re-memoized like [[appendToCorpusIndex]].
     */
   def retractFromCorpusIndex(spark: SparkSession, dir: String,
                              docIds: DataFrame): CorpusIndex = {
@@ -764,89 +715,22 @@ object Dedup {
     fresh
   }
 
-  /** The index advance against an EXPLICIT index (no memo traffic) —
-    * [[screenAgainstIndexOf]]'s append half, shared by the per-dir path
-    * above and the pipeline's live-corpus index.
-    */
+  /** The append against an explicit index (no memo traffic). */
   private[graft] def appendToCorpusIndexOf(idx: CorpusIndex,
-                                           batchDocs: DataFrame): CorpusIndex = {
-    val spark = batchDocs.sparkSession
-    val wh = new graft.pipelines.Warehouse(spark, idx.root)
-    // localCheckpoint, NOT cache: the first append below writes the very
-    // path a pre-filtered batch (the streaming loop\'s seen-ledger
-    // anti-join) READS in its lineage, and that write would trigger a
-    // lazy recache of a cached frame — re-executed outside the
-    // micro-batch, a streaming source replays EMPTY and the second
-    // append would silently write nothing (the streaming twin\'s spec
-    // caught exactly this). Checkpointing materializes the batch
-    // shingles ONCE and cuts the plan below them, so no write can
-    // invalidate them. Batch-bounded state, the Graph.CC discipline.
-    // dropDuplicates: an in-batch doc_id redelivery must not double the
-    // doc's at-rest shingle rows (the unseenBatch rule, append side)
-    val batchSh = shingleRowsOf(batchDocs.dropDuplicates("doc_id"))
-      .localCheckpoint(true)
-    try {
-      val manifest = wh.read("corpus_docs")
-      val newSh = batchSh.join(manifest, Seq("doc_id"), "left_anti")
-      val newDocs = newSh.select(col("doc_id")).distinct()
-      if (!newDocs.isEmpty) {
-        // residual presence per data table, probed only for the new docs
-        def present(table: String): DataFrame = wh.read(table)
-          .join(broadcast(newDocs), Seq("doc_id"), "left_semi")
-          .select(col("doc_id")).distinct()
-        wh.append("corpus_shingles",
-          newSh.join(broadcast(present("corpus_shingles")),
-            Seq("doc_id"), "left_anti"))
-        wh.append("corpus_band_index",
-          bandsOf(newSh).join(broadcast(present("corpus_band_index")),
-            Seq("doc_id"), "left_anti"))
-        wh.append("corpus_docs", newDocs)
-      }
-    } finally batchSh.queryExecution.optimizedPlan.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(false))
-    // nightly compaction cadence — after ALL appends (the residual
-    // guards' lineage reads the pre-compaction listings), before the
-    // fresh reads below pick up the rewritten layout
-    wh.compactIfFragmented("corpus_shingles")
-    wh.compactIfFragmented("corpus_band_index")
-    wh.compactIfFragmented("corpus_docs")
-    CorpusIndex(wh.read("corpus_band_index"),
-      wh.read("corpus_shingles"), wh.read("corpus_docs"), idx.root)
-  }
+                                           batchDocs: DataFrame): CorpusIndex =
+    corpusIndexOf(idx.root, new graft.pipelines.Warehouse(batchDocs.sparkSession,
+      idx.root).appendIndex(CorpusLayout, batchDocs))
 
-  /** RETRACTION for the fuzzy tier — take committed docs OUT of the
-    * at-rest index (takedowns/opt-outs; a doc revised later is
-    * retract + re-offer). Every index row is per-doc, so retraction is
-    * three guarded anti-join tmp-swaps and is EXACTLY a
-    * rebuild-without-those-docs (signature work is content-
-    * deterministic; surviving rows are untouched — spec'd table by
-    * table in RetractionSpec). The MANIFEST swaps FIRST — the inverse
-    * of the append's manifest-last discipline, preserving the family
-    * invariant "manifest membership ⇒ rows fully at rest" through
-    * every crash window: a crash mid-retraction leaves at worst an
-    * unmanifested doc with data rows, the exact state a mid-append
-    * crash leaves, which every screen already excludes via the
-    * residual guard and a replayed retraction finishes dropping.
-    * Idempotent (removing absent rows is a no-op); serial with
-    * nights like every sibling op. The id set is takedown-sized —
-    * operator-bounded, hence the broadcast — and a re-offer of a
-    * retracted doc counts as novel again (the manifest row is gone).
+  /** The retraction against an explicit index. Every index row is
+    * per-doc and content-deterministic, so the manifest-first swaps are
+    * EXACTLY a rebuild without those docs (spec'd table by table in
+    * RetractionSpec); a re-offer of a retracted doc counts as novel
+    * again (its manifest row is gone).
     */
   private[graft] def retractFromCorpusIndexOf(idx: CorpusIndex,
-                                              docIds: DataFrame): CorpusIndex = {
-    val spark = docIds.sparkSession
-    val wh = new graft.pipelines.Warehouse(spark, idx.root)
-    val ids = docIds.select(col("doc_id")).dropDuplicates("doc_id")
-      .localCheckpoint(true) // pinned: the swaps rewrite scanned paths
-    try {
-      for (t <- Seq("corpus_docs", "corpus_shingles", "corpus_band_index"))
-        wh.write(t,
-          wh.read(t).join(broadcast(ids), Seq("doc_id"), "left_anti"))
-    } finally graft.TransientCache.unpersistCheckpoint(ids)
-    CorpusIndex(wh.read("corpus_band_index"),
-      wh.read("corpus_shingles"), wh.read("corpus_docs"), idx.root)
-  }
+                                              docIds: DataFrame): CorpusIndex =
+    corpusIndexOf(idx.root, new graft.pipelines.Warehouse(docIds.sparkSession,
+      idx.root).retractIndex(CorpusLayout, docIds))
 
   /** The q74 full-rebuild oracle with the CORPUS-side membership as a
     * parameter — shared by the standing q74 oracle (the whole `%10<8`
@@ -1366,26 +1250,22 @@ object Dedup {
   private val winnowIndexMemo =
     new graft.ContextMemo[(String, String), WinnowIndex](_.root)
 
-  /** Build-or-reopen the winnow index tables at an explicit root — the
-    * memo-free core shared by [[winnowIndexAtRest]] and
-    * [[openWinnowIndex]] (one build body, the [[corpusIndexAt]]
-    * discipline: diverging copies was a review-pass finding). The
-    * manifest is written LAST from the at-rest rows — a doc in the
-    * manifest has all its fingerprints durably in the data table — and
-    * a missing manifest is repaired the same way (appends are per-job
-    * atomic, so every doc with rows at rest has ALL its rows at rest).
-    * `corpusDocs` is only evaluated for a from-scratch build.
+  private[graft] val WinnowLayout = graft.pipelines.Warehouse.IndexLayout("doc_id",
+    Seq("corpus_winnow" -> winnowFingerprintsOf _), "corpus_winnow_docs")
+
+  private def winnowIndexOf(root: String, reads: Seq[DataFrame]): WinnowIndex = {
+    val Seq(fingerprints, docs) = reads
+    WinnowIndex(fingerprints, docs, root)
+  }
+
+  /** Build-or-reopen the winnow index at an explicit root — the one
+    * build body behind [[winnowIndexAtRest]], [[openWinnowIndex]] and
+    * the pipeline's live winnow index.
     */
   private[graft] def winnowIndexAt(spark: SparkSession, root: String,
-                                   corpusDocs: => DataFrame): WinnowIndex = {
-    val wh = new graft.pipelines.Warehouse(spark, root)
-    if (!wh.exists("corpus_winnow"))
-      wh.write("corpus_winnow", winnowFingerprintsOf(corpusDocs))
-    if (!wh.exists("corpus_winnow_docs"))
-      wh.write("corpus_winnow_docs",
-        wh.read("corpus_winnow").select(col("doc_id")).distinct())
-    WinnowIndex(wh.read("corpus_winnow"), wh.read("corpus_winnow_docs"), root)
-  }
+                                   corpusDocs: => DataFrame): WinnowIndex =
+    winnowIndexOf(root,
+      new graft.pipelines.Warehouse(spark, root).openIndex(WinnowLayout, corpusDocs))
 
   private[graft] def winnowIndexAtRest(spark: SparkSession, dir: String): WinnowIndex =
     winnowIndexMemo.getAt(spark, modeKey(dir), "graft_winidx_") { root =>
@@ -1406,12 +1286,8 @@ object Dedup {
                                         idx: WinnowIndex): Unit =
     winnowIndexMemo.install(spark, modeKey(dir), idx)
 
-  /** Open (or build) the winnow index at a DURABLE caller-owned root —
-    * [[openCorpusIndex]]'s twin. Existing tables are re-opened as-is
-    * (the nightly loop resumes where the last process stopped); a
-    * missing manifest is repaired from the data table's distinct docs
-    * (appends are per-job atomic, so every doc with rows at rest has
-    * ALL its rows at rest). Caller owns the root — never deleted here.
+  /** Open (or build) the winnow index at a DURABLE caller-owned root,
+    * as [[openCorpusIndex]] does for the band index.
     */
   def openWinnowIndex(spark: SparkSession, dir: String, root: String): Unit = {
     if (winnowIndexMemo.holds(spark, modeKey(dir), root)) return
@@ -1419,14 +1295,8 @@ object Dedup {
       Tables.documents(spark, dir).filter(col("doc_id") % 10 < 8)))
   }
 
-  /** Advance the at-rest winnow index with a verified batch —
-    * [[appendToCorpusIndex]]'s twin, same two-tier guard: the manifest
-    * anti-join recognizes a fully-committed replay in O(|docs|), and
-    * the residual guard (batch-bounded broadcast probe into the data
-    * table) repairs a crash between the data append and the manifest
-    * append without ever duplicating a row. Fingerprint work is
-    * batch-only; `localCheckpoint` for the same append-path-lineage
-    * reason as the corpus append.
+  /** Advance the memoized per-dir winnow index with a verified batch
+    * (see [[appendToCorpusIndex]]).
     */
   def appendToWinnowIndex(spark: SparkSession, dir: String,
                           batchDocs: DataFrame): WinnowIndex = {
@@ -1435,8 +1305,8 @@ object Dedup {
     fresh
   }
 
-  /** [[retractFromWinnowIndexOf]] against this context's memoized
-    * per-dir index — [[appendToWinnowIndex]]'s retraction twin.
+  /** Retract docs from the memoized per-dir winnow index (see
+    * [[retractFromCorpusIndex]]).
     */
   def retractFromWinnowIndex(spark: SparkSession, dir: String,
                              docIds: DataFrame): WinnowIndex = {
@@ -1445,60 +1315,15 @@ object Dedup {
     fresh
   }
 
-  /** The append with the index as an argument — the
-    * [[appendToCorpusIndexOf]] twin for callers that own their index
-    * (the pipeline's live winnow index); no memo interaction.
-    */
   private[graft] def appendToWinnowIndexOf(idx: WinnowIndex,
-                                           batchDocs: DataFrame): WinnowIndex = {
-    val spark = batchDocs.sparkSession
-    val wh = new graft.pipelines.Warehouse(spark, idx.root)
-    // dropDuplicates: the unseenBatch rule, append side (see
-    // appendToCorpusIndexOf)
-    val batchFp = winnowFingerprintsOf(batchDocs.dropDuplicates("doc_id"))
-      .localCheckpoint(true)
-    try {
-      val manifest = wh.read("corpus_winnow_docs")
-      val newFp = batchFp.join(manifest, Seq("doc_id"), "left_anti")
-      val newDocs = newFp.select(col("doc_id")).distinct()
-      if (!newDocs.isEmpty) {
-        val present = wh.read("corpus_winnow")
-          .join(broadcast(newDocs), Seq("doc_id"), "left_semi")
-          .select(col("doc_id")).distinct()
-        wh.append("corpus_winnow",
-          newFp.join(broadcast(present), Seq("doc_id"), "left_anti"))
-        wh.append("corpus_winnow_docs", newDocs)
-      }
-    } finally batchFp.queryExecution.optimizedPlan.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(false))
-    wh.compactIfFragmented("corpus_winnow")
-    wh.compactIfFragmented("corpus_winnow_docs")
-    WinnowIndex(wh.read("corpus_winnow"),
-      wh.read("corpus_winnow_docs"), idx.root)
-  }
+                                           batchDocs: DataFrame): WinnowIndex =
+    winnowIndexOf(idx.root, new graft.pipelines.Warehouse(batchDocs.sparkSession,
+      idx.root).appendIndex(WinnowLayout, batchDocs))
 
-  /** RETRACTION for the winnow tier — [[retractFromCorpusIndexOf]]'s
-    * twin (same manifest-first swap order, same exact
-    * rebuild-without-those-docs equivalence: fingerprint rows are
-    * per-doc and content-deterministic, so surviving rows are
-    * untouched). Idempotent, serial with nights, re-offer counts as
-    * novel again.
-    */
   private[graft] def retractFromWinnowIndexOf(idx: WinnowIndex,
-                                              docIds: DataFrame): WinnowIndex = {
-    val spark = docIds.sparkSession
-    val wh = new graft.pipelines.Warehouse(spark, idx.root)
-    val ids = docIds.select(col("doc_id")).dropDuplicates("doc_id")
-      .localCheckpoint(true)
-    try {
-      for (t <- Seq("corpus_winnow_docs", "corpus_winnow"))
-        wh.write(t,
-          wh.read(t).join(broadcast(ids), Seq("doc_id"), "left_anti"))
-    } finally graft.TransientCache.unpersistCheckpoint(ids)
-    WinnowIndex(wh.read("corpus_winnow"),
-      wh.read("corpus_winnow_docs"), idx.root)
-  }
+                                              docIds: DataFrame): WinnowIndex =
+    winnowIndexOf(idx.root, new graft.pipelines.Warehouse(docIds.sparkSession,
+      idx.root).retractIndex(WinnowLayout, docIds))
 
   // ---------- q127: the retraction lane on the gate, per-row-store flavor
 

@@ -91,7 +91,7 @@ import org.apache.spark.sql.functions._
   * saw the doc. A doc REVISED in a later night is retract + re-offer,
   * and the cycle composes indefinitely: both directions stamp their
   * keys with an EPOCH derived from the opposite sign's committed key
-  * set ([[advanceEpoch]] / [[retractEpoch]]), so a re-offer of a
+  * set ([[graft.pipelines.Warehouse.keyEpoch]]), so a re-offer of a
   * retracted night and a re-retraction of a re-offered set each get
   * fresh keys — never silently no-oped by the first cycle's marker or
   * row guards — while each direction's own crash replays stay on the
@@ -125,59 +125,16 @@ object QuantileIndex {
       col("source"),
       graft.functions.TextFns.tokCount(col("text")).cast("long").as("v"))
 
-  /** Deterministic key of the night's OFFERED (deduped) doc set (the
-    * Corpus `docSetKey` discipline — order-free xor fold +
-    * cardinality), stamped with the advance-side EPOCH
-    * ([[advanceEpoch]]). Keyed off the offered batch, NOT the novel
+  /** Deterministic key of the night's OFFERED (deduped) doc set
+    * ([[graft.pipelines.Warehouse.batchKey]]), stamped with the
+    * advance-side epoch. Keyed off the offered batch, NOT the novel
     * set, so the key is invariant under every partial-progress crash
     * state (crash contract 1). Internal guard key only: never compared
     * against the oracle, so it stays native xxhash64 in every hash
     * mode.
     */
   private[graft] def docSetKey(ids: DataFrame, epoch: Long = 0L): DataFrame =
-    ids.agg(
-      coalesce(bit_xor(xxhash64(col("doc_id"))), lit(0L)).as("h"),
-      count(lit(1)).as("nd"))
-      .select(xxhash64(col("h"), col("nd"), lit(epoch)).as("batch_key"),
-        col("nd").as("n_docs"))
-
-  /** The ADVANCE-side epoch: xor of the committed RETRACTION keys (the
-    * distinct batch_keys of negative-nv ledger rows). Stamping this
-    * into the night key makes a re-offer of a doc set identical to a
-    * committed-then-retracted night derive a FRESH key — so neither
-    * the marker gate nor the (batch_key, g, source, v) row guard can
-    * collide with the original night's still-present positive rows,
-    * and the re-offer restores (takedown reversal for whole nights).
-    * Stable under the advance's own replays by construction: an
-    * advance appends only POSITIVE rows, so the negative-key set —
-    * and with it every partial-progress replay's derived key — cannot
-    * move mid-night (crash contract 1 survives the stamp). Advanced by
-    * any intervening retraction, exactly when a fresh key is wanted.
-    * Dual of [[retractEpoch]] — the `Corpus.retractFromLive` epoch-xor
-    * discipline, specialized to the cube's sign algebra.
-    */
-  private def advanceEpoch(wh: graft.pipelines.Warehouse): Long =
-    if (!wh.exists("tq_hist")) 0L
-    else wh.read("tq_hist").filter(col("nv") < 0)
-      .select(col("batch_key")).distinct()
-      .agg(coalesce(bit_xor(xxhash64(col("batch_key"))), lit(0L)))
-      .head().getLong(0)
-
-  /** The RETRACT-side epoch: xor of the committed POSITIVE (night)
-    * keys. A retraction appends only NEGATIVE rows, so this is stable
-    * under the retraction's own replays — every crash-window replay
-    * derives the identical key and the marker gate / row guards work
-    * exactly as before — while any intervening advance (in particular
-    * the re-offer of the very docs being retracted again) flips the
-    * epoch and gives the second retraction a fresh key: the
-    * retract → re-offer → retract cycle cancels instead of silently
-    * no-oping on the first retraction's marker.
-    */
-  private def retractEpoch(wh: graft.pipelines.Warehouse): Long =
-    wh.read("tq_hist").filter(col("nv") > 0)
-      .select(col("batch_key")).distinct()
-      .agg(coalesce(bit_xor(xxhash64(col("batch_key"))), lit(0L)))
-      .head().getLong(0)
+    graft.pipelines.Warehouse.batchKey(ids, "doc_id", epoch)
 
   /** Read `tq_marker` tolerating the pre-`n_docs` at-rest layout: a
     * warehouse written before the two-column marker gained the
@@ -204,8 +161,10 @@ object QuantileIndex {
     // contract 1: the key is a pure function of the offered batch AND
     // the at-rest retraction-key set (a 1-row checkpoint-class scalar,
     // like every sibling's marker read) — stable across this night's
-    // own crash replays, fresh after any intervening retraction
-    val keyRow = docSetKey(batch.select(col("doc_id")), advanceEpoch(wh)).head()
+    // own crash replays, fresh after any intervening retraction, so a
+    // re-offer of a committed-then-retracted night restores it
+    val keyRow = docSetKey(batch.select(col("doc_id")),
+      wh.keyEpoch("tq_hist", "nv", positive = false)).head()
     val keyVal = keyRow.getLong(0)
     val nOffered = keyRow.getLong(1)
     // no-op gate matches BOTH marker columns — see the tq_marker
@@ -261,8 +220,8 @@ object QuantileIndex {
     *
     *   1. append the restricted docs' (g, source, v) counts NEGATED,
     *      under a retraction batch_key (salted, so it can never collide
-    *      with a night's key, AND stamped with [[retractEpoch]] — the
-    *      xor of committed positive keys — so a retraction of the same
+    *      with a night's key, AND stamped with the epoch of the
+    *      committed positive keys — so a retraction of the same
     *      id set AFTER a re-offer derives a fresh key and cancels
     *      again), row-level guarded by the same
     *      (batch_key, g, source, v) anti-join as the advance;
@@ -292,17 +251,13 @@ object QuantileIndex {
     val wh = new graft.pipelines.Warehouse(spark, root)
     if (!wh.exists("tq_docs")) return // nothing ever ingested
     val ids = rawDocs.select(col("doc_id")).dropDuplicates("doc_id")
-    val keyRow = ids.agg(
-        coalesce(bit_xor(xxhash64(col("doc_id"))), lit(0L)).as("h"),
-        count(lit(1)).as("nd"))
-      // the salt keeps retraction keys disjoint from night keys even
-      // for an identical doc set (retract-the-whole-night is legal);
-      // the epoch ([[retractEpoch]]) keeps a LATER retraction of the
-      // same id set — after the docs were re-offered — off the first
-      // retraction's marker and row guards, so the cycle cancels
-      .select(xxhash64(col("h"), col("nd"), lit("retract"),
-          lit(retractEpoch(wh))).as("batch_key"),
-        col("nd").as("n_docs")).head()
+    // the salt keeps retraction keys disjoint from night keys even for
+    // an identical doc set (retract-the-whole-night is legal); the
+    // positive-key epoch keeps a LATER retraction of the same id set —
+    // after the docs were re-offered — off the first retraction's
+    // marker and row guards, so the cycle cancels
+    val keyRow = graft.pipelines.Warehouse.batchKey(ids, "doc_id", "retract",
+      wh.keyEpoch("tq_hist", "nv", positive = true)).head()
     val keyVal = keyRow.getLong(0)
     val nOffered = keyRow.getLong(1)
     if (wh.exists("tq_marker") &&
@@ -322,8 +277,7 @@ object QuantileIndex {
     if (!nothingPresent) {
       wh.appendNew("tq_hist", delta, Seq("batch_key", "g", "source", "v"))
       wh.compactIfFragmented("tq_hist")
-      wh.write("tq_docs",
-        wh.read("tq_docs").join(broadcast(ids), Seq("doc_id"), "left_anti"))
+      wh.dropKeys(ids, "doc_id", "tq_docs")
     }
     import spark.implicits._
     val mine = Seq((keyVal, nOffered)).toDF("batch_key", "n_docs")

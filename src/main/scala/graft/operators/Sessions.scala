@@ -907,16 +907,9 @@ object Sessions {
     * history by design).
     */
   private[graft] def retractRetentionUsers(spark: SparkSession, root: String,
-                                           userIds: DataFrame): Unit = {
-    val wh = new graft.pipelines.Warehouse(spark, root)
-    val ids = userIds.select(col("user_id")).dropDuplicates("user_id")
-      .localCheckpoint(true) // pinned: the swaps rewrite scanned paths
-    try {
-      for (t <- Seq("ret_user", "ret_weeks"))
-        wh.write(t,
-          wh.read(t).join(broadcast(ids), Seq("user_id"), "left_anti"))
-    } finally graft.TransientCache.unpersistCheckpoint(ids)
-  }
+                                           userIds: DataFrame): Unit =
+    new graft.pipelines.Warehouse(spark, root)
+      .dropKeys(userIds, "user_id", "ret_user", "ret_weeks")
 
   /** The fixture's at-rest index (memoized per context+dir like the HLL
     * index): corpus = events STRICTLY BEFORE the 80%-of-range split day
@@ -1078,16 +1071,13 @@ object Sessions {
 
   private val trIndexMemo = new graft.ContextMemo[String, (String, Long)](_._1)
 
-  /** Deterministic key of a night's event batch — a pure function of
-    * the event-id set (the Corpus `docSetKey` discipline), so every
+  /** Deterministic key of a night's event batch
+    * ([[graft.pipelines.Warehouse.batchKey]] of its event ids), so every
     * replay of the night lands on the same key regardless of which
     * writes committed.
     */
   private[graft] def eventSetKey(batch: DataFrame): DataFrame =
-    batch.agg(
-      coalesce(bit_xor(xxhash64(col("event_id"))), lit(0L)).as("h"),
-      count(lit(1)).as("ne"))
-      .select(xxhash64(col("h"), col("ne")).as("batch_key"))
+    graft.pipelines.Warehouse.batchKey(batch, "event_id")
 
   /** The night's NEW transition pairs: the q105 lag window over the
     * batch with each user's carried last event prepended (the carry can
@@ -1256,20 +1246,14 @@ object Sessions {
         // append) and advances with any intervening ingest
         val epoch = wh.read("tr_last").select(col("night_key"))
           .head(1).headOption.map(_.getLong(0)).getOrElse(0L)
-        val key = ev.agg(
-            coalesce(bit_xor(xxhash64(col("event_id"))), lit(0L)).as("h"),
-            count(lit(1)).as("ne"))
-          .select(xxhash64(col("h"), col("ne"), lit("retract"), lit(epoch))
-            .as("batch_key"))
+        val key = graft.pipelines.Warehouse.batchKey(ev, "event_id", "retract", epoch)
         val delta = transitionDelta(None, ev)
           .withColumn("n", -col("n"))
           .crossJoin(broadcast(key))
           .select(col("batch_key"), col("from_type"), col("to_type"), col("n"))
         wh.appendNew("tr_deltas", delta, Seq("batch_key", "from_type", "to_type"))
         wh.compactIfFragmented("tr_deltas")
-        wh.write("tr_last",
-          wh.read("tr_last").join(broadcast(ev.select(col("user_id")).distinct()),
-            Seq("user_id"), "left_anti"))
+        wh.dropKeys(ev, "user_id", "tr_last")
       }
     } finally graft.TransientCache.unpersistCheckpoint(ev)
   }

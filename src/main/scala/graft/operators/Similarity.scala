@@ -1088,10 +1088,8 @@ object Similarity {
                                      idx: AnnIndex): Unit =
     annIndexMemo.install(spark, dir, idx)
 
-  /** Open (or build) the ANN index at a DURABLE caller-owned root —
-    * [[Dedup.openCorpusIndex]]'s twin for the embedding tier. Existing
-    * codes are re-opened as-is (the nightly loop resumes where the last
-    * process stopped). Caller owns the root — never deleted here.
+  /** Open (or build) the ANN index at a DURABLE caller-owned root, as
+    * [[Dedup.openCorpusIndex]] does for the band index.
     */
   def openAnnIndex(spark: SparkSession, dir: String, root: String): Unit = {
     if (annIndexMemo.holds(spark, dir, root)) return
@@ -1120,8 +1118,7 @@ object Similarity {
   }
 
   /** [[retractFromAnnIndexOf]] against this context's memoized per-dir
-    * index — [[appendToAnnIndex]]'s retraction twin (FAISS
-    * `remove_ids` on the open index).
+    * index (FAISS `remove_ids` on the open index).
     */
   def retractFromAnnIndex(spark: SparkSession, dir: String,
                           vecIds: DataFrame): AnnIndex = {
@@ -1130,10 +1127,10 @@ object Similarity {
     narrowed
   }
 
-  /** The append with the index and the frozen fits as arguments — the
-    * [[Dedup.appendToWinnowIndexOf]] twin for callers that own their
-    * index; geometry rides in with the codebooks, no memo interaction
-    * (the geometry spec proves the contract at a non-default tiling).
+  /** The append with the index and the frozen fits as arguments, for
+    * callers that own their index; geometry rides in with the
+    * codebooks, no memo interaction (the geometry spec proves the
+    * contract at a non-default tiling).
     */
   private[graft] def appendAnnWith(idx: AnnIndex,
                                    cents: IndexedSeq[Array[Double]],
@@ -1152,7 +1149,7 @@ object Similarity {
 
   /** RETRACTION for the embedding tier — the FAISS `remove_ids()`
     * contract beside [[appendAnnWith]]'s `add()`: drop the retracted
-    * vec_ids' code rows via one anti-join tmp-swap. One row per vector
+    * vec_ids' code rows ([[graft.pipelines.Warehouse.dropKeys]]). One row per vector
     * and the fits are FROZEN by the family contract (append encodes,
     * never refits), so survivors' codes are byte-identical to a
     * from-scratch build over the surviving corpus — retract ≡
@@ -1163,11 +1160,7 @@ object Similarity {
   private[graft] def retractFromAnnIndexOf(idx: AnnIndex,
                                            vecIds: DataFrame): AnnIndex = {
     val wh = new graft.pipelines.Warehouse(vecIds.sparkSession, idx.root)
-    val ids = vecIds.select(col("vec_id")).dropDuplicates("vec_id")
-      .localCheckpoint(true) // pinned: the swap rewrites scanned paths
-    try wh.write("corpus_codes",
-      wh.read("corpus_codes").join(broadcast(ids), Seq("vec_id"), "left_anti"))
-    finally graft.TransientCache.unpersistCheckpoint(ids)
+    wh.dropKeys(vecIds, "vec_id", "corpus_codes")
     AnnIndex(wh.read("corpus_codes"), idx.root)
   }
 

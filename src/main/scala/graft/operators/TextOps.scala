@@ -23,6 +23,14 @@ object TextOps {
     Tables.spread(Tables.documents(spark, dir))
       .select(col("doc_id"), col("lang"), col("text"), toks(col("text")).as("t"))
 
+  /** `n / n_tokens` as a double, NULL for a zero-token (empty or
+    * whitespace-only) document — what the oracle's DuckDB division
+    * gives, where ANSI Spark would throw `DIVIDE_BY_ZERO` for the whole
+    * query.
+    */
+  private def perToken(n: Column): Column =
+    n.cast("double") / when(col("n_tokens") =!= 0, col("n_tokens"))
+
   /** Token statistics: counts, type-token ratio, mean token length.
     * Double divisions are ordered identically in the oracle so hashes match
     * bit-for-bit.
@@ -45,8 +53,8 @@ object TextOps {
           .as("sum_len"))
       .select(
         col("doc_id"), col("n_tokens"), col("n_uniq"), col("n_subtokens"),
-        (col("n_uniq").cast("double") / col("n_tokens")).as("ttr"),
-        (col("sum_len").cast("double") / col("n_tokens")).as("avg_token_len"))
+        perToken(col("n_uniq")).as("ttr"),
+        perToken(col("sum_len")).as("avg_token_len"))
       .orderBy(col("doc_id"))
 
   val tokenStatsSql: String =
@@ -71,7 +79,7 @@ object TextOps {
         size(col("t")).as("n_tokens"))
     d.select(
         col("doc_id"), col("lang"), col("en_hits"), col("es_hits"),
-        (col("en_hits").cast("double") / col("n_tokens")).as("stop_ratio"),
+        perToken(col("en_hits")).as("stop_ratio"),
         when(col("en_hits") >= col("es_hits") && col("en_hits") > 0, "en")
           .when(col("es_hits") > col("en_hits"), "es")
           .otherwise("und").as("predicted"))
@@ -125,8 +133,8 @@ object TextOps {
     // boundaries; the unrounded doubles are bit-identical (same fold order)
     val score =
       least(lit(1.0), col("n_tokens").cast("double") / 100.0) * 0.4 +
-      (col("en_hits").cast("double") / col("n_tokens")) * 0.3 +
-      least(lit(1.0), (col("sum_len").cast("double") / col("n_tokens")) / 10.0) * 0.3
+      perToken(col("en_hits")) * 0.3 +
+      least(lit(1.0), perToken(col("sum_len")) / 10.0) * 0.3
     d.withColumn("score", score)
       .withColumn("bucket",
         when(col("score") >= 0.5, "high")

@@ -335,8 +335,8 @@ object CorpusPipeline {
       // delta forever. Same serial-nights contract as every other
       // guarded append: a crashed night is replayed to convergence
       // before the next batch is offered.
-      val nightKey = docSetKey(
-        batch.select(col("doc_id")).dropDuplicates("doc_id"))
+      val nightKey = Warehouse.batchKey(
+        batch.select(col("doc_id")).dropDuplicates("doc_id"), "doc_id")
       wh.appendNew("live_token_counts",
         TextOps.tokenCountsOf(toAdd)
           .crossJoin(broadcast(nightKey))
@@ -379,7 +379,8 @@ object CorpusPipeline {
     *     ledger holds hashes, not content, so it is not itself
     *     takedown material);
     *   - `corpus_live`, `corpus_raw`, `corpus_quarantine`: doc_id
-    *     anti-join tmp-swaps. The RAW ledger purge is load-bearing:
+    *     anti-join tmp-swaps ([[Warehouse.dropKeys]]). The RAW ledger
+    *     purge is load-bearing:
     *     [[refreshFull]] rebuilds everything from `corpus_raw`, so a
     *     doc left there would resurrect — post-retraction,
     *     `refreshFull ≡ refine over raw-minus-retracted` (spec'd).
@@ -394,10 +395,11 @@ object CorpusPipeline {
     *     holes), and the next [[refreshFull]] + [[publish]] re-packs
     *     over the survivors, converging to the same state as a publish
     *     that never saw the docs (spec'd);
-    *   - `live_index` / `live_winnow`: the per-family retracts
-    *     ([[Dedup.retractFromCorpusIndexOf]] /
-    *     [[Dedup.retractFromWinnowIndexOf]]) — manifest-first swaps,
-    *     so a retracted doc can never screen a future batch;
+    *   - `live_index` / `live_winnow`: the same keyed retraction,
+    *     manifest-first per index, so a retracted doc can never screen
+    *     a future batch; a missing index table is skipped, and the next
+    *     night's build-or-reopen derives it from the purged
+    *     `corpus_live`;
     *   - `gate_log` is untouched: decisions key whole OFFERED batches,
     *     not content presence, and replaying a gated night must still
     *     take its recorded branch.
@@ -410,12 +412,14 @@ object CorpusPipeline {
     * partial appends; the key swap is idempotent), and once the
     * corpus_live swap lands, every derivation shrinks to the empty
     * set and the remaining id-keyed swaps are self-idempotent. The
-    * retraction batch_key is salted and stamped with an EPOCH (the
-    * xor of the committed POSITIVE delta keys — stable under the
-    * retraction's own replays since its rows are negative, advanced
-    * by any intervening ingest), so retract → re-offer → retract
-    * cycles never collide keys and never half-cancel. Serial with
-    * nights, like every lane op.
+    * shard sweep reads `docIds` before the one keyed retraction swaps
+    * anything, and the retraction pins the ids once for all of its
+    * swaps, so `docIds` may read any lane table except
+    * `corpus_shards`, which is swapped before that pin. The retraction batch_key is salted and stamped with
+    * the epoch of the committed POSITIVE delta keys
+    * ([[Warehouse.keyEpoch]]), so retract → re-offer → retract cycles
+    * never collide keys and never half-cancel. Serial with nights, like
+    * every lane op.
     */
   def retractFromLive(wh: Warehouse, docIds: DataFrame): Unit = {
     val spark = wh.spark
@@ -430,7 +434,6 @@ object CorpusPipeline {
         Dedup.exactDedupOf(wh.read("corpus_live")).select(col("k")))
     seedTokenCounts(wh)
     val ids = docIds.select(col("doc_id")).dropDuplicates("doc_id")
-      .localCheckpoint(true)
     // the retracted docs' at-rest live rows, pinned: the swaps below
     // rewrite the very files this lineage reads
     val docs = wh.read("corpus_live").join(ids, Seq("doc_id"), "left_semi")
@@ -438,15 +441,8 @@ object CorpusPipeline {
     try {
       if (!docs.isEmpty) {
         // 1 — negative token delta (before the corpus_live swap)
-        val epoch = wh.read("live_token_counts").filter(col("cnt") > 0)
-          .select(col("batch_key")).distinct()
-          .agg(coalesce(bit_xor(xxhash64(col("batch_key"))), lit(0L)))
-          .head().getLong(0)
-        val key = ids.agg(
-            coalesce(bit_xor(xxhash64(col("doc_id"))), lit(0L)).as("h"),
-            count(lit(1)).as("nd"))
-          .select(xxhash64(col("h"), col("nd"), lit("retract"), lit(epoch))
-            .as("batch_key"))
+        val key = Warehouse.batchKey(ids, "doc_id", "retract",
+          wh.keyEpoch("live_token_counts", "cnt", positive = true))
         wh.appendNew("live_token_counts",
           graft.operators.TextOps.tokenCountsOf(docs)
             .withColumn("cnt", -col("cnt"))
@@ -459,41 +455,22 @@ object CorpusPipeline {
           wh.read("live_keys").join(
             broadcast(Dedup.exactDedupOf(docs).select(col("k"))),
             Seq("k"), "left_anti"))
-        // 3 — the live corpus itself
-        wh.write("corpus_live",
-          wh.read("corpus_live").join(broadcast(ids), Seq("doc_id"), "left_anti"))
       }
-      // 4/5 — the raw ledger purge (refreshFull must not resurrect)
-      // and the quarantine sweep; id-keyed, idempotent, run regardless
-      // of live membership (a doc can sit in raw or quarantine without
-      // ever having been admitted)
-      wh.write("corpus_raw",
-        wh.read("corpus_raw").join(broadcast(ids), Seq("doc_id"), "left_anti"))
-      if (wh.exists("corpus_quarantine"))
-        wh.write("corpus_quarantine",
-          wh.read("corpus_quarantine")
-            .join(broadcast(ids), Seq("doc_id"), "left_anti"))
-      // 5b — the PUBLISHED shards, immediately: no training reader may
+      // 3 — the PUBLISHED shards, immediately: no training reader may
       // see a retracted doc between this call and the next refresh
-      // (id-keyed, idempotent, same swap mechanism — kept partitioned
-      // so readers' shard pruning survives the sweep)
+      // (kept partitioned so readers' shard pruning survives the sweep)
       if (wh.exists("corpus_shards"))
         wh.writePartitioned("corpus_shards",
           wh.read("corpus_shards").join(broadcast(ids), Seq("doc_id"), "left_anti"),
           Seq("shard"))
-      // 6/7 — the live screen indexes (build-or-reopen reads the
-      // already-purged corpus_live, so a missing index self-heals to
-      // the post-retraction state and the retract below is a no-op)
-      Dedup.retractFromCorpusIndexOf(
-        Dedup.corpusIndexAt(spark, s"${wh.root}/live_index",
-          wh.read("corpus_live")), ids)
-      Dedup.retractFromWinnowIndexOf(
-        Dedup.winnowIndexAt(spark, s"${wh.root}/live_winnow",
-          wh.read("corpus_live")), ids)
-    } finally {
-      graft.TransientCache.unpersistCheckpoint(docs)
-      graft.TransientCache.unpersistCheckpoint(ids)
-    }
+      // 4 — the live corpus, the raw ledger (refreshFull must not
+      // resurrect), the quarantine and both live screen indexes; the
+      // raw and quarantine sweeps hold regardless of live membership (a
+      // doc can sit there without ever having been admitted)
+      wh.dropKeys(ids, "doc_id", Seq("corpus_live", "corpus_raw", "corpus_quarantine") ++
+        Dedup.CorpusLayout.dropOrder.map("live_index/" + _) ++
+        Dedup.WinnowLayout.dropOrder.map("live_winnow/" + _): _*)
+    } finally graft.TransientCache.unpersistCheckpoint(docs)
     graft.TransientCache.drain()
   }
 
@@ -668,21 +645,6 @@ object CorpusPipeline {
         TextOps.tokenCountsOf(wh.read("corpus_live"))
           .select(lit(0L).as("batch_key"), col("tok"), col("cnt")))
 
-  /** Deterministic, order-insensitive key of a doc set: xxhash64 over
-    * (XOR of per-doc hashes, count). XOR is commutative and cannot
-    * overflow (doc_ids are deduped upstream, so cancellation needs a
-    * genuine hash collision), so any replay of the same set produces
-    * the same key — the dedup handle for delta appends and persisted
-    * gate decisions. 1-row frame; ride it as a broadcast (the q77/q91
-    * no-driver-collect discipline) or collect it where the value itself
-    * gates driver control flow (the bounded checkpoint-read precedent).
-    */
-  private def docSetKey(docs: DataFrame): DataFrame =
-    docs.agg(
-      coalesce(bit_xor(xxhash64(col("doc_id"))), lit(0L)).as("h"),
-      count(lit(1)).as("nd"))
-      .select(xxhash64(col("h"), col("nd")).as("batch_key"))
-
   /** Default ceiling for [[refineIncrementalGated]]: the fixture's
     * in-distribution nights read ≈ 0.1–0.15 against the live corpus;
     * wholesale distribution shifts (spam floods, scrape rot, a source
@@ -781,7 +743,7 @@ object CorpusPipeline {
     // will actually consume
     val in = batch.select(col("doc_id"), col("source"), col("text"))
       .dropDuplicates("doc_id")
-    val key = docSetKey(in).collect().head.getLong(0)
+    val key = Warehouse.batchKey(in, "doc_id").head().getLong(0)
     val prior =
       if (!wh.exists("gate_log")) None
       else wh.read("gate_log").filter(col("batch_key") === key)

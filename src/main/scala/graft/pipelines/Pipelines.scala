@@ -47,21 +47,9 @@ object SalesPipeline {
     * a no-op).
     */
   def update(wh: Warehouse, srcDir: String, upToId: Option[Long] = None,
-             landing: Option[UpsertSink] = None): Long = {
-    val sink = landing.getOrElse(wh)
-    val cp = wh.checkpoint("sales_last_ven_id").getOrElse(Long.MinValue)
-    val incoming = source(wh.spark, srcDir, upToId)
-      .filter(col("ven_id") > cp) // P7 high-water-mark predicate
-      .cache()
-    val n = incoming.count()
-    if (n > 0) {
-      sink.upsert("ventas_limpias", incoming, Seq("ven_id"), "ven_id", "ven_id")
-      val maxId = incoming.agg(max(col("ven_id"))).first().getLong(0)
-      wh.setCheckpoint("sales_last_ven_id", maxId) // after sink commit (§7.3)
-    }
-    incoming.unpersist()
-    n
-  }
+             landing: Option[UpsertSink] = None): Long =
+    upsertAbove(wh, landing.getOrElse(wh), "sales_last_ven_id",
+      source(wh.spark, srcDir, upToId))
 
   /** Per-store scoped cold start — the reference's seed_new_store.py:19-34:
     * ONE source (= one store's database) is extracted over its own window,
@@ -79,17 +67,25 @@ object SalesPipeline {
     */
   def seedNewStore(wh: Warehouse, srcDir: String, store: String,
                    scope: DataFrame => DataFrame,
-                   upToId: Option[Long] = None): Long = {
-    val cpName = s"sales_last_ven_id__$store"
+                   upToId: Option[Long] = None): Long =
+    upsertAbove(wh, wh, s"sales_last_ven_id__$store",
+      scope(source(wh.spark, srcDir, upToId)))
+
+  /** The watermark step both entry points share: extract the tickets
+    * above checkpoint `cpName` (the P7 high-water-mark predicate),
+    * upsert them into `sink`, and advance the checkpoint only AFTER the
+    * sink commits (§7.3). Count and max come from ONE action. Returns
+    * rows processed.
+    */
+  private def upsertAbove(wh: Warehouse, sink: UpsertSink, cpName: String,
+                          extract: DataFrame): Long = {
     val cp = wh.checkpoint(cpName).getOrElse(Long.MinValue)
-    val incoming = scope(source(wh.spark, srcDir, upToId))
-      .filter(col("ven_id") > cp)
-      .cache()
-    val n = incoming.count()
+    val incoming = extract.filter(col("ven_id") > cp).cache()
+    val stats = incoming.agg(count(lit(1)), max(col("ven_id"))).first()
+    val n = stats.getLong(0)
     if (n > 0) {
-      wh.upsert("ventas_limpias", incoming, Seq("ven_id"), "ven_id", "ven_id")
-      val maxId = incoming.agg(max(col("ven_id"))).first().getLong(0)
-      wh.setCheckpoint(cpName, maxId)
+      sink.upsert("ventas_limpias", incoming, Seq("ven_id"), "ven_id", "ven_id")
+      wh.setCheckpoint(cpName, stats.getLong(1))
     }
     incoming.unpersist()
     n
@@ -188,7 +184,7 @@ object InventoryPipeline {
         // this exact: the synthetic seed event reproduces EOD(cp-1), so the
         // replay emits a point at/after cp iff the full rebuild would
         val pts = Stock.stockPointsFrom(
-            window.unionByName(seedEvents.select(window.columns.map(col): _*)))
+            window.unionByName(seedEvents.select(window.columns.toIndexedSeq.map(col): _*)))
           .filter(to_date(col("point_date")) >= cpDate)
         (pts, false)
     }

@@ -35,6 +35,41 @@ trait UpsertSink {
   * Keyed appends go through [[appendNew]]: a replayed batch re-derives
   * the same keys, and the anti-join against the committed rows lands
   * only what is missing.
+  *
+  * The at-rest index protocol — the one place every per-key index tier
+  * (band, winnow, ANN, retention, transitions, quantile cube, live
+  * corpus) takes its three shared decisions from:
+  *
+  *  - KEYED RETRACTION ([[dropKeys]]): anti-join tmp-swaps, one table
+  *    at a time, in the order given, with the distinct ids pinned for
+  *    the whole call (the swaps rewrite paths the ids' lineage may
+  *    read). A manifest is listed BEFORE the data tables it vouches for
+  *    — the inverse of the manifest-last append — so a crash
+  *    mid-retraction leaves at worst unmanifested data rows, the state
+  *    a mid-append crash leaves, which every screen already excludes
+  *    and a replay finishes dropping. Removing absent keys is a no-op.
+  *  - MANIFEST-GUARDED INDEX ([[Warehouse.IndexLayout]]: a per-key row
+  *    table, tables derived from it in order, and a manifest of the
+  *    keys fully at rest). [[appendIndex]] dedups the batch on the key,
+  *    pins its rows, drops the keys already in the manifest (the
+  *    O(|keys|) fast path: a fully-seen replay appends nothing; no
+  *    broadcast hint, the manifest is corpus-sized), probes
+  *    each data table for residual rows of the new keys (a crash
+  *    between two appends leaves the manifest BEHIND the data; the
+  *    probe is restricted to a broadcast of the new keys, ∅ on the
+  *    no-crash path) and appends only what is missing, the manifest
+  *    LAST, then compacts on cadence and returns fresh reads.
+  *    [[openIndex]] builds or re-opens the layout at this root: a
+  *    missing table is derived from the previous table at rest, a
+  *    missing manifest from the last data table (appends are per-job
+  *    atomic and run in layout order, so a key there is in every data
+  *    table), so a partial first build repairs itself.
+  *  - BATCH KEY AND EPOCH ([[Warehouse.batchKey]], [[keyEpoch]]): the
+  *    order-free key of a batch's id set, persisted into the delta
+  *    ledgers so every replay of the batch lands on the same key, and
+  *    the xor of a signed ledger's committed keys of one sign, stamped
+  *    into the keys of the other sign so a retract → re-offer → retract
+  *    cycle never collides with its own earlier rows.
   */
 final class Warehouse(val spark: SparkSession, val root: String) extends UpsertSink {
 
@@ -71,6 +106,80 @@ final class Warehouse(val spark: SparkSession, val root: String) extends UpsertS
     append(table,
       if (!exists(table)) rows
       else rows.join(read(table).select(keys.map(col): _*), keys, "left_anti"))
+
+  /** Take the rows whose `key` is in `ids` out of `tables`, in the order
+    * given (the keyed retraction of the class doc); a missing table is
+    * skipped — nothing was ever ingested there.
+    */
+  def dropKeys(ids: DataFrame, key: String, tables: String*): Unit = {
+    val pinned = ids.select(col(key)).distinct().localCheckpoint(true)
+    try for (t <- tables if exists(t))
+      write(t, read(t).join(broadcast(pinned), Seq(key), "left_anti"))
+    finally graft.TransientCache.unpersistCheckpoint(pinned)
+  }
+
+  /** Build-or-reopen index `l` at this root (the class doc's repair
+    * rule); `source` is only evaluated when the row table is missing.
+    * Returns fresh reads: the data tables in layout order, then the
+    * manifest.
+    */
+  def openIndex(l: Warehouse.IndexLayout, source: => DataFrame): Seq[DataFrame] = {
+    for (((t, derive), i) <- l.tables.zipWithIndex if !exists(t))
+      write(t, derive(if (i == 0) source else read(l.tables(i - 1)._1)))
+    if (!exists(l.manifest))
+      write(l.manifest, read(l.tables.last._1).select(col(l.key)).distinct())
+    l.names.map(read)
+  }
+
+  /** Advance index `l` with `batch` (the class doc's manifest-last
+    * append); returns fresh reads like [[openIndex]].
+    */
+  def appendIndex(l: Warehouse.IndexLayout, batch: DataFrame): Seq[DataFrame] = {
+    val k = Seq(l.key)
+    // pinned, not cached: the appends below write paths a pre-filtered
+    // batch may read in its lineage, and a write would trigger a lazy
+    // recache that re-executes a streaming source outside its batch
+    val rows = l.tables.head._2(batch.dropDuplicates(l.key)).localCheckpoint(true)
+    try {
+      val fresh = rows.join(read(l.manifest), k, "left_anti")
+      val newKeys = fresh.select(col(l.key)).distinct()
+      if (!newKeys.isEmpty) {
+        val derived = l.tables.tail.scanLeft(fresh) { case (prev, (_, derive)) => derive(prev) }
+        for (((t, _), rs) <- l.tables.zip(derived)) {
+          val present = read(t).join(broadcast(newKeys), k, "left_semi")
+            .select(col(l.key)).distinct()
+          append(t, rs.join(broadcast(present), k, "left_anti"))
+        }
+        append(l.manifest, newKeys)
+      }
+    } finally graft.TransientCache.unpersistCheckpoint(rows)
+    // after ALL appends: the residual probes read the pre-compaction
+    // listings
+    l.names.foreach(compactIfFragmented(_))
+    l.names.map(read)
+  }
+
+  /** Retract `ids` from index `l`, manifest first; returns fresh reads
+    * like [[openIndex]].
+    */
+  def retractIndex(l: Warehouse.IndexLayout, ids: DataFrame): Seq[DataFrame] = {
+    dropKeys(ids, l.key, l.dropOrder: _*)
+    l.names.map(read)
+  }
+
+  /** The signed-key epoch of ledger `table`: the xor of its distinct
+    * `batch_key`s whose `signCol` is positive (or negative); 0 when the
+    * table is missing. A lane stamps the epoch of the OTHER sign into
+    * its keys: its own appends never move it, so its crash replays
+    * derive the same key, while any intervening opposite-sign commit
+    * makes the next key fresh.
+    */
+  def keyEpoch(table: String, signCol: String, positive: Boolean): Long =
+    if (!exists(table)) 0L
+    else read(table).filter(if (positive) col(signCol) > 0 else col(signCol) < 0)
+      .select(col("batch_key")).distinct()
+      .agg(coalesce(bit_xor(xxhash64(col("batch_key"))), lit(0L)))
+      .head().getLong(0)
 
   /** Keyed last-wins upsert (S8/S9): read current, merge via
     * [[Upsert.upsertByKey]], write to a tmp dir (the read of the old
@@ -163,6 +272,32 @@ final class Warehouse(val spark: SparkSession, val root: String) extends UpsertS
 }
 
 object Warehouse {
+  /** An at-rest keyed index: `tables` in derivation order — the first
+    * derives from the source documents, each later one from the rows of
+    * the table before it — and `manifest`, the keys fully at rest.
+    */
+  final case class IndexLayout(key: String,
+                               tables: Seq[(String, DataFrame => DataFrame)],
+                               manifest: String) {
+    def names: Seq[String] = tables.map(_._1) :+ manifest
+    /** Retraction order: the manifest first. */
+    def dropOrder: Seq[String] = manifest +: tables.map(_._1)
+  }
+
+  /** The order-free key of the id set in `ids(idCol)`, one row
+    * `(batch_key, n_keys)`: `xxhash64(xor of xxhash64(id), count,
+    * salt…)`. Xor is commutative, so any replay of the same set derives
+    * the same key; ids are deduped upstream, so cancellation needs a
+    * genuine hash collision. Persisted in the delta ledgers
+    * (`live_token_counts`, `tr_deltas`, `tr_last`, `tq_hist`,
+    * `tq_marker`): the formula must never change.
+    */
+  def batchKey(ids: DataFrame, idCol: String, salt: Any*): DataFrame =
+    ids.agg(coalesce(bit_xor(xxhash64(col(idCol))), lit(0L)).as("h"),
+        count(lit(1)).as("n_keys"))
+      .select(xxhash64(col("h") +: col("n_keys") +: salt.map(lit): _*).as("batch_key"),
+        col("n_keys"))
+
   /** Compaction output sizing: one file per ~128 MiB of at-rest bytes —
     * aligned with `spark.sql.files.maxPartitionBytes`' default so a
     * post-compaction scan gets full-sized splits.

@@ -70,6 +70,18 @@ class DupGuardSpec extends AnyFunSuite {
       s"sink wiring outside Twin.sink: ${(wiring - "streaming/Twin.scala").toSeq.sorted}")
   }
 
+  test("the batch-key formula lives only in Warehouse.scala, the checkpoint-release walk only in TransientCache.scala") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    def filesWith(needle: String): Set[String] =
+      java.nio.file.Files.walk(root).iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .filter(p => stripNoise(new String(java.nio.file.Files.readAllBytes(p))).contains(needle))
+        .map(root.relativize(_).toString).toSet
+    assert(filesWith("bit_xor(xxhash64(") == Set("pipelines/Warehouse.scala"))
+    assert(filesWith("LogicalRDD") == Set("TransientCache.scala"))
+  }
+
   test("the only entry points in src/main are Bench, Verify and DevProfile") {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")

@@ -1041,6 +1041,52 @@ class TrainingOpsSpec extends SparkSpec {
     assert(got == refBigram(docTokens(d)))
   }
 
+  test("q16/q17/q18 on null, empty, whitespace-only and unicode texts: NULL ratios, no DIVIDE_BY_ZERO") {
+    val d = edgeDocsDir()
+    def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[Seq[Option[Any]]] =
+      df.collect().toSeq.map(r => r.toSeq.map(Option(_)))
+    // expected rows: the q16/q17/q18 oracle SQL run by DuckDB 1.0.0 on
+    // the same ten documents (DuckDB's x/0 is NULL)
+    val N = None
+    assert(rowsOf(TextOps.tokenStats(spark, d)) == Seq(
+      Seq(Some(1L), N, N, N, N, N),
+      Seq(Some(2L), Some(0), Some(0), Some(0), N, N),
+      Seq(Some(3L), Some(0), Some(0), Some(0), N, N),
+      Seq(Some(4L), Some(3), Some(2), Some(8), Some(0.6666666666666666), Some(5.333333333333333)),
+      Seq(Some(5L), Some(3), Some(2), Some(10), Some(0.6666666666666666), Some(3.3333333333333335)),
+      Seq(Some(6L), Some(4), Some(3), Some(4), Some(0.75), Some(2.75)),
+      Seq(Some(7L), Some(3), Some(1), Some(3), Some(0.3333333333333333), Some(3.0)),
+      Seq(Some(8L), Some(3), Some(2), Some(8), Some(0.6666666666666666), Some(5.333333333333333)),
+      Seq(Some(9L), Some(1), Some(1), Some(1), Some(1.0), Some(1.0)),
+      Seq(Some(10L), Some(3), Some(3), Some(6), Some(1.0), Some(4.666666666666667))))
+    val en = Some("en")
+    val und = Some("und")
+    assert(rowsOf(TextOps.langProfile(spark, d)) == Seq(
+      Seq(Some(1L), en, N, N, N, und, Some(false)),
+      Seq(Some(2L), en, Some(0), Some(0), N, und, Some(false)),
+      Seq(Some(3L), en, Some(0), Some(0), N, und, Some(false)),
+      Seq(Some(4L), en, Some(0), Some(0), Some(0.0), und, Some(false)),
+      Seq(Some(5L), en, Some(0), Some(0), Some(0.0), und, Some(false)),
+      Seq(Some(6L), en, Some(0), Some(0), Some(0.0), und, Some(false)),
+      Seq(Some(7L), en, Some(3), Some(0), Some(1.0), en, Some(true)),
+      Seq(Some(8L), en, Some(0), Some(0), Some(0.0), und, Some(false)),
+      Seq(Some(9L), en, Some(0), Some(0), Some(0.0), und, Some(false)),
+      Seq(Some(10L), en, Some(1), Some(0), Some(0.3333333333333333), en, Some(true))))
+    val low = Some("low")
+    assert(rowsOf(TextOps.qualityScore(spark, d)) == Seq(
+      Seq(Some(1L), N, N, N, low),
+      Seq(Some(2L), Some(0), Some(0), N, low),
+      Seq(Some(3L), Some(7), Some(0), N, low),
+      Seq(Some(4L), Some(18), Some(3), Some(0.17200000000000001), low),
+      Seq(Some(5L), Some(12), Some(3), Some(0.112), low),
+      Seq(Some(6L), Some(14), Some(4), Some(0.0985), low),
+      Seq(Some(7L), Some(11), Some(3), Some(0.402), Some("medium")),
+      Seq(Some(8L), Some(18), Some(3), Some(0.17200000000000001), low),
+      Seq(Some(9L), Some(1), Some(1), Some(0.034), low),
+      Seq(Some(10L), Some(16), Some(3), Some(0.252), low)))
+    graft.TransientCache.drain()
+  }
+
   test("collocations: lift identity vs driver-side counts, guards hold") {
     val got = TextOps.collocations(spark, dir).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3)))
