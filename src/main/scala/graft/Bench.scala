@@ -138,7 +138,7 @@ object Bench {
     // read — a q66 probe used to pay ~30 s of builds for a ~3 s payload.
     val sharedCaches: Seq[(String, Set[String], () => Unit)] = Seq(
       ("legacy", Set("q02", "q03", "q04"),
-        () => operators.Sales.legacyAggDecimal(spark, sfDir).count(): Unit),
+        () => operators.Sales.legacyAggDecimal(spark, sfDir).cache().count(): Unit),
       ("ledger", Set("q08", "q09"),
         () => operators.Ledger.unionLedger(spark, sfDir).count(): Unit),
       ("stock", Set("q13", "q14", "q54"),

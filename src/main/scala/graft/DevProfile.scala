@@ -36,7 +36,7 @@ object DevProfile {
       "winnow" -> (() => operators.Dedup.winnowIndex(spark, sfDir)),
       "shingle" -> (() => operators.Dedup.shingleIndex(spark, sfDir)),
       "cc" -> (() => operators.Graph.simhashComponents(spark, sfDir)),
-      "legacy" -> (() => operators.Sales.legacyAggDecimal(spark, sfDir)),
+      "legacy" -> (() => operators.Sales.legacyAggDecimal(spark, sfDir).cache()),
       "stock" -> (() => operators.Stock.stockPoints(spark, sfDir)),
       "ledger" -> (() => operators.Ledger.unionLedger(spark, sfDir)))
     val cacheFits: Map[String, () => Unit] = Map(

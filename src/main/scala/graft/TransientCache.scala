@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.Dataset
 
 /** Registry for PER-QUERY transient `.cache()` frames (q22/q40/q51/q72
@@ -52,8 +54,8 @@ object TransientCache {
   /** Unpersist every registered frame; returns how many were evicted. */
   def drain(): Int = synchronized {
     val n = frames.size + ckpts.size
-    frames.foreach(df => try df.unpersist(false) catch { case _: Throwable => () })
-    ckpts.foreach(df => try unpersistCheckpoint(df) catch { case _: Throwable => () })
+    frames.foreach(df => try df.unpersist(false) catch { case NonFatal(_) => () })
+    ckpts.foreach(df => try unpersistCheckpoint(df) catch { case NonFatal(_) => () })
     frames.clear()
     ckpts.clear()
     n

@@ -18,10 +18,9 @@ import org.apache.spark.sql.functions._
   */
 object Upsert {
 
-  /** Last-wins winner per key group — one window shuffle. Shared by the
-    * parquet merge ([[upsertByKey]]) and the JDBC sink's within-batch
-    * pre-dedup ([[graft.sources.Jdbc.JdbcUpsertSink]], where MySQL's row
-    * order inside a statement batch would otherwise decide ties).
+  /** Last-wins winner per key group — one window shuffle. The in-batch
+    * dedup of every [[graft.pipelines.UpsertSink]], the keep-first of
+    * [[graft.sources.Csv.dedupAppend]], and the body of [[upsertByKey]].
     */
   def latestPerKey(df: DataFrame, keys: Seq[String], versionCol: String,
                    tiebreakCol: String): DataFrame = {
@@ -32,6 +31,10 @@ object Upsert {
       .drop("__rn")
   }
 
+  /** Version-wins merge of two frames (q05): unlike the sinks' keyed
+    * merge, a committed row with a higher version survives the incoming
+    * one.
+    */
   def upsertByKey(existing: DataFrame, incoming: DataFrame,
                   keys: Seq[String], versionCol: String,
                   tiebreakCol: String): DataFrame =

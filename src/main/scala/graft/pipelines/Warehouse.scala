@@ -1,17 +1,23 @@
 package graft.pipelines
 
 import graft.operators.Upsert
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Sink seam for the S8/S9 keyed merges. The harness default is the
-  * parquet keyed-overwrite ([[Warehouse.upsert]]: read current + merge +
-  * tmp-swap); a lakehouse deployment drops in Delta/Iceberg
-  * `MERGE INTO ... WHEN MATCHED` by implementing this trait with the same
-  * call shape (SURVEY §7.1 documents that as the production path — a
-  * MERGE avoids rewriting untouched files and commits atomically).
-  * Pipelines depend only on the contract: last-wins per `keys` by
-  * (`versionCol`, `tiebreakCol`), atomic with respect to readers.
+/** Sink seam for the S8/S9 keyed merges — the reference's
+  * `INSERT … ON DUPLICATE KEY UPDATE` (db_helpers.py:25-40,
+  * update_stock_points.py:237-256). The contract every implementation
+  * keeps: collapse `incoming` to one row per `keys`, the
+  * (`versionCol`, `tiebreakCol`)-max ([[Upsert.latestPerKey]]); then
+  * that row REPLACES the committed row with the same key, whatever its
+  * version (a later batch wins — cross-batch staleness is the caller's
+  * watermark discipline), and every other committed row survives.
+  * Replaying a batch is a no-op, and the merge is atomic with respect
+  * to readers. Implementations: the parquet warehouse
+  * ([[Warehouse.upsert]]), the MySQL row-statement and the staged-MERGE
+  * JDBC sinks; a lakehouse deployment drops in Delta/Iceberg
+  * `MERGE INTO ... WHEN MATCHED` with the same call shape (SURVEY §7.1:
+  * a MERGE avoids rewriting untouched files and commits atomically).
   */
 trait UpsertSink {
   def upsert(table: String, incoming: DataFrame, keys: Seq[String],
@@ -25,8 +31,9 @@ trait UpsertSink {
   * Delta/Iceberg (MERGE INTO, atomic commits) changes this class only.
   *
   * Crash-safety contract (SURVEY.md §7.3): checkpoints are advanced AFTER
-  * the sink write commits. A crash between the two replays the window on
-  * the next run; last-wins upserts (and the ledger ingest's id anti-join)
+  * the sink write commits ([[commitAbove]], the one watermark step of the
+  * nightly). A crash between the two replays the window on the next run;
+  * keyed merges ([[replaceKeys]]) and the ledger ingest's id anti-join
   * make the replay idempotent — the same at-least-once-extract /
   * exactly-once-effect scheme the reference gets from transactions.
   * Table rewrites go through [[Fs.replaceWith]] (write tmp → swap), so a
@@ -181,15 +188,46 @@ final class Warehouse(val spark: SparkSession, val root: String) extends UpsertS
       .agg(coalesce(bit_xor(xxhash64(col("batch_key"))), lit(0L)))
       .head().getLong(0)
 
-  /** Keyed last-wins upsert (S8/S9): read current, merge via
-    * [[Upsert.upsertByKey]], write to a tmp dir (the read of the old
-    * table streams into the tmp write — no same-path race), swap.
+  /** The [[UpsertSink]] contract on parquet: the batch's last-wins row
+    * per key replaces the committed one ([[replaceKeys]]).
     */
   def upsert(table: String, incoming: DataFrame, keys: Seq[String],
              versionCol: String, tiebreakCol: String): Unit =
-    if (!exists(table)) write(table, incoming)
-    else write(table,
-      Upsert.upsertByKey(read(table), incoming, keys, versionCol, tiebreakCol))
+    replaceKeys(table, Upsert.latestPerKey(incoming, keys, versionCol, tiebreakCol), keys)
+
+  /** The keyed merge (S8/S9): every committed row whose `keys` appear in
+    * `rows` is replaced by `rows`; the rest carry over. `rows` must hold
+    * one row per key. A missing table is just `rows`. The old table
+    * streams into the tmp write of [[write]] (no same-path race), sized
+    * like [[compact]] so nightly merges never fragment the table.
+    */
+  def replaceKeys(table: String, rows: DataFrame, keys: Seq[String]): Unit =
+    if (!exists(table)) write(table, rows)
+    else write(table, read(table)
+      .join(rows.select(keys.map(col): _*), keys, "left_anti")
+      .unionByName(rows)
+      .coalesce(outputFiles(table, Warehouse.CompactTargetFileBytes)))
+
+  /** The nightly watermark step (S8/S9 with §7.3): extract the rows above
+    * checkpoint `cp` (`extract` gets None before the first run), pin them,
+    * take their count and `max(hw)` in ONE action BEFORE `commit` (an
+    * extract may read the sink table — the ledger's crash-window
+    * anti-join — so it must not be evaluated after the commit), commit,
+    * and advance `cp` only after the commit lands. Returns rows committed.
+    */
+  def commitAbove(cp: String, hw: Column)(extract: Option[Long] => DataFrame)
+                 (commit: DataFrame => Unit): Long = {
+    val rows = extract(checkpoint(cp)).cache()
+    try {
+      val stats = rows.agg(count(lit(1)), max(hw)).first()
+      val n = stats.getLong(0)
+      if (n > 0) {
+        commit(rows)
+        setCheckpoint(cp, stats.getLong(1))
+      }
+      n
+    } finally rows.unpersist()
+  }
 
   /** Date/column-partitioned write — the at-rest layout every 100 TB fact
     * table needs: one directory per partition value, so date-range and
@@ -251,13 +289,17 @@ final class Warehouse(val spark: SparkSession, val root: String) extends UpsertS
     * task drains a run of small files with no shuffle.
     */
   def compact(table: String,
-              targetFileBytes: Long = Warehouse.CompactTargetFileBytes): Unit = {
+              targetFileBytes: Long = Warehouse.CompactTargetFileBytes): Unit =
+    if (exists(table)) write(table, read(table).coalesce(outputFiles(table, targetFileBytes)))
+
+  /** ⌈at-rest bytes of `table` / `targetFileBytes`⌉ output files, at
+    * least one — the rewrite sizing of [[compact]] and [[replaceKeys]].
+    */
+  private def outputFiles(table: String, targetFileBytes: Long): Int = {
     val p = new org.apache.hadoop.fs.Path(path(table))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return
-    val bytes = fs.getContentSummary(p).getLength
-    val n = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    write(table, read(table).coalesce(n))
+    val bytes = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getContentSummary(p).getLength
+    math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
   }
 
   /** The nightly cadence: compact only past a file-count threshold, so

@@ -55,23 +55,12 @@ object Csv {
         // JSON-encode the row: field quoting keeps column boundaries
         // unambiguous (("ab","c") vs ("a","bc")), so distinct rows never tie
         .withColumn("__tie", to_json(struct(cols.map(col): _*)))
-    val merged =
-      if (!Fs.exists(spark, path)) {
-        // same determinism for the bootstrap batch: highest row text wins
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(uniqCol))
-          .orderBy(col("__tie").desc)
-        prioritized(incoming, 0)
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__p", "__tie", "__rn")
-      } else {
-        // existing rows outrank incoming: __p desc with existing=1
-        Upsert.upsertByKey(
-          prioritized(readAllStrings(spark, path, cols), 1),
-          prioritized(incoming, 0),
-          Seq(uniqCol), "__p", "__tie")
-          .drop("__p", "__tie")
-      }
+    // existing rows outrank incoming (__p desc, existing = 1); inside a
+    // class the highest row text wins, the bootstrap batch included
+    val rows =
+      if (!Fs.exists(spark, path)) prioritized(incoming, 0)
+      else prioritized(readAllStrings(spark, path, cols), 1).unionByName(prioritized(incoming, 0))
+    val merged = Upsert.latestPerKey(rows, Seq(uniqCol), "__p", "__tie").drop("__p", "__tie")
     val out = merged.cache()
     val n = out.count()
     Fs.replaceWith(spark, path)(tmp =>

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.time.LocalDate
 
+import graft.operators.Upsert
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 
 /** JDBC extraction builders (reference S1–S5). The harness has no MySQL,
@@ -214,7 +215,7 @@ object Jdbc {
       extends graft.pipelines.UpsertSink with Serializable {
     def upsert(table: String, incoming: DataFrame, keys: Seq[String],
                versionCol: String, tiebreakCol: String): Unit = {
-      val batch = prepareUpsertBatch(incoming, keys, versionCol, tiebreakCol)
+      val batch = Upsert.latestPerKey(incoming, keys, versionCol, tiebreakCol)
       val staging = s"${table}_stg"
       try execute(src, s"TRUNCATE TABLE ${qq(staging)}")
       catch { case _: java.sql.SQLException =>
@@ -227,34 +228,25 @@ object Jdbc {
     }
   }
 
-  /** Within-batch pre-dedup for the JDBC upsert: MySQL resolves duplicate
-    * keys row-by-row in statement order, so a batch carrying two versions
-    * of one key would make the outcome depend on row order inside a
-    * partition. Collapsing to the last-wins winner first makes the sink
-    * deterministic and matches the parquet merge semantics exactly.
-    */
-  def prepareUpsertBatch(incoming: DataFrame, keys: Seq[String],
-                         versionCol: String, tiebreakCol: String): DataFrame =
-    graft.operators.Upsert.latestPerKey(incoming, keys, versionCol, tiebreakCol)
-
   /** S8 production sink: keyed JDBC upsert implementing the same
     * [[graft.pipelines.UpsertSink]] contract as the parquet warehouse —
     * pipelines swap landing targets without changing shape. Each
     * partition opens one connection and streams prepared-statement
     * batches inside a transaction (commit per partition, rollback on
-    * failure); with last-wins pre-dedup and key-constrained ON DUPLICATE
-    * KEY UPDATE, replays are idempotent, so a partial failure + Spark
+    * failure); the last-wins pre-dedup keeps MySQL's in-statement row
+    * order from deciding ties, and with key-constrained ON DUPLICATE
+    * KEY UPDATE replays are idempotent, so a partial failure + Spark
     * task retry converges to the same table state.
     *
     * No live database exists in this harness — the statement builder and
-    * pre-dedup are unit-tested ([[upsertSql]], [[prepareUpsertBatch]]);
+    * pre-dedup are unit-tested ([[upsertSql]], [[Upsert.latestPerKey]]);
     * the connection loop is the thin untestable rim.
     */
   final class JdbcUpsertSink(src: Source, batchSize: Int = 1000)
       extends graft.pipelines.UpsertSink with Serializable {
     def upsert(table: String, incoming: DataFrame, keys: Seq[String],
                versionCol: String, tiebreakCol: String): Unit = {
-      val batch = prepareUpsertBatch(incoming, keys, versionCol, tiebreakCol)
+      val batch = Upsert.latestPerKey(incoming, keys, versionCol, tiebreakCol)
       val sql = upsertSql(table, batch.columns.toSeq, keys)
       val width = batch.columns.length
       val (url, props, drv, bs) = (src.url, src.properties, src.driver, batchSize)

@@ -82,6 +82,20 @@ class DupGuardSpec extends AnyFunSuite {
     assert(filesWith("LogicalRDD") == Set("TransientCache.scala"))
   }
 
+  test("the nightly write path has one keyed merge and no session cache under its extract") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    def code(p: java.nio.file.Path): String =
+      stripNoise(new String(java.nio.file.Files.readAllBytes(p)))
+    assert(!code(root.resolve("operators/Sales.scala")).contains(".cache()"),
+      "operators/Sales.scala must not cache: the nightly extract reads it")
+    val merges = java.nio.file.Files.walk(root.resolve("pipelines")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => code(p).contains("Upsert.upsertByKey"))
+      .map(root.relativize(_).toString).toSet
+    assert(merges.isEmpty, s"version-wins merges under pipelines/: ${merges.toSeq.sorted}")
+  }
+
   test("the only entry points in src/main are Bench, Verify and DevProfile") {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.operators.{Sales, Stock}
-import graft.pipelines.{InventoryPipeline, SalesPipeline, Warehouse}
+import graft.pipelines.{Fs, InventoryPipeline, SalesPipeline, Warehouse}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -32,6 +32,30 @@ class PipelinesSpec extends SparkSpec {
 
     val n3 = SalesPipeline.update(wh, dir) // nothing new
     assert(n3 == 0)
+    assert(rowsOf(wh.read("ventas_limpias")) == rowsOf(full))
+  }
+
+  test("sales: a source that grows in place is re-extracted in the same session") {
+    val wh = freshWh()
+    val src = Files.createTempDirectory("graft-src").toString
+    val full = Sales.waterfallClean(spark, dir)
+    val midId = full.agg(expr("percentile_approx(ven_id, 0.5)")).first().getLong(0)
+    // the source is replaced outside Spark, as an external loader would
+    // (a Spark write to the path would invalidate the session's caches)
+    def cut(table: String, key: String, upTo: Option[Long]): Unit = {
+      val t = spark.read.parquet(s"$dir/$table.parquet")
+      val staged = Files.createTempDirectory("graft-stage").resolve(table)
+      upTo.fold(t)(id => t.filter(col(key) <= id)).write.parquet(staged.toString)
+      Fs.delete(spark, s"$src/$table.parquet")
+      Files.move(staged, java.nio.file.Paths.get(s"$src/$table.parquet"))
+    }
+
+    cut("orders", "o_orderkey", Some(midId)); cut("lineitem", "l_orderkey", Some(midId))
+    val n1 = SalesPipeline.update(wh, src)
+    // the next night's source lands at the SAME path
+    cut("orders", "o_orderkey", None); cut("lineitem", "l_orderkey", None)
+    val n2 = SalesPipeline.update(wh, src)
+    assert(n1 > 0 && n2 > 0, s"second night extracted $n2 rows")
     assert(rowsOf(wh.read("ventas_limpias")) == rowsOf(full))
   }
 
@@ -113,5 +137,33 @@ class PipelinesSpec extends SparkSpec {
       InventoryPipeline.refreshStockPoints(wh)
       assert(rowsOf(wh.read("stock_points")) == expected)
     }
+  }
+
+  test("stock points: deleting points_last_dt rebuilds the whole table; a no-op night leaves the checkpoint alone") {
+    val wh = freshWh()
+    InventoryPipeline.updateLedger(wh, dir)
+    InventoryPipeline.refreshStockPoints(wh)
+    val expected = rowsOf(Stock.stockPointsFrom(wh.read("raw_stock_movements")))
+    assert(rowsOf(wh.read("stock_points")) == expected)
+
+    // a stale point no replay from the checkpoint would touch
+    val stale = wh.read("stock_points").limit(1)
+      .withColumn("point_date", lit("1999-01-01").cast("timestamp"))
+      .withColumn("sod_stock", lit(-42L)).localCheckpoint()
+    wh.append("stock_points", stale)
+    assert(wh.read("stock_points").filter(col("sod_stock") === -42L).count() == 1)
+
+    Fs.delete(spark, s"${wh.root}/_checkpoints/points_last_dt")
+    InventoryPipeline.refreshStockPoints(wh)
+    assert(rowsOf(wh.read("stock_points")) == expected)
+
+    def cpFiles(): Set[String] =
+      Option(new java.io.File(s"${wh.root}/_checkpoints/points_last_dt").list())
+        .map(_.toSet).getOrElse(Set.empty)
+    val before = cpFiles()
+    assert(before.nonEmpty)
+    assert(InventoryPipeline.refreshStockPoints(wh) == 0)
+    assert(cpFiles() == before, "a night that does not move the watermark must not rewrite it")
+    assert(rowsOf(wh.read("stock_points")) == expected)
   }
 }

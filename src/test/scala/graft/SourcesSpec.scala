@@ -146,7 +146,7 @@ class SourcesSpec extends SparkSpec {
       (2L, "2024-01-02", 20L, 200L),
       (2L, "2024-01-02", 25L, 201L)  // same version: tiebreak decides
     ).toDF("art_id", "version", "qty", "id_origen")
-    val out = Jdbc.prepareUpsertBatch(incoming, Seq("art_id"), "version", "id_origen")
+    val out = graft.operators.Upsert.latestPerKey(incoming, Seq("art_id"), "version", "id_origen")
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     assert(out == Set((1L, 30L), (2L, 25L)))
   }
