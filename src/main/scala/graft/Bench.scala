@@ -142,7 +142,7 @@ object Bench {
       ("ledger", Set("q08", "q09"),
         () => operators.Ledger.unionLedger(spark, sfDir).count(): Unit),
       ("stock", Set("q13", "q14", "q54"),
-        () => operators.Stock.stockPoints(spark, sfDir).count(): Unit),
+        () => operators.Stock.stockPoints(spark, sfDir).cache().count(): Unit),
       ("shingle", Set("q19", "q21", "q22", "q35", "q40", "q61", "q72", "q80",
         "q84", "q87", "q98", "q108", "q109"),
         () => operators.Dedup.shingleIndex(spark, sfDir).count(): Unit),

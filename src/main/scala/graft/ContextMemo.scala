@@ -41,6 +41,10 @@ private[graft] final class ContextMemo[K, V](rootOf: V => String = (_: V) => "")
   def get(spark: SparkSession, k: K)(build: => V): V =
     entries.getOrElseUpdate((spark.sparkContext, k), build)
 
+  /** The memoized value, if any; never builds. */
+  def peek(spark: SparkSession, k: K): Option[V] =
+    entries.get((spark.sparkContext, k))
+
   /** The memoized value, built on a miss into a fresh owned
     * `createTempDirectory(prefix)` root. The root is owned BEFORE the
     * insert, so a concurrent [[clear]] can never orphan it; a losing

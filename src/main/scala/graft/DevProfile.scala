@@ -37,7 +37,7 @@ object DevProfile {
       "shingle" -> (() => operators.Dedup.shingleIndex(spark, sfDir)),
       "cc" -> (() => operators.Graph.simhashComponents(spark, sfDir)),
       "legacy" -> (() => operators.Sales.legacyAggDecimal(spark, sfDir).cache()),
-      "stock" -> (() => operators.Stock.stockPoints(spark, sfDir)),
+      "stock" -> (() => operators.Stock.stockPoints(spark, sfDir).cache()),
       "ledger" -> (() => operators.Ledger.unionLedger(spark, sfDir)))
     val cacheFits: Map[String, () => Unit] = Map(
       "kmfit" -> (() => operators.Similarity.kmeansCentroids(spark, sfDir)),

@@ -66,7 +66,7 @@ object Sales {
     *
     * Not cached here: q02/q03/q04 share one build through the `legacy`
     * tier their harness caches (Spark's CacheManager matches it by
-    * plan), and the nightly extract ([[waterfallClean]]) must see a
+    * plan), and the nightly extract ([[cleanTickets]]) must see a
     * source that grew in place and get its watermark filter pushed into
     * the scans — a session cache keyed by the path would serve the first
     * night's aggregate forever.
@@ -168,10 +168,16 @@ object Sales {
       |  CAST(egresos AS DOUBLE) AS egresos
       |FROM agg ORDER BY venta""".stripMargin
 
+  /** q03 — [[cleanTickets]] in ticket order. */
+  def waterfallClean(spark: SparkSession, dir: String): DataFrame =
+    cleanTickets(spark, dir).orderBy(col("ven_id"))
+
   /** Payment waterfall + final projection — F1-F5 + P1/P2/P3
     * (reference etl_sales/transform.py:17-66). Built on top of legacyAgg.
+    * Unordered: the nightly extract reads it, and a sort there would only
+    * add a sampling job and a range exchange to every night.
     */
-  def waterfallClean(spark: SparkSession, dir: String): DataFrame = {
+  def cleanTickets(spark: SparkSession, dir: String): DataFrame = {
     val agg = legacyAggDecimal(spark, dir)
     val wf = SalesFns.withQaFlags(SalesFns.withWaterfall(agg))
     wf.withColumn("otros_final", SalesFns.finalOtros)
@@ -183,7 +189,6 @@ object Sales {
         col("otros_final").cast("double").as("otros"),
         col("total").cast("double").as("total_venta")
       )
-      .orderBy(col("ven_id"))
   }
 
   val waterfallCleanSql: String =

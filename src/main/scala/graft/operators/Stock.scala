@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
 /** The stock-point engine — the reference's flagship derivation
   * (etl_inventory/seed_stock_points.py, update_stock_points.py): replay an
   * event ledger into per-SKU running balances with absolute resets (R4),
-  * derive start-of-day stock over a dense calendar (R5/R6), compress to a
-  * sparse change-point series (R7), and read it back as-of a date (J9).
+  * derive the start-of-day change points straight from them (R5–R7, no
+  * calendar), and read them back as-of a date (J9).
   *
   * R4 formulation (SURVEY.md §2.5 R4a, refined to a SINGLE shuffle): instead
   * of the reference's per-row Python loop (seed_stock_points.py:74-85), the
@@ -121,42 +121,10 @@ object Stock {
       |FROM bal
       |ORDER BY tienda_id, art_id, fecha, id_origen""".stripMargin
 
-  /** Dense start-of-day stock per (store, SKU, calendar day): R4 balances →
-    * end-of-day value per active day → calendar densification (D1/D2' —
-    * long-format cross join, never the pandas pivot) → forward fill → SOD =
-    * yesterday's EOD (R5/R6; reference seed_stock_points.py:92-116).
-    * Parametric over any ledger frame (the incremental pipeline layer
-    * passes a seeded/re-filtered ledger).
+  /** The reference's dense form of R5/R6 as DuckDB CTEs — keys × a daily
+    * calendar, forward fill, SOD = yesterday's EOD — kept for the oracles
+    * only, where it checks the sparse [[stockPointsFrom]] independently.
     */
-  def denseSodFrom(ledger: DataFrame): DataFrame = {
-    val bal = withBalance(ledger)
-    // end-of-day balance per active (key, day)
-    val wDay = Window.partitionBy(col("tienda_id"), col("art_id"), col("d"))
-      .orderBy(col("fecha").desc, col("id_origen").desc)
-    val eod = bal
-      .withColumn("d", to_date(col("fecha")))
-      .withColumn("rn", row_number().over(wDay))
-      .filter(col("rn") === 1)
-      .select(col("tienda_id"), col("art_id"), col("d"), col("balance").as("eod"))
-    // D1 calendar spanning the whole ledger (distributed; no driver collect)
-    val cal = ledger
-      .agg(min(to_date(col("fecha"))).as("d0"), max(to_date(col("fecha"))).as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("d"))
-    val keys = ledger
-      .select(col("tienda_id"), col("art_id")).distinct()
-    // D2': stay long — keys × calendar, left join actual EODs
-    val dense = keys.crossJoin(broadcast(cal))
-      .join(eod, Seq("tienda_id", "art_id", "d"), "left")
-    val wFill = Window.partitionBy(col("tienda_id"), col("art_id"))
-      .orderBy(col("d"))
-    dense
-      .withColumn("eod_f", coalesce(
-        last(col("eod"), ignoreNulls = true)
-          .over(wFill.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
-        lit(0L)))
-      .withColumn("sod", lag(col("eod_f"), 1, 0L).over(wFill))
-  }
-
   val denseSodCte: String =
     s"""$ledgerPrelude,
       |$balanceCte,
@@ -188,31 +156,50 @@ object Stock {
       |    PARTITION BY tienda_id, art_id ORDER BY d), 0) AS sod
       |  FROM filled)""".stripMargin
 
-  /** q13 — R7 change-point compression of the dense SOD series: keep a row
-    * iff SOD differs from the previous value, with the previous value
-    * DEFAULTING TO 0 (reference seed_stock_points.py:119-127 also emits a
-    * first-day row when the value is 0; we suppress those zero baselines so
-    * the series is a pure delta encoding — "no point yet" ≡ 0 on read, and
-    * incremental reprocessing windows (Pipelines.refreshStockPoints) emit
-    * byte-identical points regardless of where the window starts).
+  /** q13 — the change-point series (R5–R7), presentation-ordered. The
+    * `stock` tier of `Bench`/`DevProfile` caches this frame, so q13, q14
+    * and q54 share one replay there; the operator itself never caches.
     */
   def stockPoints(spark: SparkSession, dir: String): DataFrame =
-    // cached: q13 returns it and q14's as-of lookup re-reads it — one
-    // materialization of the whole replay lineage serves both (the
-    // parametric stockPointsFrom used by the pipelines stays uncached)
-    stockPointsFrom(Tables.ledger(spark, dir)).cache()
-
-  /** Parametric form over any ledger frame. */
-  def stockPointsFrom(ledger: DataFrame): DataFrame = {
-    val wFill = Window.partitionBy(col("tienda_id"), col("art_id"))
-      .orderBy(col("d"))
-    denseSodFrom(ledger)
-      .withColumn("prev_sod", lag(col("sod"), 1).over(wFill))
-      .filter(col("sod") =!= coalesce(col("prev_sod"), lit(0L)))
-      .select(col("tienda_id").as("store_id"), col("art_id"),
-        col("d").cast("timestamp").as("point_date"),
-        col("sod").as("sod_stock"))
+    stockPointsFrom(Tables.ledger(spark, dir))
       .orderBy(col("store_id"), col("art_id"), col("point_date"))
+
+  /** Start-of-day stock as a sparse change-point series, derived straight
+    * from the R4 balances over any ledger frame (the incremental pipeline
+    * passes a seeded, re-filtered one). The reference densifies every SKU
+    * over a daily calendar, forward-fills, takes SOD = yesterday's EOD and
+    * keeps a row where SOD changes, the previous value defaulting to 0
+    * (seed_stock_points.py:92-127; the dense form survives as the oracle,
+    * [[stockPointsSql]]). SOD only changes the day after an active day,
+    * so the series is, per key: a point at `e + 1` worth `EOD(e)` for each
+    * active day `e` whose end-of-day balance differs from the previous
+    * active day's (0 before the first), while `e + 1` is still inside the
+    * calendar, i.e. `e` < the ledger's last day. Zero baselines are never
+    * emitted, so "no point yet" ≡ 0 on read and a replay window emits
+    * byte-identical points wherever it starts.
+    *
+    * One shuffle: the last event of each day and the previous day's close
+    * are offset windows over the balance's own (store, SKU) partitioning
+    * and (fecha, id_origen) order. The last day is a 1-row aggregate,
+    * broadcast. Rows with a NULL `fecha` still move their key's balance
+    * but close no day; rows with a NULL key emit nothing (the dense left
+    * join drops them too). Unordered: callers that present it sort.
+    */
+  def stockPointsFrom(ledger: DataFrame): DataFrame = {
+    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col("fecha"), col("id_origen"))
+    val lastDay = ledger.agg(max(to_date(col("fecha"))).as("last_d"))
+    withBalance(ledger)
+      .withColumn("d", to_date(col("fecha")))
+      .withColumn("next_d", lead(col("d"), 1).over(w))
+      .filter(col("d").isNotNull && !(col("next_d") <=> col("d")))
+      .withColumn("prev_eod", lag(col("balance"), 1, 0L).over(w))
+      .filter(col("balance") =!= col("prev_eod") &&
+        col("tienda_id").isNotNull && col("art_id").isNotNull)
+      .crossJoin(broadcast(lastDay))
+      .filter(col("d") < col("last_d"))
+      .select(col("tienda_id").as("store_id"), col("art_id"),
+        date_add(col("d"), 1).cast("timestamp").as("point_date"),
+        col("balance").as("sod_stock"))
   }
 
   val stockPointsSql: String =

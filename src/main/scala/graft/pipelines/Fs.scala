@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Fs {
 
-  private def fsOf(spark: SparkSession, p: Path) =
+  private[pipelines] def fsOf(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   def exists(spark: SparkSession, path: String): Boolean = {

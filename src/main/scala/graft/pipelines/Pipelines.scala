@@ -32,7 +32,7 @@ object SalesPipeline {
     */
   private def extract(wh: Warehouse, srcDir: String, upToId: Option[Long])
                      (cp: Option[Long]): DataFrame = {
-    val full = Sales.waterfallClean(wh.spark, srcDir)
+    val full = Sales.cleanTickets(wh.spark, srcDir)
     val upTo = upToId.fold(full)(id => full.filter(col("ven_id") <= id))
     cp.fold(upTo)(c => upTo.filter(col("ven_id") > c))
   }
@@ -108,36 +108,46 @@ object InventoryPipeline {
 
   /** Stock-point derivation with the reference's date-watermark semantics
     * (update_stock_points.py:79-109): each key's balance is SEEDED from
-    * the as-of SOD at the checkpoint date and only events from that date
-    * onward are replayed; a cold start is the same replay with no seed
-    * and no date filter. The seed is injected as a synthetic absolute
-    * event (id_origen = -1 sorts before every real event), so the
-    * standard R4 window replay needs no special cases. Emitted points at
-    * the boundary that merely restate the seed value are dropped, keeping
-    * the change-point series identical to a full rebuild.
+    * the as-of stock point at the checkpoint date and only events from
+    * that date onward are replayed; a cold start is the same replay with
+    * no seed and no date filter. The seed is injected as a synthetic
+    * absolute event (id_origen = -1 sorts before every real event), so the
+    * standard R4 window replay needs no special cases, and only points
+    * after the checkpoint are kept, so the series stays identical to a
+    * full rebuild.
     *
     * Without a checkpoint the result replaces the whole table — deleting
     * `points_last_dt` is how an operator forces a rebuild; with one, it is
-    * the S9 keyed merge on (store_id, art_id, point_date). Returns the
-    * number of points upserted.
+    * the S9 keyed merge on (store_id, art_id, point_date). A night whose
+    * ledger files are the ones the last refresh derived from runs no Spark
+    * job. Returns the number of points upserted.
     */
   def refreshStockPoints(wh: Warehouse): Long = {
     // nothing ingested yet (Graft.nightly on a fresh warehouse): no-op
     // rather than a path-not-found / NPE on the empty max() below
     if (!wh.exists("raw_stock_movements")) return 0L
-    val ledger = wh.read("raw_stock_movements")
     val cpDays = wh.checkpoint("points_last_dt")
+    // no-op short cut: the committed points derive from exactly these
+    // ledger files. Keyed on the table, not on `ledger_last_ts`: a crash
+    // between the ledger append and its watermark advance leaves rows the
+    // watermark does not show. Listed BEFORE the read, so the stored value
+    // never vouches for rows this replay did not see.
+    val ledgerFiles = wh.fingerprint("raw_stock_movements")
+    val derivedFrom = wh.checkpoint(LedgerFilesCp)
+    if (cpDays.nonEmpty && wh.exists("stock_points") && derivedFrom.contains(ledgerFiles))
+      return 0L
+    val ledger = wh.read("raw_stock_movements")
     val cpDate = cpDays.map(d => date_from_unix_date(lit(d.toInt)))
 
     val replay = cpDate.fold(ledger) { cp =>
       // J9 as-of seed: latest point per key at or before the checkpoint
       val wAsOf = Window.partitionBy(col("store_id"), col("art_id"))
         .orderBy(col("point_date").desc)
-      // synthetic absolute seed event TWO days before the window: the
-      // replay calendar then derives SOD(cp-1) = seed, so the change-
-      // point comparison at the cp day is against the true prior value
-      // (a cp-1 seed would leave SOD(cp-1) at the lag default 0 and
-      // re-emit an unchanged point at cp)
+      // the seed closes day cp-2 at the as-of value, so the first replayed
+      // day's change is judged against the true previous close. Its own
+      // point lands at cp-1, outside the window; the point at cp belongs
+      // to day cp-1, whose events the replay does not read, so the
+      // committed one stays as it is
       val seedEvents = wh.read("stock_points")
         .filter(to_date(col("point_date")) <= cp)
         .withColumn("rn", row_number().over(wAsOf))
@@ -153,9 +163,6 @@ object InventoryPipeline {
           lit("__seed__").as("usuario"))
       ledger.filter(to_date(col("fecha")) >= cp).unionByName(seedEvents)
     }
-    // change-point compression with prev-defaults-to-0 semantics makes
-    // this exact: the synthetic seed event reproduces EOD(cp-1), so the
-    // replay emits a point at/after cp iff the full rebuild would
     val replayed = Stock.stockPointsFrom(replay)
     val points = cpDate.fold(replayed)(cp =>
       replayed.filter(to_date(col("point_date")) >= cp)).cache()
@@ -168,7 +175,14 @@ object InventoryPipeline {
       // (max() is NULL) leaves the checkpoint untouched
       if (!maxRow.isNullAt(0) && !cpDays.contains(maxRow.getInt(0).toLong))
         wh.setCheckpoint("points_last_dt", maxRow.getInt(0).toLong)
+      // last: it vouches for every commit above
+      if (!derivedFrom.contains(ledgerFiles)) wh.setCheckpoint(LedgerFilesCp, ledgerFiles)
       n
     } finally points.unpersist()
   }
+
+  /** The [[Warehouse.fingerprint]] of the ledger files the committed stock
+    * points derive from.
+    */
+  private val LedgerFilesCp = "points_ledger_files"
 }

@@ -1,8 +1,11 @@
 package graft.pipelines
 
+import java.nio.charset.StandardCharsets.UTF_8
 import graft.operators.Upsert
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Sink seam for the S8/S9 keyed merges — the reference's
   * `INSERT … ON DUPLICATE KEY UPDATE` (db_helpers.py:25-40,
@@ -84,24 +87,55 @@ final class Warehouse(val spark: SparkSession, val root: String) extends UpsertS
 
   def exists(table: String): Boolean = Fs.exists(spark, path(table))
 
+  /** A table read. Parquet schema inference is a Spark job per read, so
+    * the resolved schema is kept per table path ([[Warehouse.schemas]])
+    * with the [[fingerprint]] of the listing it belongs to, and reused
+    * while that listing is unchanged.
+    */
   def read(table: String): DataFrame = {
-    // complete any interrupted swap before resolving files — a reader
-    // must never observe the mid-swap "table missing" state
-    Fs.heal(spark, path(table))
-    spark.read.parquet(path(table))
+    // the fingerprint heals first: a reader must never observe the
+    // mid-swap "table missing" state
+    val fp = fingerprint(table)
+    knownSchema(table, fp) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path(table))
+      case None =>
+        val df = spark.read.parquet(path(table))
+        Warehouse.schemas.install(spark, path(table), (fp, df.schema))
+        df
+    }
   }
 
-  def write(table: String, df: DataFrame): Unit =
+  /** `table`'s schema as last resolved or written, if its listing is
+    * still the one with fingerprint `fp`.
+    */
+  private def knownSchema(table: String, fp: Long): Option[StructType] =
+    Warehouse.schemas.peek(spark, path(table)).collect { case (`fp`, s) => s }
+
+  /** Keep `schema` as `table`'s resolved schema for its current listing;
+    * a parquet read resolves the written schema, all fields nullable, and
+    * `read` applies the same nullability to a given one.
+    */
+  private def remember(table: String, schema: StructType): Unit =
+    Warehouse.schemas.install(spark, path(table), (fingerprint(table), schema))
+
+  def write(table: String, df: DataFrame): Unit = {
     Fs.replaceWith(spark, path(table))(tmp => df.write.parquet(tmp))
+    remember(table, df.schema)
+  }
 
   def append(table: String, df: DataFrame): Unit = {
     // complete any interrupted swap BEFORE appending: in the mid-swap
     // window (`.bak` present, target missing) an unhealed append would
     // recreate the target with only the new rows, and the next heal()
     // — seeing both present — would drop the backup, the only complete
-    // copy. The read path heals; the write paths must too.
-    Fs.heal(spark, path(table))
+    // copy. The read path heals; the write paths must too ([[exists]]
+    // heals).
+    val before = if (exists(table)) knownSchema(table, fingerprint(table)) else Some(df.schema)
     df.write.mode(SaveMode.Append).parquet(path(table))
+    // files with the table's columns leave its schema as it was; else
+    // the next read resolves it
+    def columns(s: StructType) = s.fields.toSeq.map(f => (f.name, f.dataType))
+    before.filter(s => columns(s) == columns(df.schema)).foreach(remember(table, _))
   }
 
   /** Keyed-guard append: append the rows of `rows` whose `keys` are not
@@ -242,36 +276,73 @@ final class Warehouse(val spark: SparkSession, val root: String) extends UpsertS
     Fs.replaceWith(spark, path(table))(tmp =>
       df.write.partitionBy(partitionCols: _*).parquet(tmp))
 
-  /** Scalar checkpoint per (pipeline, key) — the `etl_progress` row. Stored
-    * as a tiny one-row parquet; read returns None before the first seed.
+  /** Scalar checkpoint per (pipeline, key) — the `etl_progress` row: the
+    * decimal text of one file, `_checkpoints/<name>/value`, read through
+    * the Hadoop FS API after [[Fs.heal]], so a read runs no Spark job.
+    * None before the first seed.
     */
-  def checkpoint(name: String): Option[Long] =
-    if (!exists(s"_checkpoints/$name")) None
-    else read(s"_checkpoints/$name").select(col("v")).collect().headOption.map(_.getLong(0))
+  def checkpoint(name: String): Option[Long] = {
+    val dir = new Path(path(s"_checkpoints/$name"))
+    Fs.heal(spark, dir.toString)
+    val fs = Fs.fsOf(spark, dir)
+    val file = new Path(dir, Warehouse.CheckpointFile)
+    if (!fs.exists(dir)) None
+    else if (!fs.exists(file)) throw new IllegalStateException(
+      s"checkpoint $dir holds no ${Warehouse.CheckpointFile} file (an older layout?). " +
+        "Deleting the directory is safe: each pipeline re-runs idempotently " +
+        "from no checkpoint.")
+    else {
+      val in = fs.open(file)
+      try Some(new String(in.readAllBytes(), UTF_8).trim.toLong) finally in.close()
+    }
+  }
 
-  def setCheckpoint(name: String, v: Long): Unit = {
-    import spark.implicits._
-    write(s"_checkpoints/$name", Seq(v).toDF("v"))
+  /** Commit checkpoint `name` = `v` through the [[Fs.replaceWith]] swap
+    * every table rides: a crash leaves the old value readable.
+    */
+  def setCheckpoint(name: String, v: Long): Unit =
+    Fs.replaceWith(spark, path(s"_checkpoints/$name")) { tmp =>
+      val file = new Path(tmp, Warehouse.CheckpointFile)
+      val out = Fs.fsOf(spark, file).create(file, false)
+      try out.write(v.toString.getBytes(UTF_8)) finally out.close()
+    }
+
+  /** The data files currently backing `table` (healed first), from one
+    * recursive listing; none when the table is missing. Underscore/dot-
+    * prefixed entries (_SUCCESS, .crc side files) don't count: only data
+    * files cost scan tasks and NameNode/listing pressure.
+    */
+  private def dataFiles(table: String): Seq[FileStatus] = {
+    Fs.heal(spark, path(table))
+    val p = new Path(path(table))
+    val fs = Fs.fsOf(spark, p)
+    if (!fs.exists(p)) Nil
+    else {
+      val it = fs.listFiles(p, true)
+      val out = Seq.newBuilder[FileStatus]
+      while (it.hasNext) {
+        val st = it.next()
+        val name = st.getPath.getName
+        if (!name.startsWith("_") && !name.startsWith(".")) out += st
+      }
+      out.result()
+    }
   }
 
   /** Number of data files currently backing `table` — the fragmentation
-    * metric the append cadence watches. Underscore/dot-prefixed entries
-    * (_SUCCESS, .crc side files) don't count: only data files cost scan
-    * tasks and NameNode/listing pressure.
+    * metric the append cadence watches.
     */
-  def dataFileCount(table: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(path(table))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 0
-    else {
-      val it = fs.listFiles(p, true)
-      var n = 0
-      while (it.hasNext) {
-        val name = it.next().getPath.getName
-        if (!name.startsWith("_") && !name.startsWith(".")) n += 1
-      }
-      n
-    }
+  def dataFileCount(table: String): Int = dataFiles(table).size
+
+  /** A 64-bit digest of the paths and sizes of `table`'s data files, from
+    * one listing: every committed write, append or swap changes it (part
+    * names are unique per write job), and nothing else does.
+    */
+  def fingerprint(table: String): Long = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    dataFiles(table).map(st => s"${st.getPath}\t${st.getLen}\n").sorted
+      .foreach(line => md.update(line.getBytes(UTF_8)))
+    java.nio.ByteBuffer.wrap(md.digest()).getLong
   }
 
   /** Compact an append-grown table: one narrow read → coalesce to
@@ -296,9 +367,8 @@ final class Warehouse(val spark: SparkSession, val root: String) extends UpsertS
     * least one — the rewrite sizing of [[compact]] and [[replaceKeys]].
     */
   private def outputFiles(table: String, targetFileBytes: Long): Int = {
-    val p = new org.apache.hadoop.fs.Path(path(table))
-    val bytes = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getContentSummary(p).getLength
+    val p = new Path(path(table))
+    val bytes = Fs.fsOf(spark, p).getContentSummary(p).getLength
     math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
   }
 
@@ -351,4 +421,12 @@ object Warehouse {
     * bounded, large enough that the rewrite amortizes.
     */
   val CompactMaxFiles: Int = 256
+
+  /** The value file of a checkpoint directory. */
+  private val CheckpointFile = "value"
+
+  /** Resolved table schemas per table path, each with the [[fingerprint]]
+    * of the listing it was resolved (or written) for.
+    */
+  private val schemas = new graft.ContextMemo[String, (Long, StructType)]
 }

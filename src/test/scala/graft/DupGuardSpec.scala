@@ -89,6 +89,9 @@ class DupGuardSpec extends AnyFunSuite {
       stripNoise(new String(java.nio.file.Files.readAllBytes(p)))
     assert(!code(root.resolve("operators/Sales.scala")).contains(".cache()"),
       "operators/Sales.scala must not cache: the nightly extract reads it")
+    assert(!code(root.resolve("operators/Stock.scala")).contains(".cache()"),
+      "operators/Stock.scala must not cache: the nightly replay reads it, " +
+        "and the stock tier caches stockPoints once")
     val merges = java.nio.file.Files.walk(root.resolve("pipelines")).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .filter(p => code(p).contains("Upsert.upsertByKey"))

@@ -166,4 +166,110 @@ class PipelinesSpec extends SparkSpec {
     assert(cpFiles() == before, "a night that does not move the watermark must not rewrite it")
     assert(rowsOf(wh.read("stock_points")) == expected)
   }
+
+  test("stock points: ledger rows whose watermark never advanced are still replayed") {
+    val wh = freshWh()
+    val fullLedger = Tables.ledger(spark, dir)
+    val midTs = new java.sql.Timestamp(
+      fullLedger.agg(expr("percentile_approx(unix_micros(fecha), 0.5)"))
+        .first().getLong(0) / 1000)
+    InventoryPipeline.updateLedger(wh, dir, upToTs = Some(midTs))
+    InventoryPipeline.refreshStockPoints(wh)
+    val cpTs = wh.checkpoint("ledger_last_ts")
+
+    // a crash between the ledger append and its watermark advance: the
+    // rows are in the table, `ledger_last_ts` does not show them
+    wh.append("raw_stock_movements", fullLedger.filter(col("fecha") > midTs))
+    assert(wh.checkpoint("ledger_last_ts") == cpTs)
+    assert(InventoryPipeline.refreshStockPoints(wh) > 0)
+    val expected = rowsOf(Stock.stockPointsFrom(fullLedger))
+    assert(rowsOf(wh.read("stock_points")) == expected)
+
+    // the recovery night lands nothing new, and its refresh is the no-op
+    assert(InventoryPipeline.updateLedger(wh, dir) == 0)
+    assert(InventoryPipeline.refreshStockPoints(wh) == 0)
+    assert(rowsOf(wh.read("stock_points")) == expected)
+  }
+
+  test("nightly: a re-run on unchanged sources returns (0,0,0) in a pinned number of jobs, none from the refresh") {
+    val wh = freshWh()
+    val sc = spark.sparkContext
+    val first = Graft.nightly(wh, dir)
+    assert(first._1 > 0 && first._2 > 0 && first._3 > 0)
+    val (again, jobs) = org.apache.spark.SparkJobs.count(sc)(Graft.nightly(wh, dir))
+    assert(again == ((0L, 0L, 0L)))
+    // the bookkeeping of a night with nothing new: the sales extract's
+    // count-and-max and the ledger ingest's, each with its source-table
+    // schema resolution and adaptive stages. A rise means a night grew a
+    // job back.
+    val pinned = 11
+    assert(jobs == pinned, s"a no-op night ran $jobs Spark jobs (pinned $pinned)")
+    val (points, refreshJobs) =
+      org.apache.spark.SparkJobs.count(sc)(InventoryPipeline.refreshStockPoints(wh))
+    assert(points == 0 && refreshJobs == 0, s"the no-op refresh ran $refreshJobs jobs")
+  }
+
+  test("checkpoint: round trip, in no Spark job") {
+    val wh = freshWh()
+    val (_, jobs) = org.apache.spark.SparkJobs.count(spark.sparkContext) {
+      assert(wh.checkpoint("cp").isEmpty)
+      wh.setCheckpoint("cp", 42L)
+      assert(wh.checkpoint("cp") == Some(42L))
+      wh.setCheckpoint("cp", Long.MinValue)
+      assert(wh.checkpoint("cp") == Some(Long.MinValue))
+    }
+    assert(jobs == 0, s"checkpoint reads and writes ran $jobs Spark jobs")
+  }
+
+  test("checkpoint: a crash between the swap renames reads the old value; a stale tmp is ignored, then removed") {
+    val wh = freshWh()
+    val cps = java.nio.file.Paths.get(wh.root, "_checkpoints")
+    wh.setCheckpoint("cp", 7L)
+    // crash after rename(target -> .bak), before rename(tmp -> target):
+    // the old value comes back, and the crashed write's tmp is not read
+    Files.move(cps.resolve("cp"), cps.resolve("cp.bak"))
+    Files.createDirectories(cps.resolve("cp.tmp-crashed"))
+    Files.write(cps.resolve("cp.tmp-crashed/value"), "8".getBytes("UTF-8"))
+    assert(wh.checkpoint("cp") == Some(7L))
+    assert(!Files.exists(cps.resolve("cp.bak")))
+    // the next write retires the tmp
+    wh.setCheckpoint("cp", 9L)
+    assert(wh.checkpoint("cp") == Some(9L))
+    assert(!Files.exists(cps.resolve("cp.tmp-crashed")))
+  }
+
+  test("checkpoint: a directory without the value file fails loud, naming the path and the safe repair") {
+    import spark.implicits._
+    val wh = freshWh()
+    // the one-row parquet layout checkpoints used to have
+    val dir = s"${wh.root}/_checkpoints/old"
+    Seq(5L).toDF("v").write.parquet(dir)
+    val e = intercept[IllegalStateException](wh.checkpoint("old"))
+    assert(e.getMessage.contains("_checkpoints/old"), e.getMessage)
+    assert(e.getMessage.contains("Deleting the directory is safe"), e.getMessage)
+  }
+
+  test("warehouse: a read reuses the schema the warehouse wrote or resolved while the listing is unchanged") {
+    import spark.implicits._
+    val wh = freshWh()
+    val sc = spark.sparkContext
+    val rows = Seq((1L, "a", Option(2.5)), (2L, "b", None)).toDF("k", "s", "x")
+    def inferred(t: String) = spark.read.parquet(s"${wh.root}/$t").schema
+    def schemaJobs(t: String) = org.apache.spark.SparkJobs.count(sc)(wh.read(t).schema)
+    wh.write("t", rows)
+    val (afterWrite, j1) = schemaJobs("t")
+    assert(j1 == 0, s"a read after the warehouse's own write resolved the schema in $j1 jobs")
+    assert(afterWrite == inferred("t"))
+    wh.append("t", rows.limit(1))
+    val (afterAppend, j2) = schemaJobs("t")
+    assert(j2 == 0, s"an append of the table's own columns resolved the schema in $j2 jobs")
+    assert(afterAppend == inferred("t"))
+    // files the warehouse did not write: the next read resolves them, once
+    rows.write.mode("append").parquet(s"${wh.root}/t")
+    val (external, j3) = schemaJobs("t")
+    assert(j3 > 0 && external == inferred("t"))
+    val (again, j4) = schemaJobs("t")
+    assert(j4 == 0 && again == external)
+    assert(wh.read("t").count() == 5)
+  }
 }

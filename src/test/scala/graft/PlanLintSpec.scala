@@ -42,9 +42,9 @@ class PlanLintSpec extends SparkSpec {
     "q07_watermark_incr" -> (1 -> "1-row checkpoint scalar, > theta (Incremental.scala:86)"),
     "q08_union_ledger" -> (1 -> "store dimension, != theta — J4 (Ledger.scala:82)"),
     "q09_refilter_ledger" -> (1 -> "same J4 store-dim theta via the shared ledger branch"),
-    "q13_stock_points" -> (1 -> "|days| calendar densify — D1 (Stock.scala:186)"),
-    "q14_asof_lookup" -> (1 -> "inherits q13's calendar densify (as-of reads stockPoints)"),
-    "q54_stock_intervals" -> (1 -> "inherits q13's calendar densify (SCD2 reads stockPoints)"),
+    "q13_stock_points" -> (1 -> "1-row ledger last-day bound (Stock.stockPointsFrom)"),
+    "q14_asof_lookup" -> (1 -> "inherits q13's last-day bound (as-of reads stockPoints)"),
+    "q54_stock_intervals" -> (1 -> "inherits q13's last-day bound (SCD2 reads stockPoints)"),
     "q25_cosine_topk" -> (1 -> ("deliberate brute-force BASELINE; probes are the bounded " +
       "query set (scale path is q26/q31/q83)")),
     "q31_ivf_ann" -> (2 -> ("coarse-centroid table, |C| = IVF cell count (model constant); " +
@@ -164,8 +164,11 @@ class PlanLintSpec extends SparkSpec {
     "q10_earliest_per_day" -> 2,
     "q11_daily_net" -> 2,
     "q12_running_balance" -> 2,
-    "q13_stock_points" -> 4,
-    "q14_asof_lookup" -> 6,
+    "q13_stock_points" -> 3,      // sparse change points: the balance
+                                  // window exchange + the 1-row last-day
+                                  // agg + the presentation sort (4 with
+                                  // the dense calendar's key distinct)
+    "q14_asof_lookup" -> 5,       // q13's 3 + the as-of window + sort
     "q15_reconcile" -> 6,
     "q16_token_stats" -> 2,
     "q17_lang_profile" -> 2,
@@ -205,7 +208,7 @@ class PlanLintSpec extends SparkSpec {
     "q51_fuzzy_titles" -> 1,
     "q52_setop_cohorts" -> 3,
     "q53_sql_exists" -> 1,
-    "q54_stock_intervals" -> 6,
+    "q54_stock_intervals" -> 5,   // q13's 3 + the lead window + sort
     "q55_quantiles_cont" -> 2,
     "q56_char_histogram" -> 3,
     "q57_interval_join" -> 4,

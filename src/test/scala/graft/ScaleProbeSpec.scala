@@ -55,17 +55,29 @@ class ScaleProbeSpec extends SparkSpec {
     }
   }
 
-  test("q13 dense stock-points plan shape is invariant in data size") {
+  test("q13 sparse stock-points plan shape is invariant in data size") {
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
     withAqeOff {
       val ledger = Tables.ledger(spark, dir)
-      val p1 = planOf(Stock.denseSodFrom(blowUpLedger(ledger, 1)))
-      val p10 = planOf(Stock.denseSodFrom(blowUpLedger(ledger, 10)))
+      val df10 = Stock.stockPointsFrom(blowUpLedger(ledger, 10))
+      val p1 = planOf(Stock.stockPointsFrom(blowUpLedger(ledger, 1)))
+      val p10 = planOf(df10)
       assert(shuffleCount(p1) == shuffleCount(p10), s"1x=$p1\n10x=$p10")
-      assert(shuffleCount(p10) <= 6, s"plan grew a shuffle web:\n$p10")
-      // densify is keys × broadcast(calendar): nested-loop over a tiny
-      // broadcast side, never a shuffled cartesian
+      // no calendar: nothing crosses keys with days
       assert(!p10.contains("CartesianProduct"))
-      assert(p10.contains("BroadcastNestedLoopJoin"))
+      // the one nested-loop join bounds the series by the ledger's last
+      // day — its broadcast side is that 1-row global aggregate
+      val bnljs = df10.queryExecution.executedPlan.collect {
+        case j: BroadcastNestedLoopJoinExec => j
+      }
+      assert(bnljs.size == 1, p10)
+      val j = bnljs.head
+      val built = if (j.buildSide == BuildRight) j.right else j.left
+      assert(built.output.map(_.name) == Seq("last_d"), p10)
+      val aggs = built.collect { case a: BaseAggregateExec => a }
+      assert(aggs.nonEmpty && aggs.forall(_.groupingExpressions.isEmpty), p10)
     }
   }
 

@@ -15,6 +15,11 @@ case class Ev(id_origen: Long, art_id: Long, tienda_id: Int,
               fecha: Timestamp, is_absolute: Boolean,
               delta_cantidad: Option[Long], abs_stock_after: Option[Long])
 
+/** A ledger row with every nullable column nullable, keys included. */
+case class NEv(id_origen: Long, art_id: Option[Long], tienda_id: Option[Int],
+               fecha: Option[Timestamp], is_absolute: Boolean,
+               delta_cantidad: Option[Long], abs_stock_after: Option[Long])
+
 class StockSpec extends SparkSpec {
   import spark.implicits._
 
@@ -150,5 +155,80 @@ class StockSpec extends SparkSpec {
     val b = expanded.collect().map(r => (r.getInt(0), r.getLong(1), r.getDate(2).toString, r.getLong(3))).toSet
     assert(a == b)
     assert(points.count() == 4) // 3 change days for key (0,10), 1 for (1,20)
+  }
+
+  /** The reference's dense derivation on the driver
+    * (seed_stock_points.py:92-127): per-key replay (NULL `fecha` first,
+    * ties by id_origen; a NULL absolute keeps the last non-null one),
+    * end-of-day balance per active day, a daily calendar over the whole
+    * ledger's days, forward fill, SOD = yesterday's EOD (0 on the first
+    * day), and a point wherever SOD differs from the day before, that
+    * defaulting to 0. Keys with a NULL part emit nothing (the left join
+    * onto the calendar drops them). Days are UTC, the session's zone.
+    */
+  private def densePoints(evs: Seq[NEv]): Set[(Int, Long, Long, Long)] = {
+    def day(t: Timestamp): Long = Math.floorDiv(t.getTime, 86400000L)
+    val days = evs.flatMap(_.fecha).map(day)
+    if (days.isEmpty) return Set.empty
+    val (d0, d1) = (days.min, days.max)
+    evs.groupBy(e => (e.tienda_id, e.art_id)).toSeq.flatMap {
+      case ((Some(tid), Some(art)), g) =>
+        var running = 0L
+        var lastAbs = 0L
+        val eod = scala.collection.mutable.Map.empty[Long, Long]
+        g.sortBy(e => (e.fecha.map(_.getTime).getOrElse(Long.MinValue), e.id_origen)).foreach { e =>
+          if (e.is_absolute) {
+            lastAbs = e.abs_stock_after.getOrElse(lastAbs)
+            running = lastAbs
+          } else running += e.delta_cantidad.getOrElse(0L)
+          e.fecha.foreach(t => eod(day(t)) = running)
+        }
+        var filled = 0L
+        var sod = 0L
+        var prevSod = 0L
+        (d0 to d1).flatMap { d =>
+          sod = if (d == d0) 0L else filled
+          filled = eod.getOrElse(d, filled)
+          val point = if (sod != prevSod) Some((tid, art, d * 86400000L, sod)) else None
+          prevSod = sod
+          point
+        }
+      case _ => Nil
+    }.toSet
+  }
+
+  private def sparsePoints(evs: Seq[NEv]): Set[(Int, Long, Long, Long)] =
+    Stock.stockPointsFrom(evs.toDF().withColumn("tipo_movimiento", lit("x")))
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getTimestamp(2).getTime, r.getLong(3)))
+      .toSet
+
+  test("scalacheck: sparse change points == the dense-calendar reference") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    // 4-hour slots over 5 days: several events a day, frequent ties
+    val lastSlot = 29L
+    def at(slot: Long): Timestamp = ts(slot * 4 * 3600)
+    val genEv: Gen[Int => NEv] = for {
+      art <- Gen.frequency(9 -> Gen.choose(0L, 3L).map(Option(_)), 1 -> Gen.const(None))
+      tid <- Gen.frequency(9 -> Gen.choose(0, 1).map(Option(_)), 1 -> Gen.const(None))
+      slot <- Gen.frequency(9 -> Gen.choose(0L, lastSlot).map(Option(_)), 1 -> Gen.const(None))
+      isAbs <- Gen.prob(0.25)
+      d <- Gen.frequency(9 -> Gen.choose(-10L, 10L).map(Option(_)), 1 -> Gen.const(None))
+      a <- Gen.frequency(3 -> Gen.const(Option(0L)), 6 -> Gen.choose(-20L, 20L).map(Option(_)),
+        1 -> Gen.const(None))
+    } yield (i: Int) =>
+      NEv(i.toLong, art, tid, slot.map(at), isAbs,
+        if (isAbs) None else d, if (isAbs) a else None)
+    // a key whose only event falls on the ledger's last day
+    val lastDayOnly = (i: Int) => NEv(i.toLong, Some(9L), Some(2), Some(at(lastSlot)),
+      is_absolute = false, Some(5L), None)
+    val genEvs = Gen.frequency(
+      1 -> Gen.const(Seq.empty[NEv]),
+      9 -> Gen.choose(1, 60).flatMap(n => Gen.listOfN(n, genEv)).map { fs =>
+        (fs :+ lastDayOnly).zipWithIndex.map { case (f, i) => f(i + 1) }
+      })
+    val prop = Prop.forAll(genEvs)(evs => sparsePoints(evs) == densePoints(evs))
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(20), prop)
+    assert(res.passed, res.status.toString)
+    assert(sparsePoints(Nil).isEmpty, "the empty ledger has no points")
   }
 }
