@@ -15,12 +15,13 @@ import org.apache.spark.sql.SparkSession
   * also the CacheManager's).
   *
   * Roots: [[getAt]] builds into a fresh temp directory that this memo
-  * OWNS; an [[install]]ed value (a test seam's poisoned index, a
-  * durable `open*Index` root) lives under a CALLER root that is never
-  * deleted here. An owned root is deleted, through [[pipelines.Fs]],
-  * when its entry is cleared, when an install with a different root
-  * shadows it, when its builder loses a concurrent build race, or when
-  * its build throws.
+  * OWNS; an [[install]]ed value (a test seam's poisoned index) lives
+  * under a CALLER root that is never deleted here. An owned root is
+  * deleted, through [[pipelines.Fs]], when its entry is cleared, when
+  * an install with a different root shadows it, when its builder loses
+  * a concurrent build race, or when its build throws. Durable state
+  * does not live here: a streaming twin keeps its index in its own
+  * warehouse and re-opens it there every micro-batch.
   *
   * @param rootOf the root a value lives under; `build(root)` must
   *               yield a value whose root is `root`. Unrooted memos
@@ -73,12 +74,6 @@ private[graft] final class ContextMemo[K, V](rootOf: V => String = (_: V) => "")
     entries.put((spark.sparkContext, k), v)
       .filter(rootOf(_) != rootOf(v))
       .foreach(prev => release(spark, rootOf(prev)))
-
-  /** Whether the entry for `k` already lives under `root` — the cheap
-    * per-micro-batch exit of the durable `open*Index` calls.
-    */
-  def holds(spark: SparkSession, k: K, root: String): Boolean =
-    entries.get((spark.sparkContext, k)).exists(rootOf(_) == root)
 
   /** Drop this context's entries; only roots this memo created are
     * deleted.

@@ -230,12 +230,12 @@ object Analytics {
     * the doubles are bit-equal.
     */
   def interpolateDailyNet(spark: SparkSession, dir: String): DataFrame =
-    interpolateFrom(
+    interpolateFrom(graft.TransientCache.register(
       Tables.ledger(spark, dir)
         .filter(!col("is_absolute"))
         .groupBy(col("tienda_id"), to_date(col("fecha")).as("dia"))
         .agg(sum(col("delta_cantidad")).as("net"))
-        .cache())
+        .cache()))
 
   /** Parametric core over any sparse `(tienda_id, dia, net)` frame (the
     * spec drives it with crafted gap patterns — the fixture's daily
@@ -347,11 +347,11 @@ object Analytics {
     // cached: consumed three times below (calendar bounds, store list, the
     // left join) — without it each consumer replays the full ledger
     // scan+aggregation (self-join duplication, no exchange reuse)
-    val daily = Tables.ledger(spark, dir)
+    val daily = graft.TransientCache.register(Tables.ledger(spark, dir)
       .filter(!col("is_absolute"))
       .groupBy(col("tienda_id"), to_date(col("fecha")).as("dia"))
       .agg(sum(col("delta_cantidad")).as("net"))
-      .cache()
+      .cache())
     val cal = daily.agg(min(col("dia")).as("d0"), max(col("dia")).as("d1"))
       .select(explode(sequence(col("d0"), col("d1"))).as("dia"))
     val stores = daily.select(col("tienda_id")).distinct()

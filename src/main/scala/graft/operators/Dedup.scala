@@ -513,10 +513,15 @@ object Dedup {
     new graft.ContextMemo[(String, String), CorpusIndex](_.root)
 
   private[graft] def corpusIndex(spark: SparkSession, dir: String): CorpusIndex =
-    corpusIndexMemo.getAt(spark, modeKey(dir), "graft_bandidx_") { root =>
-      corpusIndexAt(spark, root,
-        Tables.documents(spark, dir).filter(col("doc_id") % 10 < 8))
-    }
+    corpusIndexMemo.getAt(spark, modeKey(dir), "graft_bandidx_")(
+      corpusIndexAt(spark, _, seenCorpus(spark, dir)))
+
+  /** The fixture's SEEN corpus (`doc_id % 10 < 8`, q61's convention) —
+    * what every at-rest doc index of `dir` is seeded from, the per-dir
+    * memos and the streaming twins' warehouse indexes alike.
+    */
+  private[graft] def seenCorpus(spark: SparkSession, dir: String): DataFrame =
+    Tables.documents(spark, dir).filter(col("doc_id") % 10 < 8)
 
   /** The corpus index layout ([[graft.pipelines.Warehouse]]'s index
     * protocol): shingle rows, bands derived FROM the at-rest shingles
@@ -548,32 +553,14 @@ object Dedup {
                                         idx: CorpusIndex): Unit =
     corpusIndexMemo.install(spark, modeKey(dir), idx)
 
-  /** Open (or build) the corpus index at a DURABLE, caller-supplied
-    * Warehouse root, and install it as this context's index for `dir`.
-    * Unlike the default temp-root build, the tables survive a process
-    * restart: when both index tables already exist under `root` they are
-    * re-opened as-is, so a nightly/streaming loop resumes exactly where
-    * the last process left off — this is what upgrades the loop's
-    * replay-convergence guarantee from per-JVM to durable (the temp-root
-    * memo is empty after a real restart, and a rebuild would silently
-    * forget every previously appended batch). A partial FIRST build
-    * (shingles committed, bands not — the same crash window
-    * [[appendToCorpusIndex]]'s guards cover) is repaired by deriving the
-    * band side from the at-rest shingles. The root is caller-owned:
-    * [[clearCorpusIndex]] drops the memo entry but never deletes the
-    * directory. Idempotent and cheap when the memo already points at
-    * `root` (the per-micro-batch call pattern).
-    */
-  def openCorpusIndex(spark: SparkSession, dir: String, root: String): Unit = {
-    if (corpusIndexMemo.holds(spark, modeKey(dir), root)) return
-    installCorpusIndex(spark, dir, corpusIndexAt(spark, root,
-      Tables.documents(spark, dir).filter(col("doc_id") % 10 < 8)))
-  }
-
   /** Build-or-reopen the corpus index at an explicit root from an
     * explicit corpus frame — the one build body behind [[corpusIndex]],
-    * [[openCorpusIndex]], [[retractedCorpusIndex]] and the
-    * [[graft.pipelines.CorpusPipeline]] live index.
+    * [[retractedCorpusIndex]], the [[graft.streaming.StreamingDedup]]
+    * warehouse index and the [[graft.pipelines.CorpusPipeline]] live
+    * index. Tables already at rest are re-opened as they are, so an
+    * index under a durable root survives a process restart; a partial
+    * first build (shingles committed, bands not) is repaired by deriving
+    * the band side from the at-rest shingles.
     */
   private[graft] def corpusIndexAt(spark: SparkSession, root: String,
                                    corpusDocs: => DataFrame): CorpusIndex =
@@ -608,7 +595,7 @@ object Dedup {
 
   /** The q74 screen with the batch as an argument — the form the nightly
     * loop calls: each night's verified batch is screened against the
-    * CURRENT at-rest index, then [[appendToCorpusIndex]] advances the
+    * CURRENT at-rest index, then [[appendToCorpusIndexOf]] advances the
     * index (the reference's §2.9 screen-then-advance cycle,
     * update_raw_stock_movements.py:100-110, fuzzified). `batchDocs` is
     * documents-shaped (`doc_id`, `text`); all tokenize/shingle/minhash
@@ -694,28 +681,9 @@ object Dedup {
   /** Advance the at-rest corpus index with a verified batch — the
     * append half of the reference's §2.9 screen-then-advance cycle
     * (update_raw_stock_movements.py:100-110), through the
-    * [[graft.pipelines.Warehouse]] index protocol; the refreshed index
-    * is re-memoized, so the next [[screenAgainstIndex]] sees the
-    * widened corpus.
+    * [[graft.pipelines.Warehouse]] index protocol; returns fresh reads
+    * of the widened index.
     */
-  def appendToCorpusIndex(spark: SparkSession, dir: String,
-                          batchDocs: DataFrame): CorpusIndex = {
-    val fresh = appendToCorpusIndexOf(corpusIndex(spark, dir), batchDocs)
-    installCorpusIndex(spark, dir, fresh)
-    fresh
-  }
-
-  /** Take committed docs OUT of this context's memoized per-dir index
-    * (takedowns/opt-outs); re-memoized like [[appendToCorpusIndex]].
-    */
-  def retractFromCorpusIndex(spark: SparkSession, dir: String,
-                             docIds: DataFrame): CorpusIndex = {
-    val fresh = retractFromCorpusIndexOf(corpusIndex(spark, dir), docIds)
-    installCorpusIndex(spark, dir, fresh)
-    fresh
-  }
-
-  /** The append against an explicit index (no memo traffic). */
   private[graft] def appendToCorpusIndexOf(idx: CorpusIndex,
                                            batchDocs: DataFrame): CorpusIndex =
     corpusIndexOf(idx.root, new graft.pipelines.Warehouse(batchDocs.sparkSession,
@@ -1259,8 +1227,9 @@ object Dedup {
   }
 
   /** Build-or-reopen the winnow index at an explicit root — the one
-    * build body behind [[winnowIndexAtRest]], [[openWinnowIndex]] and
-    * the pipeline's live winnow index.
+    * build body behind [[winnowIndexAtRest]], the
+    * [[graft.streaming.StreamingWinnow]] warehouse index and the
+    * pipeline's live winnow index.
     */
   private[graft] def winnowIndexAt(spark: SparkSession, root: String,
                                    corpusDocs: => DataFrame): WinnowIndex =
@@ -1268,13 +1237,11 @@ object Dedup {
       new graft.pipelines.Warehouse(spark, root).openIndex(WinnowLayout, corpusDocs))
 
   private[graft] def winnowIndexAtRest(spark: SparkSession, dir: String): WinnowIndex =
-    winnowIndexMemo.getAt(spark, modeKey(dir), "graft_winidx_") { root =>
-      winnowIndexAt(spark, root,
-        Tables.documents(spark, dir).filter(col("doc_id") % 10 < 8))
-    }
+    winnowIndexMemo.getAt(spark, modeKey(dir), "graft_winidx_")(
+      winnowIndexAt(spark, _, seenCorpus(spark, dir)))
 
   /** Drop this context's memoized winnow indexes; roots we created are
-    * deleted, injected/opened roots are left alone ([[clearCorpusIndex]]
+    * deleted, injected roots are left alone ([[clearCorpusIndex]]
     * semantics).
     */
   def clearWinnowIndexAtRest(spark: SparkSession): Unit = winnowIndexMemo.clear(spark)
@@ -1285,35 +1252,6 @@ object Dedup {
   private[graft] def installWinnowIndex(spark: SparkSession, dir: String,
                                         idx: WinnowIndex): Unit =
     winnowIndexMemo.install(spark, modeKey(dir), idx)
-
-  /** Open (or build) the winnow index at a DURABLE caller-owned root,
-    * as [[openCorpusIndex]] does for the band index.
-    */
-  def openWinnowIndex(spark: SparkSession, dir: String, root: String): Unit = {
-    if (winnowIndexMemo.holds(spark, modeKey(dir), root)) return
-    installWinnowIndex(spark, dir, winnowIndexAt(spark, root,
-      Tables.documents(spark, dir).filter(col("doc_id") % 10 < 8)))
-  }
-
-  /** Advance the memoized per-dir winnow index with a verified batch
-    * (see [[appendToCorpusIndex]]).
-    */
-  def appendToWinnowIndex(spark: SparkSession, dir: String,
-                          batchDocs: DataFrame): WinnowIndex = {
-    val fresh = appendToWinnowIndexOf(winnowIndexAtRest(spark, dir), batchDocs)
-    installWinnowIndex(spark, dir, fresh)
-    fresh
-  }
-
-  /** Retract docs from the memoized per-dir winnow index (see
-    * [[retractFromCorpusIndex]]).
-    */
-  def retractFromWinnowIndex(spark: SparkSession, dir: String,
-                             docIds: DataFrame): WinnowIndex = {
-    val fresh = retractFromWinnowIndexOf(winnowIndexAtRest(spark, dir), docIds)
-    installWinnowIndex(spark, dir, fresh)
-    fresh
-  }
 
   private[graft] def appendToWinnowIndexOf(idx: WinnowIndex,
                                            batchDocs: DataFrame): WinnowIndex =
@@ -1387,7 +1325,7 @@ object Dedup {
       Tables.documents(spark, dir).filter(col("doc_id") % 10 >= 8))
 
   /** The q88 screen with the batch as an argument — the nightly-loop
-    * form (screen, then [[appendToWinnowIndex]] advances the index).
+    * form (screen, then [[appendToWinnowIndexOf]] advances the index).
     *
     * Scale contract, mirroring [[screenAgainstIndex]]: all tokenize/
     * gram/window work runs over the BATCH alone; the corpus side is

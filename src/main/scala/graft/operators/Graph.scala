@@ -59,8 +59,6 @@ object Graph {
       .select(col("ed.a").as("a"), col("ed.b").as("b"))
       .distinct()
       .cache()
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
-    val t00 = System.nanoTime()
     // NOT checkpointed: round 0's own checkpoint truncates the lineage
     // one round later anyway, and the declarative init plan (distinct
     // over the cached symmetric edges) is exactly what round 0's join
@@ -68,12 +66,10 @@ object Graph {
     // the build at local scale) for lineage depth the loop never sees.
     var labels = e.select(col("a").as("node")).distinct()
       .withColumn("component", col("node"))
-    if (dbg) println(f"cc init ${(System.nanoTime() - t00) / 1e9}%.2f s")
     try {
       var changed = 1L
       var iter = 0
       while (changed > 0 && iter < maxIters) {
-        val tr = System.nanoTime()
         // candidate labels: own label ∪ every in-neighbor's label. The own
         // row is tagged so the SAME aggregation yields both the new label
         // and the previous one — the convergence count is then a narrow
@@ -118,7 +114,6 @@ object Graph {
           .localCheckpoint() // eager: runs the round's job, filling `acc`
         minNbr.unpersist()
         changed = acc.value
-        if (dbg) println(f"cc round $iter changed=$changed ${(System.nanoTime() - tr) / 1e9}%.2f s")
         labels = next.select(col("node"), col("component"))
         iter += 1
       }

@@ -150,8 +150,8 @@ object Sessions {
     // cached: each set feeds BOTH the intersect and the except — Spark
     // plans union/join children independently, so uncached each distinct
     // lineage (scan + shuffle) would run twice
-    def users(t: String) =
-      ev.filter(col("event_type") === t).select(col("user_id")).distinct().cache()
+    def users(t: String) = graft.TransientCache.register(
+      ev.filter(col("event_type") === t).select(col("user_id")).distinct().cache())
     val clicks = users("click")
     val purchases = users("purchase")
     val both = clicks.intersect(purchases)

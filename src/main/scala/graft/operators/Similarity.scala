@@ -335,7 +335,7 @@ object Similarity {
     * memoized beside the shared full-table fit. Incremental honesty is
     * the point: the codebooks an append-only ANN index encodes with were
     * trained before the appended vectors existed, so the fit must never
-    * see the batch side ([[appendToAnnIndex]] encodes, never refits —
+    * see the batch side ([[appendAnnWith]] encodes, never refits —
     * the FAISS `add()` contract; refit = index rebuild).
     */
   private[graft] def corpusKmeansCentroids(spark: SparkSession, dir: String): IndexedSeq[Array[Double]] =
@@ -1056,27 +1056,27 @@ object Similarity {
             .getField("code").as(s"c$m")): _*)
   }
 
-  /** Build-or-reopen the codes table at an explicit root — the
-    * [[Dedup.corpusIndexAt]] discipline: one build body shared by the
-    * temp-root memo path and the durable [[openAnnIndex]] path.
-    * `corpusCodes` is only evaluated for a from-scratch build.
+  /** Build-or-reopen the codes table of `dir`'s SEEN corpus
+    * (`vec_id % 10 < 8`, encoded with the frozen corpus fits) at an
+    * explicit root — the [[Dedup.corpusIndexAt]] discipline: one build
+    * body shared by the temp-root memo path and the
+    * [[graft.streaming.StreamingAnn]] warehouse index. A codes table
+    * already at rest is re-opened as it is, so an index under a durable
+    * root survives a process restart.
     */
-  private def annIndexAt(spark: SparkSession, root: String,
-                         corpusCodes: => DataFrame): AnnIndex = {
+  private[graft] def annIndexAt(spark: SparkSession, dir: String, root: String): AnnIndex = {
     val wh = new graft.pipelines.Warehouse(spark, root)
-    if (!wh.exists("corpus_codes")) wh.write("corpus_codes", corpusCodes)
+    if (!wh.exists("corpus_codes"))
+      wh.write("corpus_codes", pqCodesOf(vecs(spark, dir).filter(col("vec_id") % 10 < 8),
+        corpusKmeansCentroids(spark, dir), corpusPqCodebooks(spark, dir)))
     AnnIndex(wh.read("corpus_codes"), root)
   }
 
   private[graft] def annIndexAtRest(spark: SparkSession, dir: String): AnnIndex =
-    annIndexMemo.getAt(spark, dir, "graft_annidx_") { root =>
-      annIndexAt(spark, root,
-        pqCodesOf(vecs(spark, dir).filter(col("vec_id") % 10 < 8),
-          corpusKmeansCentroids(spark, dir), corpusPqCodebooks(spark, dir)))
-    }
+    annIndexMemo.getAt(spark, dir, "graft_annidx_")(annIndexAt(spark, dir, _))
 
   /** Drop this context's memoized ANN indexes; roots we created are
-    * deleted, injected/opened roots are left alone
+    * deleted, injected roots are left alone
     * ([[Dedup.clearCorpusIndex]] semantics).
     */
   def clearAnnIndex(spark: SparkSession): Unit = annIndexMemo.clear(spark)
@@ -1088,49 +1088,17 @@ object Similarity {
                                      idx: AnnIndex): Unit =
     annIndexMemo.install(spark, dir, idx)
 
-  /** Open (or build) the ANN index at a DURABLE caller-owned root, as
-    * [[Dedup.openCorpusIndex]] does for the band index.
-    */
-  def openAnnIndex(spark: SparkSession, dir: String, root: String): Unit = {
-    if (annIndexMemo.holds(spark, dir, root)) return
-    installAnnIndex(spark, dir, annIndexAt(spark, root,
-      pqCodesOf(vecs(spark, dir).filter(col("vec_id") % 10 < 8),
-        corpusKmeansCentroids(spark, dir), corpusPqCodebooks(spark, dir))))
-  }
-
   /** Advance the at-rest index with a batch of new vectors — the FAISS
     * `add()` contract: encode against the FROZEN corpus fits (never
     * refit — refit is an index rebuild), guard with a vec_id anti-join
     * against the codes table (one row per vector: the table is its own
     * manifest, and `Warehouse.append` is per-job atomic, so there is no
     * data/manifest crash window in this tier), append. Idempotent under
-    * at-least-once redelivery; spec'd in TrainingOpsSpec.
+    * at-least-once redelivery; spec'd in TrainingOpsSpec. Geometry rides
+    * in with the codebooks, no memo interaction (the geometry spec
+    * proves the contract at a non-default tiling).
     *
     * `batchVecs` is embeddings-shaped (`vec_id`, `embedding`).
-    */
-  def appendToAnnIndex(spark: SparkSession, dir: String,
-                       batchVecs: DataFrame): AnnIndex = {
-    val widened = appendAnnWith(annIndexAtRest(spark, dir),
-      corpusKmeansCentroids(spark, dir), corpusPqCodebooks(spark, dir),
-      batchVecs)
-    installAnnIndex(spark, dir, widened)
-    widened
-  }
-
-  /** [[retractFromAnnIndexOf]] against this context's memoized per-dir
-    * index (FAISS `remove_ids` on the open index).
-    */
-  def retractFromAnnIndex(spark: SparkSession, dir: String,
-                          vecIds: DataFrame): AnnIndex = {
-    val narrowed = retractFromAnnIndexOf(annIndexAtRest(spark, dir), vecIds)
-    installAnnIndex(spark, dir, narrowed)
-    narrowed
-  }
-
-  /** The append with the index and the frozen fits as arguments, for
-    * callers that own their index; geometry rides in with the
-    * codebooks, no memo interaction (the geometry spec proves the
-    * contract at a non-default tiling).
     */
   private[graft] def appendAnnWith(idx: AnnIndex,
                                    cents: IndexedSeq[Array[Double]],
@@ -1206,7 +1174,7 @@ object Similarity {
   }
 
   /** The q89 screen with the batch as an argument — the nightly-loop
-    * form (screen, then [[appendToAnnIndex]] advances the index). The
+    * form (screen, then [[appendAnnWith]] advances the index). The
     * seen guard drops batch vectors the index already absorbed (replay
     * is a no-op; a vector must not match itself after its own append),
     * mirroring [[Dedup.screenAgainstIndex]]'s unseen discipline.

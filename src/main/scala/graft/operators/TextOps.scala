@@ -165,12 +165,12 @@ object TextOps {
     * against the (small) vocabulary df table → per-doc top-k window.
     */
   def topTerms(spark: SparkSession, dir: String): DataFrame = {
-    val tf = docToks(spark, dir)
+    val tf = graft.TransientCache.register(docToks(spark, dir)
       .select(col("doc_id"), explode(col("t")).as("term"))
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
       // consumed twice — as the join probe AND as df's input; uncached,
       // the explode+agg lineage runs once per consumer (self-join rule)
-      .cache()
+      .cache())
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
       .orderBy(col("tf").desc, col("df").asc, col("term"))

@@ -221,7 +221,7 @@ object CorpusPipeline {
 
     // eagerly-materialized batch-bounded frames (localCheckpoint — the
     // appends below write paths these frames' lineage reads, the
-    // appendToCorpusIndex hazard); all unpersisted on the way out
+    // Warehouse.appendIndex hazard); all unpersisted on the way out
     val checkpointed = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def ckpt(df: DataFrame): DataFrame = {
       val c = df.localCheckpoint(true); checkpointed += c; c

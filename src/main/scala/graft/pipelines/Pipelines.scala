@@ -136,8 +136,14 @@ object InventoryPipeline {
     val derivedFrom = wh.checkpoint(LedgerFilesCp)
     if (cpDays.nonEmpty && wh.exists("stock_points") && derivedFrom.contains(ledgerFiles))
       return 0L
-    val ledger = wh.read("raw_stock_movements")
     val cpDate = cpDays.map(d => date_from_unix_date(lit(d.toInt)))
+    // the ledger's last day rides the replay's own scan and is read after
+    // the count below. Observed after the date filter, which keeps that
+    // filter pushed into the scan: rows on or after the checkpoint exist
+    // whenever one does, so this max is the whole ledger's
+    val raw = wh.read("raw_stock_movements")
+    val ledger = cpDate.fold(raw)(cp => raw.filter(to_date(col("fecha")) >= cp))
+      .observe(LastDayMetric, max(unix_date(to_date(col("fecha")))).as("d"))
 
     val replay = cpDate.fold(ledger) { cp =>
       // J9 as-of seed: latest point per key at or before the checkpoint
@@ -161,16 +167,18 @@ object InventoryPipeline {
           lit(null).cast("long").as("delta_cantidad"),
           col("sod_stock").as("abs_stock_after"),
           lit("__seed__").as("usuario"))
-      ledger.filter(to_date(col("fecha")) >= cp).unionByName(seedEvents)
+      ledger.unionByName(seedEvents)
     }
     val replayed = Stock.stockPointsFrom(replay)
     val points = cpDate.fold(replayed)(cp =>
       replayed.filter(to_date(col("point_date")) >= cp)).cache()
     try {
-      val n = points.count()
+      val counted = points.groupBy().count()
+      val n = counted.collect().head.getLong(0)
       if (cpDays.isEmpty) wh.write("stock_points", points)
       else if (n > 0) wh.replaceKeys("stock_points", points, Seq("store_id", "art_id", "point_date"))
-      val maxRow = ledger.agg(max(unix_date(to_date(col("fecha"))))).first()
+      val maxRow = counted.queryExecution.observedMetrics.getOrElse(LastDayMetric,
+        throw new IllegalStateException(s"the refresh count did not observe $LastDayMetric"))
       // after the commit, and only when it moves; an empty ledger table
       // (max() is NULL) leaves the checkpoint untouched
       if (!maxRow.isNullAt(0) && !cpDays.contains(maxRow.getInt(0).toLong))
@@ -185,4 +193,7 @@ object InventoryPipeline {
     * points derive from.
     */
   private val LedgerFilesCp = "points_ledger_files"
+
+  /** The observed metric that carries the replayed ledger's last day. */
+  private val LastDayMetric = "points_ledger_last_day"
 }

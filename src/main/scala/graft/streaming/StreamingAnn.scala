@@ -6,55 +6,58 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Structured-Streaming twin of the EMBEDDING tier's nightly loop (q89 +
-  * [[Similarity.appendToAnnIndex]]) — the third of the three: fuzzy
+  * [[Similarity.appendAnnWith]]) — the third of the three: fuzzy
   * ([[StreamingDedup]]), deterministic ([[StreamingWinnow]]), semantic
   * (this). An embeddings stream is screened micro-batch by micro-batch
   * for nearest corpus neighbors against the at-rest `corpus_codes`
   * IVF-PQ index, results land in a durable `ann_matches` table, and the
   * index advances with each batch — later batches are searched against
-  * earlier ones, exactly like consecutive nights.
+  * earlier ones, exactly like consecutive nights. The codes table lives
+  * in the twin's own warehouse beside `ann_matches`, seeded from the
+  * fixture's seen corpus on the first micro-batch and re-opened at rest
+  * on every later one ([[Similarity.annIndexAt]]), so it survives a
+  * process restart.
   *
   * At-least-once → exactly-once, structurally:
   *
   *  1. the screen's seen guard (a vec_id anti-join against the codes
-  *     table inside [[Similarity.screenAnnAgainstIndex]]) drops vectors
-  *     the index already absorbed — a replayed vector never searches
+  *     table inside [[Similarity.screenAnnWith]]) drops vectors the
+  *     index already absorbed — a replayed vector never searches
   *     against its own code row;
   *  2. the match append is keyed on (q_id, rank) — a replay that
   *     crashed between the match append and the index append
   *     re-screens, finds the same rows, and the anti-join drops them;
-  *  3. the index advance is [[Similarity.appendToAnnIndex]]'s
-  *     idempotent anti-join-guarded append (single per-job-atomic
-  *     append — this tier has no data/manifest crash window).
+  *  3. the index advance is [[Similarity.appendAnnWith]]'s idempotent
+  *     anti-join-guarded append (single per-job-atomic append — this
+  *     tier has no data/manifest crash window).
   *
   * The encode side NEVER refits: batch vectors are quantized with the
   * corpus-frozen coarse centroids and PQ codebooks (a
   * [[graft.ContextMemo]], so the micro-batches' cloned sessions share one
-  * fit — spec'd for the fits in TrainingOpsSpec).
-  * Durable across process restarts iff `indexRoot` names a caller-owned
-  * path ([[Similarity.openAnnIndex]]); without it the guarantee is
-  * scoped to one JVM lifetime, as documented on [[StreamingDedup]].
+  * fit — spec'd for the fits in TrainingOpsSpec). The fits are
+  * deterministic, so a restarted process refits them bit-identically.
   */
 object StreamingAnn {
 
   /** One micro-batch of the loop — also the replay unit the spec drives
     * directly. `batch` is embeddings-shaped (`vec_id`, `embedding`).
     */
-  def processBatch(dir: String, wh: Warehouse, batch: DataFrame,
-                   indexRoot: Option[String] = None): Unit = {
+  def processBatch(dir: String, wh: Warehouse, batch: DataFrame): Unit = {
     val spark = batch.sparkSession
-    indexRoot.foreach(Similarity.openAnnIndex(spark, dir, _))
-    wh.appendNew("ann_matches", Similarity.screenAnnAgainstIndex(spark, dir, batch),
+    val (cents, cbs) = (Similarity.corpusKmeansCentroids(spark, dir),
+      Similarity.corpusPqCodebooks(spark, dir))
+    val idx = Similarity.annIndexAt(spark, dir, wh.root)
+    wh.appendNew("ann_matches", Similarity.screenAnnWith(spark, dir, idx, cents, cbs, batch),
       Seq("q_id", "rank"))
-    // the index advance gets the UNFILTERED batch: appendToAnnIndex's
-    // vec_id anti-join makes it idempotent on replay
-    Similarity.appendToAnnIndex(spark, dir, batch)
+    // the index advance gets the UNFILTERED batch: the vec_id anti-join
+    // makes it idempotent on replay
+    Similarity.appendAnnWith(idx, cents, cbs, batch)
     graft.TransientCache.drain()
   }
 
   /** The retraction unit — [[StreamingDedup.retractBatch]]'s embedding
     * twin: FAISS `remove_ids` on the open index
-    * ([[Similarity.retractFromAnnIndex]] — survivor codes byte-stable
+    * ([[Similarity.retractFromAnnIndexOf]] — survivor codes byte-stable
     * under the frozen fits) and a sweep of `ann_matches`: rows whose
     * QUERY is retracted go, and any query whose result set NAMES a
     * retracted neighbor is dropped WHOLE. Whole, not row-by-row,
@@ -67,12 +70,9 @@ object StreamingAnn {
     * top-k"; the re-screen path stays gated by the codes-table seen
     * guard, so a dropped query is gone, never half-rebuilt.
     */
-  def retractBatch(dir: String, wh: Warehouse, vecIds: DataFrame,
-                   indexRoot: Option[String] = None): Unit = {
-    val spark = vecIds.sparkSession
-    indexRoot.foreach(Similarity.openAnnIndex(spark, dir, _))
+  def retractBatch(dir: String, wh: Warehouse, vecIds: DataFrame): Unit = {
     val ids = vecIds.select(col("vec_id")).dropDuplicates("vec_id")
-    Similarity.retractFromAnnIndex(spark, dir, ids)
+    Similarity.retractFromAnnIndexOf(Similarity.annIndexAt(vecIds.sparkSession, dir, wh.root), ids)
     if (wh.exists("ann_matches")) {
       val m = wh.read("ann_matches")
       // affected is NOT takedown-bounded (a popular neighbor can sit in
@@ -89,8 +89,6 @@ object StreamingAnn {
   /** One CONTROL micro-batch — op-routed advance/retract
     * ([[Twin.control]]).
     */
-  def processControlBatch(dir: String, wh: Warehouse, batch: DataFrame,
-                          indexRoot: Option[String] = None): Unit =
-    Twin.control(batch)(processBatch(dir, wh, _, indexRoot),
-      retractBatch(dir, wh, _, indexRoot))
+  def processControlBatch(dir: String, wh: Warehouse, batch: DataFrame): Unit =
+    Twin.control(batch)(processBatch(dir, wh, _), retractBatch(dir, wh, _))
 }

@@ -24,11 +24,11 @@ import org.apache.spark.sql.functions._
   * replayed readings, but even an unguarded replay would re-log the
   * SAME estimate (the registers cannot move under a replay).
   *
-  * Durability follows the table, not the memo: `indexRoot` names the
-  * warehouse whose `hll_regs` the stream advances; across a process
-  * restart the checkpoint resumes the stream and the table remembers
-  * every previously streamed batch (streamed ≡ batch-loop + restart
-  * survival spec'd).
+  * Durability follows the table, not the memo: the stream advances the
+  * `hll_regs` of its own warehouse; across a process restart the
+  * checkpoint resumes the stream and the table remembers every
+  * previously streamed batch (streamed ≡ batch-loop + restart survival
+  * spec'd).
   */
 object StreamingCardinality {
 

@@ -20,10 +20,10 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * the whole batch and the index advances still land via the at-rest
   * `corpus_live` read-back).
   *
-  * Durability needs no `indexRoot` option, unlike the per-tier twins:
-  * the cycle's entire state — `corpus_live`, `live_keys`, both live
-  * indexes — lives under the caller's warehouse root already, so a
-  * process restart reopens everything at rest by construction.
+  * Durability is the per-tier twins' too: the cycle's entire state —
+  * `corpus_live`, `live_keys`, both live indexes — lives under the
+  * caller's warehouse root, so a process restart reopens everything at
+  * rest by construction.
   */
 object StreamingRefine {
 

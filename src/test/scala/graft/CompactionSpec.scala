@@ -238,13 +238,13 @@ class CompactionSpec extends SparkSpec {
   test("compact-then-screen == screen for all three tiers; manifests intact") {
     val docs = Tables.documents(spark, dir)
     val batch = docs.filter(col("doc_id") % 10 >= 8)
+    val seen = Dedup.seenCorpus(spark, dir)
 
-    // fuzzy tier (q74) at a durable root, fragmented by a real append
-    Dedup.clearCorpusIndex(spark)
+    // fuzzy tier (q74's screen) at a durable root, fragmented by a real append
     val shRoot = tmpRoot("cshidx")
-    Dedup.openCorpusIndex(spark, dir, shRoot)
-    Dedup.appendToCorpusIndex(spark, dir, batch.filter(col("doc_id") % 10 === 8))
-    val shWant = rowsOf(Dedup.deltaMinhash(spark, dir))
+    def shIdx() = Dedup.corpusIndexAt(spark, shRoot, seen) // re-opens at rest
+    Dedup.appendToCorpusIndexOf(shIdx(), batch.filter(col("doc_id") % 10 === 8))
+    val shWant = rowsOf(Dedup.screenAgainstIndexOf(shIdx(), batch))
     val shWh = new Warehouse(spark, shRoot)
     val shTables = Seq("corpus_shingles", "corpus_band_index", "corpus_docs")
     val shManifest = rowsOf(shWh.read("corpus_docs"))
@@ -252,45 +252,38 @@ class CompactionSpec extends SparkSpec {
     shTables.foreach(shWh.compact(_))
     assert(shTables.map(shWh.dataFileCount).sum < shFilesBefore.sum,
       s"fuzzy-tier compaction must shrink files ($shFilesBefore)")
-    Dedup.clearCorpusIndex(spark)
-    Dedup.openCorpusIndex(spark, dir, shRoot) // reopen over the new layout
-    assert(rowsOf(Dedup.deltaMinhash(spark, dir)) == shWant,
+    // reopen over the new layout
+    assert(rowsOf(Dedup.screenAgainstIndexOf(shIdx(), batch)) == shWant,
       "q74 must be bit-identical across compaction")
     assert(rowsOf(shWh.read("corpus_docs")) == shManifest,
       "the seen-doc manifest must survive compaction verbatim")
-    Dedup.clearCorpusIndex(spark)
+    TransientCache.drain()
 
-    // deterministic tier (q88)
-    Dedup.clearWinnowIndexAtRest(spark)
+    // deterministic tier (q88's screen)
     val wRoot = tmpRoot("cwinidx")
-    Dedup.openWinnowIndex(spark, dir, wRoot)
-    val wWant = rowsOf(Dedup.deltaWinnow(spark, dir))
+    def wIdx() = Dedup.winnowIndexAt(spark, wRoot, seen)
+    val wWant = rowsOf(Dedup.screenWinnowAgainstIndexOf(wIdx(), batch))
     val wWh = new Warehouse(spark, wRoot)
     Seq("corpus_winnow", "corpus_winnow_docs").foreach(wWh.compact(_))
-    Dedup.clearWinnowIndexAtRest(spark)
-    Dedup.openWinnowIndex(spark, dir, wRoot)
-    assert(rowsOf(Dedup.deltaWinnow(spark, dir)) == wWant,
+    assert(rowsOf(Dedup.screenWinnowAgainstIndexOf(wIdx(), batch)) == wWant,
       "q88 must be bit-identical across compaction")
     // a post-compaction append still honors append == rebuild: the night
     // lands exactly the unseen docs' fingerprints, and the manifest
     // matches the data table's distinct docs
-    Dedup.appendToWinnowIndex(spark, dir, batch)
+    Dedup.appendToWinnowIndexOf(wIdx(), batch)
     assert(rowsOf(wWh.read("corpus_winnow_docs")) ==
       rowsOf(wWh.read("corpus_winnow").select(col("doc_id")).distinct()),
       "manifest must equal the data table's doc set after the append")
-    Dedup.clearWinnowIndexAtRest(spark)
+    TransientCache.drain()
 
-    // semantic tier (q89)
-    Similarity.clearAnnIndex(spark)
+    // semantic tier (q89's screen)
     val aRoot = tmpRoot("cannidx")
-    Similarity.openAnnIndex(spark, dir, aRoot)
-    val aWant = rowsOf(Similarity.deltaAnn(spark, dir))
-    val aWh = new Warehouse(spark, aRoot)
-    aWh.compact("corpus_codes")
-    Similarity.clearAnnIndex(spark)
-    Similarity.openAnnIndex(spark, dir, aRoot)
-    assert(rowsOf(Similarity.deltaAnn(spark, dir)) == aWant,
-      "q89 must be bit-identical across compaction")
-    Similarity.clearAnnIndex(spark)
+    val vbatch = Tables.spread(Tables.embeddings(spark, dir)).filter(col("vec_id") % 10 >= 8)
+    def aScreen() = rowsOf(Similarity.screenAnnWith(spark, dir,
+      Similarity.annIndexAt(spark, dir, aRoot), Similarity.corpusKmeansCentroids(spark, dir),
+      Similarity.corpusPqCodebooks(spark, dir), vbatch))
+    val aWant = aScreen()
+    new Warehouse(spark, aRoot).compact("corpus_codes")
+    assert(aScreen() == aWant, "q89 must be bit-identical across compaction")
   }
 }

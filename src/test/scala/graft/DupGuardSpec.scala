@@ -99,6 +99,28 @@ class DupGuardSpec extends AnyFunSuite {
     assert(merges.isEmpty, s"version-wins merges under pipelines/: ${merges.toSeq.sorted}")
   }
 
+  test("every streaming index twin keeps its index in its warehouse: no indexRoot knob, no per-dir memo writer") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    def hits(ps: Seq[java.nio.file.Path], patterns: Seq[String]): Seq[String] =
+      ps.flatMap { p =>
+        val code = stripNoise(new String(java.nio.file.Files.readAllBytes(p)))
+        patterns.filter(_.r.findFirstIn(code).isDefined)
+          .map(pat => s"${root.relativize(p)}: $pat")
+      }
+    val writers = Seq("openCorpusIndex", "appendToCorpusIndex", "retractFromCorpusIndex",
+      "openWinnowIndex", "appendToWinnowIndex", "retractFromWinnowIndex",
+      "openAnnIndex", "appendToAnnIndex", "retractFromAnnIndex")
+    val forked = hits(files, (("indexRoot" +: writers).map(n => raw"\b$n\b")) :+ raw"\.holds\(")
+    assert(forked.isEmpty, s"a JVM-scoped index mode is back: ${forked.sorted.mkString(", ")}")
+    val memoReads = hits(files.filter(_.startsWith(root.resolve("streaming"))),
+      Seq("corpusIndex", "winnowIndexAtRest", "annIndexAtRest").map(n => raw"\b$n\("))
+    assert(memoReads.isEmpty,
+      s"a streaming twin reads a per-dir memo index: ${memoReads.sorted.mkString(", ")}")
+  }
+
   test("the only entry points in src/main are Bench, Verify and DevProfile") {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")

@@ -29,57 +29,49 @@ class InBatchRedeliverySpec extends SparkSpec {
   private def night = docs.filter(col("doc_id") % 10 === 8)
 
   test("fuzzy tier: a duplicated batch screens and appends like the clean batch") {
-    Dedup.clearCorpusIndex(spark)
+    def idxAt(root: String) = Dedup.corpusIndexAt(spark, root, Dedup.seenCorpus(spark, dir))
     val rootA = Files.createTempDirectory("graft_rdl_shA_").toString
-    Dedup.openCorpusIndex(spark, dir, rootA)
-    val cleanScreen = bag(Dedup.screenAgainstIndex(spark, dir, night))
+    val cleanScreen = bag(Dedup.screenAgainstIndexOf(idxAt(rootA), night))
     TransientCache.drain()
-    val dupScreen = bag(Dedup.screenAgainstIndex(spark, dir, night.union(night)))
+    val dupScreen = bag(Dedup.screenAgainstIndexOf(idxAt(rootA), night.union(night)))
     TransientCache.drain()
     assert(dupScreen == cleanScreen, "fuzzy screen must collapse in-batch duplicates")
     assert(cleanScreen.nonEmpty)
 
-    Dedup.appendToCorpusIndex(spark, dir, night)
+    Dedup.appendToCorpusIndexOf(idxAt(rootA), night)
     val whA = new Warehouse(spark, rootA)
     val want = Seq("corpus_shingles", "corpus_band_index", "corpus_docs")
       .map(t => t -> bag(whA.read(t))).toMap
-    Dedup.clearCorpusIndex(spark)
     val rootB = Files.createTempDirectory("graft_rdl_shB_").toString
-    Dedup.openCorpusIndex(spark, dir, rootB)
-    Dedup.appendToCorpusIndex(spark, dir, night.union(night))
+    Dedup.appendToCorpusIndexOf(idxAt(rootB), night.union(night))
     val whB = new Warehouse(spark, rootB)
     want.foreach { case (t, rows) =>
       assert(bag(whB.read(t)) == rows,
         s"duplicated-batch append must equal clean append at $t")
     }
-    Dedup.clearCorpusIndex(spark)
   }
 
   test("winnow tier: a duplicated batch screens and appends like the clean batch") {
-    Dedup.clearWinnowIndexAtRest(spark)
+    def idxAt(root: String) = Dedup.winnowIndexAt(spark, root, Dedup.seenCorpus(spark, dir))
     val rootA = Files.createTempDirectory("graft_rdl_wA_").toString
-    Dedup.openWinnowIndex(spark, dir, rootA)
-    val cleanScreen = bag(Dedup.screenWinnowAgainstIndex(spark, dir, night))
+    val cleanScreen = bag(Dedup.screenWinnowAgainstIndexOf(idxAt(rootA), night))
     TransientCache.drain()
-    val dupScreen = bag(Dedup.screenWinnowAgainstIndex(spark, dir, night.union(night)))
+    val dupScreen = bag(Dedup.screenWinnowAgainstIndexOf(idxAt(rootA), night.union(night)))
     TransientCache.drain()
     assert(dupScreen == cleanScreen, "winnow screen must collapse in-batch duplicates")
     assert(cleanScreen.nonEmpty)
 
-    Dedup.appendToWinnowIndex(spark, dir, night)
+    Dedup.appendToWinnowIndexOf(idxAt(rootA), night)
     val whA = new Warehouse(spark, rootA)
     val want = Seq("corpus_winnow", "corpus_winnow_docs")
       .map(t => t -> bag(whA.read(t))).toMap
-    Dedup.clearWinnowIndexAtRest(spark)
     val rootB = Files.createTempDirectory("graft_rdl_wB_").toString
-    Dedup.openWinnowIndex(spark, dir, rootB)
-    Dedup.appendToWinnowIndex(spark, dir, night.union(night))
+    Dedup.appendToWinnowIndexOf(idxAt(rootB), night.union(night))
     val whB = new Warehouse(spark, rootB)
     want.foreach { case (t, rows) =>
       assert(bag(whB.read(t)) == rows,
         s"duplicated-batch append must equal clean append at $t")
     }
-    Dedup.clearWinnowIndexAtRest(spark)
   }
 
   test("ann tier: a duplicated batch screens like the clean batch") {

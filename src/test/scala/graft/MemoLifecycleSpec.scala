@@ -124,7 +124,7 @@ class MemoLifecycleSpec extends SparkSpec {
     val built = memo.getAt(spark, "k", "graft_memo_own_")(identity)
     // an append's refreshed value lives at the same root
     memo.install(spark, "k", built)
-    assert(onDisk(built) && memo.holds(spark, "k", built))
+    assert(onDisk(built) && memo.peek(spark, "k").contains(built))
     memo.clear(spark)
     assert(!onDisk(built), "a re-installed built root must stay owned")
 
@@ -136,6 +136,6 @@ class MemoLifecycleSpec extends SparkSpec {
       }
     }
     assert(tried.nonEmpty && !onDisk(tried), "a failed build must delete its root")
-    assert(!memo.holds(spark, "k", tried))
+    assert(memo.peek(spark, "k").isEmpty)
   }
 }

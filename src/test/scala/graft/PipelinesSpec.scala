@@ -191,6 +191,32 @@ class PipelinesSpec extends SparkSpec {
     assert(rowsOf(wh.read("stock_points")) == expected)
   }
 
+  test("stock points: an incremental refresh reads the ledger's last day off its own replay, in a pinned number of jobs") {
+    val wh = freshWh()
+    val sc = spark.sparkContext
+    val fullLedger = Tables.ledger(spark, dir)
+    val midTs = new java.sql.Timestamp(
+      fullLedger.agg(expr("percentile_approx(unix_micros(fecha), 0.5)"))
+        .first().getLong(0) / 1000)
+    def lastDay(): Long = wh.read("raw_stock_movements")
+      .agg(max(unix_date(to_date(col("fecha"))))).first().getInt(0).toLong
+    InventoryPipeline.updateLedger(wh, dir, upToTs = Some(midTs))
+    InventoryPipeline.refreshStockPoints(wh)
+    assert(wh.checkpoint("points_last_dt").contains(lastDay()))
+    InventoryPipeline.updateLedger(wh, dir)
+    val (points, jobs) =
+      org.apache.spark.SparkJobs.count(sc)(InventoryPipeline.refreshStockPoints(wh))
+    assert(points > 0)
+    // the replay's count, its commit (the keyed merge) and their schema
+    // and adaptive stages; the ledger's last day rides the count as an
+    // observed metric. A rise means the refresh grew a pass back.
+    val pinned = 10
+    assert(jobs == pinned, s"an incremental refresh ran $jobs Spark jobs (pinned $pinned)")
+    assert(wh.checkpoint("points_last_dt").contains(lastDay()),
+      "the checkpoint must move to the ledger's last day")
+    assert(rowsOf(wh.read("stock_points")) == rowsOf(Stock.stockPointsFrom(fullLedger)))
+  }
+
   test("nightly: a re-run on unchanged sources returns (0,0,0) in a pinned number of jobs, none from the refresh") {
     val wh = freshWh()
     val sc = spark.sparkContext

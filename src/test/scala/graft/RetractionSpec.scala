@@ -652,24 +652,22 @@ class RetractionSpec extends SparkSpec {
     val ids = retracted.select(col("doc_id"))
 
     // --- fuzzy tier: advance, then a MIXED batch (arrivals + a retract
-    // control message), then the mixed batch REDELIVERED
-    Dedup.clearCorpusIndex(spark)
-    val rootD = tmpRoot("scD")
+    // control message), then the mixed batch REDELIVERED; each twin's
+    // warehouse holds its pairs AND its index
     val whD = new Warehouse(spark, tmpRoot("scDwh"))
     val mixed = op(b9, "advance").unionByName(op(retrDocs, "retract"))
-    StreamingDedup.processControlBatch(dir, whD, op(b8, "advance"), Some(rootD))
-    StreamingDedup.processControlBatch(dir, whD, mixed, Some(rootD))
+    StreamingDedup.processControlBatch(dir, whD, op(b8, "advance"))
+    StreamingDedup.processControlBatch(dir, whD, mixed)
     val dTabs = Seq("corpus_docs", "corpus_shingles", "corpus_band_index")
-    val whDi = new Warehouse(spark, rootD)
-    val before = dTabs.map(t => t -> rowsOf(whDi.read(t))).toMap +
+    val before = dTabs.map(t => t -> rowsOf(whD.read(t))).toMap +
       ("pairs" -> rowsOf(whD.read("dedup_pairs")))
-    StreamingDedup.processControlBatch(dir, whD, mixed, Some(rootD)) // redelivery
-    dTabs.foreach(t => assert(rowsOf(whDi.read(t)) == before(t),
+    StreamingDedup.processControlBatch(dir, whD, mixed) // redelivery
+    dTabs.foreach(t => assert(rowsOf(whD.read(t)) == before(t),
       s"$t moved on a redelivered control batch"))
     assert(rowsOf(whD.read("dedup_pairs")) == before("pairs"))
     // retracted ids gone from index AND pairs (either side)
     dTabs.foreach(t =>
-      assert(whDi.read(t).join(ids, Seq("doc_id"), "left_semi").isEmpty, t))
+      assert(whD.read(t).join(ids, Seq("doc_id"), "left_semi").isEmpty, t))
     assert(whD.read("dedup_pairs")
       .join(ids.withColumnRenamed("doc_id", "dc"), Seq("dc"), "left_semi").isEmpty)
     // end state == an index independently built over survivors + both
@@ -678,28 +676,21 @@ class RetractionSpec extends SparkSpec {
       surviving.select(col("doc_id"), col("text"))
         .unionByName(b8).unionByName(b9))
     for (t <- dTabs)
-      assert(rowsOf(whDi.read(t)) ==
+      assert(rowsOf(whD.read(t)) ==
         rowsOf(new Warehouse(spark, rebuilt.root).read(t)),
         s"$t: streamed control lane != survivor rebuild")
-    Dedup.clearCorpusIndex(spark)
 
     // --- winnow tier
-    Dedup.clearWinnowIndexAtRest(spark)
-    val rootW = tmpRoot("scW")
     val whW = new Warehouse(spark, tmpRoot("scWwh"))
-    StreamingWinnow.processControlBatch(dir, whW, op(b8, "advance"), Some(rootW))
-    StreamingWinnow.processControlBatch(dir, whW, mixed, Some(rootW))
-    StreamingWinnow.processControlBatch(dir, whW, mixed, Some(rootW)) // redelivery
-    val whWi = new Warehouse(spark, rootW)
+    StreamingWinnow.processControlBatch(dir, whW, op(b8, "advance"))
+    StreamingWinnow.processControlBatch(dir, whW, mixed)
+    StreamingWinnow.processControlBatch(dir, whW, mixed) // redelivery
     for (t <- Seq("corpus_winnow_docs", "corpus_winnow"))
-      assert(whWi.read(t).join(ids, Seq("doc_id"), "left_semi").isEmpty, t)
+      assert(whW.read(t).join(ids, Seq("doc_id"), "left_semi").isEmpty, t)
     assert(whW.read("winnow_pairs")
       .join(ids.withColumnRenamed("doc_id", "dc"), Seq("dc"), "left_semi").isEmpty)
-    Dedup.clearWinnowIndexAtRest(spark)
 
     // --- embedding tier
-    Similarity.clearAnnIndex(spark)
-    val rootA = tmpRoot("scA")
     val whA = new Warehouse(spark, tmpRoot("scAwh"))
     val emb = Tables.spread(Tables.embeddings(spark, dir))
       .select(col("vec_id"), col("embedding"))
@@ -707,8 +698,7 @@ class RetractionSpec extends SparkSpec {
     val v9 = emb.filter(col("vec_id") % 10 === 9)
     val retrV = emb.filter(col("vec_id") % 10 < 8 && col("vec_id") % 9 === 4)
     val vMixed = op(v9, "advance").unionByName(op(retrV, "retract"))
-    Similarity.openAnnIndex(spark, dir, rootA)
-    StreamingAnn.processControlBatch(dir, whA, op(v8, "advance"), Some(rootA))
+    StreamingAnn.processControlBatch(dir, whA, op(v8, "advance"))
     val vids = retrV.select(col("vec_id"))
     // queries whose pre-retraction top-k names a soon-retracted neighbor
     val affectedQ = whA.read("ann_matches")
@@ -716,9 +706,9 @@ class RetractionSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet
     assert(affectedQ.nonEmpty,
       "fixture must produce at least one query naming a retracted neighbor")
-    StreamingAnn.processControlBatch(dir, whA, vMixed, Some(rootA))
-    StreamingAnn.processControlBatch(dir, whA, vMixed, Some(rootA)) // redelivery
-    assert(new Warehouse(spark, rootA).read("corpus_codes")
+    StreamingAnn.processControlBatch(dir, whA, vMixed)
+    StreamingAnn.processControlBatch(dir, whA, vMixed) // redelivery
+    assert(whA.read("corpus_codes")
       .join(vids, Seq("vec_id"), "left_semi").isEmpty)
     assert(whA.read("ann_matches")
       .join(vids, Seq("vec_id"), "left_semi").isEmpty,
@@ -731,11 +721,10 @@ class RetractionSpec extends SparkSpec {
     // — and a redelivered original query batch cannot backfill the
     // dropped queries against the post-retraction index (the codes-
     // table seen guard): no q_id ever mixes two screenings' rankings
-    StreamingAnn.processControlBatch(dir, whA, op(v8, "advance"), Some(rootA))
+    StreamingAnn.processControlBatch(dir, whA, op(v8, "advance"))
     assert(whA.read("ann_matches")
       .join(affectedQ.toSeq.toDF("q_id"), Seq("q_id"), "left_semi").isEmpty,
       "redelivered queries must not half-rebuild swept results")
-    Similarity.clearAnnIndex(spark)
   }
 
   test("streaming control lanes: the event twins treat retract as a user opt-out message") {

@@ -281,9 +281,7 @@ class StreamingSoakSpec extends SparkSpec {
 
   test("soak: minhash index — 20 nights + replays + interleaved retract/re-offer cycles; final == survivor one-shot append") {
     import graft.streaming.StreamingDedup
-    Dedup.clearCorpusIndex(spark)
-    val rootA = tmpRoot("mhA")
-    Dedup.openCorpusIndex(spark, dir01, rootA)
+    // the twin's warehouse holds its pairs AND its index
     val wh = new Warehouse(spark, tmpRoot("mhwh"))
     val docs = Tables.documents(spark, dir01)
     val held = docs.filter(col("doc_id") % 10 >= 8)
@@ -291,37 +289,32 @@ class StreamingSoakSpec extends SparkSpec {
     val total = docs.count()
     def slice(i: Int): DataFrame =
       held.filter(expr(s"doc_id DIV 10") % Batches === i)
-    val whA = new Warehouse(spark, rootA)
     for (i <- 0 until Batches) {
       withReplay(i)(() => StreamingDedup.processControlBatch(dir01, wh,
-        controlMix(i, slice(i), slice(2), slice(3)), Some(rootA)))
+        controlMix(i, slice(i), slice(2), slice(3))))
       // entity bounds: the manifest never outgrows the docs ever
       // offered, and the data tables never hold docs off the manifest
-      assert(whA.read("corpus_docs").count() <= total,
+      assert(wh.read("corpus_docs").count() <= total,
         s"night $i: manifest outgrew the corpus")
-      assert(whA.read("corpus_band_index").select(col("doc_id")).distinct()
-        .count() <= whA.read("corpus_docs").count(),
+      assert(wh.read("corpus_band_index").select(col("doc_id")).distinct()
+        .count() <= wh.read("corpus_docs").count(),
         s"night $i: band rows for unmanifested docs")
     }
     // final index state == one-shot append of the SURVIVORS (R cycled
     // back in twice; R2 stayed retracted)
-    Dedup.clearCorpusIndex(spark)
     val rootB = tmpRoot("mhB")
-    Dedup.openCorpusIndex(spark, dir01, rootB)
-    Dedup.appendToCorpusIndex(spark, dir01,
+    Dedup.appendToCorpusIndexOf(
+      Dedup.corpusIndexAt(spark, rootB, Dedup.seenCorpus(spark, dir01)),
       held.filter(expr(s"doc_id DIV 10") % Batches =!= 3))
     val whB = new Warehouse(spark, rootB)
     for (t <- Seq("corpus_shingles", "corpus_band_index", "corpus_docs"))
-      assert(rowsOf(whA.read(t)) == rowsOf(whB.read(t)),
+      assert(rowsOf(wh.read(t)) == rowsOf(whB.read(t)),
         s"soaked $t != survivor one-shot append")
-    Dedup.clearCorpusIndex(spark)
   }
 
   test("soak: winnow index — 20 nights + replays + interleaved retract/re-offer cycles; final == survivor one-shot append") {
     import graft.streaming.StreamingWinnow
-    Dedup.clearWinnowIndexAtRest(spark)
-    val rootA = tmpRoot("wnA")
-    Dedup.openWinnowIndex(spark, dir01, rootA)
+    // the twin's warehouse holds its pairs AND its index
     val wh = new Warehouse(spark, tmpRoot("wnwh"))
     val docs = Tables.documents(spark, dir01)
     val held = docs.filter(col("doc_id") % 10 >= 8)
@@ -329,34 +322,29 @@ class StreamingSoakSpec extends SparkSpec {
     val total = docs.count()
     def slice(i: Int): DataFrame =
       held.filter(expr(s"doc_id DIV 10") % Batches === i)
-    val whA = new Warehouse(spark, rootA)
     for (i <- 0 until Batches) {
       withReplay(i)(() => StreamingWinnow.processControlBatch(dir01, wh,
-        controlMix(i, slice(i), slice(2), slice(3)), Some(rootA)))
-      assert(whA.read("corpus_winnow_docs").count() <= total,
+        controlMix(i, slice(i), slice(2), slice(3))))
+      assert(wh.read("corpus_winnow_docs").count() <= total,
         s"night $i: manifest outgrew the corpus")
-      assert(whA.read("corpus_winnow").select(col("doc_id")).distinct()
-        .count() <= whA.read("corpus_winnow_docs").count(),
+      assert(wh.read("corpus_winnow").select(col("doc_id")).distinct()
+        .count() <= wh.read("corpus_winnow_docs").count(),
         s"night $i: fingerprint rows for unmanifested docs")
     }
-    Dedup.clearWinnowIndexAtRest(spark)
     val rootB = tmpRoot("wnB")
-    Dedup.openWinnowIndex(spark, dir01, rootB)
-    Dedup.appendToWinnowIndex(spark, dir01,
+    Dedup.appendToWinnowIndexOf(
+      Dedup.winnowIndexAt(spark, rootB, Dedup.seenCorpus(spark, dir01)),
       held.filter(expr(s"doc_id DIV 10") % Batches =!= 3))
     val whB = new Warehouse(spark, rootB)
     for (t <- Seq("corpus_winnow", "corpus_winnow_docs"))
-      assert(rowsOf(whA.read(t)) == rowsOf(whB.read(t)),
+      assert(rowsOf(wh.read(t)) == rowsOf(whB.read(t)),
         s"soaked $t != survivor one-shot append")
-    Dedup.clearWinnowIndexAtRest(spark)
   }
 
   test("soak: ann index — 20 nights + replays + interleaved retract/re-offer cycles; final == survivor one-shot append") {
     import graft.streaming.StreamingAnn
-    Similarity.clearAnnIndex(spark)
     Similarity.clearKmeansMemo(spark)
-    val rootA = tmpRoot("annA")
-    Similarity.openAnnIndex(spark, dir01, rootA)
+    // the twin's warehouse holds its matches AND its codes table
     val wh = new Warehouse(spark, tmpRoot("annwh"))
     val emb = Tables.embeddings(spark, dir01)
     val held = emb.filter(col("vec_id") % 10 >= 8)
@@ -364,24 +352,21 @@ class StreamingSoakSpec extends SparkSpec {
     val total = emb.count()
     def slice(i: Int): DataFrame =
       held.filter(expr(s"vec_id DIV 10") % Batches === i)
-    val whA = new Warehouse(spark, rootA)
     for (i <- 0 until Batches) {
       withReplay(i)(() => StreamingAnn.processControlBatch(dir01, wh,
-        controlMix(i, slice(i), slice(2), slice(3)), Some(rootA)))
-      assert(whA.read("corpus_codes").count() <= total,
+        controlMix(i, slice(i), slice(2), slice(3))))
+      assert(wh.read("corpus_codes").count() <= total,
         s"night $i: code table outgrew the vector set")
     }
     // the fit is frozen (memoized off the same corpus), so a survivor
     // one-shot append must code every vector identically (retracted
     // codes removed FAISS-style, re-offered ones re-encoded byte-equal)
-    Similarity.clearAnnIndex(spark)
     val rootB = tmpRoot("annB")
-    Similarity.openAnnIndex(spark, dir01, rootB)
-    Similarity.appendToAnnIndex(spark, dir01,
+    Similarity.appendAnnWith(Similarity.annIndexAt(spark, dir01, rootB),
+      Similarity.corpusKmeansCentroids(spark, dir01), Similarity.corpusPqCodebooks(spark, dir01),
       held.filter(expr(s"vec_id DIV 10") % Batches =!= 3))
     val whB = new Warehouse(spark, rootB)
-    assert(rowsOf(whA.read("corpus_codes")) == rowsOf(whB.read("corpus_codes")),
+    assert(rowsOf(wh.read("corpus_codes")) == rowsOf(whB.read("corpus_codes")),
       "soaked corpus_codes != survivor one-shot append")
-    Similarity.clearAnnIndex(spark)
   }
 }

@@ -216,11 +216,25 @@ class StreamingSpec extends SparkSpec {
     assert(got == want && got.size == 3)
   }
 
+  /** The warehouse's corpus index, as the dedup twin re-opens it. */
+  private def corpusIdx(dir: String, wh: Warehouse) =
+    Dedup.corpusIndexAt(spark, wh.root, Dedup.seenCorpus(spark, dir))
+
+  /** A simulated process restart: every in-memory memo the document
+    * twins and the fixture queries keep is dropped.
+    */
+  private def clearAllMemos(): Unit = {
+    Dedup.clearCorpusIndex(spark)
+    Dedup.clearWinnowIndexAtRest(spark)
+    Dedup.clearRetractedCorpusIndex(spark)
+    graft.operators.Similarity.clearKmeansMemo(spark) // also the ann index
+    TransientCache.drain()
+  }
+
   test("streaming dedup twin: two micro-batch nights == the batch loop; replay is a no-op") {
     val sql = spark.sqlContext
     import sql.implicits._
     val dir = "/root/testdata/sf0.001"
-    Dedup.clearCorpusIndex(spark) // start from the base corpus (% 10 < 8)
     val tmp = Files.createTempDirectory("graft-sdedup").toString
     val wh = new Warehouse(spark, s"$tmp/wh")
     def night(m: Int): Seq[DocRow] = Tables.documents(spark, dir)
@@ -259,27 +273,25 @@ class StreamingSpec extends SparkSpec {
     // replay of an already-processed batch (at-least-once delivery):
     // the seen-ledger filter + keyed appends make it a no-op on both
     // the pair table and the index
-    val idx = Dedup.corpusIndex(spark, dir)
-    // the stream ADVANCED the shared index: every doc of both nights is
-    // in it now (foreachBatch clones the session — the memo must share
-    // across clones or each micro-batch rebuilds its own index)
+    val idx = corpusIdx(dir, wh)
+    // the stream ADVANCED the warehouse index: every doc of both nights
+    // is in it now (foreachBatch clones the session — each micro-batch
+    // re-opens the same at-rest tables)
     assert(idx.bands.select(col("doc_id")).distinct().count() ==
       Tables.documents(spark, dir)
         .filter(size(graft.functions.TextFns.toks(col("text"))) >= 3).count())
     val (nb, ns) = (idx.bands.count(), idx.shingles.count())
     StreamingDedup.processBatch(dir, wh, night(8).toDF())
     assert(wh.read("dedup_pairs").collect().map(_.mkString("|")).toSet == got)
-    val idx2 = Dedup.corpusIndex(spark, dir)
+    val idx2 = corpusIdx(dir, wh)
     assert(idx2.bands.count() == nb && idx2.shingles.count() == ns)
     all.unpersist(false)
-    Dedup.clearCorpusIndex(spark) // leave the default index for other tests
   }
 
   test("streaming dedup: replay repairs a crash between the two index appends") {
     val sql = spark.sqlContext
     import sql.implicits._
     val dir = "/root/testdata/sf0.001"
-    Dedup.clearCorpusIndex(spark)
     val tmp = Files.createTempDirectory("graft-crash").toString
     val wh = new Warehouse(spark, s"$tmp/wh")
     def night(m: Int) = Tables.documents(spark, dir)
@@ -288,39 +300,33 @@ class StreamingSpec extends SparkSpec {
     // reference: the uncrashed path over the same two batches
     StreamingDedup.processBatch(dir, wh, night(8).as[DocRow].collect().toSeq.toDF())
     val wantPairs = wh.read("dedup_pairs").collect().map(_.mkString("|")).toSet
-    val wantIdx = Dedup.corpusIndex(spark, dir)
+    val wantIdx = corpusIdx(dir, wh)
     val (wantB, wantS) = (wantIdx.bands.count(), wantIdx.shingles.count())
-    Dedup.clearCorpusIndex(spark)
 
     // crash simulation: night 8's pairs were appended and the FIRST index
     // append (corpus_shingles) committed, then the process died before
     // the corpus_band_index append — the exact window the per-table
     // guards exist for
     val wh2 = new Warehouse(spark, s"$tmp/wh2")
-    val idx0 = Dedup.corpusIndex(spark, dir)
-    val iwh = new Warehouse(spark, idx0.root)
+    val idx0 = corpusIdx(dir, wh2) // the base index, at rest in wh2
     // the pre-crash screen MATERIALIZED before the crash is simulated:
     // the screen's unseenBatch guard reads corpus_shingles, and the
     // append below refreshes that path's file listing — a lazy p0 would
     // re-evaluate against post-crash state and see its docs as seen
-    val p0 = Dedup.screenAgainstIndex(spark, dir, night(8))
+    val p0 = Dedup.screenAgainstIndexOf(idx0, night(8))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     TransientCache.drain()
-    iwh.append("corpus_shingles", Dedup.shingleRowsOf(night(8)))
+    wh2.append("corpus_shingles", Dedup.shingleRowsOf(night(8)))
     wh2.append("dedup_pairs", p0.toDF("di", "dc", "jaccard"))
-    // "restart": the process re-reads the at-rest tables as they are
-    Dedup.installCorpusIndex(spark, dir,
-      idx0.copy(bands = iwh.read("corpus_band_index"),
-        shingles = iwh.read("corpus_shingles")))
-    assert(Dedup.corpusIndex(spark, dir).bands
+    // "restart": the next micro-batch re-opens the at-rest tables as they are
+    assert(corpusIdx(dir, wh2).bands
       .filter(col("doc_id") % 10 === 8).isEmpty, "crash state: bands missing")
     // redelivery of the same micro-batch must append exactly the missing
     // band side and no duplicate of anything else
     StreamingDedup.processBatch(dir, wh2, night(8).as[DocRow].collect().toSeq.toDF())
-    val idx1 = Dedup.corpusIndex(spark, dir)
+    val idx1 = corpusIdx(dir, wh2)
     assert(idx1.bands.count() == wantB && idx1.shingles.count() == wantS)
     assert(wh2.read("dedup_pairs").collect().map(_.mkString("|")).toSet == wantPairs)
-    Dedup.clearCorpusIndex(spark)
   }
 
   test("streaming dedup: replay after BOTH data appends land (manifest behind) adds no self-pairs") {
@@ -333,7 +339,6 @@ class StreamingSpec extends SparkSpec {
     val sql = spark.sqlContext
     import sql.implicits._
     val dir = "/root/testdata/sf0.001"
-    Dedup.clearCorpusIndex(spark)
     val tmp = Files.createTempDirectory("graft-crash2").toString
     def night(m: Int) = Tables.documents(spark, dir)
       .filter(col("doc_id") % 10 === m)
@@ -342,40 +347,34 @@ class StreamingSpec extends SparkSpec {
     val wh = new Warehouse(spark, s"$tmp/wh")
     StreamingDedup.processBatch(dir, wh, night(8).as[DocRow].collect().toSeq.toDF())
     val wantPairs = wh.read("dedup_pairs").collect().map(_.mkString("|")).toSet
-    val wantIdx = Dedup.corpusIndex(spark, dir)
+    val wantIdx = corpusIdx(dir, wh)
     val (wantB, wantS, wantD) =
       (wantIdx.bands.count(), wantIdx.shingles.count(), wantIdx.docs.count())
-    Dedup.clearCorpusIndex(spark)
 
     // crash simulation: pairs + BOTH index data appends committed, the
     // corpus_docs append did not
     val wh2 = new Warehouse(spark, s"$tmp/wh2")
-    val idx0 = Dedup.corpusIndex(spark, dir)
-    val iwh = new Warehouse(spark, idx0.root)
+    val idx0 = corpusIdx(dir, wh2)
     // pre-crash screen materialized BEFORE the crash sim (see the
     // sibling crash spec: the guard re-lists appended paths)
-    val p0 = Dedup.screenAgainstIndex(spark, dir, night(8))
+    val p0 = Dedup.screenAgainstIndexOf(idx0, night(8))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     TransientCache.drain()
     val sh8 = Dedup.shingleRowsOf(night(8)).localCheckpoint(true)
-    iwh.append("corpus_shingles", sh8)
-    iwh.append("corpus_band_index", Dedup.bandsOf(sh8))
+    wh2.append("corpus_shingles", sh8)
+    wh2.append("corpus_band_index", Dedup.bandsOf(sh8))
     wh2.append("dedup_pairs", p0.toDF("di", "dc", "jaccard"))
-    // "restart": re-read the at-rest tables as they are
-    Dedup.installCorpusIndex(spark, dir,
-      idx0.copy(bands = iwh.read("corpus_band_index"),
-        shingles = iwh.read("corpus_shingles")))
-    assert(Dedup.corpusIndex(spark, dir).docs
+    // "restart": the next micro-batch re-opens the at-rest tables as they are
+    assert(corpusIdx(dir, wh2).docs
       .filter(col("doc_id") % 10 === 8).isEmpty, "crash state: manifest behind")
     // redelivery: no new pairs (especially no di == dc), manifest repaired
     StreamingDedup.processBatch(dir, wh2, night(8).as[DocRow].collect().toSeq.toDF())
     val gotPairs = wh2.read("dedup_pairs").collect().map(_.mkString("|")).toSet
     assert(gotPairs == wantPairs, "replay must add no self/sibling pairs")
     assert(wh2.read("dedup_pairs").filter(col("di") === col("dc")).isEmpty)
-    val idx1 = Dedup.corpusIndex(spark, dir)
+    val idx1 = corpusIdx(dir, wh2)
     assert(idx1.bands.count() == wantB && idx1.shingles.count() == wantS &&
       idx1.docs.count() == wantD)
-    Dedup.clearCorpusIndex(spark)
   }
 
   test("streaming dedup: a durable index root survives a process restart") {
@@ -385,9 +384,16 @@ class StreamingSpec extends SparkSpec {
     def night(m: Int) = Tables.documents(spark, dir)
       .filter(col("doc_id") % 10 === m)
       .select(col("doc_id"), col("text"))
+    // the fixture's per-dir q74 index holds the base corpus alone, and
+    // no stream advances it
+    def memoAtBase(): Unit = {
+      val docs = Dedup.corpusIndex(spark, dir).docs
+      assert(docs.filter(col("doc_id") % 10 >= 8).isEmpty && !docs.isEmpty,
+        "the per-dir memo index must hold only the base corpus")
+    }
 
-    // reference: both nights in ONE process lifetime (temp-root index)
-    Dedup.clearCorpusIndex(spark)
+    // reference: both nights in ONE process lifetime
+    clearAllMemos()
     val tmpRef = Files.createTempDirectory("graft-durable-ref").toString
     val whRef = new Warehouse(spark, s"$tmpRef/wh")
     StreamingDedup.processBatch(dir, whRef, night(8).as[DocRow].collect().toSeq.toDF())
@@ -395,29 +401,27 @@ class StreamingSpec extends SparkSpec {
     val want = whRef.read("dedup_pairs").collect().map(_.mkString("|")).toSet
     assert(want.nonEmpty)
 
-    // durable run: night 8, then a SIMULATED RESTART (memo wiped — the
-    // exact state the temp-root path cannot recover from), then night 9
+    // restarted run: night 8, then a SIMULATED RESTART (every memo
+    // wiped), then night 9 — the index is at rest in the warehouse
     val tmp = Files.createTempDirectory("graft-durable").toString
     val wh = new Warehouse(spark, s"$tmp/wh")
-    val root = s"$tmp/idx"
-    Dedup.clearCorpusIndex(spark)
-    StreamingDedup.processBatch(dir, wh,
-      night(8).as[DocRow].collect().toSeq.toDF(), Some(root))
-    Dedup.clearCorpusIndex(spark) // "restart": in-memory memo gone
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(root)),
-      "caller-owned root must survive clearCorpusIndex")
-    StreamingDedup.processBatch(dir, wh,
-      night(9).as[DocRow].collect().toSeq.toDF(), Some(root))
+    clearAllMemos()
+    memoAtBase()
+    StreamingDedup.processBatch(dir, wh, night(8).as[DocRow].collect().toSeq.toDF())
+    memoAtBase()
+    clearAllMemos() // "restart": in-memory memos gone
+    memoAtBase()
+    StreamingDedup.processBatch(dir, wh, night(9).as[DocRow].collect().toSeq.toDF())
     // night 9 still deduped against streamed night 8 ⇒ restart lost nothing
     assert(wh.read("dedup_pairs").collect().map(_.mkString("|")).toSet == want)
-    Dedup.clearCorpusIndex(spark)
+    memoAtBase()
+    clearAllMemos()
   }
 
   test("streaming winnow twin: two micro-batch nights == the batch loop; replay is a no-op") {
     val sql = spark.sqlContext
     import sql.implicits._
     val dir = "/root/testdata/sf0.001"
-    Dedup.clearWinnowIndexAtRest(spark) // start from the base corpus (% 10 < 8)
     val tmp = Files.createTempDirectory("graft-swinnow").toString
     val wh = new Warehouse(spark, s"$tmp/wh")
     val docs = Tables.documents(spark, dir)
@@ -458,10 +462,11 @@ class StreamingSpec extends SparkSpec {
     assert(got == (expected(8, 8) ++ expected(9, 9)))
     assert(got.nonEmpty, "fixture must contain streaming winnow overlaps")
 
-    // the stream ADVANCED the shared index: both nights' docs are in the
-    // manifest now (foreachBatch clones the session — the memo must share
-    // across clones or each micro-batch rebuilds its own index)
-    val idx = Dedup.winnowIndexAtRest(spark, dir)
+    // the stream ADVANCED the warehouse index: both nights' docs are in
+    // the manifest now (foreachBatch clones the session — each
+    // micro-batch re-opens the same at-rest tables)
+    def winIdx() = Dedup.winnowIndexAt(spark, wh.root, Dedup.seenCorpus(spark, dir))
+    val idx = winIdx()
     assert(idx.docs.filter(col("doc_id") % 10 >= 8).count() ==
       docs.filter(col("doc_id") % 10 >= 8 && col("text").isNotNull).count())
     val (nf, nd) = (idx.fingerprints.count(), idx.docs.count())
@@ -469,9 +474,8 @@ class StreamingSpec extends SparkSpec {
     // seen-ledger + keyed appends make it a no-op on pairs AND index
     StreamingWinnow.processBatch(dir, wh, night(8).toDF())
     assert(wh.read("winnow_pairs").collect().map(_.mkString("|")).toSet == got)
-    val idx2 = Dedup.winnowIndexAtRest(spark, dir)
+    val idx2 = winIdx()
     assert(idx2.fingerprints.count() == nf && idx2.docs.count() == nd)
-    Dedup.clearWinnowIndexAtRest(spark)
   }
 
   test("streaming winnow: a durable index root survives a process restart") {
@@ -481,9 +485,16 @@ class StreamingSpec extends SparkSpec {
     def night(m: Int) = Tables.documents(spark, dir)
       .filter(col("doc_id") % 10 === m)
       .select(col("doc_id"), col("text"))
+    // the fixture's per-dir q88 index holds the base corpus alone, and
+    // no stream advances it
+    def memoAtBase(): Unit = {
+      val docs = Dedup.winnowIndexAtRest(spark, dir).docs
+      assert(docs.filter(col("doc_id") % 10 >= 8).isEmpty && !docs.isEmpty,
+        "the per-dir memo index must hold only the base corpus")
+    }
 
-    // reference: both nights in ONE process lifetime (temp-root index)
-    Dedup.clearWinnowIndexAtRest(spark)
+    // reference: both nights in ONE process lifetime
+    clearAllMemos()
     val tmpRef = Files.createTempDirectory("graft-wdurable-ref").toString
     val whRef = new Warehouse(spark, s"$tmpRef/wh")
     StreamingWinnow.processBatch(dir, whRef, night(8).as[DocRow].collect().toSeq.toDF())
@@ -491,22 +502,22 @@ class StreamingSpec extends SparkSpec {
     val want = whRef.read("winnow_pairs").collect().map(_.mkString("|")).toSet
     assert(want.nonEmpty)
 
-    // durable run: night 8, then a SIMULATED RESTART (memo wiped), then
-    // night 9 — the index must remember night 8 from the at-rest root
+    // restarted run: night 8, then a SIMULATED RESTART (every memo
+    // wiped), then night 9 — the index must remember night 8 from the
+    // warehouse
     val tmp = Files.createTempDirectory("graft-wdurable").toString
     val wh = new Warehouse(spark, s"$tmp/wh")
-    val root = s"$tmp/idx"
-    Dedup.clearWinnowIndexAtRest(spark)
-    StreamingWinnow.processBatch(dir, wh,
-      night(8).as[DocRow].collect().toSeq.toDF(), Some(root))
-    Dedup.clearWinnowIndexAtRest(spark) // "restart": in-memory memo gone
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(root)),
-      "caller-owned root must survive clearWinnowIndexAtRest")
-    StreamingWinnow.processBatch(dir, wh,
-      night(9).as[DocRow].collect().toSeq.toDF(), Some(root))
+    clearAllMemos()
+    memoAtBase()
+    StreamingWinnow.processBatch(dir, wh, night(8).as[DocRow].collect().toSeq.toDF())
+    memoAtBase()
+    clearAllMemos() // "restart": in-memory memos gone
+    memoAtBase()
+    StreamingWinnow.processBatch(dir, wh, night(9).as[DocRow].collect().toSeq.toDF())
     // night 9 still screened against streamed night 8 ⇒ restart lost nothing
     assert(wh.read("winnow_pairs").collect().map(_.mkString("|")).toSet == want)
-    Dedup.clearWinnowIndexAtRest(spark)
+    memoAtBase()
+    clearAllMemos()
   }
 
   test("streaming ann twin: two micro-batch nights == the batch loop; replay is a no-op") {
@@ -546,15 +557,15 @@ class StreamingSpec extends SparkSpec {
       .start().awaitTermination()
     assert(asSet(wh.read("ann_matches")) == want)
 
-    // the stream ADVANCED the shared index: every vector of both nights
-    // is absorbed, so a replay is a no-op on matches AND index
-    val idx = graft.operators.Similarity.annIndexAtRest(spark, dir)
-    assert(idx.codes.filter(col("vec_id") % 10 >= 8).count() ==
+    // the stream ADVANCED the warehouse index: every vector of both
+    // nights is absorbed, so a replay is a no-op on matches AND index
+    val codes = wh.read("corpus_codes")
+    assert(codes.filter(col("vec_id") % 10 >= 8).count() ==
       emb.filter(col("vec_id") % 10 >= 8).count())
-    val nc = idx.codes.count()
+    val nc = codes.count()
     StreamingAnn.processBatch(dir, wh, night(8).toDF())
     assert(asSet(wh.read("ann_matches")) == want)
-    assert(graft.operators.Similarity.annIndexAtRest(spark, dir).codes.count() == nc)
+    assert(wh.read("corpus_codes").count() == nc)
     graft.operators.Similarity.clearKmeansMemo(spark)
   }
 
@@ -567,9 +578,16 @@ class StreamingSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding")).as[EmbRow].collect().toSeq
     def asSet(df: org.apache.spark.sql.DataFrame): Set[String] =
       df.collect().map(_.mkString("|")).toSet
+    // the fixture's per-dir q89 index holds the base corpus alone, and
+    // no stream advances it
+    def memoAtBase(): Unit = {
+      val codes = graft.operators.Similarity.annIndexAtRest(spark, dir).codes
+      assert(codes.filter(col("vec_id") % 10 >= 8).isEmpty && !codes.isEmpty,
+        "the per-dir memo index must hold only the base corpus")
+    }
 
-    // reference: both nights in ONE process lifetime (temp-root index)
-    graft.operators.Similarity.clearKmeansMemo(spark)
+    // reference: both nights in ONE process lifetime
+    clearAllMemos()
     val tmpRef = Files.createTempDirectory("graft-anndur-ref").toString
     val whRef = new Warehouse(spark, s"$tmpRef/wh")
     StreamingAnn.processBatch(dir, whRef, night(8).toDF())
@@ -577,20 +595,21 @@ class StreamingSpec extends SparkSpec {
     val want = asSet(whRef.read("ann_matches"))
     assert(want.nonEmpty)
 
-    // durable run: night 8, a SIMULATED RESTART (index memo wiped; the
+    // restarted run: night 8, a SIMULATED RESTART (every memo wiped; the
     // fits legitimately re-memoize — they are deterministic), night 9
     val tmp = Files.createTempDirectory("graft-anndur").toString
     val wh = new Warehouse(spark, s"$tmp/wh")
-    val root = s"$tmp/idx"
-    graft.operators.Similarity.clearKmeansMemo(spark)
-    StreamingAnn.processBatch(dir, wh, night(8).toDF(), Some(root))
-    graft.operators.Similarity.clearKmeansMemo(spark) // "restart"
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(root)),
-      "caller-owned root must survive the memo wipe")
-    StreamingAnn.processBatch(dir, wh, night(9).toDF(), Some(root))
+    clearAllMemos()
+    memoAtBase()
+    StreamingAnn.processBatch(dir, wh, night(8).toDF())
+    memoAtBase()
+    clearAllMemos() // "restart"
+    memoAtBase()
+    StreamingAnn.processBatch(dir, wh, night(9).toDF())
     // night 9 still searched against streamed night 8 ⇒ restart lost nothing
     assert(asSet(wh.read("ann_matches")) == want)
-    graft.operators.Similarity.clearKmeansMemo(spark)
+    memoAtBase()
+    clearAllMemos()
   }
 
   test("streaming refine twin: micro-batch nights == batch nights; mid-cycle crash replay converges") {

@@ -680,7 +680,9 @@ class TrainingOpsSpec extends SparkSpec {
   }
 
   test("nightly loop: screen -> append -> screen == rebuild at each step; append idempotent") {
-    Dedup.clearCorpusIndex(spark) // start from the base corpus (% 10 < 8)
+    // an index of its own, built from the base corpus (% 10 < 8)
+    val root = java.nio.file.Files.createTempDirectory("graft-nightly-idx").toString
+    def current() = Dedup.corpusIndexAt(spark, root, Dedup.seenCorpus(spark, dir))
     val docs = Tables.documents(spark, dir)
     val night1 = docs.filter(col("doc_id") % 10 === 8)
     val night2 = docs.filter(col("doc_id") % 10 === 9)
@@ -698,10 +700,10 @@ class TrainingOpsSpec extends SparkSpec {
           when(col("da") % 10 === batchMod, col("db")).otherwise(col("da")).as("dc"),
           col("jaccard")))
     // night 1: screen against the base index, then advance it
-    val s1 = asSet(Dedup.screenAgainstIndex(spark, dir, night1))
+    val s1 = asSet(Dedup.screenAgainstIndexOf(current(), night1))
     TransientCache.drain()
     assert(s1 == expected(8, 8))
-    val widened = Dedup.appendToCorpusIndex(spark, dir, night1)
+    val widened = Dedup.appendToCorpusIndexOf(current(), night1)
     // the append must land in BOTH tables — the fixture has no
     // night2 x night1 near-dups, so the screen equality below cannot
     // catch a silently-empty append on its own
@@ -715,7 +717,7 @@ class TrainingOpsSpec extends SparkSpec {
     // rows certify fully-committed docs)
     assert(widened.docs.filter(col("doc_id") % 10 === 8).count() == n1docs)
     // night 2 sees the widened corpus: base + night1
-    val s2 = asSet(Dedup.screenAgainstIndex(spark, dir, night2))
+    val s2 = asSet(Dedup.screenAgainstIndexOf(current(), night2))
     TransientCache.drain()
     assert(s2 == expected(9, 9))
     // q74's differential already guarantees cross-boundary near-dups
@@ -723,18 +725,17 @@ class TrainingOpsSpec extends SparkSpec {
     assert((s1 ++ s2).nonEmpty, "fixture must contain nightly near-dups")
     // idempotence: re-appending night1 changes NOTHING — not the index
     // row multisets, not the next screen (at-least-once => exactly-once)
-    val idx = Dedup.corpusIndex(spark, dir)
+    val idx = current()
     val (bands0, sh0) = (asSet(idx.bands), asSet(idx.shingles))
     assert(idx.bands.count() == bands0.size &&
       idx.shingles.count() == sh0.size, "index rows must be key-unique")
-    val again = Dedup.appendToCorpusIndex(spark, dir, night1)
+    val again = Dedup.appendToCorpusIndexOf(current(), night1)
     assert(asSet(again.bands) == bands0 && asSet(again.shingles) == sh0)
     assert(again.bands.count() == bands0.size &&
       again.shingles.count() == sh0.size)
-    assert(asSet(Dedup.screenAgainstIndex(spark, dir, night2)) == s2)
+    assert(asSet(Dedup.screenAgainstIndexOf(current(), night2)) == s2)
     TransientCache.drain()
     all.unpersist(false)
-    Dedup.clearCorpusIndex(spark) // leave the default index for other tests
   }
 
   test("q74 corpus side is the at-rest index: bare scan, and injection drives output") {
@@ -1313,7 +1314,12 @@ class TrainingOpsSpec extends SparkSpec {
     // most one corpus coarse fit and one corpus PQ fit (plus the base
     // fits the memo already held); further appends/screens refit nothing
     val (kmF, pqF) = (Similarity.kmFitCount.get(), Similarity.pqFitCount.get())
-    val idx1 = Similarity.appendToAnnIndex(spark, dir, night1)
+    // the loop's own index, built from the base corpus with the same fits
+    val root = java.nio.file.Files.createTempDirectory("graft-annloop").toString
+    val cents = Similarity.corpusKmeansCentroids(spark, dir)
+    val cbs = Similarity.corpusPqCodebooks(spark, dir)
+    def current() = Similarity.annIndexAt(spark, dir, root)
+    val idx1 = Similarity.appendAnnWith(current(), cents, cbs, night1)
     assert(Similarity.kmFitCount.get() == kmF && Similarity.pqFitCount.get() == pqF,
       "append must encode with frozen fits, never refit")
 
@@ -1321,23 +1327,22 @@ class TrainingOpsSpec extends SparkSpec {
     // from-scratch encode of corpus ∪ night1 under the same frozen fits
     val want = asSet(Similarity.pqCodesOf(
       Similarity.vecsOf(emb.filter(col("vec_id") % 10 < 8 || col("vec_id") % 10 === 8)),
-      Similarity.corpusKmeansCentroids(spark, dir),
-      Similarity.corpusPqCodebooks(spark, dir)))
+      cents, cbs))
     assert(asSet(idx1.codes) == want)
     assert(idx1.codes.count() == want.size, "codes rows must be key-unique")
 
     // replay of an already-appended batch: no-op on the table
-    val again = Similarity.appendToAnnIndex(spark, dir, night1)
+    val again = Similarity.appendAnnWith(current(), cents, cbs, night1)
     assert(asSet(again.codes) == want && again.codes.count() == want.size)
     // a vector the index absorbed is seen-guarded out of the screen
-    assert(Similarity.screenAnnAgainstIndex(spark, dir, night1).isEmpty,
+    assert(Similarity.screenAnnWith(spark, dir, current(), cents, cbs, night1).isEmpty,
       "an absorbed batch must not screen (it would match itself)")
 
     // IN-BATCH redelivery: the at-rest anti-join only guards against
     // committed rows, so a source that repeats a vec_id within one
     // micro-batch must still append it exactly once
     val night2 = emb.filter(col("vec_id") % 10 === 9)
-    val idx2 = Similarity.appendToAnnIndex(spark, dir, night2.union(night2))
+    val idx2 = Similarity.appendAnnWith(current(), cents, cbs, night2.union(night2))
     assert(idx2.codes.count() ==
       idx2.codes.select(col("vec_id")).distinct().count(),
       "duplicate vec_ids within one batch must collapse to one codes row")
@@ -1420,22 +1425,25 @@ class TrainingOpsSpec extends SparkSpec {
     def asSet(df: org.apache.spark.sql.DataFrame): Set[String] =
       df.collect().map(_.mkString("|")).toSet
 
-    // reference: append + screen in ONE process lifetime (temp-root index)
-    Similarity.appendToAnnIndex(spark, dir, night1)
-    val want = asSet(Similarity.screenAnnAgainstIndex(spark, dir, night2))
-    Similarity.clearAnnIndex(spark)
+    def screen2(root: String) = asSet(Similarity.screenAnnWith(spark, dir,
+      Similarity.annIndexAt(spark, dir, root), Similarity.corpusKmeansCentroids(spark, dir),
+      Similarity.corpusPqCodebooks(spark, dir), night2))
+    def append1(root: String) = Similarity.appendAnnWith(Similarity.annIndexAt(spark, dir, root),
+      Similarity.corpusKmeansCentroids(spark, dir), Similarity.corpusPqCodebooks(spark, dir), night1)
+    // reference: append + screen in ONE process lifetime
+    val tmp = java.nio.file.Files.createTempDirectory("graft-annroot").toString
+    append1(s"$tmp/ref")
+    val want = screen2(s"$tmp/ref")
 
-    // durable run: open at a caller-owned root, append, then a SIMULATED
-    // RESTART (memo wiped), reopen — night 2 must still screen against
-    // the appended night 1
-    val root = java.nio.file.Files.createTempDirectory("graft-annroot").toString + "/idx"
-    Similarity.openAnnIndex(spark, dir, root)
-    Similarity.appendToAnnIndex(spark, dir, night1)
-    Similarity.clearAnnIndex(spark) // "restart": in-memory memo gone
+    // durable run: build at a caller-owned root, append, then a SIMULATED
+    // RESTART (every memo wiped, the fits included), reopen — night 2
+    // must still screen against the appended night 1
+    val root = s"$tmp/idx"
+    append1(root)
+    Similarity.clearKmeansMemo(spark) // "restart": in-memory memos gone
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(root)),
-      "caller-owned root must survive clearAnnIndex")
-    Similarity.openAnnIndex(spark, dir, root)
-    assert(asSet(Similarity.screenAnnAgainstIndex(spark, dir, night2)) == want)
+      "caller-owned root must survive clearKmeansMemo")
+    assert(screen2(root) == want)
     Similarity.clearKmeansMemo(spark)
   }
 

@@ -205,6 +205,22 @@ class TransientCacheSpec extends SparkSpec {
     checkDrains(graft.operators.Analytics.basketLift(spark, dir), 1)
   }
 
+  test("q32 topTerms transient (doc-term frequencies) drains") {
+    checkDrains(TextOps.topTerms(spark, dir), 1)
+  }
+
+  test("q44 rollingDailyNet transient (daily net series) drains") {
+    checkDrains(graft.operators.Analytics.rollingDailyNet(spark, dir), 1)
+  }
+
+  test("q50 interpolateDailyNet transient (daily net series) drains") {
+    checkDrains(graft.operators.Analytics.interpolateDailyNet(spark, dir), 1)
+  }
+
+  test("q52 setOpCohorts transients (click and purchase user sets) drain") {
+    checkDrains(Sessions.setOpCohorts(spark, dir), 2)
+  }
+
   test("drained query recomputes correctly (no dangling reuse)") {
     val a = Contamination.fuzzyContamination(spark, dir).collect().toSeq
     TransientCache.drain()

@@ -113,7 +113,9 @@ class WinnowSpec extends SparkSpec {
   }
 
   test("q88 nightly loop: screen -> append -> screen == rebuild; append idempotent") {
-    Dedup.clearWinnowIndexAtRest(spark)
+    // an index of its own, built from the base corpus (% 10 < 8)
+    val root = java.nio.file.Files.createTempDirectory("graft-winloop").toString
+    def current() = Dedup.winnowIndexAt(spark, root, Dedup.seenCorpus(spark, dir))
     val docs = Tables.documents(spark, dir)
     val night1 = docs.filter(col("doc_id") % 10 === 8)
     val night2 = docs.filter(col("doc_id") % 10 === 9)
@@ -136,57 +138,53 @@ class WinnowSpec extends SparkSpec {
       TransientCache.drain()
       s
     }
-    val s1 = asSet(Dedup.screenWinnowAgainstIndex(spark, dir, night1))
+    val s1 = asSet(Dedup.screenWinnowAgainstIndexOf(current(), night1))
     TransientCache.drain()
     assert(s1 == expected(8, 8))
-    val widened = Dedup.appendToWinnowIndex(spark, dir, night1)
+    val widened = Dedup.appendToWinnowIndexOf(current(), night1)
     // the append must land in data AND manifest
     val n1docs = night1.filter(col("text").isNotNull).count()
     assert(widened.fingerprints.filter(col("doc_id") % 10 === 8)
       .select(col("doc_id")).distinct().count() == n1docs)
     assert(widened.docs.filter(col("doc_id") % 10 === 8).count() == n1docs)
-    val s2 = asSet(Dedup.screenWinnowAgainstIndex(spark, dir, night2))
+    val s2 = asSet(Dedup.screenWinnowAgainstIndexOf(current(), night2))
     TransientCache.drain()
     assert(s2 == expected(9, 9))
     assert((s1 ++ s2).nonEmpty, "fixture must contain nightly winnow overlaps")
     // idempotence: re-appending night1 changes NOTHING
-    val idx = Dedup.winnowIndexAtRest(spark, dir)
+    val idx = current()
     val (fp0, docs0) = (asSet(idx.fingerprints), asSet(idx.docs))
     assert(idx.fingerprints.count() == fp0.size && idx.docs.count() == docs0.size,
       "index rows must be key-unique")
-    val again = Dedup.appendToWinnowIndex(spark, dir, night1)
+    val again = Dedup.appendToWinnowIndexOf(current(), night1)
     assert(asSet(again.fingerprints) == fp0 && asSet(again.docs) == docs0)
     assert(again.fingerprints.count() == fp0.size && again.docs.count() == docs0.size)
-    assert(asSet(Dedup.screenWinnowAgainstIndex(spark, dir, night2)) == s2)
+    assert(asSet(Dedup.screenWinnowAgainstIndexOf(current(), night2)) == s2)
     TransientCache.drain()
-    Dedup.clearWinnowIndexAtRest(spark)
   }
 
   test("q88 replay repairs a crash between the data append and the manifest append") {
-    Dedup.clearWinnowIndexAtRest(spark)
     val night1 = Tables.documents(spark, dir).filter(col("doc_id") % 10 === 8)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-wincrash").toString
+    def at(root: String) = Dedup.winnowIndexAt(spark, root, Dedup.seenCorpus(spark, dir))
     // reference: the uncrashed append over the same batch
-    val want = Dedup.appendToWinnowIndex(spark, dir, night1)
+    val want = Dedup.appendToWinnowIndexOf(at(s"$tmp/ref"), night1)
     val (wantFp, wantDocs) = (want.fingerprints.count(), want.docs.count())
-    Dedup.clearWinnowIndexAtRest(spark)
     // crash simulation: the data append committed, the process died
     // before the manifest append — the exact window the residual guard
     // exists for
-    val idx0 = Dedup.winnowIndexAtRest(spark, dir)
-    val iwh = new graft.pipelines.Warehouse(spark, idx0.root)
+    val root = s"$tmp/idx"
+    at(root) // the base index, at rest
+    val iwh = new graft.pipelines.Warehouse(spark, root)
     iwh.append("corpus_winnow",
       Dedup.winnowFingerprintsOf(night1)
         .join(iwh.read("corpus_winnow_docs"), Seq("doc_id"), "left_anti"))
     // "restart": re-open the at-rest tables as they are
-    Dedup.installWinnowIndex(spark, dir,
-      idx0.copy(fingerprints = iwh.read("corpus_winnow"),
-        docs = iwh.read("corpus_winnow_docs")))
-    assert(Dedup.winnowIndexAtRest(spark, dir).docs
+    assert(at(root).docs
       .filter(col("doc_id") % 10 === 8).isEmpty, "crash state: manifest behind")
     // redelivery appends exactly the missing manifest side, no dup rows
-    val repaired = Dedup.appendToWinnowIndex(spark, dir, night1)
+    val repaired = Dedup.appendToWinnowIndexOf(at(root), night1)
     assert(repaired.fingerprints.count() == wantFp && repaired.docs.count() == wantDocs)
-    Dedup.clearWinnowIndexAtRest(spark)
   }
 
   test("q88 screen skips docs whose fingerprints landed without a manifest row") {
@@ -240,30 +238,27 @@ class WinnowSpec extends SparkSpec {
     TransientCache.drain()
   }
 
-  test("q88 durable root: openWinnowIndex survives a process restart") {
+  test("q88 durable root: the at-rest winnow index survives a process restart") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-winidx-durable").toString
     val root = s"$tmp/idx"
     val night1 = Tables.documents(spark, dir).filter(col("doc_id") % 10 === 8)
     val night2 = Tables.documents(spark, dir).filter(col("doc_id") % 10 === 9)
-    Dedup.clearWinnowIndexAtRest(spark)
-    Dedup.openWinnowIndex(spark, dir, root)
-    Dedup.appendToWinnowIndex(spark, dir, night1)
-    val wantS2 = Dedup.screenWinnowAgainstIndex(spark, dir, night2)
+    def at() = Dedup.winnowIndexAt(spark, root, Dedup.seenCorpus(spark, dir))
+    Dedup.appendToWinnowIndexOf(at(), night1)
+    val wantS2 = Dedup.screenWinnowAgainstIndexOf(at(), night2)
       .collect().map(_.mkString("|")).toSet
     TransientCache.drain()
-    // "restart": memo wiped — the state the temp-root path cannot
-    // recover from; the caller-owned root must survive the clear
+    // "restart": every memo wiped — the index is at rest under root,
+    // which no memo clear deletes
     Dedup.clearWinnowIndexAtRest(spark)
+    Dedup.clearCorpusIndex(spark)
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(root)),
       "caller-owned root must survive clearWinnowIndexAtRest")
-    Dedup.openWinnowIndex(spark, dir, root)
     // night 2 still screens against streamed night 1 => nothing lost
-    assert(Dedup.screenWinnowAgainstIndex(spark, dir, night2)
+    assert(Dedup.screenWinnowAgainstIndexOf(at(), night2)
       .collect().map(_.mkString("|")).toSet == wantS2)
-    assert(Dedup.winnowIndexAtRest(spark, dir).docs
-      .filter(col("doc_id") % 10 === 8).count() > 0)
+    assert(at().docs.filter(col("doc_id") % 10 === 8).count() > 0)
     TransientCache.drain()
-    Dedup.clearWinnowIndexAtRest(spark)
   }
 
   test("q87 rows straddle the split boundary with verified jaccard") {
