@@ -160,7 +160,7 @@ object Bench {
       ("simhash", Set("q23", "q24", "q45", "q62", "q99", "q110"),
         () => operators.Dedup.simhashSig(spark, sfDir).count(): Unit),
       // at-rest corpus band+shingle index (q74's incremental corpus side):
-      // the build writes the parquet tables eagerly and memoizes the reads
+      // the build writes the parquet tables eagerly under its fixture root
       ("bandidx", Set("q74"),
         () => operators.Dedup.corpusIndex(spark, sfDir): Unit),
       // the shared Lloyd fit (q71 assignment, q73 block key, q79

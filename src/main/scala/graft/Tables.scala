@@ -26,10 +26,13 @@ object Tables {
     * UTC, so the cast reinterprets the same micros as the same instant the
     * UTC-adjusted generations produced, and every downstream consumer
     * (`unix_micros`, `Row.getTimestamp`, the Verify parquet dumps the
-    * oracle compares against) keeps one stable type surface.
+    * oracle compares against) keeps one stable type surface. The read
+    * reuses the schema resolved for the file's current listing
+    * ([[pipelines.Warehouse.readParquet]]), so a night or a query that
+    * loads an unchanged source runs no schema job.
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = pipelines.Warehouse.readParquet(spark, s"$dir/$name.parquet")
     val ntz = df.schema.fields.collect {
       case f if f.dataType == org.apache.spark.sql.types.TimestampNTZType => f.name
     }

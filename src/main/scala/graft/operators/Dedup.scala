@@ -301,7 +301,7 @@ object Dedup {
     * typed [[graft.functions.BloomSketch]] Aggregator (partial
     * aggregation merges per-partition bitsets by OR — the
     * SketchAlgebraSpec-proven algebra), memoized per (context, dir,
-    * hash mode) like [[corpusIndex]]. ⌈m/64⌉ longs of driver state.
+    * hash mode). ⌈m/64⌉ longs of driver state.
     */
   private[graft] def corpusBloom(spark: SparkSession, dir: String): Array[Long] = {
     bloomMemo.get(spark, modeKey(dir)) {
@@ -503,22 +503,23 @@ object Dedup {
     * consumer's corpus-side plan is an index SCAN — no tokenize, shingle
     * or minhash stage touches the corpus after the one-time build (at
     * 100 TB this is the bucketed warehouse table the nightly pipeline
-    * appends each verified batch to; here it is built once per session
-    * and memoized like [[Graph.simhashComponents]]).
+    * appends each verified batch to; the fixture's is built once per
+    * context under its [[graft.FixtureRoots]] root).
     */
   private[graft] case class CorpusIndex(bands: DataFrame, shingles: DataFrame,
                                         docs: DataFrame, root: String)
 
-  private val corpusIndexMemo =
-    new graft.ContextMemo[(String, String), CorpusIndex](_.root)
-
-  private[graft] def corpusIndex(spark: SparkSession, dir: String): CorpusIndex =
-    corpusIndexMemo.getAt(spark, modeKey(dir), "graft_bandidx_")(
-      corpusIndexAt(spark, _, seenCorpus(spark, dir)))
+  /** The q74 fixture index: `dir`'s seen corpus at its
+    * [[graft.FixtureRoots]] root, re-opened there on every call.
+    */
+  private[graft] def corpusIndex(spark: SparkSession, dir: String): CorpusIndex = {
+    def open(root: String) = corpusIndexAt(spark, root, seenCorpus(spark, dir))
+    open(graft.FixtureRoots.root(spark, "bandidx", dir)(open(_)))
+  }
 
   /** The fixture's SEEN corpus (`doc_id % 10 < 8`, q61's convention) —
-    * what every at-rest doc index of `dir` is seeded from, the per-dir
-    * memos and the streaming twins' warehouse indexes alike.
+    * what every at-rest doc index of `dir` is seeded from, the fixture
+    * roots and the streaming twins' warehouse indexes alike.
     */
   private[graft] def seenCorpus(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir).filter(col("doc_id") % 10 < 8)
@@ -535,23 +536,6 @@ object Dedup {
     val Seq(shingles, bands, docs) = reads
     CorpusIndex(bands, shingles, docs, root)
   }
-
-  /** Drop this context's memoized corpus indexes (the next
-    * [[deltaMinhash]] rebuilds). Roots we created are deleted from
-    * disk — a long-lived JVM toggling hash modes must not accumulate
-    * `graft_bandidx_*` dirs; test-injected roots
-    * ([[installCorpusIndex]]) are left alone.
-    */
-  def clearCorpusIndex(spark: SparkSession): Unit = corpusIndexMemo.clear(spark)
-
-  /** Test seam: install a replacement index for (spark, dir) under the
-    * CURRENT hash mode — the q74 contract spec injects a poisoned index
-    * to prove the operator reads the at-rest table rather than
-    * re-deriving the corpus side.
-    */
-  private[graft] def installCorpusIndex(spark: SparkSession, dir: String,
-                                        idx: CorpusIndex): Unit =
-    corpusIndexMemo.install(spark, modeKey(dir), idx)
 
   /** Build-or-reopen the corpus index at an explicit root from an
     * explicit corpus frame — the one build body behind [[corpusIndex]],
@@ -633,8 +617,8 @@ object Dedup {
 
   /** The q74 screen against an EXPLICIT index — the form consumers with
     * their own at-rest index (the [[graft.pipelines.CorpusPipeline]]
-    * live corpus) call; the per-dir q74 path delegates here with the
-    * memoized [[corpusIndex]]. Contract: a doc the index has already
+    * live corpus) call; the fixture q74 path delegates here with the
+    * [[corpusIndex]] at its fixture root. Contract: a doc the index has already
     * absorbed — even partially, through the append crash window — is
     * never screened, so no doc can pair with its own at-rest rows
     * ([[unseenBatch]]; what makes at-least-once redelivery safe for
@@ -1215,9 +1199,6 @@ object Dedup {
   private[graft] case class WinnowIndex(fingerprints: DataFrame,
                                         docs: DataFrame, root: String)
 
-  private val winnowIndexMemo =
-    new graft.ContextMemo[(String, String), WinnowIndex](_.root)
-
   private[graft] val WinnowLayout = graft.pipelines.Warehouse.IndexLayout("doc_id",
     Seq("corpus_winnow" -> winnowFingerprintsOf _), "corpus_winnow_docs")
 
@@ -1236,22 +1217,13 @@ object Dedup {
     winnowIndexOf(root,
       new graft.pipelines.Warehouse(spark, root).openIndex(WinnowLayout, corpusDocs))
 
-  private[graft] def winnowIndexAtRest(spark: SparkSession, dir: String): WinnowIndex =
-    winnowIndexMemo.getAt(spark, modeKey(dir), "graft_winidx_")(
-      winnowIndexAt(spark, _, seenCorpus(spark, dir)))
-
-  /** Drop this context's memoized winnow indexes; roots we created are
-    * deleted, injected roots are left alone ([[clearCorpusIndex]]
-    * semantics).
+  /** The q88 fixture index, re-opened at its [[graft.FixtureRoots]] root
+    * ([[corpusIndex]]'s discipline).
     */
-  def clearWinnowIndexAtRest(spark: SparkSession): Unit = winnowIndexMemo.clear(spark)
-
-  /** Test seam — the q74/q88 contract spec injects a poisoned index to
-    * prove the screen reads the at-rest table.
-    */
-  private[graft] def installWinnowIndex(spark: SparkSession, dir: String,
-                                        idx: WinnowIndex): Unit =
-    winnowIndexMemo.install(spark, modeKey(dir), idx)
+  private[graft] def winnowIndexAtRest(spark: SparkSession, dir: String): WinnowIndex = {
+    def open(root: String) = winnowIndexAt(spark, root, seenCorpus(spark, dir))
+    open(graft.FixtureRoots.root(spark, "winidx", dir)(open(_)))
+  }
 
   private[graft] def appendToWinnowIndexOf(idx: WinnowIndex,
                                            batchDocs: DataFrame): WinnowIndex =
@@ -1265,31 +1237,21 @@ object Dedup {
 
   // ---------- q127: the retraction lane on the gate, per-row-store flavor
 
-  private val retractedBandMemo =
-    new graft.ContextMemo[(String, String), CorpusIndex](_.root)
-
   /** The q127 fixture: the q74 at-rest band index built through the
     * normal path, then [[retractFromCorpusIndexOf]]-ed of the shared
     * retraction predicate ([[QuantileIndex.RetractPredSql]] — the same
-    * ninth of the corpus q126 retracts). Its OWN root and memo (keyed
-    * with the hash mode, like every signature-bearing index): the
+    * ninth of the corpus q126 retracts). Its OWN fixture root: the
     * shared q74 index must never see the retraction.
     */
   private[graft] def retractedCorpusIndex(spark: SparkSession,
-                                          dir: String): CorpusIndex =
-    retractedBandMemo.getAt(spark, modeKey(dir), "graft_rbandidx_") { root =>
-      val docs = Tables.documents(spark, dir)
-      val built = corpusIndexAt(spark, root,
-        docs.filter(col("doc_id") % 10 < 8).select(col("doc_id"), col("text")))
-      retractFromCorpusIndexOf(built,
-        docs.filter(expr(QuantileIndex.RetractPredSql)).select(col("doc_id")))
-    }
-
-  /** Drop this context's memoized retracted band fixtures; owned roots
-    * deleted ([[clearCorpusIndex]] semantics).
-    */
-  def clearRetractedCorpusIndex(spark: SparkSession): Unit =
-    retractedBandMemo.clear(spark)
+                                          dir: String): CorpusIndex = {
+    def open(root: String) = corpusIndexAt(spark, root,
+      seenCorpus(spark, dir).select(col("doc_id"), col("text")))
+    open(graft.FixtureRoots.root(spark, "rbandidx", dir) { root =>
+      retractFromCorpusIndexOf(open(root), Tables.documents(spark, dir)
+        .filter(expr(QuantileIndex.RetractPredSql)).select(col("doc_id")))
+    })
+  }
 
   /** q127 — the retraction lane on the driver gate for the PER-ROW-STORE
     * flavor (q126 proves the additive flavor): q74's screen, plan

@@ -286,31 +286,17 @@ object QuantileIndex {
       else readMarker(wh).unionByName(mine))
   }
 
-  // ---------- fixture index (memoized per context+dir, the q113/q115
-  // time-split discipline transposed to the doc tier's % 10 split)
+  // ---------- fixture index (the q113/q115 time-split discipline
+  // transposed to the doc tier's % 10 split)
 
-  private val memo = new graft.ContextMemo[String, String](identity)
-
-  /** The fixture's at-rest index: corpus = `doc_id % 10 < 8` (q61/q74's
-    * seen-corpus convention), seeded through the SAME advance path — a
-    * cold warehouse's first night IS the seed.
+  /** The fixture's at-rest index root ([[graft.FixtureRoots]]): corpus =
+    * `doc_id % 10 < 8` (q61/q74's seen-corpus convention), seeded
+    * through the SAME advance path — a cold warehouse's first night IS
+    * the seed.
     */
   private[graft] def indexAtRest(spark: SparkSession, dir: String): String =
-    memo.getAt(spark, dir, "graft_tqidx_") { fresh =>
-      advance(spark, fresh,
-        Tables.documents(spark, dir).filter(col("doc_id") % 10 < 8))
-      fresh
-    }
-
-  /** Test seam — inject an index root; a built root it shadows is
-    * deleted.
-    */
-  private[graft] def installIndex(spark: SparkSession, dir: String,
-                                  root: String): Unit =
-    memo.install(spark, dir, root)
-
-  /** Drop this context's memoized indexes; owned roots deleted. */
-  def clearIndex(spark: SparkSession): Unit = memo.clear(spark)
+    graft.FixtureRoots.root(spark, "tqidx", dir)(advance(spark, _,
+      Tables.documents(spark, dir).filter(col("doc_id") % 10 < 8)))
 
   /** q119 — q116's exact grouped quantiles over corpus + tonight's
     * batch WITHOUT rescanning the corpus: the corpus side is the
@@ -435,25 +421,17 @@ object QuantileIndex {
     */
   private[graft] val RetractPredSql = "doc_id % 10 < 8 AND doc_id % 9 = 4"
 
-  private val retractMemo = new graft.ContextMemo[String, String](identity)
-
   /** The q126 fixture: the q119 at-rest index seeded through the SAME
     * advance path, then [[retract]]ed of the [[RetractPredSql]] docs —
-    * memoized per context+dir like every index fixture (its own root:
-    * the shared q119/q120/q125 index must never see the retraction).
+    * in its own fixture root: the shared q119/q120/q125 index must
+    * never see the retraction.
     */
   private[graft] def retractedIndexAtRest(spark: SparkSession, dir: String): String =
-    retractMemo.getAt(spark, dir, "graft_rqidx_") { fresh =>
+    graft.FixtureRoots.root(spark, "rqidx", dir) { fresh =>
       val docs = Tables.documents(spark, dir)
       advance(spark, fresh, docs.filter(col("doc_id") % 10 < 8))
       retract(spark, fresh, docs.filter(expr(RetractPredSql)))
-      fresh
     }
-
-  /** Drop this context's memoized retraction fixtures; owned roots
-    * deleted ([[clearIndex]] semantics).
-    */
-  def clearRetractedIndex(spark: SparkSession): Unit = retractMemo.clear(spark)
 
   /** q126 — the q109-discipline INVERTED: q119's read over an at-rest
     * ledger that has RETRACTED documents (negative-delta cancellation,

@@ -818,10 +818,35 @@ object Sessions {
 
   // ------------- q113: incremental retention (the event tier's delta slot)
 
-  private val retIndexMemo = new graft.ContextMemo[String, (String, Long)](_._1)
-
   private def eventDays(events: DataFrame): DataFrame =
     events.select(col("user_id"), expr("unix_timestamp(ts) DIV 86400").as("day"))
+
+  /** A time-split event fixture at its [[graft.FixtureRoots]] root (the
+    * q113/q115/q128 fixtures): `seed(root, corpus)` gets the events
+    * STRICTLY BEFORE the 80%-of-range split day — a TIME split, not a
+    * hash split, because the delta contract here is temporal (in-order
+    * per user) — and the split day lands last, as the root's
+    * `split_day` checkpoint.
+    */
+  private def timeSplitRoot(spark: SparkSession, tier: String, dir: String)
+                           (seed: (String, DataFrame) => Unit): String =
+    graft.FixtureRoots.root(spark, tier, dir) { root =>
+      val ev = Tables.events(spark, dir)
+      val r = eventDays(ev).agg(min(col("day")).as("lo"), max(col("day")).as("hi")).head()
+      val split = r.getLong(0) + (r.getLong(1) - r.getLong(0)) * 4 / 5
+      seed(root, ev.filter(expr("unix_timestamp(ts) DIV 86400") < split))
+      new graft.pipelines.Warehouse(spark, root).setCheckpoint("split_day", split)
+    }
+
+  /** Tonight's batch of the time-split fixture at `root`: the events on
+    * or after its split day, which reads back from the root's checkpoint
+    * in no Spark job.
+    */
+  private def batchAfterSplit(spark: SparkSession, dir: String, root: String): DataFrame = {
+    val split = new graft.pipelines.Warehouse(spark, root).checkpoint("split_day")
+      .getOrElse(throw new IllegalStateException(s"$root holds no split_day checkpoint"))
+    Tables.events(spark, dir).filter(expr("unix_timestamp(ts) DIV 86400") >= split)
+  }
 
   /** Seed the at-rest retention index at `root` from a corpus events
     * frame (idempotent): `ret_user` = (user_id, fd) — each user's first
@@ -911,32 +936,9 @@ object Sessions {
     new graft.pipelines.Warehouse(spark, root)
       .dropKeys(userIds, "user_id", "ret_user", "ret_weeks")
 
-  /** The fixture's at-rest index (memoized per context+dir like the HLL
-    * index): corpus = events STRICTLY BEFORE the 80%-of-range split day
-    * — a TIME split, not a hash split, because the delta contract here
-    * is temporal (in-order per user). Returns (root, splitDay).
-    */
-  private[graft] def retentionIndexAtRest(spark: SparkSession,
-                                          dir: String): (String, Long) =
-    retIndexMemo.getAt(spark, dir, "graft_retidx_") { fresh =>
-      val r = eventDays(Tables.events(spark, dir))
-        .agg(min(col("day")).as("lo"), max(col("day")).as("hi")).head()
-      val split = r.getLong(0) + (r.getLong(1) - r.getLong(0)) * 4 / 5
-      retentionIndexAt(spark, fresh, Tables.events(spark, dir)
-        .filter(expr("unix_timestamp(ts) DIV 86400") < split))
-      (fresh, split)
-    }
-
-  /** Test seam — inject an index root + split (the poisoned-index
-    * discipline: the spec proves the query reads the tables); a built
-    * root it shadows is deleted.
-    */
-  private[graft] def installRetentionIndex(spark: SparkSession, dir: String,
-                                           root: String, split: Long): Unit =
-    retIndexMemo.install(spark, dir, (root, split))
-
-  /** Drop this context's memoized retention indexes; owned roots deleted. */
-  def clearRetentionIndex(spark: SparkSession): Unit = retIndexMemo.clear(spark)
+  /** The fixture's at-rest retention index root ([[timeSplitRoot]]). */
+  private[graft] def retentionIndexAtRest(spark: SparkSession, dir: String): String =
+    timeSplitRoot(spark, "retidx", dir)(retentionIndexAt(spark, _, _))
 
   /** q113 — the q104 cohort triangle over corpus + tonight's batch
     * WITHOUT rescanning the corpus event log: the corpus side is the
@@ -951,10 +953,8 @@ object Sessions {
     * incremental ≡ rebuild bit-for-bit (the q109 discipline).
     */
   def deltaRetention(spark: SparkSession, dir: String): DataFrame = {
-    val (root, split) = retentionIndexAtRest(spark, dir)
-    retentionOfRoot(spark, root,
-      Tables.events(spark, dir)
-        .filter(expr("unix_timestamp(ts) DIV 86400") >= split))
+    val root = retentionIndexAtRest(spark, dir)
+    retentionOfRoot(spark, root, batchAfterSplit(spark, dir, root))
   }
 
   /** The q113 read body against an explicit index root + batch — shared
@@ -1001,30 +1001,17 @@ object Sessions {
     */
   private[graft] val RetractUsersPredSql = "user_id % 9 = 4"
 
-  private val retRetractMemo = new graft.ContextMemo[String, (String, Long)](_._1)
-
   /** The q128 fixture: the q113 at-rest retention index seeded through
     * the SAME path, then [[retractRetentionUsers]]'d of the opt-out
-    * users — memoized per context+dir in its own root (the shared q113
-    * index must never see the retraction; the q126 rqidx discipline).
+    * users — in its own fixture root (the shared q113 index must never
+    * see the retraction; the q126 rqidx discipline).
     */
-  private[graft] def retractedRetentionIndexAtRest(spark: SparkSession,
-                                                   dir: String): (String, Long) =
-    retRetractMemo.getAt(spark, dir, "graft_rretidx_") { fresh =>
-      val ev = Tables.events(spark, dir)
-      val r = eventDays(ev)
-        .agg(min(col("day")).as("lo"), max(col("day")).as("hi")).head()
-      val split = r.getLong(0) + (r.getLong(1) - r.getLong(0)) * 4 / 5
-      retentionIndexAt(spark, fresh,
-        ev.filter(expr("unix_timestamp(ts) DIV 86400") < split))
-      retractRetentionUsers(spark, fresh,
-        ev.select(col("user_id")).filter(expr(RetractUsersPredSql)))
-      (fresh, split)
+  private[graft] def retractedRetentionIndexAtRest(spark: SparkSession, dir: String): String =
+    timeSplitRoot(spark, "rretidx", dir) { (root, corpus) =>
+      retentionIndexAt(spark, root, corpus)
+      retractRetentionUsers(spark, root,
+        Tables.events(spark, dir).select(col("user_id")).filter(expr(RetractUsersPredSql)))
     }
-
-  /** Drop this context's memoized q128 fixtures; owned roots deleted. */
-  def clearRetractedRetentionIndex(spark: SparkSession): Unit =
-    retRetractMemo.clear(spark)
 
   /** q128 — the q126 discipline on the EVENT tier: q113's cohort read
     * over an at-rest index from which the opt-out users were RETRACTED
@@ -1038,11 +1025,9 @@ object Sessions {
     * q128 the event tier.
     */
   def retractRetention(spark: SparkSession, dir: String): DataFrame = {
-    val (root, split) = retractedRetentionIndexAtRest(spark, dir)
+    val root = retractedRetentionIndexAtRest(spark, dir)
     retentionOfRoot(spark, root,
-      Tables.events(spark, dir)
-        .filter(expr("unix_timestamp(ts) DIV 86400") >= split)
-        .filter(!expr(RetractUsersPredSql)))
+      batchAfterSplit(spark, dir, root).filter(!expr(RetractUsersPredSql)))
   }
 
   /** Oracle: q104's full-scan formulation restricted to the surviving
@@ -1068,8 +1053,6 @@ object Sessions {
       |ORDER BY c.cohort_week, c.week_offset""".stripMargin
 
   // ---------- q115: incremental transitions (the ADDITIVE delta slot)
-
-  private val trIndexMemo = new graft.ContextMemo[String, (String, Long)](_._1)
 
   /** Deterministic key of a night's event batch
     * ([[graft.pipelines.Warehouse.batchKey]] of its event ids), so every
@@ -1258,31 +1241,12 @@ object Sessions {
     } finally graft.TransientCache.unpersistCheckpoint(ev)
   }
 
-  /** The fixture's at-rest transitions index (memoized per context+dir,
-    * the q113 time-split discipline): corpus = events strictly before
-    * the 80%-of-range split day, seeded through the SAME advance path
-    * (a cold warehouse's first night is the seed). Returns (root, split).
+  /** The fixture's at-rest transitions index root ([[timeSplitRoot]]),
+    * seeded through the SAME advance path (a cold warehouse's first
+    * night is the seed).
     */
-  private[graft] def transitionsIndexAtRest(spark: SparkSession,
-                                            dir: String): (String, Long) =
-    trIndexMemo.getAt(spark, dir, "graft_tridx_") { fresh =>
-      val r = eventDays(Tables.events(spark, dir))
-        .agg(min(col("day")).as("lo"), max(col("day")).as("hi")).head()
-      val split = r.getLong(0) + (r.getLong(1) - r.getLong(0)) * 4 / 5
-      advanceTransitionsIndex(spark, fresh, Tables.events(spark, dir)
-        .filter(expr("unix_timestamp(ts) DIV 86400") < split))
-      (fresh, split)
-    }
-
-  /** Test seam — inject an index root + split; a built root it shadows
-    * is deleted.
-    */
-  private[graft] def installTransitionsIndex(spark: SparkSession, dir: String,
-                                             root: String, split: Long): Unit =
-    trIndexMemo.install(spark, dir, (root, split))
-
-  /** Drop this context's memoized transitions indexes; owned roots deleted. */
-  def clearTransitionsIndex(spark: SparkSession): Unit = trIndexMemo.clear(spark)
+  private[graft] def transitionsIndexAtRest(spark: SparkSession, dir: String): String =
+    timeSplitRoot(spark, "tridx", dir)(advanceTransitionsIndex(spark, _, _))
 
   /** q115 — the q105 transition matrix over corpus + tonight's batch
     * WITHOUT rescanning the corpus event log: the corpus side is the
@@ -1295,10 +1259,9 @@ object Sessions {
     * q109/q113 discipline, now for the ADDITIVE state flavor).
     */
   def deltaTransitions(spark: SparkSession, dir: String): DataFrame = {
-    val (root, split) = transitionsIndexAtRest(spark, dir)
+    val root = transitionsIndexAtRest(spark, dir)
     val wh = new graft.pipelines.Warehouse(spark, root)
-    val batch = Tables.events(spark, dir)
-      .filter(expr("unix_timestamp(ts) DIV 86400") >= split)
+    val batch = batchAfterSplit(spark, dir, root)
     val atRest = wh.read("tr_deltas")
       .select(col("from_type"), col("to_type"), col("n"))
     val cells = atRest.unionByName(

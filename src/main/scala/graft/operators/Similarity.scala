@@ -344,15 +344,16 @@ object Similarity {
 
   /** Evict this context's memoized fits — the Lloyd centroids AND the
     * PQ codebooks trained on their residuals (stale codebooks against a
-    * fresh coarse fit would quantize the wrong residual space); the
-    * next q71/q73/q83 call refits.
+    * fresh coarse fit would quantize the wrong residual space) — and
+    * the fixture roots ([[graft.FixtureRoots.clear]]), the q89 codes
+    * among them; the next q71/q73/q83 call refits.
     */
   def clearKmeansMemo(spark: SparkSession): Unit = {
     kmMemo.clear(spark)
     pqMemo.clear(spark)
-    // the at-rest codes quantize the cleared fits' space — a fresh fit
+    // the fixture codes quantize the cleared fits' space — a fresh fit
     // with a stale codes table would ADC against the wrong codebooks
-    clearAnnIndex(spark)
+    graft.FixtureRoots.clear(spark)
   }
 
   /** The Lloyd loop: each update is the vec_id-ordered mean, so the fit
@@ -1027,11 +1028,6 @@ object Similarity {
     */
   private[graft] case class AnnIndex(codes: DataFrame, root: String)
 
-  /** Per data dir; no hash-mode component — the ANN tier is pure
-    * numerics.
-    */
-  private val annIndexMemo = new graft.ContextMemo[String, AnnIndex](_.root)
-
   /** Encode a vector frame against FROZEN fits: coarse cell by literal-
     * centroid argmin, then per-subspace PQ codes against the literal
     * codebooks — one scan-stage projection, no join, the exact encode
@@ -1059,7 +1055,7 @@ object Similarity {
   /** Build-or-reopen the codes table of `dir`'s SEEN corpus
     * (`vec_id % 10 < 8`, encoded with the frozen corpus fits) at an
     * explicit root — the [[Dedup.corpusIndexAt]] discipline: one build
-    * body shared by the temp-root memo path and the
+    * body shared by the fixture root and the
     * [[graft.streaming.StreamingAnn]] warehouse index. A codes table
     * already at rest is re-opened as it is, so an index under a durable
     * root survives a process restart.
@@ -1072,21 +1068,9 @@ object Similarity {
     AnnIndex(wh.read("corpus_codes"), root)
   }
 
+  /** The q89 fixture index, re-opened at its [[graft.FixtureRoots]] root. */
   private[graft] def annIndexAtRest(spark: SparkSession, dir: String): AnnIndex =
-    annIndexMemo.getAt(spark, dir, "graft_annidx_")(annIndexAt(spark, dir, _))
-
-  /** Drop this context's memoized ANN indexes; roots we created are
-    * deleted, injected roots are left alone
-    * ([[Dedup.clearCorpusIndex]] semantics).
-    */
-  def clearAnnIndex(spark: SparkSession): Unit = annIndexMemo.clear(spark)
-
-  /** Test seam — the q74/q88 contract spec pattern: inject a poisoned
-    * index to prove the screen reads the at-rest table.
-    */
-  private[graft] def installAnnIndex(spark: SparkSession, dir: String,
-                                     idx: AnnIndex): Unit =
-    annIndexMemo.install(spark, dir, idx)
+    annIndexAt(spark, dir, graft.FixtureRoots.root(spark, "annidx", dir)(annIndexAt(spark, dir, _)))
 
   /** Advance the at-rest index with a batch of new vectors — the FAISS
     * `add()` contract: encode against the FROZEN corpus fits (never

@@ -206,8 +206,6 @@ object Sketch {
 
   // ------------------------------------ q109: incremental HLL at rest
 
-  private val hllIndexMemo = new graft.ContextMemo[(String, String), String](identity)
-
   /** Build-or-open the at-rest register table at `root` (the
     * winnowIndexAt discipline: existing tables re-open as-is, so the
     * nightly loop resumes where the last process stopped). The at-rest
@@ -306,8 +304,8 @@ object Sketch {
     wh.write("hll_regs", keep.unionByName(rebuilt))
   }
 
-  /** The corpus-side register table as an at-rest parquet index,
-    * memoized per (context, dir, hash mode) like the winnow index.
+  /** The corpus-side register table as an at-rest parquet index at its
+    * [[graft.FixtureRoots]] root, like the winnow index.
     * Built as TWO ingest-window stripes on purpose: the q109 driver
     * row then hash-proves the striped-layout read cross-engine — the
     * oracle recomputes the registers from the full element stream, so
@@ -316,15 +314,13 @@ object Sketch {
     * agg IS the collapse).
     */
   private[graft] def hllIndexAtRest(spark: SparkSession, dir: String): DataFrame = {
-    val root = hllIndexMemo.getAt(spark, (dir, graft.functions.TextFns.hashMode),
-        "graft_hllidx_") { fresh =>
+    val root = graft.FixtureRoots.root(spark, "hllidx", dir) { fresh =>
       val corpusH = Dedup.shingleIndex(spark, dir)
         .filter(col("doc_id") % 10 < 8)
       hllIndexAt(spark, fresh,
         corpusH.filter(col("doc_id") % 2 === 0).select(col("sh_h")))
       advanceHllEpoch(spark, fresh, 1L,
         corpusH.filter(col("doc_id") % 2 === 1).select(col("sh_h")))
-      fresh
     }
     // project the stripe label away: the reader's contract is "rows that
     // max-merge per reg", which striped rows satisfy — the q109 merge
@@ -333,17 +329,6 @@ object Sketch {
     new graft.pipelines.Warehouse(spark, root).read("hll_regs")
       .select(col("reg"), col("mj"))
   }
-
-  /** Test seam — inject a register table root (the poisoned-index
-    * discipline: the q109 spec proves the screen reads the table); a
-    * built root it shadows is deleted.
-    */
-  private[graft] def installHllIndex(spark: SparkSession, dir: String,
-                                     root: String): Unit =
-    hllIndexMemo.install(spark, (dir, graft.functions.TextFns.hashMode), root)
-
-  /** Drop this context's memoized HLL indexes; owned roots deleted. */
-  def clearHllIndex(spark: SparkSession): Unit = hllIndexMemo.clear(spark)
 
   /** Advance the at-rest registers with a batch — union + element-wise
     * max through the tmp-swap write. Max-merge makes the advance

@@ -202,16 +202,7 @@ object CorpusPipeline {
     import spark.implicits._
     require(wh.exists("corpus_clean") && wh.exists("corpus_raw"),
       "refineIncremental needs a refined base — run refine() first")
-    // INDEPENDENT seed guards: a crash between the two seed writes must
-    // not strand the warehouse (a corpus_live-only guard would skip the
-    // live_keys seed forever — a review-pass finding). live_keys derives
-    // from the at-rest corpus_live, so the repair is exact.
-    if (!wh.exists("corpus_live"))
-      wh.write("corpus_live", wh.read("corpus_clean"))
-    if (!wh.exists("live_keys"))
-      wh.write("live_keys",
-        Dedup.exactDedupOf(wh.read("corpus_live")).select(col("k")))
-    seedTokenCounts(wh)
+    seedLive(wh)
     val idx = Dedup.corpusIndexAt(spark, s"${wh.root}/live_index",
       wh.read("corpus_live"))
     val log = scala.collection.mutable.ArrayBuffer.empty[StageCount]
@@ -425,14 +416,8 @@ object CorpusPipeline {
     val spark = wh.spark
     require(wh.exists("corpus_raw"),
       "retractFromLive purges a refined warehouse — run refine() first")
-    // the same idempotent seed guards as the nightly body: a takedown
-    // may arrive before the first incremental night
-    if (!wh.exists("corpus_live"))
-      wh.write("corpus_live", wh.read("corpus_clean"))
-    if (!wh.exists("live_keys"))
-      wh.write("live_keys",
-        Dedup.exactDedupOf(wh.read("corpus_live")).select(col("k")))
-    seedTokenCounts(wh)
+    // a takedown may arrive before the first incremental night
+    seedLive(wh)
     val ids = docIds.select(col("doc_id")).dropDuplicates("doc_id")
     // the retracted docs' at-rest live rows, pinned: the swaps below
     // rewrite the very files this lineage reads
@@ -632,6 +617,22 @@ object CorpusPipeline {
     wh.read("live_token_counts")
       .dropDuplicates("batch_key", "tok")
       .groupBy(col("tok")).agg(sum(col("cnt")).as("cnt"))
+
+  /** The live lane's idempotent seed: `corpus_live` from `corpus_clean`,
+    * `live_keys` from the at-rest `corpus_live`, then the token counts.
+    * INDEPENDENT guards: a crash between two seed writes must not strand
+    * the warehouse (a corpus_live-only guard would skip the live_keys
+    * seed forever — a review-pass finding); each derives from at-rest
+    * state, so the repair is exact.
+    */
+  private def seedLive(wh: Warehouse): Unit = {
+    if (!wh.exists("corpus_live"))
+      wh.write("corpus_live", wh.read("corpus_clean"))
+    if (!wh.exists("live_keys"))
+      wh.write("live_keys",
+        Dedup.exactDedupOf(wh.read("corpus_live")).select(col("k")))
+    seedTokenCounts(wh)
+  }
 
   /** Idempotent one-time seed of `live_token_counts` from the at-rest
     * `corpus_live` — one corpus tokenize, the same one-time bill the

@@ -87,29 +87,8 @@ final class Warehouse(val spark: SparkSession, val root: String) extends UpsertS
 
   def exists(table: String): Boolean = Fs.exists(spark, path(table))
 
-  /** A table read. Parquet schema inference is a Spark job per read, so
-    * the resolved schema is kept per table path ([[Warehouse.schemas]])
-    * with the [[fingerprint]] of the listing it belongs to, and reused
-    * while that listing is unchanged.
-    */
-  def read(table: String): DataFrame = {
-    // the fingerprint heals first: a reader must never observe the
-    // mid-swap "table missing" state
-    val fp = fingerprint(table)
-    knownSchema(table, fp) match {
-      case Some(schema) => spark.read.schema(schema).parquet(path(table))
-      case None =>
-        val df = spark.read.parquet(path(table))
-        Warehouse.schemas.install(spark, path(table), (fp, df.schema))
-        df
-    }
-  }
-
-  /** `table`'s schema as last resolved or written, if its listing is
-    * still the one with fingerprint `fp`.
-    */
-  private def knownSchema(table: String, fp: Long): Option[StructType] =
-    Warehouse.schemas.peek(spark, path(table)).collect { case (`fp`, s) => s }
+  /** A table read ([[Warehouse.readParquet]]). */
+  def read(table: String): DataFrame = Warehouse.readParquet(spark, path(table))
 
   /** Keep `schema` as `table`'s resolved schema for its current listing;
     * a parquet read resolves the written schema, all fields nullable, and
@@ -130,7 +109,9 @@ final class Warehouse(val spark: SparkSession, val root: String) extends UpsertS
     // — seeing both present — would drop the backup, the only complete
     // copy. The read path heals; the write paths must too ([[exists]]
     // heals).
-    val before = if (exists(table)) knownSchema(table, fingerprint(table)) else Some(df.schema)
+    val before =
+      if (exists(table)) Warehouse.knownSchema(spark, path(table), fingerprint(table))
+      else Some(df.schema)
     df.write.mode(SaveMode.Append).parquet(path(table))
     // files with the table's columns leave its schema as it was; else
     // the next read resolves it
@@ -307,43 +288,13 @@ final class Warehouse(val spark: SparkSession, val root: String) extends UpsertS
       try out.write(v.toString.getBytes(UTF_8)) finally out.close()
     }
 
-  /** The data files currently backing `table` (healed first), from one
-    * recursive listing; none when the table is missing. Underscore/dot-
-    * prefixed entries (_SUCCESS, .crc side files) don't count: only data
-    * files cost scan tasks and NameNode/listing pressure.
-    */
-  private def dataFiles(table: String): Seq[FileStatus] = {
-    Fs.heal(spark, path(table))
-    val p = new Path(path(table))
-    val fs = Fs.fsOf(spark, p)
-    if (!fs.exists(p)) Nil
-    else {
-      val it = fs.listFiles(p, true)
-      val out = Seq.newBuilder[FileStatus]
-      while (it.hasNext) {
-        val st = it.next()
-        val name = st.getPath.getName
-        if (!name.startsWith("_") && !name.startsWith(".")) out += st
-      }
-      out.result()
-    }
-  }
-
   /** Number of data files currently backing `table` — the fragmentation
     * metric the append cadence watches.
     */
-  def dataFileCount(table: String): Int = dataFiles(table).size
+  def dataFileCount(table: String): Int = Warehouse.dataFiles(spark, path(table)).size
 
-  /** A 64-bit digest of the paths and sizes of `table`'s data files, from
-    * one listing: every committed write, append or swap changes it (part
-    * names are unique per write job), and nothing else does.
-    */
-  def fingerprint(table: String): Long = {
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    dataFiles(table).map(st => s"${st.getPath}\t${st.getLen}\n").sorted
-      .foreach(line => md.update(line.getBytes(UTF_8)))
-    java.nio.ByteBuffer.wrap(md.digest()).getLong
-  }
+  /** `table`'s listing digest ([[Warehouse.fingerprint]]). */
+  def fingerprint(table: String): Long = Warehouse.fingerprint(spark, path(table))
 
   /** Compact an append-grown table: one narrow read → coalesce to
     * ⌈bytes / targetFileBytes⌉ outputs → tmp-swap rewrite (the S10
@@ -429,4 +380,63 @@ object Warehouse {
     * of the listing it was resolved (or written) for.
     */
   private val schemas = new graft.ContextMemo[String, (Long, StructType)]
+
+  /** A parquet read of `path` — a warehouse table, or a source table
+    * ([[graft.Tables.load]]). Parquet schema inference is a Spark job per
+    * read, so the resolved schema is kept per path ([[schemas]]) with
+    * the [[fingerprint]] of the listing it belongs to, and reused while
+    * that listing is unchanged: a source replaced in place re-infers.
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    // the fingerprint heals first: a reader must never observe the
+    // mid-swap "table missing" state
+    val fp = fingerprint(spark, path)
+    knownSchema(spark, path, fp) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        schemas.install(spark, path, (fp, df.schema))
+        df
+    }
+  }
+
+  /** The schema of `path` as last resolved or written, if its listing is
+    * still the one with fingerprint `fp`.
+    */
+  private def knownSchema(spark: SparkSession, path: String, fp: Long): Option[StructType] =
+    schemas.peek(spark, path).collect { case (`fp`, s) => s }
+
+  /** The data files currently backing `path` (healed first), from one
+    * recursive listing; none when it is missing. Underscore/dot-prefixed
+    * entries (_SUCCESS, .crc side files) don't count: only data files
+    * cost scan tasks and NameNode/listing pressure.
+    */
+  private def dataFiles(spark: SparkSession, path: String): Seq[FileStatus] = {
+    Fs.heal(spark, path)
+    val p = new Path(path)
+    val fs = Fs.fsOf(spark, p)
+    if (!fs.exists(p)) Nil
+    else {
+      val it = fs.listFiles(p, true)
+      val out = Seq.newBuilder[FileStatus]
+      while (it.hasNext) {
+        val st = it.next()
+        val name = st.getPath.getName
+        if (!name.startsWith("_") && !name.startsWith(".")) out += st
+      }
+      out.result()
+    }
+  }
+
+  /** A 64-bit digest of the paths and sizes of the data files under
+    * `path`, from one listing: every committed write, append or swap
+    * changes it (part names are unique per write job), and nothing else
+    * does.
+    */
+  def fingerprint(spark: SparkSession, path: String): Long = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    dataFiles(spark, path).map(st => s"${st.getPath}\t${st.getLen}\n").sorted
+      .foreach(line => md.update(line.getBytes(UTF_8)))
+    java.nio.ByteBuffer.wrap(md.digest()).getLong
+  }
 }

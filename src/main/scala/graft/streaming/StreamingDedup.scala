@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * the first micro-batch and re-opened at rest on every later one
   * ([[Dedup.corpusIndexAt]]). Nothing of it is held in process memory,
   * so a process restart resumes with every previously streamed batch
-  * screened against; the fixture queries' per-dir memo index (q74) is
+  * screened against; the q74 fixture index ([[graft.FixtureRoots]]) is
   * never touched.
   *
   * At-least-once → exactly-once, structurally (no transactional sink

@@ -697,8 +697,7 @@ class CorpusPipelineSpec extends SparkSpec {
     // taken cold — reset memos and the session cache to the same state.
     graft.operators.Graph.clearMemo(spark)
     graft.operators.Similarity.clearKmeansMemo(spark)
-    graft.operators.Dedup.clearCorpusIndex(spark)
-    graft.operators.Dedup.clearWinnowIndexAtRest(spark)
+    graft.FixtureRoots.clear(spark)
     graft.operators.Dedup.clearCorpusBloom(spark)
     TransientCache.drain()
     spark.catalog.clearCache()

@@ -164,16 +164,8 @@ class DeterminismSweepSpec extends SparkSpec {
   private def clearMemos(): Unit = {
     graft.operators.Graph.clearMemo(spark)
     graft.operators.Similarity.clearKmeansMemo(spark)
-    graft.operators.Dedup.clearCorpusIndex(spark)
-    graft.operators.Dedup.clearWinnowIndexAtRest(spark)
+    graft.FixtureRoots.clear(spark)
     graft.operators.Dedup.clearCorpusBloom(spark)
-    graft.operators.Sketch.clearHllIndex(spark)
-    graft.operators.Sessions.clearRetentionIndex(spark)
-    graft.operators.Sessions.clearRetractedRetentionIndex(spark)
-    graft.operators.Sessions.clearTransitionsIndex(spark)
-    graft.operators.QuantileIndex.clearIndex(spark)
-    graft.operators.QuantileIndex.clearRetractedIndex(spark)
-    graft.operators.Dedup.clearRetractedCorpusIndex(spark)
     graft.operators.Analytics.clearDispatchMemo(spark)
     // CacheManager matches by logical plan, so a cached winnow index
     // built under one partition count would serve the other verbatim —

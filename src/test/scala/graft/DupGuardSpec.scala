@@ -121,6 +121,21 @@ class DupGuardSpec extends AnyFunSuite {
       s"a streaming twin reads a per-dir memo index: ${memoReads.sorted.mkString(", ")}")
   }
 
+  test("one registry holds the fixture index roots: no install seam for an index, createTempDirectory only in FixtureRoots") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val code = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .map(p => root.relativize(p).toString ->
+        stripNoise(new String(java.nio.file.Files.readAllBytes(p))))
+    val seams = code.flatMap { case (f, c) =>
+      raw"\bdef\s+(install\w*Index)\b".r.findAllMatchIn(c).map(m => s"$f: ${m.group(1)}")
+    }
+    assert(seams.isEmpty, s"fixture index install seams in src/main: ${seams.sorted.mkString(", ")}")
+    val tempRoots = code.filter(_._2.contains("createTempDirectory")).map(_._1).toSet
+    assert(tempRoots == Set("FixtureRoots.scala"), s"temp roots made outside the registry: $tempRoots")
+  }
+
   test("the only entry points in src/main are Bench, Verify and DevProfile") {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")

@@ -387,7 +387,7 @@ class EventOpsSpec extends SparkSpec {
 
   test("q113 delta retention == q104 full rebuild bit-for-bit") {
     val dir = "/root/testdata/sf0.001"
-    Sessions.clearRetentionIndex(spark)
+    FixtureRoots.clear(spark)
     val delta = Sessions.deltaRetention(spark, dir).collect().toSeq
     val full = Sessions.retentionCohorts(spark, dir).collect().toSeq
     assert(delta == full,
@@ -396,26 +396,22 @@ class EventOpsSpec extends SparkSpec {
 
   test("q113 reads the at-rest tables: a poisoned index changes the cells") {
     val dir = "/root/testdata/sf0.001"
-    val root = java.nio.file.Files.createTempDirectory("graft_retpoison_").toString
-    val wh = new graft.pipelines.Warehouse(spark, root)
-    // one phantom user with an fd far before any real event and a week-0
-    // activation — a cohort no real corpus produces
+    FixtureRoots.clear(spark)
+    val wh = new graft.pipelines.Warehouse(spark, Sessions.retentionIndexAtRest(spark, dir))
+    // in place: one phantom user with an fd far before any real event
+    // and a week-0 activation — a cohort no real corpus produces
     wh.write("ret_user", Seq((-1L, 0L)).toDF("user_id", "fd"))
     wh.write("ret_weeks", Seq((-1L, 0L)).toDF("user_id", "week_offset"))
-    Sessions.clearRetentionIndex(spark)
     // split below any real day: the whole event log becomes the batch,
     // so every true cell must still emerge PLUS the phantom cohort
-    Sessions.installRetentionIndex(spark, dir, root, 0L)
+    wh.setCheckpoint("split_day", 0L)
     try {
       val got = Sessions.deltaRetention(spark, dir).collect()
       assert(got.exists(r => r.getLong(0) == 0L && r.getLong(1) == 0L &&
           r.getLong(3) == 1L),
         "the phantom cohort must surface — if not, the query is not " +
           "reading the at-rest tables")
-    } finally {
-      Sessions.clearRetentionIndex(spark)
-      graft.pipelines.Fs.delete(spark, root)
-    }
+    } finally FixtureRoots.clear(spark)
   }
 
   test("q113 advance: nightly appends == rebuild at every night boundary; replay and crash windows converge") {
@@ -476,7 +472,7 @@ class EventOpsSpec extends SparkSpec {
 
   test("q115 delta transitions == q105 full rebuild bit-for-bit") {
     val dir = "/root/testdata/sf0.001"
-    Sessions.clearTransitionsIndex(spark)
+    FixtureRoots.clear(spark)
     val delta = Sessions.deltaTransitions(spark, dir).collect().toSeq
     val full = Sessions.sessionTransitions(spark, dir).collect().toSeq
     assert(delta == full,
@@ -485,10 +481,10 @@ class EventOpsSpec extends SparkSpec {
 
   test("q115 reads the at-rest ledger: a poisoned delta row changes the matrix") {
     val dir = "/root/testdata/sf0.001"
-    val root = java.nio.file.Files.createTempDirectory("graft_trpoison_").toString
-    val wh = new graft.pipelines.Warehouse(spark, root)
-    // a transition pair no real event log produces, plus an empty carry
-    // stamped with an impossible night key
+    FixtureRoots.clear(spark)
+    val wh = new graft.pipelines.Warehouse(spark, Sessions.transitionsIndexAtRest(spark, dir))
+    // in place: a transition pair no real event log produces, plus an
+    // empty carry stamped with an impossible night key
     wh.write("tr_deltas",
       Seq((0L, "zz_from", "zz_to", 7L))
         .toDF("batch_key", "from_type", "to_type", "n"))
@@ -497,18 +493,14 @@ class EventOpsSpec extends SparkSpec {
           current_timestamp().as("ts"), lit(0L).as("event_id"),
           lit("x").as("event_type"), lit(0L).as("night_key"))
         .limit(0))
-    Sessions.clearTransitionsIndex(spark)
-    Sessions.installTransitionsIndex(spark, dir, root, 0L)
+    wh.setCheckpoint("split_day", 0L)
     try {
       val got = Sessions.deltaTransitions(spark, dir).collect()
       assert(got.exists(r => r.getString(0) == "zz_from" &&
           r.getString(1) == "zz_to" && r.getLong(2) == 7L),
         "the poisoned cell must surface — if not, the query is not " +
           "reading the at-rest ledger")
-    } finally {
-      Sessions.clearTransitionsIndex(spark)
-      graft.pipelines.Fs.delete(spark, root)
-    }
+    } finally FixtureRoots.clear(spark)
   }
 
   test("q115 advance: nightly deltas == rebuild at every boundary; marker, partial-append and pre-swap crash windows converge") {

@@ -78,14 +78,14 @@ class InBatchRedeliverySpec extends SparkSpec {
     // (the append side is spec'd in TrainingOpsSpec's key-uniqueness
     // assertion; this is the screen side — duplicate probes would
     // corrupt the per-query rank sequences)
-    Similarity.clearAnnIndex(spark)
+    FixtureRoots.clear(spark)
     val emb = Tables.spread(Tables.embeddings(spark, dir))
     val vnight = emb.filter(col("vec_id") % 10 >= 8)
     val clean = bag(Similarity.screenAnnAgainstIndex(spark, dir, vnight))
     val dup = bag(Similarity.screenAnnAgainstIndex(spark, dir, vnight.union(vnight)))
     assert(dup == clean, "ANN screen must collapse in-batch duplicates")
     assert(clean.nonEmpty)
-    Similarity.clearAnnIndex(spark)
+    FixtureRoots.clear(spark)
     Similarity.clearKmeansMemo(spark)
   }
 

@@ -109,7 +109,7 @@ class KmvSketchSpec extends SparkSpec {
 
   test("q109 delta HLL == full rebuild bit-for-bit (the union-by-max algebra)") {
     val dir = "/root/testdata/sf0.001"
-    Sketch.clearHllIndex(spark)
+    FixtureRoots.clear(spark)
     val delta = Sketch.deltaHll(spark, dir).collect().toSeq
     val full = Sketch.hllOf(Sketch.shingleHashes(spark, dir))
       .select(col("m"), col("n_nonzero_regs"), col("sum_scaled"),
@@ -121,24 +121,21 @@ class KmvSketchSpec extends SparkSpec {
 
   test("q109 reads the at-rest table: a poisoned register index changes the estimate") {
     val dir = "/root/testdata/sf0.001"
-    val root = java.nio.file.Files.createTempDirectory("graft_hllpoison_").toString
+    FixtureRoots.clear(spark)
+    Sketch.hllIndexAtRest(spark, dir)
+    val root = FixtureRoots.root(spark, "hllidx", dir)(_ => fail("hllidx was not built"))
     val wh = new graft.pipelines.Warehouse(spark, root)
-    // every register claims a max-rank 53 observation — an estimate no
-    // real corpus side produces
+    // in place: every register claims a max-rank 53 observation — an
+    // estimate no real corpus side produces
     wh.write("hll_regs", spark.range(256)
       .select(col("id").as("reg"), lit(53).as("mj")))
-    Sketch.clearHllIndex(spark)
-    Sketch.installHllIndex(spark, dir, root)
     try {
       val poisoned = Sketch.deltaHll(spark, dir).select(col("n_nonzero_regs"))
         .head().getLong(0)
       assert(poisoned == 256L,
         "all 256 poisoned registers must surface through the merge — " +
           "if not, the query is not reading the at-rest table")
-    } finally {
-      Sketch.clearHllIndex(spark)
-      graft.pipelines.Fs.delete(spark, root)
-    }
+    } finally FixtureRoots.clear(spark)
   }
 
   test("q109 advance: append == rebuild registers; a replayed batch is a no-op (no ledger needed)") {

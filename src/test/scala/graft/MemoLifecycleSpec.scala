@@ -1,13 +1,16 @@
 package graft
 
-import graft.operators.{Dedup, QuantileIndex, Sessions, Similarity, Sketch}
+import graft.pipelines.Warehouse
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+import org.apache.spark.sql.functions._
 
-/** Root lifecycle of every at-rest index memo, driven through each
-  * operator's public seams: a root the memo built is deleted by clear
-  * and by an install that shadows it, a caller root survives clear, and
-  * two concurrent builds of one key leave exactly one root on disk.
+/** Root lifecycle of every fixture at-rest index ([[FixtureRoots]]),
+  * driven through the fixture queries: a query registers its root under
+  * its tier, a second query re-opens that root without writing to it,
+  * clear deletes it, a seed that throws or loses a build race leaves no
+  * root behind, and the time-split fixtures keep their split day at the
+  * root.
   */
 class MemoLifecycleSpec extends SparkSpec {
 
@@ -15,127 +18,117 @@ class MemoLifecycleSpec extends SparkSpec {
 
   private def onDisk(root: String): Boolean = Files.exists(Paths.get(root))
 
-  /** One rooted memo: `build` returns the root the memo built, `install`
-    * points the memo at a caller root (None: the memo has no install
-    * seam).
-    */
-  private case class Seam(name: String, build: () => String,
-                          install: Option[String => Unit], clear: () => Unit)
+  /** The root the registry holds for `tier`; fails if none was built. */
+  private def rootOf(tier: String): String =
+    FixtureRoots.root(spark, tier, dir)(_ => fail(s"$tier was not built"))
 
-  private def none = spark.emptyDataFrame
+  /** Each fixture tier with the driver query that reads it. */
+  private val tiers = Seq(
+    "bandidx" -> "q74_delta_minhash",
+    "winidx" -> "q88_delta_winnow",
+    "rbandidx" -> "q127_retract_minhash",
+    "annidx" -> "q89_delta_ann",
+    "hllidx" -> "q109_delta_hll",
+    "tqidx" -> "q119_delta_quantiles",
+    "rqidx" -> "q126_retract_quantiles",
+    "retidx" -> "q113_delta_retention",
+    "rretidx" -> "q128_retract_retention",
+    "tridx" -> "q115_delta_transitions")
 
-  /** The HLL seam returns the register read, not its root: recover the
-    * root from the read's files (`<root>/hll_regs/part-*`).
-    */
-  private def hllRoot(): String = {
-    val f = new java.net.URI(Sketch.hllIndexAtRest(spark, dir).inputFiles.head).getPath
-    f.substring(0, f.indexOf("/hll_regs/"))
+  private def run(query: String): Long = {
+    val n = SparkEntry.queries(query)(spark, dir).count()
+    TransientCache.drain()
+    n
   }
 
-  private val seams = Seq(
-    Seam("bandidx", () => Dedup.corpusIndex(spark, dir).root,
-      Some(r => Dedup.installCorpusIndex(spark, dir,
-        Dedup.CorpusIndex(none, none, none, r))),
-      () => Dedup.clearCorpusIndex(spark)),
-    Seam("winidx", () => Dedup.winnowIndexAtRest(spark, dir).root,
-      Some(r => Dedup.installWinnowIndex(spark, dir, Dedup.WinnowIndex(none, none, r))),
-      () => Dedup.clearWinnowIndexAtRest(spark)),
-    Seam("rbandidx", () => Dedup.retractedCorpusIndex(spark, dir).root, None,
-      () => Dedup.clearRetractedCorpusIndex(spark)),
-    Seam("annidx", () => Similarity.annIndexAtRest(spark, dir).root,
-      Some(r => Similarity.installAnnIndex(spark, dir, Similarity.AnnIndex(none, r))),
-      () => Similarity.clearAnnIndex(spark)),
-    Seam("hllidx", () => hllRoot(),
-      Some(r => Sketch.installHllIndex(spark, dir, r)),
-      () => Sketch.clearHllIndex(spark)),
-    Seam("retidx", () => Sessions.retentionIndexAtRest(spark, dir)._1,
-      Some(r => Sessions.installRetentionIndex(spark, dir, r, 0L)),
-      () => Sessions.clearRetentionIndex(spark)),
-    Seam("rretidx", () => Sessions.retractedRetentionIndexAtRest(spark, dir)._1, None,
-      () => Sessions.clearRetractedRetentionIndex(spark)),
-    Seam("tridx", () => Sessions.transitionsIndexAtRest(spark, dir)._1,
-      Some(r => Sessions.installTransitionsIndex(spark, dir, r, 0L)),
-      () => Sessions.clearTransitionsIndex(spark)),
-    Seam("tqidx", () => QuantileIndex.indexAtRest(spark, dir),
-      Some(r => QuantileIndex.installIndex(spark, dir, r)),
-      () => QuantileIndex.clearIndex(spark)),
-    Seam("rqidx", () => QuantileIndex.retractedIndexAtRest(spark, dir), None,
-      () => QuantileIndex.clearRetractedIndex(spark)))
+  /** Every table and checkpoint directly under `root`, with its listing
+    * fingerprint.
+    */
+  private def fingerprints(root: String): Map[String, Long] = {
+    val wh = new Warehouse(spark, root)
+    val cps = Option(new java.io.File(s"$root/_checkpoints").list()).toSeq.flatten
+      .map(c => s"_checkpoints/$c")
+    (new java.io.File(root).list().toSeq.filter(_ != "_checkpoints") ++ cps)
+      .map(t => t -> wh.fingerprint(t)).toMap
+  }
 
-  for (s <- seams) {
-    test(s"${s.name}: clear deletes the root the memo built") {
-      s.clear()
-      val built = s.build()
-      TransientCache.drain()
+  for ((tier, query) <- tiers) {
+    test(s"$tier: clear deletes the root the memo built") {
+      FixtureRoots.clear(spark)
+      run(query)
+      val built = rootOf(tier)
       assert(onDisk(built))
-      assert(s.build() == built, "a second call must hit the memo")
-      s.clear()
-      assert(!onDisk(built), s"${s.name}: clear left its built root $built on disk")
+      run(query)
+      assert(rootOf(tier) == built, "a second query must re-open the registered root")
+      FixtureRoots.clear(spark)
+      assert(!onDisk(built), s"$tier: clear left its built root $built on disk")
     }
 
-    s.install.foreach { install =>
-      test(s"${s.name}: install deletes the built root it shadows; a caller root survives clear") {
-        s.clear()
-        val built = s.build()
-        TransientCache.drain()
-        val caller = Files.createTempDirectory(s"graft_caller_${s.name}_").toString
-        try {
-          install(caller)
-          assert(!onDisk(built),
-            s"${s.name}: install left the shadowed built root $built on disk")
-          s.clear()
-          assert(onDisk(caller), s"${s.name}: clear deleted the caller root")
-        } finally {
-          s.clear()
-          pipelines.Fs.delete(spark, caller)
-        }
-      }
+    test(s"$tier: a second query reuses the root and leaves every table fingerprint unchanged") {
+      FixtureRoots.clear(spark)
+      val n = run(query)
+      val root = rootOf(tier)
+      val before = fingerprints(root)
+      assert(before.nonEmpty, s"$tier: nothing at rest under $root")
+      assert(run(query) == n)
+      assert(rootOf(tier) == root)
+      assert(fingerprints(root) == before, s"$tier: a query wrote under its fixture root")
+      FixtureRoots.clear(spark)
     }
   }
 
-  test("two concurrent getAt calls on one key leave exactly one root on disk") {
-    val memo = new ContextMemo[String, String](identity)
+  test("the retention and transitions split day reads back from the root in 0 Spark jobs") {
+    FixtureRoots.clear(spark)
+    val days = Tables.events(spark, dir)
+      .select(expr("unix_timestamp(ts) DIV 86400").as("day"))
+      .agg(min(col("day")), max(col("day"))).head()
+    val want = days.getLong(0) + (days.getLong(1) - days.getLong(0)) * 4 / 5
+    for ((tier, query) <- tiers if Set("retidx", "rretidx", "tridx")(tier)) {
+      run(query)
+      val wh = new Warehouse(spark, rootOf(tier))
+      val (split, jobs) = org.apache.spark.SparkJobs.count(spark.sparkContext)(
+        wh.checkpoint("split_day"))
+      assert(split.contains(want) && jobs == 0, s"$tier: split $split in $jobs jobs")
+    }
+    FixtureRoots.clear(spark)
+  }
+
+  test("two concurrent builds of one key leave exactly one root on disk") {
     val bothBuilt = new CountDownLatch(2)
     val roots = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     // neither builder inserts before both have written their roots
-    def build(root: String): String = {
+    def seed(root: String): Unit = {
       roots.add(root)
       Files.write(Paths.get(root, "part"), Array[Byte](1))
       bothBuilt.countDown()
       assert(bothBuilt.await(60, TimeUnit.SECONDS))
-      root
     }
     val pool = Executors.newFixedThreadPool(2)
     val got = try {
       Seq.fill(2)(pool.submit(new Callable[String] {
-        def call(): String = memo.getAt(spark, "k", "graft_memo_race_")(build)
+        def call(): String = FixtureRoots.root(spark, "race", dir)(seed)
       })).map(_.get(60, TimeUnit.SECONDS))
     } finally pool.shutdown()
     assert(got.distinct.size == 1 && roots.size == 2)
     import scala.jdk.CollectionConverters._
     assert(roots.asScala.filter(onDisk).toSeq == got.take(1),
       "the losing builder must delete its own root")
-    memo.clear(spark)
+    FixtureRoots.clear(spark)
     assert(!onDisk(got.head))
   }
 
-  test("re-installing at the built root keeps it owned; a failed build leaves no root") {
-    val memo = new ContextMemo[String, String](identity)
-    val built = memo.getAt(spark, "k", "graft_memo_own_")(identity)
-    // an append's refreshed value lives at the same root
-    memo.install(spark, "k", built)
-    assert(onDisk(built) && memo.peek(spark, "k").contains(built))
-    memo.clear(spark)
-    assert(!onDisk(built), "a re-installed built root must stay owned")
-
+  test("a seed that throws leaves no root and registers nothing") {
     var tried = ""
     intercept[IllegalStateException] {
-      memo.getAt(spark, "k", "graft_memo_fail_") { root =>
+      FixtureRoots.root(spark, "fail", dir) { root =>
         tried = root
         throw new IllegalStateException("build failed")
       }
     }
     assert(tried.nonEmpty && !onDisk(tried), "a failed build must delete its root")
-    assert(memo.peek(spark, "k").isEmpty)
+    var reseeded = false
+    val root = FixtureRoots.root(spark, "fail", dir)(_ => reseeded = true)
+    assert(reseeded && root != tried, "the failed key must seed afresh")
+    FixtureRoots.clear(spark)
   }
 }

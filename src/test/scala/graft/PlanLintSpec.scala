@@ -530,8 +530,7 @@ class PlanLintSpec extends SparkSpec {
     // and the session cache and walk from the same cold state.
     graft.operators.Graph.clearMemo(spark)
     graft.operators.Similarity.clearKmeansMemo(spark)
-    graft.operators.Dedup.clearCorpusIndex(spark)
-    graft.operators.Dedup.clearWinnowIndexAtRest(spark)
+    graft.FixtureRoots.clear(spark)
     graft.operators.Dedup.clearCorpusBloom(spark)
     TransientCache.drain()
     spark.catalog.clearCache()

@@ -224,19 +224,19 @@ class QuantileIndexSpec extends SparkSpec {
     // the q113/q115 discipline: if the read path rescanned the corpus,
     // corrupting the ledger would be invisible — so corrupt it and
     // require the output to move
-    val root = freshRoot
-    advance(root, corpus)
-    val wh = new Warehouse(spark, root)
+    FixtureRoots.clear(spark)
+    val wh = new Warehouse(spark, QuantileIndex.indexAtRest(spark, dir))
+    TransientCache.drain()
     val firstLang = wh.read("tq_hist").select(col("g")).head().getString(0)
+    // in place, under the fixture root the query re-opens
     wh.write("tq_hist", wh.read("tq_hist").where(col("g") =!= firstLang))
-    QuantileIndex.installIndex(spark, dir, root)
     try {
       val got = QuantileIndex.deltaQuantiles(spark, dir).collect().toSeq
       TransientCache.drain()
       val want = Analytics.groupedQuantiles(spark, dir).collect().toSeq
       TransientCache.drain()
       assert(got != want, "poisoned ledger must show in the read")
-    } finally QuantileIndex.clearIndex(spark)
+    } finally FixtureRoots.clear(spark)
   }
 
   test("streaming twin: micro-batched nights land the batch state") {

@@ -481,7 +481,7 @@ class ScaleProbeSpec extends SparkSpec {
           f"$name superlinear: t10=$t10%.2fs t30=$t30%.2fs (slope $slope%.2f)")
       }
     } finally {
-      Dedup.clearWinnowIndexAtRest(spark)
+      FixtureRoots.clear(spark)
       roots.foreach(rmRf)
       TransientCache.drain()
     }

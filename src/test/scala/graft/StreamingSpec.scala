@@ -224,10 +224,8 @@ class StreamingSpec extends SparkSpec {
     * twins and the fixture queries keep is dropped.
     */
   private def clearAllMemos(): Unit = {
-    Dedup.clearCorpusIndex(spark)
-    Dedup.clearWinnowIndexAtRest(spark)
-    Dedup.clearRetractedCorpusIndex(spark)
-    graft.operators.Similarity.clearKmeansMemo(spark) // also the ann index
+    FixtureRoots.clear(spark)
+    graft.operators.Similarity.clearKmeansMemo(spark)
     TransientCache.drain()
   }
 
@@ -389,7 +387,7 @@ class StreamingSpec extends SparkSpec {
     def memoAtBase(): Unit = {
       val docs = Dedup.corpusIndex(spark, dir).docs
       assert(docs.filter(col("doc_id") % 10 >= 8).isEmpty && !docs.isEmpty,
-        "the per-dir memo index must hold only the base corpus")
+        "the fixture index must hold only the base corpus")
     }
 
     // reference: both nights in ONE process lifetime
@@ -490,7 +488,7 @@ class StreamingSpec extends SparkSpec {
     def memoAtBase(): Unit = {
       val docs = Dedup.winnowIndexAtRest(spark, dir).docs
       assert(docs.filter(col("doc_id") % 10 >= 8).isEmpty && !docs.isEmpty,
-        "the per-dir memo index must hold only the base corpus")
+        "the fixture index must hold only the base corpus")
     }
 
     // reference: both nights in ONE process lifetime
@@ -583,7 +581,7 @@ class StreamingSpec extends SparkSpec {
     def memoAtBase(): Unit = {
       val codes = graft.operators.Similarity.annIndexAtRest(spark, dir).codes
       assert(codes.filter(col("vec_id") % 10 >= 8).isEmpty && !codes.isEmpty,
-        "the per-dir memo index must hold only the base corpus")
+        "the fixture index must hold only the base corpus")
     }
 
     // reference: both nights in ONE process lifetime

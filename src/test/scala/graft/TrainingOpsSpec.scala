@@ -740,7 +740,7 @@ class TrainingOpsSpec extends SparkSpec {
 
   test("q74 corpus side is the at-rest index: bare scan, and injection drives output") {
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate, Join}
-    Dedup.clearCorpusIndex(spark)
+    FixtureRoots.clear(spark)
     val real = Dedup.deltaMinhash(spark, dir).collect().toSeq
     TransientCache.drain()
     // 1. the index frames are plain file scans — no tokenize/shingle/
@@ -760,13 +760,14 @@ class TrainingOpsSpec extends SparkSpec {
     assert(idx.docs.queryExecution.executedPlan.toString.contains("corpus_docs"),
       "the manifest frame must scan the corpus_docs table")
     // 2. poisoned index ==> empty output: the operator demonstrably READS
-    //    the at-rest table instead of re-signaturing the corpus itself
-    Dedup.installCorpusIndex(spark, dir,
-      idx.copy(bands = idx.bands.limit(0), shingles = idx.shingles.limit(0)))
+    //    the at-rest tables under its fixture root instead of
+    //    re-signaturing the corpus itself
+    val wh = new graft.pipelines.Warehouse(spark, idx.root)
+    Seq("corpus_band_index", "corpus_shingles").foreach(t => wh.write(t, wh.read(t).limit(0)))
     assert(Dedup.deltaMinhash(spark, dir).isEmpty)
     TransientCache.drain()
     // 3. a rebuild after clearing restores the real answer
-    Dedup.clearCorpusIndex(spark)
+    FixtureRoots.clear(spark)
     assert(Dedup.deltaMinhash(spark, dir).collect().toSeq == real)
     TransientCache.drain()
   }
@@ -1406,15 +1407,13 @@ class TrainingOpsSpec extends SparkSpec {
   test("q89 corpus side is the at-rest codes table: injection drives the output") {
     Similarity.clearKmeansMemo(spark)
     assert(Similarity.deltaAnn(spark, dir).count() > 0)
-    // poison: an index whose codes table is empty — a screen that
-    // recomputed corpus codes from raw vectors would still emit rows
-    val tmp = java.nio.file.Files.createTempDirectory("graft-annpoison").toString
-    val wh = new graft.pipelines.Warehouse(spark, tmp)
-    wh.write("corpus_codes", Similarity.annIndexAtRest(spark, dir).codes.limit(0))
-    Similarity.installAnnIndex(spark, dir,
-      Similarity.AnnIndex(wh.read("corpus_codes"), tmp))
+    // poison, in place: the fixture root's codes table emptied — a
+    // screen that recomputed corpus codes from raw vectors would still
+    // emit rows
+    val wh = new graft.pipelines.Warehouse(spark, Similarity.annIndexAtRest(spark, dir).root)
+    wh.write("corpus_codes", wh.read("corpus_codes").limit(0))
     assert(Similarity.deltaAnn(spark, dir).isEmpty)
-    Similarity.clearKmeansMemo(spark)
+    Similarity.clearKmeansMemo(spark) // the fixture roots too
   }
 
   test("q89 durable index root survives a process restart") {

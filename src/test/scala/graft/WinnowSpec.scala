@@ -95,7 +95,7 @@ class WinnowSpec extends SparkSpec {
     // fingerprint work) must lose nothing against the full-corpus
     // recompute: same pair set, same shared counts and sims, for
     // exactly the pairs crossing the batch/corpus boundary
-    Dedup.clearWinnowIndexAtRest(spark)
+    FixtureRoots.clear(spark)
     val delta = Dedup.deltaWinnow(spark, dir)
       .collect().map(_.mkString("|")).toSet
     TransientCache.drain()
@@ -191,26 +191,25 @@ class WinnowSpec extends SparkSpec {
     // the winnow edition of the self-pair crash window: data append
     // committed, manifest append not — a redelivered screen must not
     // pair the batch with its own at-rest rows (sim 1.0 self-pairs)
-    Dedup.clearWinnowIndexAtRest(spark)
+    FixtureRoots.clear(spark)
     val night1 = Tables.documents(spark, dir).filter(col("doc_id") % 10 === 8)
     val idx0 = Dedup.winnowIndexAtRest(spark, dir)
+    // the crash, in place: the data rows land under the fixture root,
+    // the manifest rows do not; the screen re-opens the root
     val iwh = new graft.pipelines.Warehouse(spark, idx0.root)
     iwh.append("corpus_winnow",
       Dedup.winnowFingerprintsOf(night1)
         .join(iwh.read("corpus_winnow_docs"), Seq("doc_id"), "left_anti"))
-    Dedup.installWinnowIndex(spark, dir,
-      idx0.copy(fingerprints = iwh.read("corpus_winnow"),
-        docs = iwh.read("corpus_winnow_docs")))
     val replayed = Dedup.screenWinnowAgainstIndex(spark, dir, night1)
     assert(replayed.isEmpty,
       "a partially-appended batch must not screen against its own rows")
     TransientCache.drain()
-    Dedup.clearWinnowIndexAtRest(spark)
+    FixtureRoots.clear(spark)
   }
 
   test("q88 corpus side is the at-rest index: bare scans, and injection drives output") {
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate, Join}
-    Dedup.clearWinnowIndexAtRest(spark)
+    FixtureRoots.clear(spark)
     val real = Dedup.deltaWinnow(spark, dir).collect().toSeq
     TransientCache.drain()
     // 1. the index frames (data AND the seen-doc manifest) are plain
@@ -227,13 +226,14 @@ class WinnowSpec extends SparkSpec {
           s"index frame must scan the at-rest $table files")
       }
     // 2. poisoned index ==> empty output: the screen demonstrably READS
-    //    the at-rest table instead of re-fingerprinting the corpus
-    Dedup.installWinnowIndex(spark, dir,
-      idx.copy(fingerprints = idx.fingerprints.limit(0)))
+    //    the at-rest table under its fixture root instead of
+    //    re-fingerprinting the corpus
+    val wh = new graft.pipelines.Warehouse(spark, idx.root)
+    wh.write("corpus_winnow", wh.read("corpus_winnow").limit(0))
     assert(Dedup.deltaWinnow(spark, dir).isEmpty)
     TransientCache.drain()
     // 3. a rebuild after clearing restores the real answer
-    Dedup.clearWinnowIndexAtRest(spark)
+    FixtureRoots.clear(spark)
     assert(Dedup.deltaWinnow(spark, dir).collect().toSeq == real)
     TransientCache.drain()
   }
@@ -248,12 +248,11 @@ class WinnowSpec extends SparkSpec {
     val wantS2 = Dedup.screenWinnowAgainstIndexOf(at(), night2)
       .collect().map(_.mkString("|")).toSet
     TransientCache.drain()
-    // "restart": every memo wiped — the index is at rest under root,
-    // which no memo clear deletes
-    Dedup.clearWinnowIndexAtRest(spark)
-    Dedup.clearCorpusIndex(spark)
+    // "restart": every fixture root wiped — the index is at rest under
+    // root, which the registry never deletes
+    FixtureRoots.clear(spark)
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(root)),
-      "caller-owned root must survive clearWinnowIndexAtRest")
+      "caller-owned root must survive FixtureRoots.clear")
     // night 2 still screens against streamed night 1 => nothing lost
     assert(Dedup.screenWinnowAgainstIndexOf(at(), night2)
       .collect().map(_.mkString("|")).toSet == wantS2)
