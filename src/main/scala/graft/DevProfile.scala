@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.mutable
 import scala.util.control.NonFatal
@@ -9,7 +11,8 @@ import scala.util.control.NonFatal
   * of the whole set so shared caches are in the state the bench sees),
   * printing its formatted physical plan first and then per-stage
   * wall/task times — `count()` probes lie because column pruning drops
-  * expensive projections, so stage timing is the tool.
+  * expensive projections, so stage timing is the tool — and last the
+  * generated classes the frame compiled, with their Janino and JIT time.
   *
   * Usage: DevProfile <queryName> [sfDir] [cpus]
   *
@@ -74,6 +77,16 @@ object DevProfile {
           wall, taskMs, si.numTasks))
       }
     })
+    // JVM-wide code generation totals: generated classes compiled (the
+    // count of Spark's `CodegenMetrics` compile-time histogram, cache hits
+    // excluded), their Janino ns, and the JIT's total compilation ms; the
+    // profile prints the delta over its frame
+    val jit = java.lang.management.ManagementFactory.getCompilationMXBean
+    def codegenTotals(): (Long, Long, Long) = (
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      CodeGenerator.compileTime,
+      if (jit != null && jit.isCompilationTimeMonitoringSupported) jit.getTotalCompilationTime else 0L)
+    val (classes0, janinoNs0, jitMs0) = codegenTotals()
     val t0 = System.nanoTime()
     val nRows =
       if (name.startsWith("cache:") && cacheFits.contains(tier)) { cacheFits(tier)(); 0L }
@@ -85,12 +98,15 @@ object DevProfile {
         df.count()
       }
     val sec = (System.nanoTime() - t0) / 1e9
+    val (classes1, janinoNs1, jitMs1) = codegenTotals()
     Thread.sleep(500) // let listener drain
     println(f"== $name: $nRows rows in $sec%.2f s ==")
     stages.sortBy(-_._3).foreach { case (id, nm, wall, task, nt) =>
       println(f"stage $id%4d wall=$wall%6d ms taskSum=$task%7d ms tasks=$nt%3d  $nm")
     }
     println(f"sum(stage wall) = ${stages.map(_._3).sum} ms over ${stages.size} stages")
+    println(f"codegen: ${classes1 - classes0} classes compiled, " +
+      f"Janino ${(janinoNs1 - janinoNs0) / 1e6}%.0f ms, JIT ${jitMs1 - jitMs0} ms")
     spark.stop()
   }
 }

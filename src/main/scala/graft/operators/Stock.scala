@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,8 +20,9 @@ import org.apache.spark.sql.functions._
   *
   * where every term is a running window over ONE partitioning
   * (tienda_id, art_id) ordered by (fecha, id_origen) — Catalyst plans one
-  * Exchange + one Sort and evaluates the three running expressions in chained
-  * Window operators over the same sorted partition, so the whole replay is a
+  * Exchange + one Sort and evaluates the three running expressions in two
+  * chained Window operators over the same sorted partition (the reset
+  * term reads `cum_delta`), so the whole replay is a
   * single shuffle regardless of how many resets a SKU has. The per-(key,seg)
   * alternative needs a second Exchange on the seg column; this one does not.
   * At 100 TB the shuffle is on (store, SKU) — millions of small groups, which
@@ -34,17 +35,21 @@ object Stock {
 
   private val keyCols = Seq("tienda_id", "art_id")
 
-  /** R4: per-event running balance with absolute resets. Adds `balance`. */
-  def withBalance(ledger: DataFrame): DataFrame = {
-    val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(col("fecha"), col("id_origen"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withCum = ledger
-      .withColumn("run_abs",
-        last(when(col("is_absolute"), col("abs_stock_after")), ignoreNulls = true).over(w))
-      .withColumn("cum_delta",
-        sum(coalesce(col("delta_cantidad"), lit(0L))).over(w))
-    withCum
+  /** The replay's one window spec: per (store, SKU), in event order. */
+  private val byKeyInOrder =
+    Window.partitionBy(keyCols.map(col): _*).orderBy(col("fecha"), col("id_origen"))
+
+  /** R4: per-event running balance with absolute resets. Adds `balance`,
+    * and `extra`: columns over [[byKeyInOrder]] that ride the first of
+    * the two running windows (`cum_at_reset` reads that one's `cum_delta`).
+    */
+  def withBalance(ledger: DataFrame, extra: Column*): DataFrame = {
+    val w = byKeyInOrder.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    ledger
+      .select(Seq(col("*"),
+        last(when(col("is_absolute"), col("abs_stock_after")), ignoreNulls = true).over(w)
+          .as("run_abs"),
+        sum(coalesce(col("delta_cantidad"), lit(0L))).over(w).as("cum_delta")) ++ extra: _*)
       .withColumn("cum_at_reset",
         last(when(col("is_absolute"), col("cum_delta")), ignoreNulls = true).over(w))
       .withColumn("balance",
@@ -178,21 +183,24 @@ object Stock {
     * emitted, so "no point yet" ≡ 0 on read and a replay window emits
     * byte-identical points wherever it starts.
     *
-    * One shuffle: the last event of each day and the previous day's close
-    * are offset windows over the balance's own (store, SKU) partitioning
-    * and (fecha, id_origen) order. The last day is a 1-row aggregate,
-    * broadcast. Rows with a NULL `fecha` still move their key's balance
-    * but close no day; rows with a NULL key emit nothing (the dense left
-    * join drops them too). Unordered: callers that present it sort.
+    * One shuffle and three `WindowExec`, all over the balance's own
+    * (store, SKU) partitioning and (fecha, id_origen) order: `run_abs`,
+    * `cum_delta` and the next event's day (`lead`, which finds each day's
+    * last event) in one pass, then `cum_at_reset`, then the previous
+    * day's close (`lag`) over the day closes. The last day is a 1-row
+    * aggregate over `bound`, broadcast: the ledger itself, or the slice
+    * an incremental replay reads (its seed events, dated before the
+    * slice, never hold the last day). Rows with a NULL `fecha` still
+    * move their key's balance but close no day; rows with a NULL key
+    * emit nothing (the dense left join drops them too). Unordered:
+    * callers that present it sort.
     */
-  def stockPointsFrom(ledger: DataFrame): DataFrame = {
-    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col("fecha"), col("id_origen"))
-    val lastDay = ledger.agg(max(to_date(col("fecha"))).as("last_d"))
-    withBalance(ledger)
+  def stockPointsFrom(ledger: DataFrame, bound: DataFrame): DataFrame = {
+    val lastDay = bound.agg(max(to_date(col("fecha"))).as("last_d"))
+    withBalance(ledger, lead(to_date(col("fecha")), 1).over(byKeyInOrder).as("next_d"))
       .withColumn("d", to_date(col("fecha")))
-      .withColumn("next_d", lead(col("d"), 1).over(w))
       .filter(col("d").isNotNull && !(col("next_d") <=> col("d")))
-      .withColumn("prev_eod", lag(col("balance"), 1, 0L).over(w))
+      .withColumn("prev_eod", lag(col("balance"), 1, 0L).over(byKeyInOrder))
       .filter(col("balance") =!= col("prev_eod") &&
         col("tienda_id").isNotNull && col("art_id").isNotNull)
       .crossJoin(broadcast(lastDay))
@@ -201,6 +209,9 @@ object Stock {
         date_add(col("d"), 1).cast("timestamp").as("point_date"),
         col("balance").as("sod_stock"))
   }
+
+  /** [[stockPointsFrom]] over a ledger that is its own last-day bound. */
+  def stockPointsFrom(ledger: DataFrame): DataFrame = stockPointsFrom(ledger, ledger)
 
   val stockPointsSql: String =
     s"""WITH $denseSodCte,

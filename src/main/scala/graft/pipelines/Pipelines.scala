@@ -2,8 +2,10 @@ package graft.pipelines
 
 import graft.Tables
 import graft.operators.{Sales, Stock}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import java.util.concurrent.TimeoutException
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 
 /** End-to-end nightly pipelines — the library equivalents of the
@@ -117,14 +119,28 @@ object InventoryPipeline {
     * full rebuild.
     *
     * Without a checkpoint the result replaces the whole table — deleting
-    * `points_last_dt` is how an operator forces a rebuild; with one, it is
-    * the S9 keyed merge on (store_id, art_id, point_date). A night whose
-    * ledger files are the ones the last refresh derived from runs no Spark
-    * job. Returns the number of points upserted.
+    * `points_last_dt` is how an operator forces a rebuild; with one, the
+    * replay's points (all after the checkpoint day: the seed's own point
+    * lands before it) replace the committed ones after that day
+    * ([[Warehouse.replaceRest]]), also when the replay emits none. A
+    * crashed refresh's points after the checkpoint are thereby re-derived,
+    * never kept. Either way the commit is the refresh's one action: the
+    * as-of seed is one aggregate (`max_by`), the replay is
+    * [[Stock.stockPointsFrom]]'s three windows, read once, its last-day
+    * bound is aggregated over the ledger slice alone, and the points'
+    * count and the slice's last day are observed on the commit. A night
+    * whose ledger files are the ones the last refresh derived from runs
+    * no Spark job. Returns the number of points upserted.
+    *
+    * Out of contract, an incremental night differs from a full rebuild
+    * (StockSpec's pending cases): a key whose NULL-dated rows move its
+    * balance but whose first dated row falls on or after the checkpoint
+    * day opens at 0, and a NULL-valued absolute after the checkpoint
+    * resets to the as-of seed, not to the last absolute count.
     */
   def refreshStockPoints(wh: Warehouse): Long = {
     // nothing ingested yet (Graft.nightly on a fresh warehouse): no-op
-    // rather than a path-not-found / NPE on the empty max() below
+    // rather than a path-not-found on the read below
     if (!wh.exists("raw_stock_movements")) return 0L
     val cpDays = wh.checkpoint("points_last_dt")
     // no-op short cut: the committed points derive from exactly these
@@ -137,27 +153,25 @@ object InventoryPipeline {
     if (cpDays.nonEmpty && wh.exists("stock_points") && derivedFrom.contains(ledgerFiles))
       return 0L
     val cpDate = cpDays.map(d => date_from_unix_date(lit(d.toInt)))
-    // the ledger's last day rides the replay's own scan and is read after
-    // the count below. Observed after the date filter, which keeps that
-    // filter pushed into the scan: rows on or after the checkpoint exist
-    // whenever one does, so this max is the whole ledger's
     val raw = wh.read("raw_stock_movements")
-    val ledger = cpDate.fold(raw)(cp => raw.filter(to_date(col("fecha")) >= cp))
-      .observe(LastDayMetric, max(unix_date(to_date(col("fecha")))).as("d"))
+    val slice = cpDate.fold(raw)(cp => raw.filter(to_date(col("fecha")) >= cp))
+    // observed after the date filter, which keeps that filter pushed into
+    // the scan: rows on or after the checkpoint exist whenever one does,
+    // so this max is the whole ledger's
+    val lastDay = Observation(LastDayMetric)
+    val ledger = slice.observe(lastDay, max(unix_date(to_date(col("fecha")))).as("d"))
 
     val replay = cpDate.fold(ledger) { cp =>
       // J9 as-of seed: latest point per key at or before the checkpoint
-      val wAsOf = Window.partitionBy(col("store_id"), col("art_id"))
-        .orderBy(col("point_date").desc)
-      // the seed closes day cp-2 at the as-of value, so the first replayed
-      // day's change is judged against the true previous close. Its own
-      // point lands at cp-1, outside the window; the point at cp belongs
-      // to day cp-1, whose events the replay does not read, so the
-      // committed one stays as it is
+      // (points are unique per key and date). It closes day cp-2 at the
+      // as-of value, so the first replayed day's change is judged against
+      // the true previous close. Its own point lands at cp-1, outside the
+      // window; the point at cp belongs to day cp-1, whose events the
+      // replay does not read, so the committed one stays as it is
       val seedEvents = wh.read("stock_points")
         .filter(to_date(col("point_date")) <= cp)
-        .withColumn("rn", row_number().over(wAsOf))
-        .filter(col("rn") === 1)
+        .groupBy(col("store_id"), col("art_id"))
+        .agg(max_by(col("sod_stock"), col("point_date")).as("sod_stock"))
         .select(
           lit(-1L).as("id_origen"),
           col("store_id").as("tienda_id"), col("art_id"),
@@ -169,25 +183,44 @@ object InventoryPipeline {
           lit("__seed__").as("usuario"))
       ledger.unionByName(seedEvents)
     }
-    val replayed = Stock.stockPointsFrom(replay)
-    val points = cpDate.fold(replayed)(cp =>
-      replayed.filter(to_date(col("point_date")) >= cp)).cache()
-    try {
-      val counted = points.groupBy().count()
-      val n = counted.collect().head.getLong(0)
-      if (cpDays.isEmpty) wh.write("stock_points", points)
-      else if (n > 0) wh.replaceKeys("stock_points", points, Seq("store_id", "art_id", "point_date"))
-      val maxRow = counted.queryExecution.observedMetrics.getOrElse(LastDayMetric,
-        throw new IllegalStateException(s"the refresh count did not observe $LastDayMetric"))
-      // after the commit, and only when it moves; an empty ledger table
-      // (max() is NULL) leaves the checkpoint untouched
-      if (!maxRow.isNullAt(0) && !cpDays.contains(maxRow.getInt(0).toLong))
-        wh.setCheckpoint("points_last_dt", maxRow.getInt(0).toLong)
-      // last: it vouches for every commit above
-      if (!derivedFrom.contains(ledgerFiles)) wh.setCheckpoint(LedgerFilesCp, ledgerFiles)
-      n
-    } finally points.unpersist()
+    // the seed's day cp-2 is never the last one, so the slice alone bounds
+    val replayed = Stock.stockPointsFrom(replay, slice)
+    val counted = Observation(PointsMetric)
+    val points = cpDate.fold(replayed)(cp => replayed.filter(to_date(col("point_date")) > cp))
+      .observe(counted, count(lit(1)).as("n"))
+    cpDate match {
+      case None => wh.write("stock_points", points)
+      case Some(cp) => wh.replaceRest("stock_points", to_date(col("point_date")) <= cp, points)
+    }
+    val n = observed(counted, Row(0L)).getLong(0)
+    val maxRow = observed(lastDay, Row(null))
+    // after the commit, and only when it moves; an empty slice (max() is
+    // NULL) leaves the checkpoint untouched
+    if (!maxRow.isNullAt(0) && !cpDays.contains(maxRow.getInt(0).toLong))
+      wh.setCheckpoint("points_last_dt", maxRow.getInt(0).toLong)
+    // last: it vouches for every commit above
+    if (!derivedFrom.contains(ledgerFiles)) wh.setCheckpoint(LedgerFilesCp, ledgerFiles)
+    n
   }
+
+  /** The row `obs` observed on the commit that just returned, or `none`,
+    * its aggregates over no rows, when the observed node ran no task
+    * (adaptive execution proved its input empty; the row then comes back
+    * with no fields). The listener bus delivers the row asynchronously, so
+    * wait for it, but boundedly: a metric that never arrives throws rather
+    * than blocking the night.
+    */
+  private def observed(obs: Observation, none: Row): Row = {
+    val row =
+      try Await.result(obs.future, ObservedWait)
+      catch { case _: TimeoutException =>
+        throw new IllegalStateException(s"the refresh's commit did not observe ${obs.name}")
+      }
+    if (row.length == 0) none else row
+  }
+
+  /** How long [[observed]] waits for the listener bus. */
+  private val ObservedWait = 60.seconds
 
   /** The [[Warehouse.fingerprint]] of the ledger files the committed stock
     * points derive from.
@@ -196,4 +229,7 @@ object InventoryPipeline {
 
   /** The observed metric that carries the replayed ledger's last day. */
   private val LastDayMetric = "points_ledger_last_day"
+
+  /** The observed metric that carries the number of points committed. */
+  private val PointsMetric = "points_committed"
 }

@@ -223,6 +223,15 @@ final class Warehouse(val spark: SparkSession, val root: String) extends UpsertS
       .unionByName(rows)
       .coalesce(outputFiles(table, Warehouse.CompactTargetFileBytes)))
 
+  /** The range merge: the committed rows of `table` that `keep` holds
+    * for, ∪ `rows`, sized like [[replaceKeys]]; `rows` is read once. A
+    * missing table is just `rows`.
+    */
+  def replaceRest(table: String, keep: Column, rows: DataFrame): Unit =
+    if (!exists(table)) write(table, rows)
+    else write(table, read(table).filter(keep).unionByName(rows)
+      .coalesce(outputFiles(table, Warehouse.CompactTargetFileBytes)))
+
   /** The nightly watermark step (S8/S9 with §7.3): extract the rows above
     * checkpoint `cp` (`extract` gets None before the first run), pin them,
     * take their count and `max(hw)` in ONE action BEFORE `commit` (an

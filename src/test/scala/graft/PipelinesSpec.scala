@@ -207,13 +207,52 @@ class PipelinesSpec extends SparkSpec {
     val (points, jobs) =
       org.apache.spark.SparkJobs.count(sc)(InventoryPipeline.refreshStockPoints(wh))
     assert(points > 0)
-    // the replay's count, its commit (the keyed merge) and their schema
-    // and adaptive stages; the ledger's last day rides the count as an
-    // observed metric. A rise means the refresh grew a pass back.
-    val pinned = 10
+    // the commit (the range merge) and its adaptive stages: the points'
+    // count and the ledger's last day ride it as observed metrics. A rise
+    // means the refresh grew a pass back.
+    val pinned = 5
     assert(jobs == pinned, s"an incremental refresh ran $jobs Spark jobs (pinned $pinned)")
     assert(wh.checkpoint("points_last_dt").contains(lastDay()),
       "the checkpoint must move to the ledger's last day")
+    assert(rowsOf(wh.read("stock_points")) == rowsOf(Stock.stockPointsFrom(fullLedger)))
+  }
+
+  test("stock points: an incremental refresh is one commit: three windows, an aggregate seed, a ledger-only last-day bound, one replay") {
+    import org.apache.spark.SparkExecutions.{capture, nodes}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    val q13 = SparkEntry.queries("q13_stock_points")(spark, dir)
+    q13.collect()
+    val q13Windows = nodes(q13.queryExecution.executedPlan).count(_.isInstanceOf[WindowExec])
+    assert(q13Windows == 3, s"q13 runs $q13Windows WindowExec (pinned 3)")
+
+    val wh = freshWh()
+    val fullLedger = Tables.ledger(spark, dir)
+    val midTs = new java.sql.Timestamp(
+      fullLedger.agg(expr("percentile_approx(unix_micros(fecha), 0.5)"))
+        .first().getLong(0) / 1000)
+    InventoryPipeline.updateLedger(wh, dir, upToTs = Some(midTs))
+    InventoryPipeline.refreshStockPoints(wh)
+    InventoryPipeline.updateLedger(wh, dir)
+    val (points, plans) = capture(spark)(InventoryPipeline.refreshStockPoints(wh))
+    assert(points > 0)
+    assert(plans.size == 1, s"the refresh completed ${plans.size} queries; its commit is the one")
+    val all = nodes(plans.head)
+    // the replay feeds the commit once: a second copy would share its
+    // exchanges, and adaptive execution can drop the copy that holds the
+    // observed metrics
+    assert(!all.exists(_.isInstanceOf[ReusedExchangeExec]), "the replay runs twice")
+    assert(!all.exists(_.nodeName.contains("WindowGroupLimit")),
+      "the as-of seed must be an aggregate, not a ranked window")
+    def table(s: FileSourceScanExec): String =
+      s.relation.location.rootPaths.head.getName
+    val boundScans = all.collect {
+      case b: BroadcastExchangeExec if b.output.map(_.name) == Seq("last_d") =>
+        nodes(b).collect { case s: FileSourceScanExec => table(s) }
+    }
+    assert(boundScans.nonEmpty && boundScans.forall(_.toSet == Set("raw_stock_movements")),
+      s"the last-day bound scans ${boundScans.mkString("; ")}; only the ledger slice bounds")
     assert(rowsOf(wh.read("stock_points")) == rowsOf(Stock.stockPointsFrom(fullLedger)))
   }
 

@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.SparkExecutions.nodes
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.window.WindowExec
 
@@ -108,27 +107,6 @@ class PlanLintSpec extends SparkSpec {
       + "sit past the floor projection) — the q68/q78 bounded-model "
       + "discipline; the corpus-scale machinery is the q112 draw "
       + "engine, source-partitioned (Sampling.apportionOnce)")))
-
-  private def descend(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-    case s: QueryStageExec => Seq(s.plan)
-    case r: ReusedExchangeExec => Seq(r.child)
-    case i: InMemoryTableScanExec => Seq(i.relation.cachedPlan)
-    case other => other.children
-  }
-
-  /** Every node reachable from the executed root — AQE stages, reused
-    * exchanges, cache-build plans, subqueries — deduped by identity so
-    * shared stages don't blow up the walk.
-    */
-  private def nodes(root: SparkPlan): Seq[SparkPlan] = {
-    val seen = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
-    def go(p: SparkPlan): Seq[SparkPlan] =
-      if (!seen.add(p)) Nil
-      else p +: (descend(p) ++ p.subqueries).flatMap(go)
-    go(root)
-  }
 
   /** Pinned per-query `ShuffleExchangeExec` budget — "minimize shuffles"
     * turned into CI, the same way the whitelists above pin the join and
